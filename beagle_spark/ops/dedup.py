@@ -1,26 +1,33 @@
 """Deduplication operators for large text corpora.
 
-All hot paths are pure Spark SQL expressions (JVM, whole-stage codegen,
-no Python UDFs): at 100 TB the only thing that matters is the shuffle
-profile, noted per operator.
+Every operator but the SimHash fingerprint kernel is pure Spark SQL
+(JVM, whole-stage codegen, no Python): at 100 TB the only thing that
+matters is the shuffle profile, noted per operator.
 
-- exact_dedup:            1 shuffle on text-hash (map-side partial agg)
-- minhash_lsh_candidates: signatures computed scan-side (no shuffle),
-                          1 shuffle on (band, bucket) - the standard
-                          MinHash-LSH join trick; candidate verification
-                          is an equi-join, never an all-pairs product
-- simhash_fingerprints:   scan-side only, then 1 shuffle on band key
-- ngram_jaccard_pairs:    exact Jaccard via shingle-explode + self-join;
-                          quadratic in the worst case - intended for
-                          verification at small scale or AFTER LSH
-                          candidate pruning; the scale path is
-                          minhash_lsh_candidates
+- exact_dedup:              1 shuffle on text-hash (map-side partial agg)
+- minhash_lsh_candidates:   signatures computed scan-side, banded, then
+                            bucket_pairs on (band, bucket) - the standard
+                            MinHash-LSH banding trick; candidate
+                            verification is an equi-join, never an
+                            all-pairs product
+- simhash_fingerprints_md5: map-only Arrow kernel (oracle-exact hash
+                            family); simhash_pairs bands it through
+                            bucket_pairs and verifies hamming JVM-side
+- bucket_pairs:             the one "rows keyed by bucket -> member
+                            pairs" primitive behind MinHash, SimHash and
+                            hyperplane LSH (equi-self-join, or with a
+                            cap the join-free grouped all-pairs plus a
+                            star guard for oversized buckets)
+- ngram_jaccard_pairs:      exact Jaccard via shingle-explode + self-join;
+                            quadratic in the worst case - intended for
+                            verification at small scale or AFTER LSH
+                            candidate pruning; the scale path is
+                            minhash_lsh_candidates
 """
 
 from __future__ import annotations
 
 import hashlib
-import logging
 import re
 from typing import Iterator
 
@@ -31,7 +38,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-log = logging.getLogger(__name__)
+# Default oversized-bucket guard of the MinHash-LSH path: buckets above
+# it emit star pairs instead of all pairs (see bucket_pairs).
+DEFAULT_BUCKET_CAP = 1000
 
 
 def normalized_text(col):
@@ -53,25 +62,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.min(id_col).alias("canonical_doc_id"),
-        )
-    )
-
-
-def word_shingles(col, k: int = 3):
-    """k-word shingles as array<string> (distinct), built scan-side with
-    split + transform — no explode until the join needs it.
-
-    PERF: prefer :func:`shingle_docs`, which materializes the token
-    array in a child projection first. Inlining the split expression
-    into the transform lambda (as this expression-form necessarily
-    does) makes Spark re-evaluate trim/lower/split once PER SHINGLE
-    POSITION — measured ~9x slower on the sf0.1 corpus."""
-    toks = F.split(F.trim(F.lower(col)), r"\s+")
-    n = F.size(toks)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(n - k, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
         )
     )
 
@@ -146,55 +136,9 @@ def shingle_docs(
     )
 
 
-# XXH64 constants/helpers replicating Spark's
-# org.apache.spark.sql.catalyst.expressions.XxHash64 for LONG and INT
-# inputs, vectorized over numpy uint64 (wrapping arithmetic == Java long
-# overflow). Verified bit-identical against F.xxhash64(long_col, int_lit)
-# in tests/test_dedup.py::test_minhash_arrow_kernel_matches_spark_xxhash64.
-_XXH_P1 = np.uint64(0x9E3779B185EBCA87)
-_XXH_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
-_XXH_P3 = np.uint64(0x165667B19E3779F9)
-_XXH_P4 = np.uint64(0x85EBCA77C2B2AE63)
-_XXH_P5 = np.uint64(0x27D4EB2F165667C5)
-
-
-def _xxh64_rotl(x: np.ndarray, r: int) -> np.ndarray:
-    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
-
-
-def _xxh64_fmix(h: np.ndarray) -> np.ndarray:
-    h = h ^ (h >> np.uint64(33))
-    h = h * _XXH_P2
-    h = h ^ (h >> np.uint64(29))
-    h = h * _XXH_P3
-    h = h ^ (h >> np.uint64(32))
-    return h
-
-
-def _xxh64_long(v: np.ndarray, seed: int) -> np.ndarray:
-    """XXH64.hashLong(v, seed) over a uint64 vector."""
-    h = np.uint64(seed) + _XXH_P5 + np.uint64(8)
-    k = _xxh64_rotl(v * _XXH_P2, 31) * _XXH_P1
-    h = h ^ k
-    h = _xxh64_rotl(h, 27) * _XXH_P1 + _XXH_P4
-    return _xxh64_fmix(h)
-
-
-def _xxh64_int(i: int, seed_vec: np.ndarray) -> np.ndarray:
-    """XXH64.hashInt(i, seed) with a uint64 seed VECTOR (i is a plan-time
-    literal in the aggregate shape this replaces)."""
-    h = seed_vec + _XXH_P5 + np.uint64(4)
-    # the literal product is computed in Python int then masked, so no
-    # numpy scalar-overflow RuntimeWarning is emitted per call
-    h = h ^ np.uint64(((i & 0xFFFFFFFF) * 0x9E3779B185EBCA87) & 0xFFFFFFFFFFFFFFFF)
-    h = _xxh64_rotl(h, 23) * _XXH_P2 + _XXH_P3
-    return _xxh64_fmix(h)
-
-
 def minhash_signature_stage(df: DataFrame, text_col: str, id_col: str,
                             num_perm: int = 64, shingle_k: int = 3,
-                            shingled: DataFrame | None = None,
-                            impl: str = "agg") -> DataFrame:
+                            shingled: DataFrame | None = None) -> DataFrame:
     """num_perm MinHash values as array<bigint>:
     sig[i] = min over shingles of xxhash64(xxhash64(shingle), seed_i).
 
@@ -204,85 +148,27 @@ def minhash_signature_stage(df: DataFrame, text_col: str, id_col: str,
     of hashing a ~30-char string 64 times, with the same independence
     properties. Seeds are fixed literals — deterministic everywhere.
 
-    Two implementations with BIT-IDENTICAL output (test-pinned):
-
-    - ``impl="agg"`` (default): explode shingles -> num_perm flat
-      min-aggregates (whole-stage-codegen'd; partial aggregation
-      collapses to one row per doc map-side, then one Exchange on id).
-    - ``impl="arrow"``: MAP-ONLY. The per-doc shingle hash array (one
-      interpreted ``transform`` over the already-built shingle array)
-      feeds a mapInArrow kernel that derives all num_perm hashes and
-      their mins vectorized in numpy (wrapping uint64 arithmetic
-      replicates Java long overflow). No explode, no 64-wide
-      aggregate, and NO EXCHANGE — the agg shape's hashpartitioning(id)
-      shuffle (64*8B per doc) disappears.
-
-    Why agg stays the default (r22, measured both ways per the guide
-    §1/§4.5 before choosing): at sf0.1 (5k docs) the two are within
-    noise (paired quiet-window mins 3.12 vs 3.27 s for the full
-    dd_minhash_lsh query); at a 40x-replicated corpus (200k docs) the
-    codegen'd aggregate wins ~2x on the isolated signature stage (warm
-    mins ~1.1-1.6 s agg vs ~1.7-2.6 s arrow) and degrades far less
-    under CPU contention (worst observed pass 6.8 s vs 26 s) — the
-    Python-side cost of shipping every shingle hash (~8B x shingles/doc)
-    across the Arrow boundary plus 64 numpy passes exceeds what the
-    removed exchange saves, and the exchange's payload is only the
-    already-aggregated 512B/doc signature. Use ``impl="arrow"`` where
-    shuffle capacity, not CPU, is the binding constraint.
+    Shape: explode shingles -> num_perm flat min-aggregates
+    (whole-stage-codegen'd; partial aggregation collapses to one row
+    per doc map-side, then one Exchange on id). A map-only Arrow kernel
+    without that Exchange was measured and lost ~2x at 200k docs:
+    shipping every shingle hash across the Arrow boundary costs more
+    than shuffling the aggregated 512 B/doc signature.
 
     Pass ``shingled`` (from :func:`shingle_docs`, ideally persisted) to
     reuse an existing shingle relation instead of re-shingling."""
     if shingled is None:
         shingled = shingle_docs(df, text_col, id_col, shingle_k)
-    if impl == "agg":
-        exploded = shingled.select(
-            "id", F.explode("shingles").alias("_sh")
-        ).withColumn("_h", F.xxhash64("_sh"))
-        mins = [
-            F.min(F.xxhash64("_h", F.lit(i))).alias(f"_m{i}") for i in range(num_perm)
-        ]
-        agged = exploded.groupBy("id").agg(*mins)
-        return agged.select(
-            "id", F.array(*[F.col(f"_m{i}") for i in range(num_perm)]).alias("sig")
-        )
-
-    # arrow: map-only kernel over per-doc hash arrays
-    hs = shingled.select(
-        "id", F.transform("shingles", lambda s: F.xxhash64(s)).alias("_hs")
-    ).where(F.size("_hs") > 0)  # == the agg shape's explode semantics
-
-    def _kernel(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            ids = batch.column(0)
-            lst = batch.column(1)
-            n = len(ids)
-            if n == 0:
-                continue
-            offs = np.asarray(lst.offsets, dtype=np.int64)
-            flat = np.asarray(lst.flatten()).view(np.uint64)
-            starts = offs[:-1] - offs[0]
-            # every row has >= 1 hash (filtered above), so reduceat
-            # boundaries are strictly increasing
-            step1 = _xxh64_long(flat, 42)
-            out = np.empty((num_perm, n), dtype=np.int64)
-            for i in range(num_perm):
-                # min must compare SIGNED longs (Spark's min over bigint),
-                # so view the uint64 hash vector as int64 before reducing
-                out[i] = np.minimum.reduceat(
-                    _xxh64_int(i, step1).view(np.int64), starts
-                )
-            sig_flat = np.ascontiguousarray(out.T).reshape(-1)
-            sig = pa.ListArray.from_arrays(
-                pa.array(
-                    np.arange(0, (n + 1) * num_perm, num_perm, dtype=np.int32)
-                ),
-                pa.array(sig_flat),
-            )
-            yield pa.RecordBatch.from_arrays([ids, sig], ["id", "sig"])
-
-    return hs.mapInArrow(_kernel, "id long, sig array<bigint>")
+    exploded = shingled.select(
+        "id", F.explode("shingles").alias("_sh")
+    ).withColumn("_h", F.xxhash64("_sh"))
+    mins = [
+        F.min(F.xxhash64("_h", F.lit(i))).alias(f"_m{i}") for i in range(num_perm)
+    ]
+    agged = exploded.groupBy("id").agg(*mins)
+    return agged.select(
+        "id", F.array(*[F.col(f"_m{i}") for i in range(num_perm)]).alias("sig")
+    )
 
 
 def minhash_lsh_candidates(
@@ -293,22 +179,21 @@ def minhash_lsh_candidates(
     bands: int = 16,
     shingle_k: int = 3,
     shingled: DataFrame | None = None,
-    bucket_cap: int | None = None,
+    bucket_cap: int | None = DEFAULT_BUCKET_CAP,
 ) -> DataFrame:
     """MinHash + LSH banding: docs agreeing on ALL rows of any band are
     candidate near-duplicates. Returns distinct candidate pairs
-    (id_a < id_b, n_bands agreement count). One shuffle on the
-    (band, bucket-hash) key — never an all-pairs product.
+    (id_a < id_b, n_bands agreement count) from :func:`bucket_pairs`
+    over the (band, bucket-hash) key — never an all-pairs product.
 
     ``bucket_cap`` is the skew guard for real corpora, where boilerplate
     (empty pages, licence headers, templated docs) lands thousands of
-    near-identical docs in ONE (band, bucket) group and the self-join
-    inside it goes quadratic — the scale-killer at 100 TB. The capped
-    path (:func:`_grouped_bucket_pairs`) contains NO JOIN at all:
-    buckets at or under the cap emit their all-pairs via grouped array
-    generation, oversized buckets emit star pairs (bucket-min id,
-    member) map-side — linear in bucket size, with per-operator memory
-    bounded by ``bucket_cap`` (see there for the guard mechanics).
+    near-identical docs in ONE (band, bucket) group and pairing inside
+    it goes quadratic — the scale-killer at 100 TB. Buckets at or under
+    the cap emit all their pairs; oversized buckets emit star pairs
+    (bucket-min id, member), linear in bucket size, with per-operator
+    memory bounded by the cap. ``bucket_cap=None`` pairs every bucket
+    in full through an equi-self-join.
 
     Recall contract under the cap: within an oversized bucket,
     PAIR-level recall drops from all-pairs to the star set, but every
@@ -336,124 +221,89 @@ def minhash_lsh_candidates(
     banded = sig.select("id", F.explode(F.array(*band_structs)).alias("bb")).select(
         "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
-    if bucket_cap is None:
-        occurrences = _bucket_self_join(banded)
-    else:
-        log.info("minhash_lsh_candidates: bucket_cap=%d skew guard active", bucket_cap)
-        occurrences = _grouped_bucket_pairs(banded, bucket_cap)
-    return occurrences.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_bands"))
-
-
-def _grouped_bucket_pairs(banded: DataFrame, bucket_cap: int) -> DataFrame:
-    """(id, band, bucket) -> one (id_a < id_b) row per shared bucket,
-    with the bucket_cap star-pair guard. NO JOIN anywhere (the r3-r20
-    shape self-joined within buckets, re-executing the whole signature
-    pipeline into a broadcast build side — see
-    plans/r21/lsh_verify_pipeline_before.txt), and — new in r22 —
-    PER-OPERATOR MEMORY BOUNDED BY ``bucket_cap`` regardless of bucket
-    size:
-
-    1. a Window over (band, bucket) attaches the bucket's member count
-       and min id (the star anchor) to every row. The window operator
-       is sort-based and spillable, so a degenerate bucket with 10^8
-       members costs disk, not an aggregation-buffer OOM.
-    2. rows in buckets AT OR UNDER the cap go through
-       groupBy(band, bucket) -> sorted id array -> all-pairs array
-       expression. The collect_list buffer here holds at most
-       ``bucket_cap`` ids BY CONSTRUCTION (oversized buckets were
-       filtered out before the aggregate — this is the r22 fix; the
-       r21 shape collect_list'ed every bucket whole and decided
-       small-vs-star only afterwards, building a multi-GB single array
-       row for a degenerate bucket, VERDICT r21 "What's wrong #2").
-       The groupBy reuses the window's (band, bucket) partitioning, so
-       no extra exchange.
-    3. rows in oversized buckets emit star pairs (anchor, member)
-       MAP-SIDE from the windowed columns — never collected, linear in
-       bucket size, identical to the r20/r21 star set (the anchor is
-       the bucket min id == sorted ids[0]).
-
-      size <= cap: all (ids[i], ids[j]) i<j  (array is sorted, so
-                   id_a < id_b by construction — identical pair set to
-                   a within-bucket self-join)
-      size  > cap: star pairs (min-id anchor, member)
-
-    Pair generation for capped buckets is a higher-order array
-    expression — interpreted, but it touches exactly the rows the old
-    join emitted."""
-    w = Window.partitionBy("band", "bucket")
-    sized = banded.withColumn("_cnt", F.count(F.lit(1)).over(w)).withColumn(
-        "_anchor", F.min("id").over(w)
-    )
-    grouped = (
-        sized.where(F.col("_cnt") <= bucket_cap)
-        .groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("id")).alias("_ids"))
-    )
-    n = F.size("_ids")
-    all_pairs = F.flatten(
-        F.transform(
-            "_ids",
-            lambda x, i: F.transform(
-                F.slice("_ids", i + 2, n - i - 1),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
-    small = grouped.select(F.explode(all_pairs).alias("_p")).select(
-        "_p.id_a", "_p.id_b"
-    )
-    star = (
-        sized.where((F.col("_cnt") > bucket_cap) & (F.col("id") != F.col("_anchor")))
-        .select(F.col("_anchor").alias("id_a"), F.col("id").alias("id_b"))
-    )
-    return small.unionByName(star)
-
-
-def _bucket_self_join(banded: DataFrame) -> DataFrame:
-    """(id, band, bucket) -> one (id_a < id_b) row per shared bucket.
-    shuffle_merge hint: identical shuffles on both sides are computed
-    once and exchange-reused; a broadcast build side would re-execute
-    the upstream (signature/fingerprint) pipeline."""
-    a, b = banded.alias("a"), banded.hint("shuffle_merge").alias("b")
-    return a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bucket") == F.col("b.bucket"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-
-
-def lsh_bucket_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Bucket-size distribution of the banding join — the monitoring
-    query for choosing ``bucket_cap`` on a new corpus: (bucket_size,
-    n_buckets), largest first. Run on a sample before a full dedup."""
-    sig = minhash_signature_stage(df, text_col, id_col, num_perm, shingle_k)
-    rows = num_perm // bands
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                F.concat_ws(
-                    ",", *[F.col("sig")[b * rows + j].cast("string") for j in range(rows)]
-                )
-            ).alias("bucket"),
-        )
-        for b in range(bands)
-    ]
     return (
-        sig.select("id", F.explode(F.array(*band_structs)).alias("bb"))
-        .groupBy("bb.band", "bb.bucket")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .groupBy("bucket_size")
-        .agg(F.count(F.lit(1)).alias("n_buckets"))
-        .orderBy(F.desc("bucket_size"))
+        bucket_pairs(banded, ("band", "bucket"), bucket_cap)
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_bands"))
+    )
+
+
+def bucket_pairs(rel: DataFrame, keys: tuple, cap: int | None, carry: tuple = ()) -> DataFrame:
+    """Rows keyed by bucket -> pairs of bucket members. The one pairing
+    primitive behind MinHash banding, SimHash banding and hyperplane
+    LSH.
+
+    ``rel`` holds (id, *keys, *carry), one row per (id, keys). Returns
+    one (id_a < id_b, <c>_a, <c>_b for c in carry) row per shared key
+    value; a pair sharing several key values (e.g. several bands) comes
+    out once per shared value, so callers aggregate per pair.
+
+    ``rel`` MUST BE DETERMINISTIC: both branches read it more than once
+    (two join sides, or the small and star branches of the union), and
+    only a deterministic subtree gives every read the same members.
+    Materialize a nondeterministic input (e.g. a Python kernel marked
+    ``asNondeterministic``) with ``localCheckpoint(eager=True)`` first.
+
+    ``cap`` picks the output, not a plan strategy:
+
+    - ``cap=None``: every pair of every bucket, from an equi-self-join
+      on ``keys`` with ``a.id < b.id``. No join hint: over a
+      materialized or deterministic input AQE picks broadcast when a
+      side fits and sort-merge at corpus scale.
+    - ``cap=n``: NO JOIN, and per-operator memory bounded by ``n``
+      whatever the bucket size.
+
+      1. A Window over ``keys`` attaches each bucket's member count and
+         min member (the star anchor) to every row. The window operator
+         is sort-based and spillable, so a degenerate bucket with 10^8
+         members costs disk, not an aggregation-buffer OOM.
+      2. Rows in buckets AT OR UNDER the cap are grouped into one
+         sorted member array per bucket — the collect buffer holds at
+         most ``n`` members by construction, since oversized buckets
+         were filtered out before the aggregate — and an array
+         expression emits all (ids[i], ids[j]) i < j. The groupBy reuses
+         the window's partitioning, so no extra exchange.
+      3. Rows in oversized buckets emit star pairs (anchor, member)
+         MAP-SIDE from the windowed columns — never collected, linear
+         in bucket size.
+
+    In the capped branch, carry columns ride in a ``struct(id, *carry)``
+    member; sorting and min compare ``id`` first, and ids are unique
+    within a bucket."""
+    if cap is None:
+        on = F.col("a.id") < F.col("b.id")
+        for k in keys:
+            on = on & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+        pairs = rel.alias("a").join(rel.alias("b"), on)
+    else:
+        members = rel.select(*keys, F.struct("id", *carry).alias("_m"))
+        w = Window.partitionBy(*keys)
+        sized = members.withColumn("_cnt", F.count(F.lit(1)).over(w)).withColumn(
+            "_anchor", F.min("_m").over(w)
+        )
+        grouped = (
+            sized.where(F.col("_cnt") <= cap)
+            .groupBy(*keys)
+            .agg(F.array_sort(F.collect_list("_m")).alias("_ms"))
+        )
+        n = F.size("_ms")
+        all_pairs = F.flatten(
+            F.transform(
+                "_ms",
+                lambda x, i: F.transform(
+                    F.slice("_ms", i + 2, n - i - 1),
+                    lambda y: F.struct(x.alias("a"), y.alias("b")),
+                ),
+            )
+        )
+        small = grouped.select(F.explode(all_pairs).alias("_p")).select("_p.a", "_p.b")
+        star = sized.where(
+            (F.col("_cnt") > cap) & (F.col("_m.id") != F.col("_anchor.id"))
+        ).select(F.col("_anchor").alias("a"), F.col("_m").alias("b"))
+        pairs = small.unionByName(star)
+    # a.<c> / b.<c>: a column of a join side, or a field of a pair member
+    return pairs.select(
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in ("id", *carry) for s in "ab"]
     )
 
 
@@ -465,7 +315,7 @@ def minhash_lsh_verified(
     num_perm: int = 64,
     bands: int = 16,
     shingle_k: int = 3,
-    bucket_cap: int | None = 1000,
+    bucket_cap: int | None = DEFAULT_BUCKET_CAP,
 ) -> DataFrame:
     """The full 100 TB near-dup pipeline: LSH banding prunes to
     candidate pairs, exact n-gram Jaccard verifies ONLY those pairs.
@@ -710,61 +560,17 @@ def dedup_clusters(
     )
 
 
-def simhash_fingerprints(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", band_bits: int = 16
-) -> DataFrame:
-    """64-bit SimHash per document, computed entirely JVM-side:
-    bit i of the fingerprint = sign of sum over tokens of
-    (+1 if bit i of xxhash64(token) else -1). Also emits 64/band_bits
-    band keys for hamming-candidate grouping (docs sharing any exact
-    band are candidates at hamming distance <= 64 - band_bits).
-
-    Implementation: explode tokens -> 64 flat conditional sums (codegen)
-    with map-side partial aggregation; the fingerprint is assembled from
-    the aggregated bit-sums with literal shifts. No higher-order
-    lambdas, no Python."""
-    exploded = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("_tok"),
-    ).select("id", F.xxhash64("_tok").alias("_h"))
-    sums = [
-        F.sum(
-            F.when(F.shiftright("_h", i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"_b{i}")
-        for i in range(64)
-    ]
-    agged = exploded.groupBy("id").agg(*sums)
-    fingerprint = None
-    for i in range(64):
-        bit_val = (1 << i) if i < 63 else -(1 << 63)  # avoid long overflow
-        term = F.when(F.col(f"_b{i}") > 0, F.lit(bit_val).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        fingerprint = term if fingerprint is None else fingerprint.bitwiseOR(term)
-    out = agged.select("id", fingerprint.alias("simhash"))
-    n_bands = 64 // band_bits
-    mask = (1 << band_bits) - 1
-    return out.withColumn(
-        "bands",
-        F.array(
-            *[
-                F.shiftrightunsigned("simhash", b * band_bits).bitwiseAND(F.lit(mask))
-                for b in range(n_bands)
-            ]
-        ),
-    )
-
-
 def simhash_fingerprints_md5(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", band_bits: int = 16
 ) -> DataFrame:
-    """SimHash variant whose 64-bit token-hash family is derived from
-    md5 hex digits — every step (md5, nibble arithmetic, bit sums, band
-    assembly) is computable bit-identically in DuckDB, which makes the
-    whole simhash pipeline exactly oracle-able. The xxhash64-based
-    :func:`simhash_fingerprints` stays the production JVM default; this
-    variant exists so the conformance gate can value-check simhash
-    end-to-end.
+    """64-bit SimHash per document: bit i of the fingerprint = sign of
+    the sum over tokens of (+1 if bit i of the token hash else -1). Also
+    emits 64/band_bits band keys for hamming-candidate grouping (docs
+    sharing any exact band are candidates). The 64-bit token-hash
+    family is derived from md5 hex digits — every step (md5, nibble
+    arithmetic, bit sums, band assembly) is computable bit-identically
+    in DuckDB, which makes the whole simhash pipeline exactly
+    oracle-able.
 
     Token-hash bit (4j + b), b in 0..3, is bit b of hex digit j of
     md5(token) — identical to the DuckDB oracle's
@@ -782,8 +588,7 @@ def simhash_fingerprints_md5(
     DuckDB oracle's trim()/regexp_split_to_array semantics on docs
     with \\t/\\n edges, and md5 runs over the UTF-8 bytes.)
 
-    Returns (id, simhash: bigint, bands: array<bigint>) — same schema
-    as :func:`simhash_fingerprints`, consumable by
+    Returns (id, simhash: bigint, bands: array<bigint>), consumable by
     :func:`simhash_pairs`."""
     # Java's \s is ASCII-only — match it, not Python's unicode \s.
     _ws = re.compile(r"[ \t\n\x0b\f\r]+")
@@ -874,91 +679,35 @@ def simhash_pairs(
     fps: DataFrame,
     max_hamming: int = 8,
     bucket_cap: int | None = None,
-    materialize_fps: bool = False,
 ) -> DataFrame:
     """Consume simhash band keys: docs sharing ANY exact band are
-    candidates (equi-join on (band_idx, band_val) — never all-pairs),
-    then exact hamming verify via bit_count(xor) <= max_hamming,
-    all JVM-side. With 4 bands of 16 bits, banding recall is 1 for
-    max_hamming <= 3 (pigeonhole: 3 flipped bits can't touch all 4
-    bands); above that it's the standard simhash trade-off.
+    candidates (:func:`bucket_pairs` on (band, bucket) — never
+    all-pairs), then exact hamming verify via bit_count(xor) <=
+    max_hamming, all JVM-side. With 4 bands of 16 bits, banding recall
+    is 1 for max_hamming <= 3 (pigeonhole: 3 flipped bits can't touch
+    all 4 bands); above that it's the standard simhash trade-off.
 
-    ``fps`` is the output of :func:`simhash_fingerprints` or
-    :func:`simhash_fingerprints_md5`. ``bucket_cap`` applies the same
-    oversized-bucket star-pair guard as the MinHash path (see
-    :func:`minhash_lsh_candidates`).
+    ``fps`` is the output of :func:`simhash_fingerprints_md5`.
+    ``bucket_cap`` applies the same oversized-bucket star-pair guard as
+    the MinHash path (see :func:`minhash_lsh_candidates`).
 
-    Plan shape (r21): the fingerprint column is CARRIED THROUGH the
-    band explode and the bucket self-join, so both pair fingerprints
-    come out of the join itself — the r3-r20 shape re-joined the pair
-    list against ``fps`` twice to re-attach them, which (with the
-    band-explode reference) re-executed the fingerprint subplan FOUR
-    times, each doubled by a pushed isnotnull filter: EIGHT
-    ArrowEvalPython corpus passes per run
-    (plans/r21/dd_simhash_pairs_before.txt nodes 3,7,14,18,31,35,42,46).
-    The self-join carries a SHUFFLE_MERGE hint so both sides shuffle
-    identically and the fingerprint subplan is computed once and
-    exchange-reused (an AQE broadcast build side would re-execute it);
-    at corpus scale both sides ARE the corpus, so merge is the right
-    strategy anyway. Per-pair dedup happens AFTER the cheap hamming
-    verify, as a min-aggregate (hamming is pair-functional, so the
-    value is unchanged).
-
-    ``materialize_fps=True`` eagerly localCheckpoints ``fps`` before
-    banding (the :func:`minhash_lsh_verified` pattern): a
-    nondeterministic-UDF fingerprint subtree cannot be exchange-reused
-    across the self-join's two sides, so without it the Python kernel
-    still runs twice per corpus. The checkpointed relation is
-    (id, simhash, bands) — a few dozen bytes/doc, tiny next to
-    re-hashing every token — and both join sides then scan the same
-    stored partitions, so the kernel runs exactly ONCE. Per-invocation
-    only (a fresh call builds a fresh RDD; nothing survives the run).
-    Default False to keep the operator lazy/composable."""
-    if materialize_fps:
-        fps = fps.localCheckpoint(eager=True)
-    banded = fps.select(
+    ``fps`` is eagerly localCheckpointed once, here: the fingerprint
+    kernel is a nondeterministic-marked Python UDF, while
+    :func:`bucket_pairs` needs a deterministic input, and the checkpointed
+    (id, simhash, bands) relation is a few dozen bytes/doc — tiny next
+    to re-hashing every token. The kernel therefore runs exactly once
+    per call. The fingerprint rides through the pairing as a carry
+    column, so no pair is re-joined to ``fps``. Per-pair dedup happens
+    AFTER the cheap hamming verify, as a min-aggregate (hamming is
+    pair-functional, so the value is unchanged)."""
+    banded = fps.localCheckpoint(eager=True).select(
         "id", "simhash", F.posexplode("bands").alias("band", "bucket")
     )
-
-    def _self_join_pairs(rel: DataFrame) -> DataFrame:
-        a = rel.alias("a")
-        b = rel.hint("shuffle_merge").alias("b")
-        return a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        ).select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("_ha"),
-            F.col("b.simhash").alias("_hb"),
-        )
-
-    if bucket_cap is None:
-        occ = _self_join_pairs(banded)
-    else:
-        w = Window.partitionBy("band", "bucket")
-        sized = banded.withColumn("_cnt", F.count(F.lit(1)).over(w)).withColumn(
-            "_anchor", F.min(F.struct("id", "simhash")).over(w)
-        )
-        small = sized.where(F.col("_cnt") <= bucket_cap).select(
-            "id", "simhash", "band", "bucket"
-        )
-        star = (
-            sized.where(
-                (F.col("_cnt") > bucket_cap) & (F.col("id") != F.col("_anchor.id"))
-            )
-            .select(
-                F.col("_anchor.id").alias("id_a"),
-                F.col("id").alias("id_b"),
-                F.col("_anchor.simhash").alias("_ha"),
-                F.col("simhash").alias("_hb"),
-            )
-        )
-        occ = _self_join_pairs(small).unionByName(star)
     return (
-        occ.withColumn("hamming", F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb"))))
+        bucket_pairs(banded, ("band", "bucket"), bucket_cap, carry=("simhash",))
+        .withColumn(
+            "hamming", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+        )
         .where(F.col("hamming") <= max_hamming)
         .groupBy("id_a", "id_b")
         .agg(F.min("hamming").alias("hamming"))

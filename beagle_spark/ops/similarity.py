@@ -25,7 +25,9 @@ and is the 100 TB scan path.
 
 from __future__ import annotations
 
+import json
 import math
+from contextlib import closing
 
 import numpy as np
 import pandas as pd
@@ -33,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+
+from .dedup import bucket_pairs
 
 
 def _mat(series: pd.Series) -> np.ndarray:
@@ -188,6 +192,18 @@ def lsh_ann_topk(
     return brute_force_topk(cands, query, k, vec_col, id_col, payload_cols=payload_cols)
 
 
+# Build parameters of a bucket index, stored beside its parquet files.
+# The leading underscore keeps Spark's parquet listing from reading it.
+_INDEX_PARAMS = "_lsh_index.json"
+
+
+def _index_params_file(spark, path: str):
+    """(Hadoop FileSystem, Path) of the index's parameter file, so the
+    index works on any filesystem Spark can write the parquet to."""
+    meta = spark._jvm.org.apache.hadoop.fs.Path(path, _INDEX_PARAMS)
+    return meta.getFileSystem(spark._jsc.hadoopConfiguration()), meta
+
+
 def build_lsh_bucket_index(
     df: DataFrame,
     path: str,
@@ -206,7 +222,9 @@ def build_lsh_bucket_index(
     predicate never touches row data and the Python kernel never runs
     at query time. 2^n_planes buckets => with the default 6 planes, 64
     partition directories; at 100 TB each holds ~1.6 TB of vectors,
-    well past the small-files hazard."""
+    well past the small-files hazard. The (dim, n_planes, seed) the
+    index was built with are written to ``_lsh_index.json`` in ``path``
+    and checked by every probe."""
     if dim is None:
         dim = len(df.select(vec_col).first()[0])
     planes = make_planes(dim, n_planes, seed)
@@ -221,6 +239,9 @@ def build_lsh_bucket_index(
         .mode("overwrite")
         .parquet(path)
     )
+    fs, meta = _index_params_file(df.sparkSession, path)
+    with closing(fs.create(meta, True)) as out:
+        out.write(json.dumps({"dim": dim, "n_planes": n_planes, "seed": seed}).encode())
 
 
 def lsh_ann_topk_indexed(
@@ -239,7 +260,21 @@ def lsh_ann_topk_indexed(
     parquet scan (visible as ``PartitionFilters`` in the plan): only
     the matching bucket directory is listed and read — no full-corpus
     pass, no UDF evaluation. Same result set as :func:`lsh_ann_topk`
-    with matching planes/seed over the same data."""
+    with matching planes/seed over the same data.
+
+    Raises ValueError when the probe's (dim, n_planes, seed) differ from
+    the ones the index was built with: the planes would differ, and the
+    probe would prune to the wrong bucket."""
+    fs, meta = _index_params_file(spark, path)
+    if not fs.exists(meta):
+        raise ValueError(
+            f"{path} has no {_INDEX_PARAMS}; rebuild it with build_lsh_bucket_index"
+        )
+    with closing(fs.open(meta)) as inp:
+        built = json.loads(spark._jvm.org.apache.commons.io.IOUtils.toString(inp, "UTF-8"))
+    probe = {"dim": len(query), "n_planes": n_planes, "seed": seed}
+    if built != probe:
+        raise ValueError(f"LSH index {path} was built with {built}, probed with {probe}")
     planes = make_planes(len(query), n_planes, seed)
     qbucket = _query_bucket(query, planes)
     cands = spark.read.parquet(path).where(F.col("bucket") == qbucket)
@@ -254,61 +289,33 @@ def lsh_cosine_pairs(
     n_planes: int = 4,
     seed: int = 42,
     dim: int | None = None,
-    materialize_buckets: bool = False,
 ) -> DataFrame:
     """Scale path for embedding near-dup: bucket by random hyperplanes,
-    self-join WITHIN buckets only, exact cosine re-check. One equi-join
-    shuffle on bucket id instead of an all-pairs product. Recall < 1 by
-    construction (cross-bucket pairs are missed); raise recall with
-    fewer planes or multiple plane sets (union of bucketings).
+    pair WITHIN buckets only (:func:`dedup.bucket_pairs`), exact cosine
+    re-check. One equi-join on bucket id instead of an all-pairs
+    product. Recall < 1 by construction (cross-bucket pairs are
+    missed); raise recall with fewer planes or multiple plane sets
+    (union of bucketings).
 
-    ``materialize_buckets=True`` eagerly localCheckpoints the bucketed
-    (id, v, bucket) relation before the self-join (the simhash_pairs
-    ``materialize_fps`` pattern, r22): ``hyperplane_bucket`` is marked
-    nondeterministic (so pushed filters can't duplicate it), and a
-    nondeterministic-UDF subtree is never exchange-reused across the
-    self-join's two sides — without materialization the bucket kernel
-    scores the corpus TWICE per run, and the shuffle_merge hint this
-    operator used to carry (to at least exchange-reuse a deterministic
-    subtree) forced a sort-merge join even where one side was a few
-    hundred rows (the dd_embed_neardup local regression, VERDICT r21
-    "What's wrong #1"). With the checkpoint both sides scan the same
-    stored partitions — kernel runs ONCE — and no hint is needed: AQE
-    picks broadcast when a side fits and sort-merge at corpus scale,
-    size-adaptively. Per-invocation only (a fresh call builds a fresh
-    RDD; nothing survives the run). Default False to keep the operator
-    lazy/composable."""
+    The bucketed (id, v, bucket) relation is eagerly localCheckpointed
+    once, here: ``hyperplane_bucket`` is marked nondeterministic (so
+    pushed filters can't duplicate it), and ``bucket_pairs`` needs a
+    deterministic input. Both join sides then scan the same stored partitions,
+    so the bucket kernel runs ONCE per call, and AQE picks broadcast
+    when a side fits and sort-merge at corpus scale."""
     if dim is None:
         dim = len(df.select(vec_col).first()[0])
     planes = make_planes(dim, n_planes, seed)
-    b = df.select(
+    bucketed = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
-        hyperplane_bucket(F.col(vec_col), planes).alias("_bucket"),
-    )
-    if materialize_buckets:
-        b = b.localCheckpoint(eager=True)
-        l, r = b.alias("l"), b.alias("r")
-    else:
-        # SHUFFLE_MERGE hint: keep both sides as identical shuffles (a
-        # broadcast build side would re-execute the bucket UDF over the
-        # corpus). NOTE the ND mark on hyperplane_bucket defeats
-        # exchange reuse, so the lazy shape still evaluates the bucket
-        # kernel once PER SIDE — prefer materialize_buckets=True
-        # anywhere the double evaluation matters.
-        l, r = b.alias("l"), b.hint("shuffle_merge").alias("r")
+        hyperplane_bucket(F.col(vec_col), planes).alias("bucket"),
+    ).localCheckpoint(eager=True)
     return (
-        l.join(
-            r,
-            (F.col("l._bucket") == F.col("r._bucket")) & (F.col("l.id") < F.col("r.id")),
-        )
-        .withColumn("cos", cosine_pair_col(F.col("l.v"), F.col("r.v")))
+        bucket_pairs(bucketed, ("bucket",), None, carry=("v",))
+        .withColumn("cos", cosine_pair_col(F.col("v_a"), F.col("v_b")))
         .where(F.col("cos") >= threshold)
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.round("cos", 4).alias("cosine"),
-        )
+        .select("id_a", "id_b", F.round("cos", 4).alias("cosine"))
     )
 
 

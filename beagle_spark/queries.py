@@ -341,9 +341,8 @@ def dd_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash fingerprints via the md5-nibble hash family, returned as
     the four 16-bit band values (b0..b3 = bits [0,16)..[48,64)) — every
     arithmetic step is replicated in DuckDB, so the fingerprints are
-    value-exact oracle-checked. The production xxhash64 variant
-    (`dedup.simhash_fingerprints`) shares the plan shape and is covered
-    by pytest hamming tests."""
+    value-exact oracle-checked. The Arrow kernel is map-only: no
+    token explode, no shuffle."""
     out = dedup.simhash_fingerprints_md5(_docs_dedup(spark, sf_dir))
     return out.select(
         F.col("id").alias("doc_id"),
@@ -404,7 +403,7 @@ def dd_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit_count(xor) <= 8, all JVM-side. Oracle mirrors banding + verify
     declaratively over the same md5-nibble fingerprints."""
     fps = dedup.simhash_fingerprints_md5(_docs_dedup(spark, sf_dir))
-    pairs = dedup.simhash_pairs(fps, max_hamming=8, materialize_fps=True)
+    pairs = dedup.simhash_pairs(fps, max_hamming=8)
     return pairs.select(
         "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
     ).orderBy("id_a", "id_b")
@@ -513,7 +512,6 @@ def sim_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
             threshold=0.4,
             dim=64,
-            materialize_buckets=True,
         )
         .select("id_a", "id_b")
         .orderBy("id_a", "id_b")
@@ -541,9 +539,9 @@ def dd_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles. Oracle: deterministic baked-plane bucketing + recursive
     CTE."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    pairs = similarity.lsh_cosine_pairs(
-        emb, threshold=0.4, dim=64, materialize_buckets=True
-    ).select("id_a", "id_b")
+    pairs = similarity.lsh_cosine_pairs(emb, threshold=0.4, dim=64).select(
+        "id_a", "id_b"
+    )
     return dedup.dedup_clusters(emb, pairs, id_col="vec_id").orderBy("vec_id")
 
 

@@ -31,7 +31,7 @@ DEFAULT_QUERIES = [
     "q10_part_revenue", "q12_value_quantiles", "t7_lucene_sql_path",
     "t5_dict_match_counts", "dd_exact", "dd_simhash", "sim_topk",
     "ts_token_count", "ts_quality", "ts_fingerprint", "ts_winnow",
-    "dd_simhash_pairs", "sim_ivf_ann",
+    "dd_simhash_pairs", "sim_ivf_ann", "sim_lsh_pairs",
     # internals (see module docstring)
     "_lsh_verify_pipeline", "_cc_round", "_annotate_udf",
 ]
