@@ -45,35 +45,14 @@ from pyspark.sql.functions import pandas_udf
 from .dictionary.optimizer import optimize
 from .dictionary.validator import validate_dictionary
 from .matcher import CompiledDictionary, compile_dictionary, match_text
-from .schema import ANNOTATIONS_TYPE, DictionaryEntry
+from .schema import ANNOTATIONS_TYPE, DictionaryEntry, norm_keys
 
 __all__ = ["highlighter", "Annotator", "annotate_df"]
-
-_OPT_ALIASES = {
-    "type-name": "type_name",
-    "validate-dictionary?": "validate_dictionary",
-    "optimize-dictionary?": "optimize_dictionary",
-    "merge-annotations?": "merge_annotations",
-    "case-sensitive?": "case_sensitive",
-    "ascii-fold?": "ascii_fold",
-    "stem?": "stem",
-    "in-order?": "in_order",
-}
-
-
-def _norm_opts(opts: dict | None) -> dict:
-    out = {}
-    for k, v in (opts or {}).items():
-        k = str(k).lstrip(":")
-        k = _OPT_ALIASES.get(k, k.replace("-", "_").rstrip("?"))
-        out[k] = v
-    return out
-
 
 def _compile(dictionary, opts: dict | None) -> CompiledDictionary:
     """Compile-phase of the reference highlighter (phrases.clj:265-273):
     optional validation, optional optimization, default type name."""
-    opts = _norm_opts(opts)
+    opts = norm_keys(opts)
     entries = [
         e if isinstance(e, DictionaryEntry) else DictionaryEntry.from_dict(e)
         for e in dictionary
@@ -99,7 +78,7 @@ def highlighter(dictionary, opts: dict | None = None):
     def annotate(text: str, per_call_opts: dict | None = None) -> list[dict]:
         merge = None
         if per_call_opts:
-            merge = _norm_opts(per_call_opts).get("merge_annotations")
+            merge = norm_keys(per_call_opts).get("merge_annotations")
         return match_text(text, cd, merge=merge)
 
     annotate.compiled = cd  # type: ignore[attr-defined]

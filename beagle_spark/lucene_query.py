@@ -25,8 +25,9 @@ from typing import Iterator, Optional
 import pandas as pd
 import regex as re
 
-from .analysis import analyze, field_name, merge_config
-from .matcher.core import dl_distance_leq
+from .analysis import analyze, merge_config
+from .matcher.core import _match_unordered, dl_distance_leq
+from .schema import norm_keys
 
 logger = logging.getLogger(__name__)
 
@@ -321,12 +322,9 @@ def eval_query(node, token_list: list[str], token_set: set) -> bool:
         if k == 1:
             return node.terms[0] in token_set
         # sloppy-phrase existence over string positions
-        from .matcher.core import CompiledQuery, find_matches
-        from .analysis import Token
-
-        toks = [Token(t, i, i + 1) for i, t in enumerate(token_list)]
-        q = CompiledQuery(query_id="", terms=node.terms, field="", slop=node.slop)
-        return bool(find_matches(toks, q))
+        positions = [[i for i, t in enumerate(token_list) if t == term]
+                     for term in node.terms]
+        return all(positions) and bool(_match_unordered(positions, node.slop, node.slop))
     if isinstance(node, BoolQ):
         for m in node.must_not:
             if eval_query(m, token_list, token_set):
@@ -414,17 +412,12 @@ class CompiledLuceneQuery:
 
 
 def compile_lucene_dictionary(dictionary, opts: dict | None = None):
-    opts = opts or {}
-    default_conf = {
-        str(k).lstrip(":").replace("-", "_").rstrip("?"): v for k, v in opts.items()
-    }
+    default_conf = norm_keys(opts)
     type_name = default_conf.pop("type_name", None) or "QUERY"
     compiled = []
     for idx, entry in enumerate(dictionary):
-        entry = {str(k).lstrip(":"): v for k, v in entry.items()}
-        conf = merge_config(
-            {k.replace("-", "_").rstrip("?"): v for k, v in entry.items()}, default_conf
-        )
+        entry = norm_keys(entry)
+        conf = merge_config(entry, default_conf)
         try:
             ast = parse_query(entry["text"], conf)
         except Exception as e:  # parse failure -> drop entry (lucene_alpha.clj:41-43)

@@ -22,8 +22,8 @@ import logging
 import uuid
 from dataclasses import dataclass, field
 
-from ..analysis import AnalysisConfig, Token, analyze, field_name, merge_config
-from ..schema import DictionaryEntry
+from ..analysis import AnalysisConfig, analyze, merge_config
+from ..schema import DictionaryEntry, norm_keys
 from .core import CompiledQuery, build_token_index, find_matches, normalize_slop
 
 logger = logging.getLogger(__name__)
@@ -48,6 +48,8 @@ class FieldProgram:
 
     conf: AnalysisConfig
     queries: list[CompiledQuery] = field(default_factory=list)
+    # emits[i]: resolved (entry_id, type, meta) of the kept queries[i]
+    emits: list = field(default_factory=list)
     # {1: {term -> emits}}; {n>1: {first term -> {rest-terms tuple -> emits}}}
     exact_index: dict = field(default_factory=dict)
     ngram_lengths: tuple = ()
@@ -70,14 +72,12 @@ class FieldProgram:
         (broadcast size and probe locality, not matching arithmetic, are
         the throughput limiters at scale). Synonym re-attribution and
         default-type resolution (phrases.clj:217-226,269) happen here,
-        once, instead of per match."""
+        once, instead of per match: for the kept general queries too,
+        in `emits`."""
         exact: dict[int, dict] = {}
         keep: list[CompiledQuery] = []
         for q in self.queries:
             if not q.fuzzy and q.slop == 0 and not q.ordered:
-                meta = q.meta or {}
-                entry_id = meta.get("query-id", q.query_id)
-                qtype = q.type if q.type is not None else type_name
                 # keyed by the TERMS TUPLE, never a joined string: tokens
                 # from the whitespace/keyword tokenizers may themselves
                 # contain any byte (including NUL), so a join/re-split
@@ -86,10 +86,11 @@ class FieldProgram:
                 # miss)
                 exact.setdefault(len(q.terms), {}).setdefault(
                     tuple(q.terms), []
-                ).append((entry_id, qtype, meta))
+                ).append(_emission(q, type_name))
                 continue
             keep.append(q)
         self.queries = keep
+        self.emits = [_emission(q, type_name) for q in keep]
         # n==1: flat term -> emits. n>1: NESTED first term -> {REST
         # terms tuple -> emits}: a position whose token isn't the first
         # term of ANY n-phrase costs ONE dict miss (no window-tuple
@@ -166,6 +167,16 @@ class FieldProgram:
                         for e in emits:
                             out.append((e, pos, pos + n - 1))
         return out
+
+
+def _emission(q: CompiledQuery, type_name: str) -> tuple:
+    """(entry_id, type, meta) an annotation of `q` carries
+    (phrases.clj:217-226): synonym hits are re-attributed to the parent
+    entry id, a missing type falls back to the dictionary default, and
+    `_type` never leaks (it is never put in meta)."""
+    meta = q.meta or {}
+    qtype = q.type if q.type is not None else type_name
+    return meta.get("query-id", q.query_id), qtype, meta
 
 
 @dataclass
@@ -262,7 +273,6 @@ def _compile_entry(
     q = CompiledQuery(
         query_id=str(query_id),
         terms=terms,
-        field=field_name(conf),
         slop=slop,
         ordered=bool(ordered),
         fuzzy=fuzzy,
@@ -283,9 +293,7 @@ def compile_dictionary(
     dict-entries->monitor-queries (phrases.clj:206-215): ordinal default
     ids are position-stable; synonyms appended right after their parent;
     per-entry compile errors logged and skipped (monitor.clj:34-46)."""
-    default_conf = {
-        (k.replace("-", "_").rstrip("?")): v for k, v in (default_conf or {}).items()
-    }
+    default_conf = norm_keys(default_conf)
     by_conf: dict[AnalysisConfig, FieldProgram] = {}
     conf_cache: dict = {}
     entries = [
@@ -332,28 +340,20 @@ def match_text(text: str, cd: CompiledDictionary, merge: bool | None = None) -> 
         tokens = analyze(text, prog.conf)
         if not tokens:
             continue
-
-        def emit(q, begin: int, end: int):
-            # post-process (phrases.clj:217-226): synonym hits
-            # re-attributed to the parent entry id; `_type` never
-            # leaks (we never put it in meta).
-            meta = q.meta
-            entry_id = meta.get("query-id", q.query_id) if meta else q.query_id
-            out.append(
-                {
-                    "text": text[begin:end],
-                    "type": q.type if q.type is not None else cd.type_name,
-                    "dict_entry_id": entry_id,
-                    "meta": meta,
-                    "begin_offset": begin,
-                    "end_offset": end,
-                }
-            )
-
-        # fast path: exact-phrase window probe — emission tuples were
-        # fully resolved (entry id / type / meta) at compile time
-        for (entry_id, qtype, meta), p0, p1 in prog.probe_exact(tokens):
-            begin, end = tokens[p0].begin, tokens[p1].end
+        # (emission, begin, end): exact-phrase window probe first, then
+        # counter prefilter + positional verification
+        hits = [
+            (e, tokens[p0].begin, tokens[p1].end)
+            for e, p0, p1 in prog.probe_exact(tokens)
+        ]
+        if prog.general or prog.always:
+            index = build_token_index(tokens)
+            for qi in prog.candidates(index.keys()):
+                e = prog.emits[qi]
+                hits.extend(
+                    (e, b, end) for b, end in find_matches(tokens, prog.queries[qi], index)
+                )
+        for (entry_id, qtype, meta), begin, end in hits:
             out.append(
                 {
                     "text": text[begin:end],
@@ -364,14 +364,6 @@ def match_text(text: str, cd: CompiledDictionary, merge: bool | None = None) -> 
                     "end_offset": end,
                 }
             )
-
-        # general path: counter prefilter + positional verification
-        if prog.general or prog.always:
-            index = build_token_index(tokens)
-            for qi in prog.candidates(index.keys()):
-                q = prog.queries[qi]
-                for begin, end in find_matches(tokens, q, index):
-                    emit(q, begin, end)
     if cd.merge_annotations if merge is None else merge:
         out = merge_same_type_annotations(out)
     return out

@@ -26,6 +26,7 @@ fine-print):
 
 from __future__ import annotations
 
+from bisect import bisect_left, bisect_right
 from dataclasses import dataclass, field
 from typing import Optional
 
@@ -41,7 +42,6 @@ class CompiledQuery:
 
     query_id: str
     terms: tuple[str, ...]
-    field: str  # analysis-config identity (text_analysis.clj:84-96)
     slop: int = 0
     ordered: bool = False  # SpanNearQuery path incl. "_in-order" flag
     fuzzy: bool = False
@@ -157,51 +157,40 @@ def _positions_fuzzy(index: dict, terms: tuple[str, ...], max_edits: int):
 # ---------------------------------------------------------------------------
 # Matching algorithms. All return a list of (min_pos, max_pos) doc-position
 # spans, one per distinct start position that begins a match.
+#
+# Every unordered shape is one search: per anchor s, an injective
+# assignment slot i -> position p_i in [s, s + slop + k - 1] with
+# min(p) == s and adjusted spread max(p_i - i) - min(p_i - i) <= spread.
+#   - sloppy phrase (Lucene's moves measure): spread = slop; slop 0 is
+#     the exact in-order phrase.
+#   - unordered span-near, the fuzzy in_order=false path
+#     (phrases.clj:173-176; NearSpansUnordered: (max_end - min_start) -
+#     totalLength <= slop): spread = slop + 2(k - 1), which the window
+#     already implies, so only the raw width binds. Weaker than the
+#     moves measure: "mill tokne" matches "token mill" at slop 0
+#     (phrases_test.clj:512-517).
 # ---------------------------------------------------------------------------
-def _match_exact_phrase(positions: list[list[int]]) -> list[tuple[int, int]]:
-    """slop=0 unordered == consecutive in-order occurrence (fast path)."""
-    k = len(positions)
-    first = positions[0]
-    rest = [set(p) for p in positions[1:]]
-    spans = []
-    for p0 in first:
-        ok = True
-        for off, pset in enumerate(rest, start=1):
-            if p0 + off not in pset:
-                ok = False
-                break
-        if ok:
-            spans.append((p0, p0 + k - 1))
-    return spans
-
-
-def _match_sloppy(positions: list[list[int]], slop: int) -> list[tuple[int, int]]:
-    """Unordered sloppy phrase. Enumerates, per candidate start position s,
-    whether an injective slot->position assignment exists with min(p)=s and
-    adjusted spread max(p_i - i) - min(p_i - i) <= slop. Window is bounded:
-    p_max - p_min <= slop + k - 1, so the search space per anchor is tiny
-    for realistic slop/phrase lengths."""
+def _match_unordered(
+    positions: list[list[int]], slop: int, spread: int
+) -> list[tuple[int, int]]:
+    """Unordered phrase search (see the section comment). Each slot's
+    window is a bisect slice of its sorted position list, so an anchor
+    costs O(k log n + window), not O(n)."""
     k = len(positions)
     window = slop + k - 1
-    starts = sorted({p for plist in positions for p in plist})
-    pos_in_window = [None] * k
     spans = []
-    for s in starts:
+    for s in sorted({p for plist in positions for p in plist}):
         hi = s + window
         cand = []
-        feasible = True
-        for i in range(k):
-            cs = [p for p in positions[i] if s <= p <= hi]
+        for plist in positions:
+            cs = plist[bisect_left(plist, s) : bisect_right(plist, hi)]
             if not cs:
-                feasible = False
                 break
             cand.append(cs)
-        if not feasible:
-            continue
-        # backtracking over slots, require min assigned == s
-        best = _assign(cand, s, slop, k)
-        if best is not None:
-            spans.append(best)
+        else:
+            span = _assign(cand, s, spread, k)
+            if span is not None:
+                spans.append(span)
     return spans
 
 
@@ -211,84 +200,16 @@ def _match_sloppy(positions: list[list[int]], slop: int) -> list[tuple[int, int]
 _MAX_ASSIGN_NODES = 200_000
 
 
-def _assign(cand: list[list[int]], s: int, slop: int, k: int):
-    """Find an injective assignment p_i in cand[i], min(p)=s, adjusted
-    spread <= slop; return (min_pos, max_pos) of the tightest found."""
+def _assign(cand: list[list[int]], s: int, spread: int, k: int):
+    """First injective assignment p_i in cand[i] (depth-first, slots in
+    order, positions ascending) that uses s and has adjusted spread
+    <= spread; returns its (min_pos, max_pos), or None."""
     used: set[int] = set()
     best: list[Optional[tuple[int, int]]] = [None]
     budget = [_MAX_ASSIGN_NODES]
 
     def rec(i: int, lo_adj: int, hi_adj: int, saw_s: bool):
-        if best[0] is not None or budget[0] <= 0:
-            return
-        budget[0] -= 1
-        if hi_adj - lo_adj > slop:
-            return
-        if i == k:
-            if saw_s:
-                ps = used
-                best[0] = (min(ps), max(ps))
-            return
-        for p in cand[i]:
-            if p in used:
-                continue
-            adj = p - i
-            nlo = adj if adj < lo_adj else lo_adj
-            nhi = adj if adj > hi_adj else hi_adj
-            if nhi - nlo > slop:
-                continue
-            # prune: remaining slots can't fix min(p)==s requirement late;
-            # check at leaf instead (saw_s)
-            used.add(p)
-            rec(i + 1, nlo, nhi, saw_s or p == s)
-            used.discard(p)
-            if best[0] is not None:
-                return
-
-    rec(0, 2**62, -(2**62), False)
-    return best[0]
-
-
-def _match_unordered_near(
-    positions: list[list[int]], slop: int
-) -> list[tuple[int, int]]:
-    """Unordered SpanNearQuery (the fuzzy in_order=false path,
-    phrases.clj:173-176): injective assignment with raw span width
-    p_max - p_min <= slop + k - 1 (NearSpansUnordered:
-    (max_end - min_start) - totalLength <= slop). NOTE: weaker than the
-    sloppy-phrase moves measure — "mill tokne" matches "token mill" at
-    slop 0 (phrases_test.clj:512-517)."""
-    k = len(positions)
-    window = slop + k - 1
-    starts = sorted({p for plist in positions for p in plist})
-    spans = []
-    for s in starts:
-        hi = s + window
-        cand = []
-        feasible = True
-        for i in range(k):
-            cs = [p for p in positions[i] if s <= p <= hi]
-            if not cs:
-                feasible = False
-                break
-            cand.append(cs)
-        if not feasible:
-            continue
-        got = _assign_any(cand, s, k)
-        if got is not None:
-            spans.append(got)
-    return spans
-
-
-def _assign_any(cand: list[list[int]], s: int, k: int):
-    """Any injective assignment with min(p) == s; window already bounds
-    the spread. Returns (min_pos, max_pos) or None."""
-    used: set[int] = set()
-    best: list[Optional[tuple[int, int]]] = [None]
-    budget = [_MAX_ASSIGN_NODES]
-
-    def rec(i: int, saw_s: bool):
-        if best[0] is not None or budget[0] <= 0:
+        if budget[0] <= 0:
             return
         budget[0] -= 1
         if i == k:
@@ -298,13 +219,18 @@ def _assign_any(cand: list[list[int]], s: int, k: int):
         for p in cand[i]:
             if p in used:
                 continue
+            adj = p - i
+            nlo = adj if adj < lo_adj else lo_adj
+            nhi = adj if adj > hi_adj else hi_adj
+            if nhi - nlo > spread:
+                continue
             used.add(p)
-            rec(i + 1, saw_s or p == s)
+            rec(i + 1, nlo, nhi, saw_s or p == s)
             used.discard(p)
             if best[0] is not None:
                 return
 
-    rec(0, False)
+    rec(0, 2**62, -(2**62), False)
     return best[0]
 
 
@@ -317,8 +243,6 @@ def _match_ordered(positions: list[list[int]], slop: int) -> list[tuple[int, int
     (phrases.clj:43-53; pinned by phrases_test.clj:404-412 where
     "phrase end end" over "phrase phrase end end" yields ONE highlight
     spanning from the first "phrase")."""
-    import bisect
-
     k = len(positions)
     by_end: dict[int, int] = {}
     for p0 in positions[0]:
@@ -326,7 +250,7 @@ def _match_ordered(positions: list[list[int]], slop: int) -> list[tuple[int, int
         ok = True
         for i in range(1, k):
             plist = positions[i]
-            j = bisect.bisect_right(plist, prev)
+            j = bisect_right(plist, prev)
             if j >= len(plist):
                 ok = False
                 break
@@ -341,8 +265,13 @@ def find_matches(
     tokens: list[Token], q: CompiledQuery, index: dict | None = None
 ) -> list[tuple[int, int]]:
     """All match spans of `q` in `tokens`, as char-offset (begin, end)
-    pairs into the original text. Pass a prebuilt `build_token_index`
-    to amortize it across queries (the hot path does)."""
+    pairs into the original text, one per distinct start position. An
+    ordered query runs `_match_ordered`; every other multi-term shape
+    runs the one unordered search, `_match_unordered`, with the spread
+    of its shape: `slop` for a (sloppy or exact) phrase, `slop + 2(k-1)`
+    for a fuzzy `in_order=false` span-near. Pass a prebuilt
+    `build_token_index` to amortize it across queries (the hot path
+    does)."""
     if not tokens or not q.terms:
         return []
     if index is None:
@@ -360,9 +289,7 @@ def find_matches(
         pos_spans = _match_ordered(positions, q.slop)
     elif q.fuzzy:
         # fuzzy + explicit in_order=false -> unordered SpanNearQuery
-        pos_spans = _match_unordered_near(positions, q.slop)
-    elif q.slop <= 0:
-        pos_spans = _match_exact_phrase(positions)
+        pos_spans = _match_unordered(positions, q.slop, q.slop + 2 * (k - 1))
     else:
-        pos_spans = _match_sloppy(positions, q.slop)
+        pos_spans = _match_unordered(positions, q.slop, q.slop)
     return [(tokens[a].begin, tokens[b].end) for a, b in pos_spans]

@@ -79,6 +79,18 @@ VALID_STEMMERS = {
 }
 
 
+def norm_key(k) -> str:
+    """The one spelling rule for option and entry keys: the reference's
+    keywords map to snake_case (`:case-sensitive?` -> `case_sensitive`,
+    `type-name` -> `type_name`)."""
+    return str(k).lstrip(":").replace("-", "_").rstrip("?")
+
+
+def norm_keys(d: dict | None) -> dict:
+    """`d` with every key spelled by `norm_key`."""
+    return {norm_key(k): v for k, v in (d or {}).items()}
+
+
 @dataclass
 class DictionaryEntry:
     """Python-side dictionary entry (reference: schema.clj:31-32).
@@ -104,27 +116,14 @@ class DictionaryEntry:
     fuzziness: Optional[int] = None
     meta: Optional[dict] = None
 
-    _ALIASES = {
-        "case-sensitive?": "case_sensitive",
-        "case-sensitive": "case_sensitive",
-        "case_sensitive?": "case_sensitive",
-        "ascii-fold?": "ascii_fold",
-        "ascii-fold": "ascii_fold",
-        "ascii_fold?": "ascii_fold",
-        "stem?": "stem",
-        "in-order?": "in_order",
-        "in-order": "in_order",
-        "in_order?": "in_order",
-        "fuzzy?": "fuzzy",
-        "dict-entry-id": "id",
-    }
+    # the one spelling `norm_key` cannot derive
+    _ALIASES = {"dict-entry-id": "id"}
 
     @classmethod
     def from_dict(cls, d: dict) -> "DictionaryEntry":
         kw = {}
         for k, v in d.items():
-            k = str(k).lstrip(":")
-            k = cls._ALIASES.get(k, k.replace("-", "_"))
+            k = cls._ALIASES.get(str(k).lstrip(":")) or norm_key(k)
             if k in cls.__dataclass_fields__:
                 kw[k] = v
         if "meta" in kw and kw["meta"] is not None:

@@ -50,6 +50,16 @@ def test_dictionary_entry_aliases():
     assert e.in_order is True
     assert e.fuzzy is True
     assert e.meta == {"lbl": "v"}
+    # every spelling follows one rule (`norm_key`); `dict-entry-id` is
+    # the only alias
+    e = DictionaryEntry.from_dict(
+        {"text": "x", "case_sensitive?": True, "in-order": False,
+         ":stem?": True, "dict-entry-id": "d1"}
+    )
+    assert e.case_sensitive is True
+    assert e.in_order is False
+    assert e.stem is True
+    assert e.id == "d1"
 
 
 def test_sql_function_registration(spark):

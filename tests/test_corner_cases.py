@@ -119,3 +119,28 @@ def test_text_default_pictographs_and_keycaps():
     assert [t.text for t in tok("v12.3 \U0001F680 go")] == [
         "v12.3", "\U0001F680", "go"
     ]
+
+
+def test_repeated_token_document_bounded():
+    """A document of one token repeated 10^5 times under a slop-5
+    three-term entry, as a sloppy phrase and as an unordered fuzzy span:
+    every start but the last two begins a match, and the per-anchor
+    window is a bisect slice, so the search stays near-linear."""
+    import time
+
+    text = " ".join(["spam"] * 100_000)
+    hl = highlighter([
+        {"text": "spam spam spam", "id": "sloppy", "slop": 5},
+        {"text": "spam spam spam", "id": "near", "slop": 5,
+         "fuzzy": True, "in-order?": False},
+    ])
+    t0 = time.perf_counter()
+    anns = hl(text)
+    elapsed = time.perf_counter() - t0
+    for entry_id in ("sloppy", "near"):
+        spans = [(a["begin_offset"], a["end_offset"])
+                 for a in anns if a["dict_entry_id"] == entry_id]
+        assert len(spans) == 99_998
+        # first match: the three tokens starting at the anchor
+        assert spans[0] == (0, len("spam spam spam"))
+    assert elapsed < 30, elapsed

@@ -6,10 +6,15 @@ itertools and applies the semantic definitions directly:
 
 - sloppy (MultiPhraseQuery): exists assignment with
   max(p_i - i) - min(p_i - i) <= slop anchored at min position s
+  (`_match_unordered` with spread = slop)
 - unordered near (SpanNearQuery): exists assignment with
   max(p) - min(p) <= slop + k - 1 anchored at s
+  (`_match_unordered` with spread = slop + 2(k - 1))
 - ordered: increasing positions with total gap <= slop, minimal end,
   same-end collapse to earliest start
+
+For both unordered shapes every returned (s, e) must be a witness: e is
+the end of some satisfying assignment anchored at s.
 """
 
 import itertools
@@ -21,8 +26,7 @@ from beagle_spark.analysis import Token
 from beagle_spark.matcher.core import (
     CompiledQuery,
     _match_ordered,
-    _match_sloppy,
-    _match_unordered_near,
+    _match_unordered,
     find_matches,
 )
 
@@ -63,16 +67,16 @@ def test_sloppy_matches_brute_force(doc, terms, slop):
     positions = positions_of(doc, terms)
     if positions is None:
         return
-    got = {s for s, _e in _match_sloppy(positions, slop)}
-    expected = set(
-        brute_anchors(
-            positions,
-            lambda c: max(p - i for i, p in enumerate(c))
-            - min(p - i for i, p in enumerate(c))
-            <= slop,
-        )
+    got = _match_unordered(positions, slop, slop)
+    expected = brute_anchors(
+        positions,
+        lambda c: max(p - i for i, p in enumerate(c))
+        - min(p - i for i, p in enumerate(c))
+        <= slop,
     )
-    assert got == expected, (doc, terms, slop)
+    assert {s for s, _e in got} == set(expected), (doc, terms, slop)
+    for s, e in got:
+        assert e in expected[s], (doc, terms, slop, s, e)
 
 
 @settings(max_examples=400, deadline=None)
@@ -82,11 +86,11 @@ def test_unordered_near_matches_brute_force(doc, terms, slop):
     if positions is None:
         return
     k = len(terms)
-    got = {s for s, _e in _match_unordered_near(positions, slop)}
-    expected = set(
-        brute_anchors(positions, lambda c: max(c) - min(c) <= slop + k - 1)
-    )
-    assert got == expected, (doc, terms, slop)
+    got = _match_unordered(positions, slop, slop + 2 * (k - 1))
+    expected = brute_anchors(positions, lambda c: max(c) - min(c) <= slop + k - 1)
+    assert {s for s, _e in got} == set(expected), (doc, terms, slop)
+    for s, e in got:
+        assert e in expected[s], (doc, terms, slop, s, e)
 
 
 @settings(max_examples=400, deadline=None)
@@ -128,7 +132,7 @@ def test_find_matches_offsets_are_token_aligned(doc, terms, slop, ordered):
         tokens.append(Token(w, pos, pos + len(w)))
         pos += len(w) + 1
     q = CompiledQuery(
-        query_id="q", terms=tuple(terms), field="f", slop=slop, ordered=ordered
+        query_id="q", terms=tuple(terms), slop=slop, ordered=ordered
     )
     for begin, end in find_matches(tokens, q):
         assert 0 <= begin < end <= len(text)
