@@ -12,6 +12,10 @@ Mirrors the reference's analyzer construction and config cascade
   once per distinct config, not once per query (monitor.clj:48-59).
 - Filter order: tokenize -> lowercase -> fold -> stem
   (text_analysis.clj:73-80).
+
+`analyze` returns one flat `Tokens(texts, begins, ends)`: the filtered
+token strings and their ORIGINAL char offsets as parallel lists (a
+filter rewrites `texts` and drops emptied tokens from all three).
 """
 
 from __future__ import annotations
@@ -21,11 +25,12 @@ from dataclasses import dataclass
 from functools import lru_cache
 
 from .stem import get_stemmer
-from .tokenizers import Token, get_tokenizer, tokenize_classic_typed
+from .tokenizers import Token, Tokens, get_tokenizer, tokenize_classic_typed
 
 __all__ = [
     "AnalysisConfig",
     "Token",
+    "Tokens",
     "DEFAULT_CONF",
     "merge_config",
     "field_name",
@@ -103,19 +108,21 @@ def ascii_fold(s: str) -> str:
     return "".join(out)
 
 
-def _classic_filtered_tokenize(text: str) -> list[Token]:
+def _classic_filtered_tokenize(text: str) -> Tokens:
     """ClassicFilter over classic-typed tokens (Lucene ClassicFilter):
     APOSTROPHE tokens lose a trailing 's / 'S; ACRONYM tokens lose all
     dots. Offsets keep the ORIGINAL token span (the filter shrinks the
     term text only), so highlights cover e.g. the whole "John's"."""
-    out = []
+    out = Tokens([], [], [])
     for t, typ in tokenize_classic_typed(text):
         s = t.text
         if typ == "APOSTROPHE" and len(s) >= 2 and s[-2] == "'" and s[-1] in "sS":
             s = s[:-2]
         elif typ == "ACRONYM":
             s = s.replace(".", "")
-        out.append(Token(s, t.begin, t.end))
+        out.texts.append(s)
+        out.begins.append(t.begin)
+        out.ends.append(t.end)
     return out
 
 
@@ -132,47 +139,43 @@ def _chain(conf: AnalysisConfig):
     for the standard tokenizer it is a no-op (StandardTokenizer emits
     <ALPHANUM>/<NUM>), so "John's" stays one unstripped token under the
     DEFAULT config, and strips to "John" under tokenizer=classic."""
-    classic_filter = (
+    if (
         conf.tokenizer == "classic"
         and not conf.stem
         and conf.case_sensitive
         and not conf.ascii_fold
-    )
+    ):
+        return _classic_filtered_tokenize
+    # the optional LowerCaseFilter is fused into the tokenizer (see
+    # get_tokenizer); the common annotate configs need nothing more
+    tokenize = get_tokenizer(conf.tokenizer, lower=not conf.case_sensitive)
     stem_fn = get_stemmer(conf.stemmer) if conf.stem else None
-    lower = not conf.case_sensitive
     fold = conf.ascii_fold
-    if not classic_filter and not fold and stem_fn is None:
-        # fast path (the common annotate configs): the optional
-        # LowerCaseFilter is fused into the scan loop — one Token per
-        # token instead of scan-then-rebuild (see get_tokenizer).
-        return get_tokenizer(conf.tokenizer, lower=lower)
-    tokenize = _classic_filtered_tokenize if classic_filter else get_tokenizer(conf.tokenizer)
+    if not fold and stem_fn is None:
+        return tokenize
 
-    def run(text: str) -> list[Token]:
+    def run(text: str) -> Tokens:
         toks = tokenize(text)
-        if not (lower or fold or stem_fn):
-            return toks
-        out = []
-        for t in toks:
-            s = t.text
-            if lower:
-                s = s.lower()
+        out = Tokens([], [], [])
+        for s, b, e in zip(toks.texts, toks.begins, toks.ends):
             if fold:
                 s = ascii_fold(s)
             if stem_fn is not None:
                 s = stem_fn(s)
             if s:
-                out.append(Token(s, t.begin, t.end))
+                out.texts.append(s)
+                out.begins.append(b)
+                out.ends.append(e)
         return out
 
     return run
 
 
-def analyze(text: str, conf: AnalysisConfig) -> list[Token]:
+def analyze(text: str, conf: AnalysisConfig) -> Tokens:
     """Tokenize + filter, preserving original char offsets."""
     return _chain(conf)(text)
 
 
 def text_to_token_strings(text: str, conf: AnalysisConfig) -> list[str]:
     """Reference `text->token-strings` (text_analysis.clj:136-148)."""
-    return [t.text for t in analyze(text, conf)]
+    return analyze(text, conf).texts

@@ -1,12 +1,17 @@
 """Offset-preserving tokenizers.
 
 Mirrors the reference's 7 tokenizers (reference:
-src/beagle/text_analysis.clj:51-63) as compiled-regex scanners that
-return (token, begin, end) char offsets into the original string —
+src/beagle/text_analysis.clj:51-63) as compiled regexes. A tokenizer
+returns one flat `Tokens(texts, begins, ends)`: the token strings and
+their char offsets into the original string as three parallel lists —
 offsets are required because annotations carry char spans
-(schema.clj:36-37).
+(schema.clj:36-37), but the matcher reads them only for the positions
+it emits. Each regex tokenizer builds the three lists from one
+`split` with a capturing group (gaps and tokens alternate) plus a
+running sum of the piece lengths; no per-token object is built.
 
-Implemented with the `regex` module for proper Unicode classes.
+Implemented with the `regex` module for proper Unicode classes, and a
+stdlib-`re` twin for pure-ASCII input where the grammar allows it.
 `standard`/`classic` approximate Lucene's UAX#29 StandardTokenizer:
 word = letter run (with internal apostrophes kept by `classic` style
 possessive handling downstream), number = digit run with internal
@@ -17,7 +22,9 @@ tests/test_corner_cases.py).
 from __future__ import annotations
 
 import re as sre
+from dataclasses import dataclass
 from functools import lru_cache
+from itertools import accumulate
 from typing import NamedTuple
 
 import regex as re
@@ -27,6 +34,26 @@ class Token(NamedTuple):
     text: str
     begin: int
     end: int
+
+
+@dataclass(slots=True)
+class Tokens:
+    """An analyzed token stream as three parallel lists. ``len`` is the
+    token count; ``tokens[i]`` and iteration give `Token`s for callers
+    that want one record per token."""
+
+    texts: list[str]
+    begins: list[int]
+    ends: list[int]
+
+    def __len__(self) -> int:
+        return len(self.texts)
+
+    def __getitem__(self, i: int) -> Token:
+        return Token(self.texts[i], self.begins[i], self.ends[i])
+
+    def __iter__(self):
+        return map(Token, self.texts, self.begins, self.ends)
 
 
 # UAX#29 word with the MidLetter/MidNumLet join rules Lucene's
@@ -90,7 +117,9 @@ _CLASSIC_TYPED = re.compile(
     r"|(?P<ALPHANUM>[\p{L}\p{M}\p{Nd}]+)",
     re.UNICODE,
 )
-_CLASSIC = _CLASSIC_TYPED
+# the untyped classic grammar: the same alternatives without the named
+# groups, so it splits like the other patterns
+_CLASSIC = re.compile(re.sub(r"\(\?P<\w+>", "(?:", _CLASSIC_TYPED.pattern), re.UNICODE)
 _LETTER = re.compile(r"[\p{L}\p{M}]+", re.UNICODE)
 # Lucene WhitespaceTokenizer splits on java Character.isWhitespace —
 # which EXCLUDES no-break spaces (U+00A0, U+2007, U+202F);
@@ -111,6 +140,8 @@ _UNICODE_WHITESPACE = re.compile(r"\S+", re.UNICODE)
 # anything NOT in [a-zA-Z0-9{}\[\]()<>#+=@&'] — i.e. tokens are runs of
 # those chars.
 _STRICT = re.compile(r"[a-zA-Z0-9{}\[\]()<>#+=@&']+")
+# Lucene KeywordTokenizer: the entire (non-empty) input is one token.
+_KEYWORD = re.compile(r".+", re.DOTALL)
 
 _PATTERNS = {
     "standard": _STANDARD,
@@ -119,6 +150,7 @@ _PATTERNS = {
     "whitespace": _WHITESPACE,
     "unicode-whitespace": _UNICODE_WHITESPACE,
     "strict": _STRICT,
+    "keyword": _KEYWORD,
 }
 
 # ASCII-restricted twin of _STANDARD, compiled with the stdlib `re`
@@ -138,8 +170,20 @@ _ASCII_LETTER = sre.compile(r"[A-Za-z]+")
 _ASCII_TWINS = {"standard": _ASCII_STANDARD, "letter": _ASCII_LETTER}
 
 
-def _scan(pattern: re.Pattern, text: str) -> list[Token]:
-    return [Token(m.group(), m.start(), m.end()) for m in pattern.finditer(text)]
+def _flat(pieces: list) -> Tokens:
+    """`Tokens` from a capturing split: pieces alternate gap, token,
+    gap, ..., gap, so token i spans [sum(len(pieces[:2i+1])),
+    sum(len(pieces[:2i+2])))."""
+    bounds = list(accumulate(map(len, pieces)))
+    return Tokens(pieces[1::2], bounds[0:-1:2], bounds[1::2])
+
+
+def _splitter(pattern):
+    """`split` of ``pattern`` wrapped in one capturing group. Every
+    pattern here matches only non-empty text, so the split finds
+    exactly the matches `finditer` finds."""
+    engine = sre if isinstance(pattern, sre.Pattern) else re
+    return engine.compile(f"({pattern.pattern})", pattern.flags).split
 
 
 def tokenize_classic_typed(text: str) -> list[tuple[Token, str]]:
@@ -152,51 +196,36 @@ def tokenize_classic_typed(text: str) -> list[tuple[Token, str]]:
     ]
 
 
-def _keyword(text: str) -> list[Token]:
-    # Lucene KeywordTokenizer: entire input is one token.
-    return [Token(text, 0, len(text))] if text else []
+def _make_scanner(pattern, ascii_twin, lower: bool):
+    """Build fn(text) -> Tokens. Pure-ASCII input goes to the faster
+    stdlib-re twin when there is one. ``lower`` fuses the
+    LowerCaseFilter: ASCII text is lowered whole before the split
+    (ASCII lowering keeps every offset and character class); other text
+    is split as is and each token lowered (`str.lower` can change a
+    string's length, e.g. 'İ')."""
+    split = _splitter(pattern)
+    ascii_split = _splitter(ascii_twin) if ascii_twin is not None else split
 
+    def scan(text: str) -> Tokens:
+        if text.isascii():
+            return _flat(ascii_split(text.lower() if lower else text))
+        toks = _flat(split(text))
+        if lower:
+            toks.texts = [t.lower() for t in toks.texts]
+        return toks
 
-def _keyword_lower(text: str) -> list[Token]:
-    return [Token(text.lower(), 0, len(text))] if text else []
-
-
-def _make_scanner(pattern, ascii_twin=None, lower: bool = False):
-    """Build a scan fn, optionally fusing the LowerCaseFilter into the
-    match loop (one Token construction per token instead of two — the
-    annotate hot path lowers every token) and optionally dispatching
-    pure-ASCII input to a faster stdlib-re twin pattern."""
-    if lower:
-        def scan(text: str) -> list[Token]:
-            return [
-                Token(m.group().lower(), m.start(), m.end())
-                for m in pattern.finditer(text)
-            ]
-    else:
-        def scan(text: str) -> list[Token]:
-            return [Token(m.group(), m.start(), m.end()) for m in pattern.finditer(text)]
-    if ascii_twin is None:
-        return scan
-    fast = _make_scanner(ascii_twin, None, lower)
-    slow = scan
-
-    def dispatch(text: str) -> list[Token]:
-        return fast(text) if text.isascii() else slow(text)
-
-    return dispatch
+    return scan
 
 
 @lru_cache(maxsize=64)
 def get_tokenizer(name: str, lower: bool = False):
-    """Return fn(text) -> list[Token]. Unknown name -> standard
+    """Return fn(text) -> Tokens. Unknown name -> standard
     (reference: text_analysis.clj:62-63 logs at debug and defaults).
 
     ``lower=True`` fuses the LowerCaseFilter into the scan (identical
     output to lowering each token afterwards — per-char lowercase never
     empties a token, and offsets are taken from the original text)."""
     name = (name or "standard").lstrip(":").lower()
-    if name == "keyword":
-        return _keyword_lower if lower else _keyword
     pattern = _PATTERNS.get(name, _STANDARD)
     twin = _ASCII_TWINS.get(name if name in _PATTERNS else "standard")
     return _make_scanner(pattern, twin, lower)

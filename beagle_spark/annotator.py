@@ -11,9 +11,10 @@ Two surfaces:
 2. `Annotator` / `annotate_df(df, text_col, ...)` — the Spark-native
    operator (no reference equivalent; the whole point of this engine).
    The compiled dictionary is broadcast once; matching runs as an
-   Arrow-batched pandas UDF producing an `array<struct>` annotations
-   column. Stateless per row => identical on batch and streaming
-   DataFrames, embarrassingly parallel, no shuffle (SURVEY.md section 3.4).
+   iterator `arrow_udf` that turns each `pa.Array` batch of texts into
+   the `array<struct>` annotations column with one `pa.array` call.
+   Stateless per row => identical on batch and streaming DataFrames,
+   embarrassingly parallel, no shuffle (SURVEY.md section 3.4).
 
 Scale notes (100 TB design):
 - dictionary compile is driver-only; executors receive the compiled,
@@ -25,7 +26,7 @@ Scale notes (100 TB design):
   trick (README.md:183-184 floor behavior).
 - the UDF is stateless => Catalyst can pipeline it after pushed-down
   filters; no shuffle is introduced by annotation itself.
-- partition sizing: keep >= ~500 docs per task (the pandas-UDF analog
+- partition sizing: keep >= ~500 docs per task (the Python-UDF analog
   of maxPartitionBytes). Over-splitting a small input across many
   Python workers trades trivial per-task work for per-batch Arrow +
   worker overhead and cache contention — measured 2.6x slower at 32
@@ -35,12 +36,14 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from typing import Callable, Iterator, Optional
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import DataType
 
 from .dictionary.optimizer import optimize
 from .dictionary.validator import validate_dictionary
@@ -89,6 +92,35 @@ def highlighter(dictionary, opts: dict | None = None):
 annotator = highlighter
 
 
+def map_batches(
+    batches: Iterator[pa.Array], fn: Callable, return_type: DataType
+) -> Iterator[pa.Array]:
+    """Apply `fn` to every value of every Arrow batch and build each
+    result batch with one `pa.array` call. The Arrow type is exactly
+    `to_arrow_type(return_type)`, so the Arrow-UDF serializer passes the
+    array through without a per-batch cast."""
+    arrow_type = to_arrow_type(return_type)
+    for arr in batches:
+        yield pa.array([fn(v) for v in arr.to_pylist()], type=arrow_type)
+
+
+def arrow_map_udf(bc, make_fn: Callable, return_type: DataType):
+    """Iterator `arrow_udf` mapping one column through `make_fn(bc.value)`:
+    the broadcast is read and the per-row function built once per
+    partition, not once per batch. Marked non-deterministic; see
+    `Annotator.udf` for why."""
+
+    @arrow_udf(return_type)
+    def batch_map(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        return map_batches(batches, make_fn(bc.value), return_type)
+
+    return batch_map.asNondeterministic()
+
+
+def _text_matcher(cd: CompiledDictionary) -> Callable:
+    return lambda text: match_text(text, cd)
+
+
 class Annotator:
     """Spark-facing annotator: compile on the driver, broadcast, annotate
     whole DataFrames (batch or streaming)."""
@@ -108,9 +140,10 @@ class Annotator:
         return self._bc
 
     def udf(self, spark: SparkSession):
-        """Arrow-batched pandas UDF: string column -> array<struct> of
-        annotations. Iterator form so the broadcast is resolved once per
-        partition, not once per batch.
+        """Arrow UDF: string column -> array<struct> of annotations
+        (`arrow_map_udf` over `match_text`). Iterator form so the
+        broadcast is resolved once per partition, not once per batch.
+        Null and blank text give `[]`, never null.
 
         Marked NON-DETERMINISTIC (it is pure, but this stops the
         optimizer pushing filters below it WITH A COPY of the UDF —
@@ -120,15 +153,7 @@ class Annotator:
         caller's repartition, i.e. single-threaded on a single-file
         scan (see plans/r21/t5_dict_match_counts_before.txt: two
         ArrowEvalPython nodes, the lower one under the Exchange)."""
-        bc = self._broadcast(spark)
-
-        @pandas_udf(ANNOTATIONS_TYPE)
-        def annotate_series(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-            cd = bc.value
-            for series in batches:
-                yield series.map(lambda t: match_text(t, cd))
-
-        return annotate_series.asNondeterministic()
+        return arrow_map_udf(self._broadcast(spark), _text_matcher, ANNOTATIONS_TYPE)
 
     def annotate_df(
         self,

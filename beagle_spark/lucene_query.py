@@ -20,9 +20,8 @@ from __future__ import annotations
 import logging
 import uuid
 from dataclasses import dataclass, field as dc_field
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 import regex as re
 
 from .analysis import analyze, merge_config
@@ -218,7 +217,7 @@ class _Parser:
         if kind == "phrase":
             body = text[1 : text.rindex('"')]
             slop = int(pslop) if pslop else 0
-            terms = tuple(t.text for t in analyze(_unescape(body), self.conf))
+            terms = tuple(analyze(_unescape(body), self.conf).texts)
             if not terms:
                 raise ParseError(f"phrase analyzes to no terms: {body!r}")
             return PhraseQ(terms=terms, slop=slop)
@@ -235,7 +234,7 @@ class _Parser:
             def endpoint(raw):
                 if raw == "*":
                     return None
-                analyzed = [t.text for t in analyze(raw, self.conf)]
+                analyzed = analyze(raw, self.conf).texts
                 return analyzed[0] if analyzed else raw
 
             return RangeQ(
@@ -257,7 +256,7 @@ class _Parser:
                 fuzzy = int(n) if n else 2
             if re.search(r"(?<!\\)[*?]", text):
                 return WildcardQ(pattern=text)
-            analyzed = [t.text for t in analyze(_unescape(text), self.conf)]
+            analyzed = analyze(_unescape(text), self.conf).texts
             term = analyzed[0] if analyzed else _unescape(text)
             if fuzzy is not None:
                 return FuzzyQ(term=term, max_edits=fuzzy)
@@ -446,7 +445,7 @@ def _make_matcher(compiled, type_name):
         for cq in compiled:
             key = cq.conf
             if key not in by_conf:
-                tl = [t.text for t in analyze(text, key)]
+                tl = analyze(text, key).texts
                 by_conf[key] = (tl, set(tl))
             token_list, token_set = by_conf[key]
             if eval_query(cq.ast, token_list, token_set):
@@ -475,11 +474,13 @@ def lucene_annotator(dictionary, opts: dict | None = None):
 def lucene_annotate_df(df, dictionary, text_col: str = "text", opts: dict | None = None,
                        output_col: str = "query_matches"):
     """DataFrame operator: array<struct> of boolean query matches per row.
-    Same broadcast + Arrow-batch design as the phrase annotator."""
+    Same broadcast + Arrow UDF as the phrase annotator
+    (`annotator.arrow_map_udf`, non-deterministic for the same reason)."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import (ArrayType, MapType, StringType, StructField,
                                    StructType)
+
+    from .annotator import arrow_map_udf
 
     schema = ArrayType(
         StructType(
@@ -491,19 +492,8 @@ def lucene_annotate_df(df, dictionary, text_col: str = "text", opts: dict | None
             ]
         )
     )
-    spark = df.sparkSession
     # broadcast the picklable compiled form; rebuild the evaluator per
     # executor (closures over module functions don't pickle)
-    compiled, type_name = compile_lucene_dictionary(dictionary, opts)
-    bc = spark.sparkContext.broadcast((compiled, type_name))
-
-    @pandas_udf(schema)
-    def match_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        cqs, tname = bc.value
-        f = _make_matcher(cqs, tname)
-        for s in batches:
-            yield s.map(f)
-
-    # non-deterministic mark: stop filter pushdown from duplicating the
-    # UDF evaluation (guide §4.4; same rationale as Annotator.udf)
-    return df.withColumn(output_col, match_udf.asNondeterministic()(F.col(text_col)))
+    bc = df.sparkSession.sparkContext.broadcast(compile_lucene_dictionary(dictionary, opts))
+    udf = arrow_map_udf(bc, lambda v: _make_matcher(*v), schema)
+    return df.withColumn(output_col, udf(F.col(text_col)))

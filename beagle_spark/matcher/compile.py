@@ -22,7 +22,7 @@ import logging
 import uuid
 from dataclasses import dataclass, field
 
-from ..analysis import AnalysisConfig, analyze, merge_config
+from ..analysis import AnalysisConfig, Tokens, analyze, merge_config
 from ..schema import DictionaryEntry, norm_keys
 from .core import CompiledQuery, build_token_index, find_matches, normalize_slop
 
@@ -141,11 +141,12 @@ class FieldProgram:
     # rebuild (0.9s at 80k entries) costs more than the ~13% payload
     # saving is worth for worker cold-start.
 
-    def probe_exact(self, tokens) -> list:
+    def probe_exact(self, tokens: Tokens) -> list:
         """Direct phrase-table probe: slide an n-gram window per distinct
-        phrase length; emit ((entry_id, type, meta), begin_pos, end_pos)."""
+        phrase length over the token strings; emit ((entry_id, type,
+        meta), begin_pos, end_pos)."""
         out = []
-        texts = [t.text for t in tokens]
+        texts = tokens.texts
         n_tok = len(texts)
         tables = self.exact_index
         for n in self.ngram_lengths:
@@ -242,7 +243,7 @@ def _compile_entry(
     conf_cache: dict,
 ) -> tuple[AnalysisConfig, CompiledQuery] | None:
     conf = _conf_for(entry, default_conf, conf_cache)
-    terms = tuple(t.text for t in analyze(entry.text or "", conf))
+    terms = tuple(analyze(entry.text or "", conf).texts)
     if not terms:
         # 0-token entries discarded with a warning (phrases.clj:204)
         logger.warning("Discarding dictionary entry (no tokens): %r", entry.text)
@@ -341,11 +342,10 @@ def match_text(text: str, cd: CompiledDictionary, merge: bool | None = None) -> 
         if not tokens:
             continue
         # (emission, begin, end): exact-phrase window probe first, then
-        # counter prefilter + positional verification
-        hits = [
-            (e, tokens[p0].begin, tokens[p1].end)
-            for e, p0, p1 in prog.probe_exact(tokens)
-        ]
+        # counter prefilter + positional verification; offsets are read
+        # only for the hits
+        begins, ends = tokens.begins, tokens.ends
+        hits = [(e, begins[p0], ends[p1]) for e, p0, p1 in prog.probe_exact(tokens)]
         if prog.general or prog.always:
             index = build_token_index(tokens)
             for qi in prog.candidates(index.keys()):

@@ -3,7 +3,7 @@ over analyzed token streams, returning whole-span char offsets.
 
 This replaces Lucene's MultiPhraseQuery + sloppy scorer and ordered
 SpanNearQuery (reference: src/beagle/phrases.clj:160-204) with a pure
-algorithmic implementation that runs inside Arrow-batched pandas UDFs.
+algorithmic implementation that runs inside the annotate Arrow UDF.
 Semantics pinned by the reference's tests (SURVEY.md section 2
 fine-print):
 
@@ -30,7 +30,7 @@ from bisect import bisect_left, bisect_right
 from dataclasses import dataclass, field
 from typing import Optional
 
-from ..analysis import Token
+from ..analysis import Tokens
 
 MAX_SLOP = 2**31 - 1
 
@@ -99,14 +99,14 @@ def dl_distance_leq(a: str, b: str, max_edits: int) -> bool:
 # ---------------------------------------------------------------------------
 # Position-list construction.
 # ---------------------------------------------------------------------------
-def build_token_index(tokens: list[Token]) -> dict:
+def build_token_index(tokens: Tokens) -> dict:
     """token text -> sorted positions; built ONCE per (doc, analysis
     config) and shared across all candidate queries (the per-doc
     equivalent of Lucene's single transient in-memory doc index,
     phrases.clj:110-114)."""
     index: dict[str, list[int]] = {}
-    for pos, t in enumerate(tokens):
-        index.setdefault(t.text, []).append(pos)
+    for pos, t in enumerate(tokens.texts):
+        index.setdefault(t, []).append(pos)
     return index
 
 
@@ -262,7 +262,7 @@ def _match_ordered(positions: list[list[int]], slop: int) -> list[tuple[int, int
 
 
 def find_matches(
-    tokens: list[Token], q: CompiledQuery, index: dict | None = None
+    tokens: Tokens, q: CompiledQuery, index: dict | None = None
 ) -> list[tuple[int, int]]:
     """All match spans of `q` in `tokens`, as char-offset (begin, end)
     pairs into the original text, one per distinct start position. An
@@ -292,4 +292,5 @@ def find_matches(
         pos_spans = _match_unordered(positions, q.slop, q.slop + 2 * (k - 1))
     else:
         pos_spans = _match_unordered(positions, q.slop, q.slop)
-    return [(tokens[a].begin, tokens[b].end) for a, b in pos_spans]
+    begins, ends = tokens.begins, tokens.ends
+    return [(begins[a], ends[b]) for a, b in pos_spans]

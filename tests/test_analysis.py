@@ -263,39 +263,64 @@ def test_classic_tokenizer_host_email_company_types():
 
 
 def test_ascii_fastpath_equivalence():
-    """The stdlib-re ASCII twin of the standard/letter tokenizers must
-    produce exactly the tokens of the full UAX#29 regex-module pattern
-    on every pure-ASCII input (non-ASCII input takes the slow path by
+    """Every tokenizer's flat `Tokens` (one capturing split plus
+    a running sum of piece lengths) must equal `finditer`'s (group,
+    start, end) on its full pattern, and on pure-ASCII input on the
+    stdlib-re ASCII twin too (non-ASCII input takes the full pattern by
     construction). Deterministic fuzz over the joiner-heavy alphabet
-    plus the documented edge strings."""
+    plus the documented edge strings and non-ASCII samples (CJK,
+    emoji/ZWJ/keycap, 'İ', '’', no-break and exotic whitespace)."""
     import random
 
     from beagle_spark.analysis.tokenizers import (
         _ASCII_TWINS,
+        _CLASSIC_TYPED,
         _PATTERNS,
-        _scan,
         get_tokenizer,
     )
+
+    def spans(pattern, s):
+        return [(m.group(), m.start(), m.end()) for m in pattern.finditer(s)]
+
+    def flat(toks):
+        return list(zip(toks.texts, toks.begins, toks.ends))
 
     cases = [
         "", " ", "a", "John's U.S.A U.S.A. 3.14 1,000 a,b R2D2.com x.y.z",
         "don't can't 'quoted' trail' .lead mul..ti 1..2 1.2.3 a.b.c",
         "#hash *star 1# 2* a'b'c'd a'' ''b '' . , .. ', -",
         "a-b_c", "0.0.0.0", "a." * 300, "'" * 50, "1,2,3 4.5,6",
+        "[URGENT!] a@b #tag c++ foo@bar.com AT&T (x)=<y>",
     ]
     rng = random.Random(7)
     alphabet = "abcXYZ019'., #\t\n-_*"
     cases += ["".join(rng.choice(alphabet) for _ in range(160)) for _ in range(300)]
-    for name, twin in _ASCII_TWINS.items():
-        full = _PATTERNS[name]
-        for s in cases:
-            assert s.isascii()
-            assert _scan(twin, s) == _scan(full, s), (name, s)
+    cases += ["".join(rng.choice(alphabet + "@&()[]+=") for _ in range(80)) for _ in range(100)]
+    non_ascii = [
+        "İstanbul İİ i̇ ISTANBUL", "don’t it’s ’quoted’", "Straße ÄÖÜ É café naïve",
+        "日本語のテキスト and English 한국어 mixed日本text",
+        "\U0001F469\u200d\U0001F469\u200d\U0001F467 \U0001F44D\U0001F3FD \U0001F1FA\U0001F1F8\U0001F1E9",
+        "press 1\ufe0f\u20e3 or #\ufe0f\u20e3 5\u20e3 acme \u00ae\ufe0f \u00a9 \u2122",
+        "a\u00a0b\u2007c\u202fd\u3000e\u2028f\u1680g\u2003h  \t\n",
+        "\u00a0\u00a0lead and trail\u3000", "x" + "\u0301" * 3 + " y\u0308",
+        "two\nlines\r\n and İ\n",
+    ]
+    for name, full in _PATTERNS.items():
+        twin = _ASCII_TWINS.get(name)
+        tok = get_tokenizer(name)
+        for s in cases + non_ascii:
+            want = spans(_CLASSIC_TYPED if name == "classic" else full, s)
+            assert flat(tok(s)) == want, (name, s)
+            if twin is not None and s.isascii():
+                assert spans(twin, s) == want, (name, s)
 
-    # fused-lower scanner == scan-then-lower, offsets from original text
-    std = get_tokenizer("standard")
-    std_lower = get_tokenizer("standard", lower=True)
-    for s in cases + ["Mixed CASE Wörds Straße ÄÖÜ É 3.14 John's"]:
-        plain = std(s)
-        lowered = std_lower(s)
-        assert [(t.text.lower(), t.begin, t.end) for t in plain] == list(lowered), s
+    # fused lower: analyze(case_sensitive=False) == the tokenizer's
+    # tokens lowered, offsets from the original text ('İ'.lower() is two
+    # chars long: offsets must not move)
+    for name in _PATTERNS:
+        ci = merge_config({"tokenizer": name, "case_sensitive": False})
+        for s in cases + non_ascii + ["Mixed CASE Wörds Straße ÄÖÜ É 3.14 John's"]:
+            want = [(t.lower(), b, e) for t, b, e in flat(get_tokenizer(name)(s))]
+            assert flat(analyze(s, ci)) == want, (name, s)
+    toks = analyze("İstanbul Straße", merge_config({"case_sensitive": False}))
+    assert flat(toks) == [("i̇stanbul", 0, 8), ("straße", 9, 15)]

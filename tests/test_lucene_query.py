@@ -196,3 +196,31 @@ def test_spark_predicate_range(spark):
         r["id"] for r in df.filter(to_spark_predicate(node, F.col("tokens"))).collect()
     )
     assert got == [1, 3]
+
+
+def test_lucene_annotate_df_matches_local(spark, sf_dir):
+    """The DataFrame operator returns, per row, exactly the local
+    `lucene_annotator` matches; null and blank text give `[]`."""
+    from beagle_spark.lucene_query import lucene_annotate_df
+
+    dictionary = [
+        {"text": "table AND spark AND NOT vector", "id": "q1", "meta": {"k": "v"}},
+        {"text": '"hash join" OR scan', "id": "q2", "type": "T"},
+        {"text": "spar*", "id": "q3", "case-sensitive?": False},
+    ]
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text").limit(200)
+    edge = spark.createDataFrame(
+        [(-1, None), (-2, ""), (-3, "   "), (-4, "a table scan in spark")],
+        docs.schema,
+    )
+    rows = lucene_annotate_df(docs.unionByName(edge), dictionary).collect()
+    local = lucene_annotator(dictionary)
+    n_with = 0
+    for r in rows:
+        got = [m.asDict() for m in r["query_matches"]]
+        assert got == local(r["text"]), r["doc_id"]
+        n_with += bool(got)
+    by_id = {r["doc_id"]: r["query_matches"] for r in rows}
+    assert by_id[-1] == [] and by_id[-2] == [] and by_id[-3] == []
+    assert len(by_id[-4]) == 3
+    assert n_with > 1

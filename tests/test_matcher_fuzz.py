@@ -22,7 +22,7 @@ import itertools
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from beagle_spark.analysis import Token
+from beagle_spark.analysis import Tokens
 from beagle_spark.matcher.core import (
     CompiledQuery,
     _match_ordered,
@@ -126,10 +126,11 @@ def test_ordered_matches_brute_force(doc, terms, slop):
 @given(DOC, PHRASE, SLOP, st.booleans())
 def test_find_matches_offsets_are_token_aligned(doc, terms, slop, ordered):
     text = " ".join(doc)
-    tokens = []
+    tokens = Tokens(list(doc), [], [])
     pos = 0
     for w in doc:
-        tokens.append(Token(w, pos, pos + len(w)))
+        tokens.begins.append(pos)
+        tokens.ends.append(pos + len(w))
         pos += len(w) + 1
     q = CompiledQuery(
         query_id="q", terms=tuple(terms), slop=slop, ordered=ordered

@@ -57,6 +57,40 @@ def test_blank_and_null_text(spark):
     assert out[2] == [] and out[3] == [] and out[4] == []
 
 
+def test_arrow_batches_have_exact_output_type():
+    """In process, no Spark: the batch function behind `Annotator.udf`
+    builds arrays of exactly the Spark-expected Arrow type (so the
+    serializer never casts) whose rows equal `match_text`, meta maps as
+    item lists; null and blank rows give `[]`, never null."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from beagle_spark.annotator import _text_matcher, map_batches
+    from beagle_spark.matcher import match_text
+    from beagle_spark.schema import ANNOTATIONS_TYPE
+
+    ann = Annotator(DICT + [{"text": "İstanbul straße", "id": "p4", "meta": {"k": "v"}}])
+    batches = [
+        pa.array(["a table scan here and a TABLE  SCAN", None, "   "]),
+        pa.array(["spark on pyspark: hash the join", "in İstanbul straße ok", ""]),
+    ]
+    texts = [t for b in batches for t in b.to_pylist()]
+    out = list(map_batches(batches, _text_matcher(ann.compiled), ANNOTATIONS_TYPE))
+    assert [len(a) for a in out] == [3, 3]
+    got = [row for a in out for row in a.to_pylist()]
+    for a in out:
+        assert a.type == to_arrow_type(ANNOTATIONS_TYPE)
+        assert a.null_count == 0
+    want = [
+        [{**d, "meta": list(d["meta"].items())} for d in match_text(t, ann.compiled)]
+        for t in texts
+    ]
+    assert got == want
+    assert got[1] == [] and got[2] == [] and got[5] == []
+    assert [len(r) for r in got] == [2, 0, 0, 3, 1, 0]
+    assert got[4][0]["meta"] == [("k", "v")]
+
+
 def test_batch_streaming_equivalence(spark, sf_dir, tmp_path):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(300)
     # write a small copy so the stream source has a bounded directory
