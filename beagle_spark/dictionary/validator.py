@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import sys
 
-from ..schema import VALID_STEMMERS, VALID_TOKENIZERS
+from ..analysis import stem, tokenizers
 
 
 def _err(errors, idx, msg):
@@ -40,10 +40,10 @@ def validate_entry(entry: dict, idx: int, errors: list[str]) -> None:
     if slop is not None and (not isinstance(slop, (int, float)) or slop < 0):
         _err(errors, idx, f"`slop` must be a number >= 0, got {slop!r}")
     tok = entry.get("tokenizer")
-    if tok is not None and str(tok).lstrip(":") not in VALID_TOKENIZERS:
+    if tok is not None and str(tok).lstrip(":") not in tokenizers._PATTERNS:
         _err(errors, idx, f"unknown tokenizer {tok!r}")
     stemmer = entry.get("stemmer")
-    if stemmer is not None and str(stemmer).lstrip(":") not in VALID_STEMMERS:
+    if stemmer is not None and str(stemmer).lstrip(":") not in stem._SNOWBALL_LANGS:
         _err(errors, idx, f"unknown stemmer {stemmer!r}")
     meta = entry.get("meta")
     if meta is not None and not isinstance(meta, dict):

@@ -26,7 +26,7 @@ import regex as re
 
 from .analysis import analyze, merge_config
 from .matcher.core import _match_unordered, dl_distance_leq
-from .schema import norm_keys
+from .schema import norm_keys, norm_meta
 
 logger = logging.getLogger(__name__)
 
@@ -337,14 +337,6 @@ def eval_query(node, token_list: list[str], token_set: set) -> bool:
     raise TypeError(f"unknown node {node!r}")
 
 
-def has_phrase(node) -> bool:
-    if isinstance(node, PhraseQ):
-        return len(node.terms) > 1
-    if isinstance(node, BoolQ):
-        return any(has_phrase(c) for c in node.must + node.should + node.must_not)
-    return False
-
-
 # ---------------------------------------------------------------------------
 # Spark Column compilation (phrase-free queries): pure JVM predicate
 # ---------------------------------------------------------------------------
@@ -422,7 +414,6 @@ def compile_lucene_dictionary(dictionary, opts: dict | None = None):
         except Exception as e:  # parse failure -> drop entry (lucene_alpha.clj:41-43)
             logger.error("Failed to parse query %r: %s", entry.get("text"), e)
             continue
-        meta = {str(k).lstrip(":"): str(v) for k, v in (entry.get("meta") or {}).items()}
         compiled.append(
             CompiledLuceneQuery(
                 query_id=str(entry.get("id") or idx),
@@ -430,7 +421,7 @@ def compile_lucene_dictionary(dictionary, opts: dict | None = None):
                 ast=ast,
                 conf=conf,
                 type=entry.get("type"),
-                meta=meta,
+                meta=norm_meta(entry.get("meta")),
             )
         )
     return compiled, type_name

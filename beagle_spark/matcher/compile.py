@@ -23,7 +23,7 @@ import uuid
 from dataclasses import dataclass, field
 
 from ..analysis import AnalysisConfig, Tokens, analyze, merge_config
-from ..schema import DictionaryEntry, norm_keys
+from ..schema import DictionaryEntry, norm_keys, norm_meta
 from .core import CompiledQuery, build_token_index, find_matches, normalize_slop
 
 logger = logging.getLogger(__name__)
@@ -266,7 +266,7 @@ def _compile_entry(
     else:
         ordered = False
 
-    meta = {str(k).lstrip(":"): str(v) for k, v in (entry.meta or {}).items()}
+    meta = norm_meta(entry.meta)
     if span_path:
         # "_in-order" flag kept in metadata (phrases.clj:192)
         meta["_in-order"] = "true"

@@ -18,11 +18,16 @@ matters is the shuffle profile, noted per operator.
                             hyperplane LSH (equi-self-join, or with a
                             cap the join-free grouped all-pairs plus a
                             star guard for oversized buckets)
-- ngram_jaccard_pairs:      exact Jaccard via shingle-explode + self-join;
-                            quadratic in the worst case - intended for
-                            verification at small scale or AFTER LSH
-                            candidate pruning; the scale path is
-                            minhash_lsh_candidates
+- ngram_jaccard_pairs:      exact Jaccard: shingles exploded to
+                            (id, shingle) rows and paired through
+                            bucket_pairs on the shingle; quadratic in the
+                            worst case - intended for verification at
+                            small scale or AFTER LSH candidate pruning;
+                            the scale path is minhash_lsh_candidates
+
+Text normalization, the word split and the word k-grams come from
+``textstats`` (one definition per rule); :func:`jaccard` is the one
+Jaccard ratio.
 """
 
 from __future__ import annotations
@@ -38,26 +43,24 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .textstats import fingerprint, tokens_ws, word_grams
+
 # Default oversized-bucket guard of the MinHash-LSH path: buckets above
 # it emit star pairs instead of all pairs (see bucket_pairs).
 DEFAULT_BUCKET_CAP = 1000
 
 
-def normalized_text(col):
-    """Whitespace-collapsed lowercase — the canonical form for exact
-    dedup. Identical expression exists in DuckDB (regexp_replace +
-    lower), so the oracle replicates it verbatim."""
-    return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
+def jaccard(common, n_a, n_b):
+    """Jaccard ratio |A & B| / |A | B| of two sets from the size of
+    their intersection and their own sizes, rounded to 4 places."""
+    return F.round(common / (n_a + n_b - common), 4)
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Group by md5 of normalized text; canonical = min id.
     One shuffle, partial-aggregated map-side."""
     return (
-        df.select(
-            F.md5(normalized_text(F.col(text_col)).cast("binary")).alias("text_hash"),
-            F.col(id_col),
-        )
+        df.select(fingerprint(F.col(text_col)).alias("text_hash"), F.col(id_col))
         .groupBy("text_hash")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -74,19 +77,20 @@ def ngram_jaccard_pairs(
     threshold: float = 0.2,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity pairs (id_a < id_b, jaccard >=
-    threshold). Shingle-explode + equi-self-join on the shingle: cost is
-    sum over shingles of df(shingle)^2 — fine after LSH pruning or at
-    validation scale; use minhash_lsh_candidates as the 100 TB path."""
+    threshold). The (id, shingle) rows are paired through
+    :func:`bucket_pairs` on the shingle, and the pair counts are joined
+    to the per-doc shingle counts: cost is sum over shingles of
+    df(shingle)^2 — fine after LSH pruning or at validation scale; use
+    minhash_lsh_candidates as the 100 TB path. (Carrying the sizes
+    through the pairing instead of the two joins makes a smaller plan
+    but measured slower.)"""
     sh = shingle_docs(df, text_col, id_col, k).select(
         "id", F.explode("shingles").alias("shingle")
     )
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    # shuffle_merge: a broadcast build side would re-run the shingle
-    # explode; identical shuffles on both sides are exchange-reused
-    a, b = sh.alias("a"), sh.hint("shuffle_merge").alias("b")
     inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        bucket_pairs(sh, ("shingle",), None)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
     sa = sizes.select(F.col("id").alias("id_a"), F.col("n_shingles").alias("n_a"))
@@ -94,12 +98,7 @@ def ngram_jaccard_pairs(
     return (
         inter.join(sa, "id_a")
         .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 4
-            ),
-        )
+        .withColumn("jaccard", jaccard(F.col("n_common"), F.col("n_a"), F.col("n_b")))
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -120,19 +119,9 @@ def shingle_docs(
     of re-inlining the split into the lambda (which would re-tokenize
     the document once per shingle position — the interpreted
     higher-order-function trap; measured ~9x slower)."""
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("_toks"),
-    )
-    n = F.size("_toks")
+    toks = df.select(F.col(id_col).alias("id"), tokens_ws(F.col(text_col)).alias("_toks"))
     return toks.select(
-        "id",
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.greatest(n - k, F.lit(0))),
-                lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i + 1, k)),
-            )
-        ).alias("shingles"),
+        "id", F.array_distinct(word_grams(F.col("_toks"), k)).alias("shingles")
     )
 
 
@@ -307,6 +296,22 @@ def bucket_pairs(rel: DataFrame, keys: tuple, cap: int | None, carry: tuple = ()
     )
 
 
+def _verify_pairs(cands: DataFrame, shingled: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard of each candidate pair (id_a, id_b), kept when >=
+    threshold: the pair list joined to the (id, shingles) relation on
+    each side, ``array_intersect`` sizes per pair."""
+    sa = shingled.select(F.col("id").alias("id_a"), F.col("shingles").alias("_sh_a"))
+    sb = shingled.select(F.col("id").alias("id_b"), F.col("shingles").alias("_sh_b"))
+    return (
+        cands.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("_c", F.size(F.array_intersect("_sh_a", "_sh_b")))
+        .withColumn("jaccard", jaccard(F.col("_c"), F.size("_sh_a"), F.size("_sh_b")))
+        .where(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
 def minhash_lsh_verified(
     df: DataFrame,
     text_col: str = "text",
@@ -348,23 +353,7 @@ def minhash_lsh_verified(
             df, text_col, id_col, num_perm, bands, shingle_k,
             shingled=shingled, bucket_cap=bucket_cap,
         ).select("id_a", "id_b")
-        sa = shingled.select(F.col("id").alias("id_a"), F.col("shingles").alias("_sh_a"))
-        sb = shingled.select(F.col("id").alias("id_b"), F.col("shingles").alias("_sh_b"))
-        out = (
-            cands.join(sa, "id_a")
-            .join(sb, "id_b")
-            .withColumn("_c", F.size(F.array_intersect("_sh_a", "_sh_b")))
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("_c")
-                    / (F.size("_sh_a") + F.size("_sh_b") - F.col("_c")),
-                    4,
-                ),
-            )
-            .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
+        out = _verify_pairs(cands, shingled, threshold)
         # eager materialization: the pair list is tiny relative to the
         # corpus; computing it here lets the finally block release the
         # shingle cache without the caller ever observing a cold plan
@@ -378,6 +367,26 @@ def minhash_lsh_verified(
 # cross-round wall-time excursions are attributable to convergence
 # behavior vs box noise). Read-only for callers.
 CC_LAST_STATS: dict = {}
+
+
+def _cc_edges(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """The (src, dst) edge relation of :func:`connected_components`:
+    symmetrized once, PRE-PARTITIONED BY the propagation join key and
+    persisted. Every round's edges-join-labels then reads the cached,
+    already-hash(dst)-partitioned relation (InMemoryRelation advertises
+    its outputPartitioning to the planner), so only the small label
+    table is shuffled per round — at corpus scale the edge relation is
+    the big side. persist (not checkpoint) also keeps recompute lineage
+    for fault tolerance; the caller unpersists it."""
+    edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+    return (
+        edges.unionByName(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        .distinct()
+        .repartition("dst")
+        .persist()
+    )
 
 
 def _cc_propagate_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
@@ -479,24 +488,7 @@ def connected_components(
         return df.localCheckpoint(eager=eager)
 
     t_start = time.monotonic()
-    edges = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    # Symmetrize once, PRE-PARTITION BY the propagation join key and
-    # persist: every round's edges-join-labels then reads the cached,
-    # already-hash(dst)-partitioned relation (InMemoryRelation advertises
-    # its outputPartitioning to the planner), so only the small label
-    # table is shuffled per round — at corpus scale the edge relation is
-    # the big side. persist (not checkpoint) also keeps recompute
-    # lineage for fault tolerance; it is released in the finally below
-    # (the returned labels are eagerly checkpointed, so nothing escapes
-    # referencing the cache).
-    edges = (
-        edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .repartition("dst")
-        .persist()
-    )
+    edges = _cc_edges(pairs, a_col, b_col)
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -519,6 +511,8 @@ def connected_components(
                 converged = True
                 break
     finally:
+        # the returned labels are eagerly checkpointed, so nothing
+        # escapes referencing the edge cache
         edges.unpersist()
     CC_LAST_STATS.clear()
     CC_LAST_STATS.update(

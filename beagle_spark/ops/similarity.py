@@ -26,7 +26,6 @@ and is the 100 TB scan path.
 from __future__ import annotations
 
 import json
-import math
 from contextlib import closing
 
 import numpy as np
@@ -44,40 +43,34 @@ def _mat(series: pd.Series) -> np.ndarray:
     return np.array(series.tolist(), dtype=np.float64)
 
 
-def _seq_dot(V: np.ndarray, q: np.ndarray) -> np.ndarray:
-    # sequential over dims = same per-row FP order as a fold
-    acc = np.zeros(V.shape[0])
-    for j in range(V.shape[1]):
-        acc = acc + V[:, j] * q[j]
+def _seq_sum(M: np.ndarray) -> np.ndarray:
+    """Row sums of M added column by column, left to right: the IEEE op
+    order of a sequential fold over dims. Every dot product, norm and
+    distance of the scoring kernels and of their driver-side query
+    twins is this sum of an elementwise product, so the two sides agree
+    to the bit."""
+    acc = np.zeros(M.shape[0])
+    for j in range(M.shape[1]):
+        acc = acc + M[:, j]
     return acc
 
 
-def _seq_sqnorm(V: np.ndarray) -> np.ndarray:
-    acc = np.zeros(V.shape[0])
-    for j in range(V.shape[1]):
-        acc = acc + V[:, j] * V[:, j]
-    return acc
-
-
-def _py_norm(q: list[float]) -> float:
-    # sequential fold in float64 — same IEEE op order as _seq_sqnorm
-    acc = 0.0
-    for v in q:
-        acc += float(v) * float(v)
-    return math.sqrt(acc)
+def _vec(query: list[float]) -> np.ndarray:
+    """A driver-side query as a (1, dim) float64 row (exact widen)."""
+    return np.array([[float(v) for v in query]], dtype=np.float64)
 
 
 def cosine_col(vec_col, query: list[float]):
     """Cosine(vector column, literal query) as an Arrow-batched Column."""
-    q = np.array([float(v) for v in query], dtype=np.float64)
-    qn = _py_norm(query)
+    q = _vec(query)
+    qn = np.sqrt(_seq_sum(q * q))
 
     @pandas_udf("double")
     def _cos(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype="float64")
         V = _mat(v)
-        return pd.Series(_seq_dot(V, q) / (np.sqrt(_seq_sqnorm(V)) * qn))
+        return pd.Series(_seq_sum(V * q) / (np.sqrt(_seq_sum(V * V)) * qn))
 
     return _cos(vec_col)
 
@@ -90,11 +83,8 @@ def cosine_pair_col(a_col, b_col):
         if len(a) == 0:
             return pd.Series([], dtype="float64")
         A, B = _mat(a), _mat(b)
-        acc = np.zeros(A.shape[0])
-        for j in range(A.shape[1]):
-            acc = acc + A[:, j] * B[:, j]
         return pd.Series(
-            acc / (np.sqrt(_seq_sqnorm(A)) * np.sqrt(_seq_sqnorm(B)))
+            _seq_sum(A * B) / (np.sqrt(_seq_sum(A * A)) * np.sqrt(_seq_sum(B * B)))
         )
 
     # non-deterministic mark: callers filter directly on the cosine
@@ -132,7 +122,7 @@ def hyperplane_bucket(vec_col, planes: list[list[float]]):
     """LSH bucket id: bit h = sign(dot(v, plane_h)). Planes are literal
     numpy rows closed over the UDF — deterministic, no state. Per-plane
     dots use the sequential-over-dims order, matching the fold."""
-    P = [np.array([float(x) for x in p], dtype=np.float64) for p in planes]
+    P = [_vec(p) for p in planes]
 
     @pandas_udf("int")
     def _bucket(v: pd.Series) -> pd.Series:
@@ -141,7 +131,7 @@ def hyperplane_bucket(vec_col, planes: list[list[float]]):
         V = _mat(v)
         bucket = np.zeros(V.shape[0], dtype=np.int64)
         for h, plane in enumerate(P):
-            bucket |= (_seq_dot(V, plane) > 0).astype(np.int64) << h
+            bucket |= (_seq_sum(V * plane) > 0).astype(np.int64) << h
         return pd.Series(bucket.astype("int32"))
 
     # non-deterministic mark: lsh_ann_topk filters on the bucket column
@@ -157,14 +147,12 @@ def make_planes(dim: int, n_planes: int = 8, seed: int = 42) -> list[list[float]
 
 
 def _query_bucket(query: list[float], planes: list[list[float]]) -> int:
-    """Driver-side bucket id of a query vector (same sign rule as
-    :func:`hyperplane_bucket`)."""
-    qarr = np.array(query)
-    qbucket = 0
-    for i, p in enumerate(planes):
-        if float(np.dot(qarr, np.array(p))) > 0:
-            qbucket |= 1 << i
-    return qbucket
+    """Driver-side bucket id of a query vector: the sign rule AND the
+    summation order of :func:`hyperplane_bucket`, so a query that is
+    itself a stored row probes that row's bucket even when a dot is
+    within rounding of zero."""
+    dots = _seq_sum(np.array(planes, dtype=np.float64) * _vec(query))
+    return sum(1 << h for h, d in enumerate(dots) if d > 0)
 
 
 def lsh_ann_topk(
@@ -361,7 +349,7 @@ def ivf_assign(vec_col, centroids: list[list[float]]):
     probes. Per-centroid distances use the sequential-over-dims order
     (matches a fold); np.argmin picks the first minimum, so ties pick
     the lowest centroid id — same semantics as a strict < fold."""
-    C = [np.array([float(v) for v in c], dtype=np.float64) for c in centroids]
+    C = [_vec(c) for c in centroids]
 
     @pandas_udf("int")
     def _cell(v: pd.Series) -> pd.Series:
@@ -370,11 +358,8 @@ def ivf_assign(vec_col, centroids: list[list[float]]):
         V = _mat(v)
         dists = np.empty((V.shape[0], len(C)))
         for i, c in enumerate(C):
-            acc = np.zeros(V.shape[0])
-            for j in range(V.shape[1]):
-                x = V[:, j] - c[j]
-                acc = acc + x * x
-            dists[:, i] = acc
+            D = V - c
+            dists[:, i] = _seq_sum(D * D)
         return pd.Series(np.argmin(dists, axis=1).astype("int32"))
 
     # non-deterministic mark: ivf_ann_topk filters on the cell column
@@ -394,10 +379,10 @@ def ivf_ann_topk(
     payload_cols: tuple = (),
 ) -> DataFrame:
     """IVF probe: exact cosine top-k restricted to the n_probe nearest
-    centroid cells of the query."""
-    q = np.array(query)
-    cents = np.array(centroids)
-    order = np.argsort(((cents - q) ** 2).sum(axis=1))
+    centroid cells of the query (distances summed like
+    :func:`ivf_assign`'s)."""
+    D = np.array(centroids, dtype=np.float64) - _vec(query)
+    order = np.argsort(_seq_sum(D * D))
     probe = set(int(i) for i in order[:n_probe])
     assigned = df.withColumn("_cell", ivf_assign(F.col(vec_col), centroids))
     cands = assigned.where(F.col("_cell").isin(list(probe)))

@@ -5,6 +5,14 @@ Every operator is a pure Spark SQL expression (no UDF) with an exact
 DuckDB-SQL twin used as the correctness oracle — the expressions were
 chosen so both engines compute bit-identical results (integer counts,
 identically-rounded ratios, md5 on identical normalized strings).
+
+The corpus-text vocabulary of every JVM text operator (here, in
+``dedup`` and in ``streaming``) is defined once, below:
+
+- :func:`normalized_text`: whitespace-collapsed lowercase text,
+- :func:`fingerprint`: md5 of the normalized text,
+- :func:`tokens_ws`: the whitespace word split,
+- :func:`word_grams`: every k-word window of a token array.
 """
 
 from __future__ import annotations
@@ -23,8 +31,39 @@ STOPWORDS = {
 }
 
 
+def normalized_text(col):
+    """Whitespace-collapsed lowercase — the canonical form for exact
+    dedup and fingerprints. Identical expression exists in DuckDB
+    (regexp_replace + lower), so the oracle replicates it verbatim."""
+    return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
+
+
+def fingerprint(col):
+    """md5 hex digest of :func:`normalized_text`."""
+    return F.md5(normalized_text(col).cast("binary"))
+
+
 def tokens_ws(col):
+    """Whitespace word split of the lowercased text. ``trim`` strips
+    spaces only and ``split`` keeps leading/trailing empty tokens, as
+    DuckDB's trim()/regexp_split_to_array do."""
     return F.split(F.trim(F.lower(col)), r"\s+")
+
+
+def word_grams(toks, k: int):
+    """Every k-word window of the token-array column ``toks``, words
+    joined by one space; a document shorter than k words gives one gram
+    of all its words.
+
+    Pass a column MATERIALIZED in a child projection: a ``tokens_ws``
+    expression passed inline is re-evaluated per gram position (the
+    interpreted higher-order-function trap, see
+    :func:`~..dedup.shingle_docs`)."""
+    n = F.size(toks)
+    return F.transform(
+        F.sequence(F.lit(0), F.greatest(n - k, F.lit(0))),
+        lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
+    )
 
 
 def token_count(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -121,21 +160,11 @@ def repetition_stats(
         ).alias("dup_line_frac"),
     )
 
-    toks = df.select(
-        F.col(id_col),
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+").alias("_toks"),
-    )
+    toks = df.select(F.col(id_col), tokens_ws(F.col(text_col)).alias("_toks"))
 
     def gram_counts(k: int):
-        n = F.size("_toks")
         grams = toks.select(
-            F.col(id_col),
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.greatest(n - k, F.lit(0))),
-                    lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i + 1, k)),
-                )
-            ).alias("gram"),
+            F.col(id_col), F.explode(word_grams(F.col("_toks"), k)).alias("gram")
         )
         return grams.groupBy(id_col, "gram").agg(F.count(F.lit(1)).alias("cnt"))
 
@@ -239,10 +268,7 @@ def quality_gopher(
 def fingerprint_md5(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Content fingerprint: md5 over whitespace-normalized lowercase
     text. Identical function exists in DuckDB -> exact oracle."""
-    normalized = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    return df.select(
-        F.col(id_col), F.md5(normalized.cast("binary")).alias("fingerprint")
-    )
+    return df.select(F.col(id_col), fingerprint(F.col(text_col)).alias("fingerprint"))
 
 
 def winnow_fingerprint_pairs(
@@ -319,8 +345,6 @@ def winnow_fingerprint_pairs(
       evaluated once per element, only lambda BODIES re-evaluate, so
       each segment is hashed exactly once.
     """
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-
     def ghs_of(txt):
         # gram-hash array of a text fragment (1-based positions)
         return F.transform(
@@ -328,7 +352,7 @@ def winnow_fingerprint_pairs(
             lambda i: F.md5(txt.substr(i, F.lit(k)).cast("binary")),
         )
 
-    base = df.select(F.col(id_col), norm.alias("_norm"))
+    base = df.select(F.col(id_col), normalized_text(F.col(text_col)).alias("_norm"))
     m = F.greatest(F.length("_norm") - (k - 1), F.lit(1))
     # winnow positions: 1-based p in [1, greatest(m - window + 1, 1)]
     # (the old plan's  pos <= greatest(m - window, 0)  filter, 0-based)

@@ -42,52 +42,37 @@ def _docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-_DOC_PARTS: dict = {}
+_DOC_COUNTS: dict = {}
+
+# Documents per task for _docs_tasks. The Python-UDF annotate path
+# pays Arrow per-batch overhead, so it keeps ~500 docs/task; JVM-side
+# shingle/signature dedup has none and runs finer, ~100 docs/task.
+_UDF_GRAIN = 500
+_JVM_GRAIN = 100
 
 
-def _docs_annot(spark, sf_dir):
-    """Documents sized for the Python-UDF annotate path: the testdata is
-    a single parquet file (one scan partition => single-threaded
-    annotate); repartition to >= ~500 docs per task, capped at the
-    core count. SQL-expression queries keep the plain scan — the extra
-    shuffle only pays for itself when Python does the per-row work."""
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    if sf_dir not in _DOC_PARTS:
-        n = df.count()
-        _DOC_PARTS[sf_dir] = max(
-            1, min(spark.sparkContext.defaultParallelism, n // 500)
-        )
-    parts = _DOC_PARTS[sf_dir]
-    return df.repartition(parts) if parts > 1 else df
-
-
-_DOC_PARTS_DD: dict = {}
-
-
-def _docs_dedup(spark, sf_dir):
-    """Documents sized for the shingle/signature dedup path. The
-    testdata is ONE parquet file => one scan partition, which serializes
-    the widest stage in the whole suite (shingle explode multiplies rows
-    ~200x, then 64 hash+min partial aggregates run map-side on the scan
+def _docs_tasks(spark, sf_dir, grain):
+    """Documents repartitioned to ~``grain`` docs per task, capped at
+    the core count. The testdata is ONE parquet file => one scan
+    partition, which serializes per-row work: the annotate UDF, and the
+    widest stage in the suite (shingle explode multiplies rows ~200x,
+    then 64 hash+min partial aggregates run map-side on the scan
     partitions — measured 36s single-task vs ~4s parallel at sf0.1).
-    JVM-side work has no Arrow per-batch overhead, so the grain can be
-    finer than the annotate clamp: ~100 docs/task, capped at core
-    count. At 100 TB the scan produces natural splits and this is a
-    no-op (callers on real data should NOT add a repartition)."""
+    SQL-expression queries keep the plain scan — the extra shuffle only
+    pays for itself when a task does heavy per-row work. At 100 TB the
+    scan produces natural splits and this is a no-op (callers on real
+    data should NOT add a repartition)."""
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    if sf_dir not in _DOC_PARTS_DD:
-        n = df.count()
-        _DOC_PARTS_DD[sf_dir] = max(
-            1, min(spark.sparkContext.defaultParallelism, n // 100)
-        )
-    parts = _DOC_PARTS_DD[sf_dir]
+    if sf_dir not in _DOC_COUNTS:
+        _DOC_COUNTS[sf_dir] = df.count()
+    parts = max(1, min(spark.sparkContext.defaultParallelism, _DOC_COUNTS[sf_dir] // grain))
     return df.repartition(parts) if parts > 1 else df
 
 
 def t1_term_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-term annotate, case-sensitive, standard tokenizer."""
     ann = Annotator([{"text": "table", "id": "t1"}])
-    df = ann.annotate_df(_docs_annot(spark, sf_dir))
+    df = ann.annotate_df(_docs_tasks(spark, sf_dir, _UDF_GRAIN))
     return df.where(F.size("annotations") > 0).agg(
         F.count(F.lit(1)).alias("n_docs"),
     )
@@ -101,7 +86,7 @@ WHERE regexp_matches(text, '{_WB}table{_WE}')
 
 def t2_term_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann = Annotator([{"text": "SPARK", "id": "t2", "case-sensitive?": False}])
-    df = ann.annotate_df(_docs_annot(spark, sf_dir))
+    df = ann.annotate_df(_docs_tasks(spark, sf_dir, _UDF_GRAIN))
     return df.where(F.size("annotations") > 0).agg(F.count(F.lit(1)).alias("n_docs"))
 
 
@@ -113,7 +98,7 @@ WHERE regexp_matches(lower(text), '{_WB}spark{_WE}')
 
 def t3_phrase_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann = Annotator([{"text": "table scan", "id": "t3", "case-sensitive?": False}])
-    df = ann.annotate_df(_docs_annot(spark, sf_dir))
+    df = ann.annotate_df(_docs_tasks(spark, sf_dir, _UDF_GRAIN))
     return df.where(F.size("annotations") > 0).agg(F.count(F.lit(1)).alias("n_docs"))
 
 
@@ -126,7 +111,7 @@ WHERE regexp_matches(lower(text), '{_WB}table[^a-zA-Z0-9]+scan{_WE}')
 def t4_phrase_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Begin/end char offsets of the FIRST occurrence per document."""
     ann = Annotator([{"text": "table scan", "id": "t4", "case-sensitive?": False}])
-    ex = ann.explode(_docs_annot(spark, sf_dir), keep_cols=["doc_id"])
+    ex = ann.explode(_docs_tasks(spark, sf_dir, _UDF_GRAIN), keep_cols=["doc_id"])
     return (
         ex.groupBy("doc_id")
         .agg(F.min(F.struct("begin_offset", "end_offset")).alias("first"))
@@ -155,7 +140,7 @@ def t5_dict_match_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann = Annotator(
         [{"text": t, "id": t, "case-sensitive?": False} for t in T5_TERMS]
     )
-    ex = ann.explode(_docs_annot(spark, sf_dir), keep_cols=["doc_id"])
+    ex = ann.explode(_docs_tasks(spark, sf_dir, _UDF_GRAIN), keep_cols=["doc_id"])
     return (
         ex.groupBy("doc_id")
         .agg(F.countDistinct("dict_entry_id").alias("n_matched"))
@@ -176,7 +161,8 @@ ORDER BY d.doc_id
 def t6_lucene_bool(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lucene query-string surface: boolean AND/NOT match counts."""
     df = lucene_annotate_df(
-        _docs_annot(spark, sf_dir), [{"text": "table AND spark AND NOT vector", "id": "q1"}]
+        _docs_tasks(spark, sf_dir, _UDF_GRAIN),
+        [{"text": "table AND spark AND NOT vector", "id": "q1"}],
     )
     return df.where(F.size("query_matches") > 0).agg(F.count(F.lit(1)).alias("n_docs"))
 
@@ -222,7 +208,7 @@ def t8_matches_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann = Annotator(
         [{"text": t, "id": t, "case-sensitive?": False} for t in T5_TERMS]
     )
-    ex = ann.explode(_docs_annot(spark, sf_dir), keep_cols=["doc_id", "source"])
+    ex = ann.explode(_docs_tasks(spark, sf_dir, _UDF_GRAIN), keep_cols=["doc_id", "source"])
     return (
         ex.select("doc_id", "source", "dict_entry_id")
         .distinct()
@@ -259,9 +245,8 @@ ORDER BY 1
 
 
 def dd_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.ngram_jaccard_pairs(_docs_dedup(spark, sf_dir), k=3, threshold=0.8).orderBy(
-        "id_a", "id_b"
-    )
+    docs = _docs_tasks(spark, sf_dir, _JVM_GRAIN)
+    return dedup.ngram_jaccard_pairs(docs, k=3, threshold=0.8).orderBy("id_a", "id_b")
 
 
 DD_NGRAM_SQL = """
@@ -294,9 +279,8 @@ def dd_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     declarative 'pairs with jaccard >= 0.8' (assuming LSH recall 1,
     which the oracle hash-check now actively asserts instead of the
     old rows-only pass)."""
-    return dedup.minhash_lsh_verified(_docs_dedup(spark, sf_dir), threshold=0.8).orderBy(
-        "id_a", "id_b"
-    )
+    docs = _docs_tasks(spark, sf_dir, _JVM_GRAIN)
+    return dedup.minhash_lsh_verified(docs, threshold=0.8).orderBy("id_a", "id_b")
 
 
 # verified-LSH output must equal the exact declarative result
@@ -309,7 +293,7 @@ def dd_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     with its cluster id + canonical flag. The DuckDB oracle derives the
     same components with a recursive CTE over the declarative
     jaccard-pair edges."""
-    docs = _docs_dedup(spark, sf_dir)
+    docs = _docs_tasks(spark, sf_dir, _JVM_GRAIN)
     pairs = dedup.minhash_lsh_verified(docs, threshold=0.8)
     return dedup.dedup_clusters(docs, pairs).orderBy("doc_id")
 
@@ -343,7 +327,7 @@ def dd_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic step is replicated in DuckDB, so the fingerprints are
     value-exact oracle-checked. The Arrow kernel is map-only: no
     token explode, no shuffle."""
-    out = dedup.simhash_fingerprints_md5(_docs_dedup(spark, sf_dir))
+    out = dedup.simhash_fingerprints_md5(_docs_tasks(spark, sf_dir, _JVM_GRAIN))
     return out.select(
         F.col("id").alias("doc_id"),
         *[F.col("bands")[b].alias(f"b{b}") for b in range(4)],
@@ -402,7 +386,7 @@ def dd_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     any shared 16-bit band (never all-pairs), exact hamming verify via
     bit_count(xor) <= 8, all JVM-side. Oracle mirrors banding + verify
     declaratively over the same md5-nibble fingerprints."""
-    fps = dedup.simhash_fingerprints_md5(_docs_dedup(spark, sf_dir))
+    fps = dedup.simhash_fingerprints_md5(_docs_tasks(spark, sf_dir, _JVM_GRAIN))
     pairs = dedup.simhash_pairs(fps, max_hamming=8)
     return pairs.select(
         "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
@@ -795,9 +779,8 @@ def ts_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-able (value compare over every fingerprint, not just
     counts). Uses the repartitioned scan so gram hashing parallelizes
     even from a single parquet file."""
-    return textstats.winnow_fingerprint_pairs(_docs_annot(spark, sf_dir)).orderBy(
-        "doc_id", "fp"
-    )
+    docs = _docs_tasks(spark, sf_dir, _UDF_GRAIN)
+    return textstats.winnow_fingerprint_pairs(docs).orderBy("doc_id", "fp")
 
 
 # Identical winnowing plan in DuckDB: per-position md5 k-grams via a
@@ -832,7 +815,7 @@ def ts_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     word-2-gram character coverage, duplicated word-5-gram character
     coverage. Uses the repartitioned scan: the gram explode is the wide
     stage."""
-    return textstats.repetition_stats(_docs_dedup(spark, sf_dir)).orderBy("doc_id")
+    return textstats.repetition_stats(_docs_tasks(spark, sf_dir, _JVM_GRAIN)).orderBy("doc_id")
 
 
 TS_REPETITION_SQL = r"""

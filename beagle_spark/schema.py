@@ -15,7 +15,6 @@ from typing import Optional
 
 from pyspark.sql.types import (
     ArrayType,
-    BooleanType,
     IntegerType,
     MapType,
     StringType,
@@ -40,45 +39,6 @@ ANNOTATION_STRUCT = StructType(
 )
 ANNOTATIONS_TYPE = ArrayType(ANNOTATION_STRUCT, containsNull=False)
 
-# Dictionary as a DataFrame (for I/O + optimizer); compiled form is a
-# broadcast Python structure, not a DataFrame (SURVEY.md section 3.4).
-DICTIONARY_SCHEMA = StructType(
-    [
-        StructField("text", StringType(), False),
-        StructField("type", StringType(), True),
-        StructField("id", StringType(), True),
-        StructField("synonyms", ArrayType(StringType()), True),
-        StructField("case_sensitive", BooleanType(), True),
-        StructField("ascii_fold", BooleanType(), True),
-        StructField("stem", BooleanType(), True),
-        StructField("stemmer", StringType(), True),
-        StructField("slop", IntegerType(), True),
-        StructField("in_order", BooleanType(), True),
-        StructField("tokenizer", StringType(), True),
-        StructField("fuzzy", BooleanType(), True),
-        StructField("fuzziness", IntegerType(), True),
-        StructField("meta", MapType(StringType(), StringType()), True),
-    ]
-)
-
-VALID_TOKENIZERS = {
-    "keyword",
-    "letter",
-    "classic",
-    "standard",
-    "strict",
-    "unicode-whitespace",
-    "whitespace",
-}
-
-VALID_STEMMERS = {
-    "arabic", "armenian", "basque", "catalan", "danish", "dutch", "english",
-    "estonian", "finnish", "french", "german", "german2", "hungarian",
-    "irish", "italian", "kp", "lithuanian", "lovins", "norwegian", "porter",
-    "portuguese", "romanian", "russian", "spanish", "swedish", "turkish",
-}
-
-
 def norm_key(k) -> str:
     """The one spelling rule for option and entry keys: the reference's
     keywords map to snake_case (`:case-sensitive?` -> `case_sensitive`,
@@ -89,6 +49,12 @@ def norm_key(k) -> str:
 def norm_keys(d: dict | None) -> dict:
     """`d` with every key spelled by `norm_key`."""
     return {norm_key(k): v for k, v in (d or {}).items()}
+
+
+def norm_meta(meta: dict | None) -> dict:
+    """Entry metadata as a str -> str map, keyword keys without their
+    leading colon (phrases.clj:166)."""
+    return {str(k).lstrip(":"): str(v) for k, v in (meta or {}).items()}
 
 
 @dataclass
@@ -126,9 +92,8 @@ class DictionaryEntry:
             k = cls._ALIASES.get(str(k).lstrip(":")) or norm_key(k)
             if k in cls.__dataclass_fields__:
                 kw[k] = v
-        if "meta" in kw and kw["meta"] is not None:
-            # keyword meta keys normalized to strings (phrases.clj:166)
-            kw["meta"] = {str(k).lstrip(":"): str(v) for k, v in kw["meta"].items()}
+        if kw.get("meta") is not None:
+            kw["meta"] = norm_meta(kw["meta"])
         return cls(**kw)
 
     def to_dict(self) -> dict:

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .annotator import Annotator
+from .ops.textstats import fingerprint
 
 
 def annotate_stream(
@@ -124,12 +125,7 @@ def stream_exact_dedup(
     was already seen within the watermark horizon. Uses Spark's stateful
     dropDuplicates — state is GC'd past the watermark, so memory is
     bounded by (arrival rate x horizon), not stream length."""
-    hashed = stream_df.withColumn(
-        "_text_hash",
-        F.md5(
-            F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ").cast("binary")
-        ),
-    )
+    hashed = stream_df.withColumn("_text_hash", fingerprint(F.col(text_col)))
     return (
         hashed.withWatermark(ts_col, watermark)
         .dropDuplicates(["_text_hash"])

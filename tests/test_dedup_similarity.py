@@ -543,3 +543,84 @@ def test_lsh_ann_indexed_rejects_mismatched_params(spark, emb, tmp_path):
     with pytest.raises(ValueError, match="dim"):
         similarity.lsh_ann_topk_indexed(spark, path, q[:32], k=10)
     assert similarity.lsh_ann_topk_indexed(spark, path, q, k=10).count() > 0
+
+
+def test_lsh_ann_finds_query_row_with_near_zero_dot(spark):
+    """A stored vector whose dot with a hyperplane is within rounding of
+    zero, queried with itself: the driver must compute the query bucket
+    with the rows' sequential fold, or it probes a bucket that does not
+    hold the query's own row."""
+    import numpy as np
+
+    planes = similarity.make_planes(64, 6, 42)
+    p = np.array(planes[0])
+    x = np.random.RandomState(0).randn(20000, 64)
+    x -= np.outer(x @ p / (p @ p), p)  # onto plane 0's orthogonal complement
+
+    def fold(v):
+        acc = 0.0
+        for a, b in zip(v.tolist(), p.tolist()):
+            acc = acc + a * b
+        return acc
+
+    # the first row where the fold and a BLAS dot disagree on "> 0"
+    # (the row the old np.dot probe missed; any row if this BLAS folds)
+    v = next((v for v in x if (fold(v) > 0) != (float(np.dot(v, p)) > 0)), x[0])
+    rows = [(0, v.tolist())] + [
+        (i, row.tolist()) for i, row in enumerate(np.random.RandomState(1).randn(50, 64), 1)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = [r.vec_id for r in similarity.lsh_ann_topk(df, v.tolist(), k=10).collect()]
+    assert 0 in got
+
+
+def _brute_jaccard_pairs(rows, k, threshold):
+    """Reference n-gram Jaccard: lower, trim spaces, split on Java's
+    ASCII \\s+ (keeping edge empties), k-word grams, distinct; Spark's
+    HALF_UP 4-place rounding."""
+    import itertools
+    import re
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def shingles(t):
+        toks = re.split(r"[ \t\n\x0b\f\r]+", t.lower().strip(" "))
+        return {" ".join(toks[i:i + k]) for i in range(max(len(toks) - k, 0) + 1)}
+
+    sh = {i: shingles(t) for i, t in rows}
+    out = set()
+    for a, b in itertools.combinations(sorted(sh), 2):
+        c = len(sh[a] & sh[b])
+        if c:
+            j = c / (len(sh[a]) + len(sh[b]) - c)
+            j = float(Decimal(repr(j)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+            if j >= threshold:
+                out.add((a, b, j))
+    return out
+
+
+def test_ngram_jaccard_pairs_edge_cases_match_bruteforce(spark):
+    """ngram_jaccard_pairs against a plain-Python Jaccard on inputs the
+    oracle corpus lacks: docs shorter than k words, empty and
+    whitespace-only text, identical docs, one shingle shared by 50 docs
+    (all pairs below the high threshold), and a 2/3 pair that lands
+    exactly on the threshold after 4-place rounding."""
+    rows = [
+        (1, "hello world"), (2, "Hello  World"), (3, "hi"),
+        (4, ""), (5, "   "), (6, "\t\n"), (7, " \tfoo"),
+        (8, "the quick brown fox jumps over the lazy dog"),
+        (9, "the quick brown fox jumps over the lazy dog"),
+        (10, "a b c d e"), (11, "a b c d"),  # 2 of 3 shingles: 0.6667
+        (12, "p q r s t u"), (13, "p q r s t v"),  # 3 of 5: 0.6
+    ]
+    rows += [
+        (100 + i, f"alpha beta gamma w{i}a w{i}b w{i}c w{i}d") for i in range(50)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    for threshold in (0.6667, 0.1):
+        got = {
+            (r.id_a, r.id_b, r.jaccard)
+            for r in dedup.ngram_jaccard_pairs(docs, k=3, threshold=threshold).collect()
+        }
+        want = _brute_jaccard_pairs(rows, 3, threshold)
+        assert got == want, f"threshold={threshold}"
+    assert (10, 11, 0.6667) in want and (100, 149, 0.1111) in want

@@ -46,75 +46,32 @@ def _fmt(df) -> str:
 def build(name: str, spark):
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from beagle_spark.ops import dedup
-    from beagle_spark.queries import REGISTRY, _docs_dedup
+    from beagle_spark.queries import _JVM_GRAIN, REGISTRY, _docs_tasks
 
     if name == "_lsh_verify_pipeline":
         # minhash_lsh_verified minus the eager checkpoint: candidates +
         # exact-verify joins (the part whose plan matters)
-        docs = _docs_dedup(spark, SF_DIR)
+        docs = _docs_tasks(spark, SF_DIR, _JVM_GRAIN)
         shingled = dedup.shingle_docs(docs)
         cands = dedup.minhash_lsh_candidates(
             docs, shingled=shingled, bucket_cap=1000
         ).select("id_a", "id_b")
-        sa = shingled.select(F.col("id").alias("id_a"), F.col("shingles").alias("_sh_a"))
-        sb = shingled.select(F.col("id").alias("id_b"), F.col("shingles").alias("_sh_b"))
-        return (
-            cands.join(sa, "id_a")
-            .join(sb, "id_b")
-            .withColumn("_c", F.size(F.array_intersect("_sh_a", "_sh_b")))
-            .withColumn(
-                "jaccard",
-                F.round(F.col("_c") / (F.size("_sh_a") + F.size("_sh_b") - F.col("_c")), 4),
-            )
-            .where(F.col("jaccard") >= 0.8)
-            .select("id_a", "id_b", "jaccard")
-        )
+        return dedup._verify_pairs(cands, shingled, 0.8)
     if name == "_cc_round":
-        # one propagation + pointer-doubling round, pre-checkpoint
+        # one propagation + pointer-doubling round, pre-checkpoint, over
+        # the loop's per-round inputs: the persisted edges and
+        # lineage-cut labels (otherwise the edge/label subtrees
+        # re-expand at every reference)
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3), (4, 5)], ["id_a", "id_b"]
         )
-        edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        edges = edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct()
-        if hasattr(dedup, "_cc_propagate_round"):  # r21+: the module's own round
-            edges = edges.repartition("dst")  # as connected_components does
-        # mirror the loop's per-round inputs: edges persisted
-        # (partitioning-preserving) in r21+, lineage-cut labels in both
-        # (otherwise the edge/label subtrees re-expand at every reference)
-        if hasattr(dedup, "_cc_propagate_round"):
-            edges = edges.persist()
-            edges.count()
-        else:
-            edges = edges.localCheckpoint(eager=True)
+        edges = dedup._cc_edges(pairs, "id_a", "id_b")
+        edges.count()
         labels = (
             edges.select(F.col("src").alias("id")).distinct()
             .withColumn("label", F.col("id"))
         ).localCheckpoint(eager=True)
-        if hasattr(dedup, "_cc_propagate_round"):
-            return dedup._cc_propagate_round(edges, labels)
-        # pre-r21 shape, reconstructed inline (the module had no helper)
-        neigh = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        stepped = labels.join(neigh, labels.id == neigh.src, "left").select(
-            labels.id,
-            F.least(F.col("label"), F.coalesce("nlabel", F.col("label"))).alias("label"),
-        )
-        x, y = stepped.alias("x"), stepped.alias("y")
-        old = x.join(y, F.col("x.label") == F.col("y.id"), "left").select(
-            F.col("x.id").alias("id"),
-            F.least(
-                F.col("x.label"), F.coalesce(F.col("y.label"), F.col("x.label"))
-            ).alias("label"),
-        )
-        # the pre-r21 loop ALSO ran a join-against-old-labels count per
-        # round; that join is part of the removed cost but not of this
-        # captured plan.
-        return old
+        return dedup._cc_propagate_round(edges, labels)
     if name == "_annotate_udf":
         from beagle_spark import Annotator
 
