@@ -9,7 +9,8 @@ script):
    "queries": {name: min-of-2 sec, ...}, "sf": ...,
    "annotate": {"5k"|"80k"|"steady_1m": docs_per_sec},
    "unstable": [names whose two passes differ >2x],
-   "sentinel": [fixed JVM-canary secs: pre-annotate + one per pass]}
+   "sentinel": [fixed JVM-canary secs: pre-annotate, before and after
+                the steady-state annotate probe, one per pass]}
 
 The annotate benchmark mirrors the reference's published setup
 (BASELINE.md): dictionary sizes 5k and 80k phrases, mostly-non-matching
@@ -223,6 +224,10 @@ def main():
     # per-pass times are still recorded in bench_detail.json.
     warm_big = ann5k.annotate_df(big).select(F.sum(F.size("annotations")))
     warm_big.collect()
+    # warm sentinels bracket the timed passes, so a probe that ran in a
+    # contended window shows it on both sides
+    sentinels.append(sentinel_sec(spark))
+    log(f"load sentinel (pre-{probe_label}): {sentinels[-1]}s")
     big_secs = []
     for i in (1, 2, 3):
         # vary the map-side expression so Spark can't reuse a completed
@@ -233,6 +238,8 @@ def main():
         sec_i, _ = timed(lambda: out_big.collect())
         big_secs.append(sec_i)
         log(f"  {probe_label} probe run {i}: {sec_i:.2f}s ({n_big / sec_i:.0f} docs/s)")
+    sentinels.append(sentinel_sec(spark))
+    log(f"load sentinel (post-{probe_label}): {sentinels[-1]}s")
     big.unpersist()
     big_sec = sorted(big_secs)[1]
     ann_stats[probe_label] = {
@@ -310,7 +317,8 @@ def main():
                     # count + per-round wall/changed) -> bench_detail
                     cc = dict(_dedup.CC_LAST_STATS)
                     extra.setdefault("cc_stats", {})[f"{name}_pass{p}"] = cc
-                    log(f"  {name} cc: iters={cc['iterations']} rounds={cc['rounds']}")
+                    log(f"  {name} cc: path={cc['path']} edges={cc['edges']} "
+                        f"iters={cc['iterations']} rounds={cc['rounds']}")
             except Exception as e:  # keep the bench line intact on failure
                 log(f"{name}: FAILED {e}")
                 times[name] = -1.0

@@ -174,19 +174,47 @@ def test_ivf_ann_equals_bruteforce_within_probed_cells(spark, emb):
     assert 0 in got  # query's own cell is always probed first
 
 
-def test_connected_components_hand_graph(spark):
+def _cc_both_paths(monkeypatch, pairs) -> dict:
+    """connected_components pinned to the distributed rounds (driver
+    bound 0), then on the driver finish: both must return the same
+    schema and the same sorted rows. Returns {id: component}."""
+    out = {}
+    for path, bound in (("rounds", 0), ("driver", dedup.CC_DRIVER_MAX_EDGES)):
+        monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", bound)
+        comp = dedup.connected_components(pairs)
+        assert dedup.CC_LAST_STATS["path"] == path
+        out[path] = (comp.schema, sorted(comp.collect()))
+    assert out["driver"] == out["rounds"], out
+    return {r["id"]: r["component"] for r in out["driver"][1]}
+
+
+def test_connected_components_hand_graph(spark, monkeypatch):
     """Chain 1-2-3, triangle 10-11-12 (with a redundant edge), isolated
     pair 20-21: components = min id reachable; singletons absent from
-    pair input get their own cluster via dedup_clusters."""
-    from beagle_spark.ops.dedup import connected_components, dedup_clusters
-    from pyspark.sql import functions as F
+    pair input get their own cluster via dedup_clusters. Every graph
+    runs on both finishes (driver union-find and distributed rounds),
+    which must agree on schema and rows: also a self-loop, duplicate
+    and reversed edges, an empty pair relation and int32 ids."""
+    from beagle_spark.ops.dedup import dedup_clusters
+    from pyspark.sql.types import IntegerType
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (11, 12), (10, 12), (20, 21)],
         ["id_a", "id_b"],
     )
-    comp = {r["id"]: r["component"] for r in connected_components(pairs).collect()}
+    comp = _cc_both_paths(monkeypatch, pairs)
     assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+
+    loops = spark.createDataFrame(
+        [(1, 2), (2, 1), (1, 2), (5, 5), (7, 6), (6, 7), (7, 6)], ["id_a", "id_b"]
+    )
+    assert _cc_both_paths(monkeypatch, loops) == {1: 1, 2: 1, 5: 5, 6: 6, 7: 6}
+    empty = spark.createDataFrame([], "id_a bigint, id_b bigint")
+    assert _cc_both_paths(monkeypatch, empty) == {}
+    ints = spark.createDataFrame([(4, 9), (3, 4), (30, 31)], "id_a int, id_b int")
+    assert _cc_both_paths(monkeypatch, ints) == {3: 3, 4: 3, 9: 3, 30: 30, 31: 30}
+    schema = dedup.connected_components(ints).schema
+    assert [f.dataType for f in schema.fields] == [IntegerType(), IntegerType()]
 
     docs = spark.range(25).select(F.col("id").alias("doc_id"))
     out = {r["doc_id"]: (r["cluster_id"], r["is_canonical"])
@@ -197,6 +225,24 @@ def test_connected_components_hand_graph(spark):
     assert out[7] == (7, True)       # singleton
     n_canon = sum(1 for c, canon in out.values() if canon)
     assert n_canon == 25 - 5         # 5 non-canonical dups
+
+
+def test_connected_components_null_endpoints_are_not_edges(spark, monkeypatch):
+    """A pair with a null member is not an edge on either finish: no
+    null id is emitted and the non-null member of a half-null pair is
+    not made a node. dedup_clusters still gives those docs their own
+    cluster."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (5, 5), (2, 1), (None, 7), (8, None), (9, 10)],
+        "id_a bigint, id_b bigint",
+    )
+    assert _cc_both_paths(monkeypatch, pairs) == {1: 1, 2: 1, 5: 5, 9: 9, 10: 9}
+
+    docs = spark.range(12).select(F.col("id").alias("doc_id"))
+    out = {r["doc_id"]: (r["cluster_id"], r["is_canonical"])
+           for r in dedup.dedup_clusters(docs, pairs).collect()}
+    assert out[7] == (7, True) and out[8] == (8, True)
+    assert out[2] == (1, False) and out[10] == (9, False)
 
 
 def test_lsh_bucket_cap_bounds_identical_doc_blowup(spark):
@@ -410,7 +456,7 @@ def test_simhash_pairs_bucket_cap_degenerate_band(spark):
     assert dedup.simhash_pairs(fps, max_hamming=64).count() == n * (n - 1) // 2
 
 
-def test_adversarial_dedup_scale(spark):
+def test_adversarial_dedup_scale(spark, monkeypatch):
     """VERDICT r21 item 5 (carried since r7): 200k docs, one giant
     near-dup cluster (20% of the corpus, 400x bucket_cap), a long
     near-dup pair chain (diameter 2048), unique background docs —
@@ -419,7 +465,9 @@ def test_adversarial_dedup_scale(spark):
     - the bucket_cap star guard engages for the giant cluster: its
       emitted pair set is EXACTLY the min-id star (all-pairs would be
       ~8*10^8 rows and would not return);
-    - connected_components converges within the pointer-doubling bound
+    - connected_components, pinned to the distributed rounds (driver
+      bound 0; the 42k-edge graph would otherwise finish on the
+      driver), converges within the pointer-doubling bound
       (~log2(diameter) + fixpoint-detection rounds), proven from the
       CC_LAST_STATS instrumentation rather than assumed;
     - cluster decisions: one component for the giant cluster, one for
@@ -476,6 +524,7 @@ def test_adversarial_dedup_scale(spark):
     )
     pairs = cands.select("id_a", "id_b").unionByName(chain)
     t1 = time.monotonic()
+    monkeypatch.setattr(dedup, "CC_DRIVER_MAX_EDGES", 0)
     comp = dedup.connected_components(pairs, max_iter=20)
     agg = comp.groupBy("component").agg(
         F.count(F.lit(1)).alias("n"),
@@ -494,11 +543,35 @@ def test_adversarial_dedup_scale(spark):
     # diameter-2048 path needs ~log2(2048)=11 rounds plus fixpoint
     # detection — far under plain propagation's 2048
     bound = math.ceil(math.log2(clen)) + 3
+    assert cc["path"] == "rounds", cc
     assert cc["converged"] and cc["iterations"] <= bound, cc
     print(
         f"adversarial scale: lsh {t_lsh:.1f}s, cc {t_cc:.1f}s in "
         f"{cc['iterations']} rounds {[r['changed'] for r in cc['rounds']]}"
     )
+
+
+def test_adversarial_cc_graph_driver_finish(spark):
+    """The pair graph of test_adversarial_dedup_scale (a 40k-member
+    min-id star plus a disjoint 2,048-link chain) built directly with
+    spark.range, no LSH: it fits the driver bound, so the driver
+    union-find labels it, with the same two components the rounds
+    give there."""
+    n_giant, c0, clen = 40_000, 150_000, 2_048
+    star = spark.range(1, n_giant).selectExpr("CAST(0 AS BIGINT) AS id_a", "id AS id_b")
+    chain = spark.range(c0, c0 + clen).selectExpr("id AS id_a", "id + 1 AS id_b")
+    comp = dedup.connected_components(star.unionByName(chain))
+    cc = dict(dedup.CC_LAST_STATS)
+    assert (cc["path"], cc["edges"], cc["iterations"]) == (
+        "driver", n_giant - 1 + clen, 0), cc
+    agg = comp.groupBy("component").agg(
+        F.count(F.lit(1)).alias("n"), F.min("id").alias("lo"), F.max("id").alias("hi")
+    )
+    rows = {r.component: (r.n, r.lo, r.hi) for r in agg.collect()}
+    assert rows == {
+        0: (n_giant, 0, n_giant - 1),
+        c0: (clen + 1, c0, c0 + clen),
+    }, rows
 
 
 def test_lsh_ann_indexed_partition_pruned(spark, emb, tmp_path):

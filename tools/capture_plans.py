@@ -65,7 +65,7 @@ def build(name: str, spark):
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3), (4, 5)], ["id_a", "id_b"]
         )
-        edges = dedup._cc_edges(pairs, "id_a", "id_b")
+        edges = dedup._cc_edges(dedup._cc_ends(pairs, "id_a", "id_b"))
         edges.count()
         labels = (
             edges.select(F.col("src").alias("id")).distinct()
