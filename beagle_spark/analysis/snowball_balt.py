@@ -29,85 +29,52 @@ pinned behavior).
 
 from __future__ import annotations
 
+from .snowball_rt import among, compile_among, gopast, regions, replace_among
+from .snowball_tables import LT_STEP1, LT_STEP2
+
 # ---------------------------------------------------------------------------
 # Lithuanian
 # ---------------------------------------------------------------------------
 _LT_VOWELS = frozenset("aeiyouąęėįųū")
 
-# step1: nominal endings by declension (published program's table;
-# longest-match). Comments name the paradigm word as the program does.
-from .snowball_tables import LT_STEP1, LT_STEP2
-
 # fix_conflicts: restore nominative stems so vocative/diminutive forms
 # collapse (exact table from lithuanian.sbl)
-_LT_CONFLICTS = [
+_LT_CONFLICTS = compile_among([
     ("okatės", "okatė"), ("okate", "okatė"),
     ("aitės", "aitė"), ("aite", "aitė"),
     ("uotės", "uotė"), ("uote", "uotė"),
     ("ėjime", "ėjimas"), ("ojime", "ojimas"), ("avime", "avimas"),
     ("esiu", "esys"), ("asius", "asys"),
-]
+])
 
 
-def _lt_r1(w: str) -> int:
-    # words starting with 'a' longer than 6 letters mark R1 from
-    # position 1 (the published program's `'a' $(len > 6) hop 1`)
-    start = 1 if (w.startswith("a") and len(w) > 6) else 0
-    i = start
-    n = len(w)
-    while i < n and w[i] not in _LT_VOWELS:
-        i += 1
-    i += 1  # past the vowel
-    while i < n and w[i] in _LT_VOWELS:
-        i += 1
-    if i >= n:
-        return n
-    return i + 1
-
-
-def _lt_find(w: str, among, limit: int):
-    lens, by_len = among
-    n = len(w)
-    for ln in lens:
-        if ln > n - limit:
-            continue
-        if by_len[ln].get(w[n - ln:]) is not None:
-            return w[n - ln:]
-    return None
+def _fix_chdz(s: str) -> str:
+    if s.endswith("č"):
+        return s[:-1] + "t"
+    if s.endswith("dž"):
+        return s[:-2] + "d"
+    return s
 
 
 def lithuanian_stem(word: str) -> str:
     w = word.lower()
-    r1 = _lt_r1(w)
+    # words starting with 'a' longer than 6 letters mark R1 from
+    # position 1 (the published program's `'a' $(len > 6) hop 1`)
+    r1 = gopast(w, _LT_VOWELS, 1 if (w.startswith("a") and len(w) > 6) else 0)
 
     # fix_conflicts (longest match, whole word scope)
-    best = None
-    for suf, rep in _LT_CONFLICTS:
-        if w.endswith(suf) and (best is None or len(suf) > len(best[0])):
-            best = (suf, rep)
-    if best is not None:
-        w = w[: -len(best[0])] + best[1]
-
-    def fix_chdz(s: str) -> str:
-        if s.endswith("č"):
-            return s[:-1] + "t"
-        if s.endswith("dž"):
-            return s[:-2] + "d"
-        return s
+    w = replace_among(w, _LT_CONFLICTS) or w
 
     # step1: one R1-limited longest-match removal
-    suf = _lt_find(w, LT_STEP1, r1)
-    if suf is not None:
-        w = w[: -len(suf)]
-    w = fix_chdz(w)
+    m = among(w, LT_STEP1, limit=r1)
+    if m is not None:
+        w = w[:m[0]]
+    w = _fix_chdz(w)
 
     # step2: repeated R1-limited longest-match removal
-    while True:
-        suf = _lt_find(w, LT_STEP2, r1)
-        if suf is None:
-            break
-        w = w[: -len(suf)]
-    w = fix_chdz(w)
+    while (m := among(w, LT_STEP2, limit=r1)) is not None:
+        w = w[:m[0]]
+    w = _fix_chdz(w)
 
     if w.endswith("gd"):
         w = w[:-1]
@@ -148,56 +115,52 @@ for _stem, _forms in [
     for _f in _forms:
         _ET_VERB_EXCEPTIONS[_f] = _stem
 
+def _vowel_before(w: str, i: int) -> bool:
+    return i >= 1 and w[i - 1] in _ET_VOWELS
+
+
 # Verb endings (multi-letter, or single-letter gated on a preceding
 # vowel). Bare 's'/'d' are intentionally NOT here: the nominal chain
 # removes them with the same vowel condition, and claiming them as
 # verb endings would stop the nominal chain from also stripping
 # stacked case+plural markers (raamatutes -> raamatu needs s THEN te).
-_ET_VERB = sorted(
-    [
-        "nuksin", "nuksime", "nuksite",
-        "ksin", "ksime", "ksite", "ksid", "ks",
-        "sin", "sime", "site", "sid",
-        "takse", "dakse",
-        "mata", "mast", "maks", "mas", "ma",
-        "des", "da", "ta",
-        "vad", "me",
-        "ge", "gem", "gu", "ke", "kem", "ku",
-        "ti", "di",
-        "nud", "tud", "dud",
-        "b", "n",
-    ],
-    key=len,
-    reverse=True,
-)
+# Entries with a condition routine fall through to shorter entries
+# when it fails.
+_ET_VERB = compile_among([
+    "nuksin", "nuksime", "nuksite",
+    "ksin", "ksime", "ksite", "ksid", "ks",
+    "sin", "sime", "site", "sid",
+    "takse", "dakse",
+    "mata", "mast", "maks", "mas", ("ma", "", _vowel_before),
+    "des", ("da", "", _vowel_before), ("ta", "", _vowel_before),
+    "vad", "me",
+    "ge", "gem", "gu", "ke", "kem", "ku",
+    "ti", "di",
+    "nud", "tud", "dud",
+    ("b", "", _vowel_before), ("n", "", _vowel_before),
+])
 
 # Noun-suite phase 1: derivational-suffix normalization so the
 # nominative collapses with the oblique stem (mine/mise/mist -> mis,
 # lane/lase/last -> las, line/lise/list -> lis, kene/kese/kest -> ke).
-_ET_SPECIAL_NOUN = [
+_ET_SPECIAL_NOUN = compile_among([
     ("misse", "mis"), ("mine", "mis"), ("mise", "mis"), ("mist", "mis"),
     ("lasse", "las"), ("lane", "las"), ("lase", "las"), ("last", "las"),
     ("lisse", "lis"), ("line", "lis"), ("lise", "lis"), ("list", "lis"),
     ("kesse", "ke"), ("kene", "ke"), ("kese", "ke"), ("kest", "ke"),
-]
+])
 
 # Case endings attach to the vowel-final genitive stem (single-letter
 # ones require the preceding vowel; that is what protects "dogs").
-_ET_CASES = sorted(
-    ["sse", "st", "lt", "le", "ks", "ni", "na", "ta", "ga", "s", "l", "t"],
-    key=len,
-    reverse=True,
+_ET_CASES = compile_among(
+    ["sse", "st", "lt", "le", "ks"]
+    + [(s, "", _vowel_before) for s in ("ni", "na", "ta", "ga", "s", "l", "t")]
 )
 # 'i' is the oblique-plural stem marker (the program's i_plural:
 # raamatuid -> [d] raamatui -> [i] raamatu), vowel-gated.
-_ET_PLURAL = sorted(["sid", "de", "te", "d", "i"], key=len, reverse=True)
-
-
-def _et_r1(w: str) -> int:
-    for i in range(1, len(w)):
-        if w[i] not in _ET_VOWELS and w[i - 1] in _ET_VOWELS:
-            return i + 1
-    return len(w)
+_ET_PLURAL = compile_among(
+    ["te"] + [(s, "", _vowel_before) for s in ("sid", "de", "d", "i")]
+)
 
 
 def estonian_stem(word: str) -> str:
@@ -206,73 +169,41 @@ def estonian_stem(word: str) -> str:
         return _ET_VERB_EXCEPTIONS[w]
     if len(w) <= 3:
         return w
-    r1 = _et_r1(w)
-
-    def in_r1(suf: str, s: str) -> bool:
-        return len(s) - len(suf) >= max(r1, 3)
-
-    def vowel_before(s: str, suf: str) -> bool:
-        i = len(s) - len(suf)
-        return i >= 1 and s[i - 1] in _ET_VOWELS
-
+    r1 = regions(w, _ET_VOWELS, floor=3)[0]
     removed = False
 
     # emphasis clitic: -ki after a voiceless stop/s, -gi elsewhere
-    if len(w) >= 6:
-        if w.endswith("ki") and in_r1("ki", w) and w[-3] in "kpts":
+    if len(w) >= 6 and len(w) - 2 >= r1:
+        if w.endswith("ki") and w[-3] in "kpts":
             w = w[:-2]
             removed = True
-        elif w.endswith("gi") and in_r1("gi", w) and w[-3] not in "kpts":
+        elif w.endswith("gi") and w[-3] not in "kpts":
             w = w[:-2]
             removed = True
 
-    # verb ending OR the nominal suite (published program's or-choice)
-    verb_hit = False
-    for suf in _ET_VERB:
-        if not (w.endswith(suf) and in_r1(suf, w)):
-            continue
-        if len(suf) == 1 and not vowel_before(w, suf):
-            continue
-        if suf in ("da", "ta", "ma") and not vowel_before(w, suf):
-            continue
-        w = w[: -len(suf)]
-        verb_hit = True
-        removed = True
-        break
+    # verb ending OR the nominal suite (published program's or-choice);
     # bare 'a' da-infinitive only after a long vowel (juua -> juu)
-    if not verb_hit and w.endswith("a") and in_r1("a", w) and w[-3:-1] in _ET_LONGV:
-        w = w[:-1]
-        verb_hit = True
+    m = among(w, _ET_VERB, limit=r1)
+    if m is not None:
+        w = w[:m[0]]
         removed = True
-
-    if not verb_hit:
+    elif w.endswith("a") and len(w) - 1 >= r1 and w[-3:-1] in _ET_LONGV:
+        w = w[:-1]
+        removed = True
+    else:
         # The nominal suite runs to a (2-pass) fixpoint so stacked
         # case + plural + derivational markers unwind in any order
         # (lugemises -> [case s] lugemise -> [mise->mis] ->
         # [case s] lugemi — collapsing with lugemine/lugemist).
         for _ in range(2):
             pass_removed = False
-            for suf, rep in _ET_SPECIAL_NOUN:
-                if w.endswith(suf) and in_r1(suf, w):
-                    w = w[: -len(suf)] + rep
-                    pass_removed = True
-                    break
-            for suf in _ET_CASES:
-                if w.endswith(suf) and in_r1(suf, w):
-                    if len(suf) == 1 and not vowel_before(w, suf):
-                        continue
-                    if suf in ("ni", "na", "ta", "ga") and not vowel_before(w, suf):
-                        continue
-                    w = w[: -len(suf)]
-                    pass_removed = True
-                    break
-            for suf in _ET_PLURAL:
-                if w.endswith(suf) and in_r1(suf, w):
-                    if suf in ("d", "de", "sid", "i") and not vowel_before(w, suf):
-                        continue
-                    w = w[: -len(suf)]
-                    pass_removed = True
-                    break
+            w2 = replace_among(w, _ET_SPECIAL_NOUN, limit=r1)
+            if w2 is not None:
+                w, pass_removed = w2, True
+            for table in (_ET_CASES, _ET_PLURAL):
+                m = among(w, table, limit=r1)
+                if m is not None:
+                    w, pass_removed = w[:m[0]], True
             if not pass_removed:
                 break
             removed = True

@@ -21,6 +21,8 @@ Spec summary:
 
 from __future__ import annotations
 
+from .snowball_rt import among, compile_among, regions
+
 _VOWELS = frozenset("aeiouyäöü")
 _S_ENDING = frozenset("bdfghklmnrt")
 _ST_ENDING = frozenset("bdfghklmnt")
@@ -57,102 +59,60 @@ def _prelude(word: str, german2: bool) -> str:
     return "".join(chars)
 
 
-def _regions(w: str) -> tuple[int, int]:
-    def first_nonvowel_after_vowel(start: int) -> int:
-        # marked U/Y are consonants here (uppercase, so not in _VOWELS)
-        for i in range(start + 1, len(w)):
-            if w[i] not in _VOWELS and w[i - 1] in _VOWELS:
-                return i + 1
-        return len(w)
-
-    r1 = first_nonvowel_after_vowel(0)
-    r2 = first_nonvowel_after_vowel(r1 - 1) if r1 < len(w) else len(w)
-    # spec: R1 starts no earlier than position 3
-    if r1 < 3:
-        r1 = 3
-    return r1, r2
+# Step 1: results "s" (valid s-ending before) and "e" (then niss -> nis)
+_STEP1 = compile_among(["em", "ern", "er", ("e", "e"), ("en", "e"),
+                        ("es", "e"), ("s", "s")])
+# Step 2: "st" needs a valid st-ending with at least 3 letters before it
+_STEP2 = compile_among(["en", "er", "est", ("st", "st")])
+# Step 3 (d-suffixes): result selects the chained deletion
+_STEP3 = compile_among([("end", 1), ("ung", 1), ("ig", 2), ("ik", 2),
+                        ("isch", 2), ("lich", 3), ("heit", 3), ("keit", 4)])
+_UMLAUTS = str.maketrans({"ä": "a", "ö": "o", "ü": "u"})
 
 
 def _stem(word: str, german2: bool) -> str:
     w = _prelude(word.lower(), german2)
-    r1, r2 = _regions(w)
+    # marked U/Y are consonants (uppercase, so not in _VOWELS)
+    r1, r2 = regions(w, _VOWELS, floor=3)
 
-    def in_r1(pos: int) -> bool:
-        return pos >= r1
-
-    def in_r2(pos: int) -> bool:
-        return pos >= r2
-
-    # Step 1
-    for suf in ("ern", "em", "er"):
-        if w.endswith(suf):
-            if in_r1(len(w) - len(suf)):
-                w = w[: -len(suf)]
-            break
-    else:
-        for suf in ("en", "es", "e"):
-            if w.endswith(suf):
-                if in_r1(len(w) - len(suf)):
-                    w = w[: -len(suf)]
-                    if w.endswith("niss"):
-                        w = w[:-1]
-                break
-        else:
-            if (
-                w.endswith("s")
-                and in_r1(len(w) - 1)
-                and len(w) >= 2
-                and w[-2] in _S_ENDING
-            ):
+    m = among(w, _STEP1, gate=r1)
+    if m is not None:
+        start, res = m
+        if res != "s" or (start >= 1 and w[start - 1] in _S_ENDING):
+            w = w[:start]
+            if res == "e" and w.endswith("niss"):
                 w = w[:-1]
 
-    # Step 2
-    for suf in ("est", "en", "er"):
-        if w.endswith(suf):
-            if in_r1(len(w) - len(suf)):
-                w = w[: -len(suf)]
-            break
-    else:
-        if (
-            w.endswith("st")
-            and in_r1(len(w) - 2)
-            and len(w) >= 6  # st preceded by valid st-ending with >= 3 before it
-            and w[-3] in _ST_ENDING
-        ):
-            w = w[:-2]
+    m = among(w, _STEP2, gate=r1)
+    if m is not None:
+        start, res = m
+        if res != "st" or (start >= 4 and w[start - 1] in _ST_ENDING):
+            w = w[:start]
 
-    # Step 3: d-suffixes
-    if w.endswith(("end", "ung")):
-        if in_r2(len(w) - 3):
-            w = w[:-3]
-            if (
-                w.endswith("ig")
-                and in_r2(len(w) - 2)
-                and (len(w) < 3 or w[-3] != "e")
-            ):
+    m = among(w, _STEP3, gate=r2)
+    if m is not None:
+        start, res = m
+        if res == 1:
+            w = w[:start]
+            if (w.endswith("ig") and len(w) - 2 >= r2
+                    and (len(w) < 3 or w[-3] != "e")):
                 w = w[:-2]
-    elif w.endswith(("isch", "ik", "ig")):
-        suf = "isch" if w.endswith("isch") else w[-2:]
-        if in_r2(len(w) - len(suf)) and (len(w) < len(suf) + 1 or w[-len(suf) - 1] != "e"):
-            w = w[: -len(suf)]
-    elif w.endswith(("lich", "heit")):
-        if in_r2(len(w) - 4):
-            w = w[:-4]
-            for suf in ("er", "en"):
-                if w.endswith(suf) and in_r1(len(w) - 2):
-                    w = w[:-2]
-                    break
-    elif w.endswith("keit"):
-        if in_r2(len(w) - 4):
-            w = w[:-4]
-            if w.endswith("lich") and in_r2(len(w) - 4):
+        elif res == 2:
+            if start < 1 or w[start - 1] != "e":
+                w = w[:start]
+        elif res == 3:
+            w = w[:start]
+            if w.endswith(("er", "en")) and len(w) - 2 >= r1:
+                w = w[:-2]
+        else:
+            w = w[:start]
+            if w.endswith("lich") and len(w) - 4 >= r2:
                 w = w[:-4]
-            elif w.endswith("ig") and in_r2(len(w) - 2):
+            elif w.endswith("ig") and len(w) - 2 >= r2:
                 w = w[:-2]
 
     # Finally
-    w = w.replace("U", "u").replace("Y", "y")
-    return w.translate(str.maketrans({"ä": "a", "ö": "o", "ü": "u"}))
+    return w.replace("U", "u").replace("Y", "y").translate(_UMLAUTS)
 
 
 def german_stem(word: str) -> str:

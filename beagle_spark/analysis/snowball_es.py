@@ -16,23 +16,39 @@ src/beagle/text_analysis.clj:42). Structure:
 
 from __future__ import annotations
 
+from .snowball_rt import among, compile_among, regions, replace_among, rv_spanish
+
 _VOWELS = frozenset("aeiouáéíóúü")
 
-_STEP0_PRON = ("selas", "selos", "sela", "selo", "las", "les", "los", "nos",
-               "me", "se", "la", "le", "lo")
-_STEP0_A = ("iéndo", "ándo", "ár", "ér", "ír")  # delete pronoun + unaccent
-_STEP0_B = ("iendo", "ando", "ar", "er", "ir")
-_UNACCENT0 = {"iéndo": "iendo", "ándo": "ando", "ár": "ar", "ér": "er", "ír": "ir"}
+_STEP0_PRON = compile_among(["selas", "selos", "sela", "selo", "las", "les",
+                             "los", "nos", "me", "se", "la", "le", "lo"])
+# the gerund/infinitive before the pronoun, in RV; result is its
+# replacement ('yendo' needs a 'u' before it)
+_STEP0_VERB = compile_among([
+    ("iéndo", "iendo"), ("ándo", "ando"), ("ár", "ar"), ("ér", "er"),
+    ("ír", "ir"), ("iendo", "iendo"), ("ando", "ando"), ("ar", "ar"),
+    ("er", "er"), ("ir", "ir"), ("yendo", "yendo"),
+])
 
-_STEP1_DELETE_R2 = (
-    "amientos", "imientos", "amiento", "imiento", "anzas", "ismos", "ables",
-    "ibles", "istas", "anza", "icos", "icas", "ismo", "able", "ible", "ista",
-    "osos", "osas", "ico", "ica", "oso", "osa",
+# Step 1 results: the region and the chained deletions of each family
+_STEP1 = compile_among(
+    [(s, 1) for s in (
+        "amientos", "imientos", "amiento", "imiento", "anzas", "ismos",
+        "ables", "ibles", "istas", "anza", "icos", "icas", "ismo", "able",
+        "ible", "ista", "osos", "osas", "ico", "ica", "oso", "osa")]
+    + [(s, 2) for s in ("aciones", "adoras", "adores", "ancias", "adora",
+                        "ación", "antes", "ancia", "ador", "ante")]
+    + [("logías", "log"), ("logía", "log"), ("uciones", "u"), ("ución", "u"),
+       ("encias", "ente"), ("encia", "ente")]
+    + [("amente", 3), ("mente", 4), ("idades", 5), ("idad", 5)]
+    + [(s, 6) for s in ("ivas", "ivos", "iva", "ivo")]
 )
-_STEP1_ADOR = ("aciones", "adoras", "adores", "ancias", "adora", "ación",
-               "antes", "ancia", "ador", "ante")
-_STEP2B_GU = ("éis", "emos", "en", "es")
-_STEP2B = (
+_ABIL_IC_IV = compile_among(["abil", "ic", "iv"])
+# Step 2a: y-forms, in RV, after a 'u' that is itself in RV
+_STEP2A = compile_among(["yeron", "yendo", "yamos", "yais", "yan", "yen",
+                         "yas", "yes", "ya", "ye", "yo", "yó"])
+# Step 2b: delete in RV; en/es/éis/emos also turn a preceding gu into g
+_STEP2B = compile_among([(s, "gu") for s in ("éis", "emos", "en", "es")] + [
     "aríamos", "eríamos", "iríamos", "iéramos", "iésemos", "asteis", "isteis",
     "aremos", "eremos", "iremos",
     "ábamos", "áramos", "ásemos", "arían", "arías", "aríais", "eríais",
@@ -45,192 +61,85 @@ _STEP2B = (
     "erá", "eré", "irá", "iré", "aba", "ada", "ida", "ara", "ase", "ían",
     "ado", "ido", "ías", "áis", "ía", "ad", "ed", "id", "an", "ió", "ar",
     "er", "ir", "as", "ís",
-)
-_STEP3_RV = ("os", "a", "o", "á", "í", "ó")
+])
+# Step 3: residual suffix in RV; e/é also undo gu -> g
+_STEP3 = compile_among(["os", "a", "o", "á", "í", "ó", ("e", "e"), ("é", "e")])
 _ACCENTS = str.maketrans({"á": "a", "é": "e", "í": "i", "ó": "o", "ú": "u"})
 
 
-def _regions(w: str) -> tuple[int, int, int]:
-    n = len(w)
-
-    def is_v(i):
-        return w[i] in _VOWELS
-
-    # RV
-    rv = n
-    if n >= 3:
-        if not is_v(1):
-            # X C: after the next vowel following position 1
-            for i in range(2, n):
-                if is_v(i):
-                    rv = i + 1
-                    break
-        elif is_v(0) and is_v(1):
-            # V V: after the next consonant
-            for i in range(2, n):
-                if not is_v(i):
-                    rv = i + 1
-                    break
-        else:
-            # C V: after the third letter
-            rv = 3
-
-    def first_nonvowel_after_vowel(start: int) -> int:
-        for i in range(start + 1, n):
-            if not is_v(i) and is_v(i - 1):
-                return i + 1
-        return n
-
-    r1 = first_nonvowel_after_vowel(0)
-    r2 = first_nonvowel_after_vowel(r1 - 1) if r1 < n else n
-    return rv, r1, r2
+def _step1(w: str, r1: int, r2: int) -> str:
+    m = among(w, _STEP1)
+    if m is None:
+        return w
+    start, res = m
+    if res == 3:  # amente: R1, then iv(at) / os / ic / ad in R2
+        if start < r1:
+            return w
+        w = w[:start]
+        if w.endswith("iv") and len(w) - 2 >= r2:
+            w = w[:-2]
+            if w.endswith("at") and len(w) - 2 >= r2:
+                w = w[:-2]
+        elif w.endswith(("os", "ic", "ad")) and len(w) - 2 >= r2:
+            w = w[:-2]
+        return w
+    if start < r2:
+        return w
+    if isinstance(res, str):
+        return w[:start] + res
+    w = w[:start]
+    if res == 2 and w.endswith("ic") and len(w) - 2 >= r2:
+        w = w[:-2]
+    elif res == 4 and w.endswith(("ante", "able", "ible")) and len(w) - 4 >= r2:
+        w = w[:-4]
+    elif res == 5:
+        w = replace_among(w, _ABIL_IC_IV, gate=r2) or w
+    elif res == 6 and w.endswith("at") and len(w) - 2 >= r2:
+        w = w[:-2]
+    return w
 
 
 def spanish_stem(word: str) -> str:
     w = word.lower()
     if len(w) <= 2:
         return w.translate(_ACCENTS)
-    rv, r1, r2 = _regions(w)
-
-    def in_rv(pos):
-        return pos >= rv
-
-    def in_r1(pos):
-        return pos >= r1
-
-    def in_r2(pos):
-        return pos >= r2
+    rv = rv_spanish(w, _VOWELS)
 
     # Step 0: attached pronouns
-    for pron in _STEP0_PRON:
-        if w.endswith(pron):
-            base = w[: -len(pron)]
-            matched = False
-            for suf in _STEP0_A:
-                if base.endswith(suf) and in_rv(len(base) - len(suf)):
-                    w = base[: -len(suf)] + _UNACCENT0[suf]
-                    matched = True
-                    break
-            if not matched:
-                for suf in _STEP0_B:
-                    if base.endswith(suf) and in_rv(len(base) - len(suf)):
-                        w = base
-                        matched = True
-                        break
-            if not matched and base.endswith("yendo") and in_rv(len(base) - 5):
-                if len(base) >= 6 and base[-6] == "u":
-                    w = base
-                    matched = True
-            break  # longest pronoun tried first; only one removal
-    rv, r1, r2 = _regions(w)  # regions over the (possibly) shortened word
+    m = among(w, _STEP0_PRON)
+    if m is not None:
+        base = w[:m[0]]
+        m = among(base, _STEP0_VERB, gate=rv)
+        if m is not None:
+            start, repl = m
+            if repl != "yendo" or (start >= 1 and base[start - 1] == "u"):
+                w = base[:start] + repl
+    # regions over the (possibly) shortened word
+    rv = rv_spanish(w, _VOWELS)
+    r1, r2 = regions(w, _VOWELS)
 
+    # Step 1: standard suffixes
     before_step1 = w
+    w = _step1(w, r1, r2)
 
-    # Step 1: standard suffixes (longest match first)
-    done = False
-    for suf in _STEP1_DELETE_R2:
-        if w.endswith(suf):
-            if in_r2(len(w) - len(suf)):
-                w = w[: -len(suf)]
-            done = True
-            break
-    if not done:
-        for suf in _STEP1_ADOR:
-            if w.endswith(suf):
-                if in_r2(len(w) - len(suf)):
-                    w = w[: -len(suf)]
-                    if w.endswith("ic") and in_r2(len(w) - 2):
-                        w = w[:-2]
-                done = True
-                break
-    if not done:
-        if w.endswith(("logías", "logía")):
-            suf = "logías" if w.endswith("logías") else "logía"
-            if in_r2(len(w) - len(suf)):
-                w = w[: -len(suf)] + "log"
-            done = True
-        elif w.endswith(("uciones", "ución")):
-            suf = "uciones" if w.endswith("uciones") else "ución"
-            if in_r2(len(w) - len(suf)):
-                w = w[: -len(suf)] + "u"
-            done = True
-        elif w.endswith(("encias", "encia")):
-            suf = "encias" if w.endswith("encias") else "encia"
-            if in_r2(len(w) - len(suf)):
-                w = w[: -len(suf)] + "ente"
-            done = True
-        elif w.endswith("amente"):
-            if in_r1(len(w) - 6):
-                w = w[:-6]
-                if w.endswith("iv") and in_r2(len(w) - 2):
-                    w = w[:-2]
-                    if w.endswith("at") and in_r2(len(w) - 2):
-                        w = w[:-2]
-                elif w.endswith(("os", "ic", "ad")) and in_r2(len(w) - 2):
-                    w = w[:-2]
-            done = True
-        elif w.endswith("mente"):
-            if in_r2(len(w) - 5):
-                w = w[:-5]
-                for p in ("ante", "able", "ible"):
-                    if w.endswith(p) and in_r2(len(w) - 4):
-                        w = w[:-4]
-                        break
-            done = True
-        elif w.endswith(("idades", "idad")):
-            suf = "idades" if w.endswith("idades") else "idad"
-            if in_r2(len(w) - len(suf)):
-                w = w[: -len(suf)]
-                for p in ("abil", "ic", "iv"):
-                    if w.endswith(p) and in_r2(len(w) - len(p)):
-                        w = w[: -len(p)]
-                        break
-            done = True
-        elif w.endswith(("ivas", "ivos", "iva", "ivo")):
-            suf = next(s for s in ("ivas", "ivos", "iva", "ivo") if w.endswith(s))
-            if in_r2(len(w) - len(suf)):
-                w = w[: -len(suf)]
-                if w.endswith("at") and in_r2(len(w) - 2):
-                    w = w[:-2]
-            done = True
-
-    step1_removed = w != before_step1
-
-    if not step1_removed:
-        # Step 2a: y-verb forms after u
-        removed_2a = False
-        for suf in ("yeron", "yendo", "yamos", "yais", "yan", "yen", "yas",
-                    "yes", "ya", "ye", "yo", "yó"):
-            # setlimit semantics: the preceding 'u' must sit in RV too
-            if w.endswith(suf) and in_rv(len(w) - len(suf) - 1):
-                if len(w) > len(suf) and w[-len(suf) - 1] == "u":
-                    w = w[: -len(suf)]
-                    removed_2a = True
-                break
-        if not removed_2a:
-            # Step 2b: main verb suffixes — the published program uses
-            # `setlimit tomark pV for [substring]`, so entries crossing
-            # RV can't match and a shorter in-RV entry wins instead
-            for suf in sorted(_STEP2B_GU + _STEP2B, key=len, reverse=True):
-                if w.endswith(suf) and in_rv(len(w) - len(suf)):
-                    w = w[: -len(suf)]
-                    if suf in _STEP2B_GU and w.endswith("gu"):
-                        w = w[:-1]
-                    break
+    if w == before_step1:
+        # Step 2a: y-verb forms after u (setlimit: the u sits in RV too)
+        m = among(w, _STEP2A, limit=rv)
+        if m is not None and m[0] - 1 >= rv and w[m[0] - 1] == "u":
+            w = w[:m[0]]
+        else:
+            # Step 2b: main verb suffixes, setlimit RV
+            m = among(w, _STEP2B, limit=rv)
+            if m is not None:
+                w = w[:m[0]]
+                if m[1] and w.endswith("gu"):
+                    w = w[:-1]
 
     # Step 3: residual suffix
-    for suf in ("e", "é"):
-        if w.endswith(suf):
-            if in_rv(len(w) - 1):
-                w = w[:-1]
-                if w.endswith("gu") and in_rv(len(w) - 1):
-                    w = w[:-1]
-            break
-    else:
-        for suf in _STEP3_RV:
-            if w.endswith(suf):
-                if in_rv(len(w) - len(suf)):
-                    w = w[: -len(suf)]
-                break
+    m = among(w, _STEP3, gate=rv)
+    if m is not None:
+        w = w[:m[0]]
+        if m[1] and w.endswith("gu") and len(w) - 1 >= rv:
+            w = w[:-1]
 
     return w.translate(_ACCENTS)

@@ -11,133 +11,92 @@ program's structure (R1 case/possessive/plural removal with
 
 from __future__ import annotations
 
+from .snowball_rt import after_vowel, among, compile_among, regions, replace_among
+
 # ---------------------------------------------------------------------------
 # Finnish
 # ---------------------------------------------------------------------------
 _FI_VOWELS = frozenset("aeiouyäö")
 _FI_LV = ("aa", "ee", "ii", "oo", "uu", "ää", "öö")
 
-
-def _fi_regions(w: str) -> tuple[int, int]:
-    r1 = len(w)
-    for i in range(1, len(w)):
-        if w[i] not in _FI_VOWELS and w[i - 1] in _FI_VOWELS:
-            r1 = i + 1
-            break
-    r2 = len(w)
-    for i in range(r1 + 1, len(w)):
-        if w[i] not in _FI_VOWELS and w[i - 1] in _FI_VOWELS:
-            r2 = i + 1
-            break
-    return r1, r2
+# Every step is a setlimit among (R1, or R2 for step 4 and the plural
+# tail). Step 1: particles need n/t/vowel before them; 'sti' needs R2.
+_FI_STEP1 = compile_among(["kin", "kaan", "kään", "ko", "kö", "han", "hän",
+                           "pa", "pä", "sti"])
+_FI_POSS = compile_among(["si", "ni", "nsa", "nsä", "mme", "nne", "an", "än", "en"])
 
 
-_FI_PARTICLES = sorted(
-    ["kin", "kaan", "kään", "ko", "kö", "han", "hän", "pa", "pä"],
-    key=len,
-    reverse=True,
-)
-_FI_CASES_PLAIN = sorted(
-    [
-        "ssa", "ssä", "sta", "stä", "lla", "llä", "lta", "ltä", "lle",
-        "na", "nä", "ksi", "ine", "ta", "tä",
-    ],
-    key=len,
-    reverse=True,
-)
+def _fi_vi(w: str, i: int) -> bool:
+    """Condition of siin/den/tten: preceded by a vowel then 'i'."""
+    return i >= 2 and w[i - 1] == "i" and w[i - 2] in _FI_VOWELS
+
+
+def _fi_lv(w: str, i: int) -> bool:
+    """Condition of seen: preceded by a long vowel."""
+    return i >= 2 and w[i - 2:i] in _FI_LV
+
+
+# Step 3 results: illatives need their own vowel before them
 _FI_ILLATIVE = {"han": "a", "hen": "e", "hin": "i", "hon": "o", "hän": "ä", "hön": "ö"}
-
-
-def _fi_longest(w: str, entries, limit: int):
-    """Longest suffix whose match point is >= limit (setlimit tomark
-    p1/p2 semantics): blocked longer entries yield to shorter ones,
-    but a failed branch CONDITION fails the whole step."""
-    best = None
-    for suf in entries:
-        if w.endswith(suf) and len(w) - len(suf) >= limit:
-            if best is None or len(suf) > len(best):
-                best = suf
-    return best
-
-
-_FI_STEP1 = _FI_PARTICLES + ["sti"]
-_FI_POSS = ["si", "ni", "nsa", "nsä", "mme", "nne", "an", "än", "en"]
-_FI_CASES_ALL = (
-    ["han", "hen", "hin", "hon", "hän", "hön"]
-    + ["siin", "den", "tten", "seen", "tta", "ttä", "a", "ä", "n"]
-    + _FI_CASES_PLAIN
+_FI_CASES = compile_among(
+    list(_FI_ILLATIVE.items())
+    + [("siin", "", _fi_vi), ("den", "", _fi_vi), ("tten", "", _fi_vi),
+       ("seen", "", _fi_lv)]
+    + ["tta", "ttä", "a", "ä", "n"]
+    + ["ssa", "ssä", "sta", "stä", "lla", "llä", "lta", "ltä", "lle",
+       "na", "nä", "ksi", "ine", "ta", "tä"]
 )
-_FI_OTHER = ["impi", "impa", "impä", "immi", "imma", "immä",
-             "mpi", "mpa", "mpä", "mmi", "mma", "mmä", "eja", "ejä"]
-
-
-def _fi_case_match(w: str, r1: int):
-    """Longest in-R1 case entry; den/seen/tten/siin carry among
-    condition FUNCTIONS, so when their check fails the search continues
-    with shorter entries (unlike branch conditions)."""
-    cands = sorted(
-        (s for s in _FI_CASES_ALL if w.endswith(s) and len(w) - len(s) >= r1),
-        key=len, reverse=True,
-    )
-    for suf in cands:
-        i = len(w) - len(suf)
-        if suf in ("siin", "den", "tten"):
-            if i >= 2 and w[i - 1] == "i" and w[i - 2] in _FI_VOWELS:
-                return suf
-            continue  # function entry: keep searching shorter
-        if suf == "seen":
-            if i >= 2 and w[i - 2:i] in _FI_LV:
-                return suf
-            continue
-        return suf
-    return None
+_FI_OTHER = compile_among(["impi", "impa", "impä", "immi", "imma", "immä",
+                           "mpi", "mpa", "mpä", "mmi", "mma", "mmä", "eja", "ejä"])
+_FI_PLURAL_MMA = compile_among(["imma", "mma"])
 
 
 def finnish_stem(word: str) -> str:
     w = word.lower()
-    r1, r2 = _fi_regions(w)
+    r1, r2 = regions(w, _FI_VOWELS)
 
     # Step 1: particles (preceded by n/t/vowel) or -sti (R2)
-    suf = _fi_longest(w, _FI_STEP1, r1)
-    if suf == "sti":
-        if len(w) - 3 >= r2:
-            w = w[:-3]
-    elif suf is not None:
-        i = len(w) - len(suf)
-        if i >= 1 and w[i - 1] in "ntaeiouyäö":
+    m = among(w, _FI_STEP1, limit=r1)
+    if m is not None:
+        i = m[0]
+        if w.endswith("sti"):
+            if i >= r2:
+                w = w[:i]
+        elif i >= 1 and w[i - 1] in "ntaeiouyäö":
             w = w[:i]
 
     # Step 2: possessives
-    suf = _fi_longest(w, _FI_POSS, r1)
-    if suf == "si":
-        if len(w) < 3 or w[-3] != "k":
-            w = w[:-2]
-    elif suf == "ni":
-        w = w[:-2]
-        if w.endswith("kse"):
-            w = w[:-1] + "i"
-    elif suf in ("nsa", "nsä", "mme", "nne"):
-        w = w[:-3]
-    elif suf == "an":
-        if w[:-2].endswith(("ta", "ssa", "sta", "lla", "lta", "na")):
-            w = w[:-2]
-    elif suf == "än":
-        if w[:-2].endswith(("tä", "ssä", "stä", "llä", "ltä", "nä")):
-            w = w[:-2]
-    elif suf == "en":
-        if w[:-2].endswith(("lle", "ine")):
-            w = w[:-2]
+    m = among(w, _FI_POSS, limit=r1)
+    if m is not None:
+        i = m[0]
+        suf, stem = w[i:], w[:i]
+        if suf == "si":
+            if len(w) < 3 or w[-3] != "k":
+                w = stem
+        elif suf == "ni":
+            w = stem
+            if w.endswith("kse"):
+                w = w[:-1] + "i"
+        elif suf in ("nsa", "nsä", "mme", "nne"):
+            w = stem
+        elif suf == "an":
+            if stem.endswith(("ta", "ssa", "sta", "lla", "lta", "na")):
+                w = stem
+        elif suf == "än":
+            if stem.endswith(("tä", "ssä", "stä", "llä", "ltä", "nä")):
+                w = stem
+        elif stem.endswith(("lle", "ine")):  # en
+            w = stem
 
-    # Step 3: case endings (one limit-mode among, per-entry conditions)
+    # Step 3: case endings
     step3_removed = False
-    suf = _fi_case_match(w, r1)
-    if suf is not None:
-        i = len(w) - len(suf)
-        if suf in _FI_ILLATIVE:
-            if i >= 1 and w[i - 1] == _FI_ILLATIVE[suf]:
+    m = among(w, _FI_CASES, limit=r1)
+    if m is not None:
+        i, res = m
+        suf = w[i:]
+        if res:  # illative
+            if i >= 1 and w[i - 1] == res:
                 w, step3_removed = w[:i], True
-        elif suf in ("siin", "den", "tten", "seen"):
-            w, step3_removed = w[:i], True
         elif suf in ("tta", "ttä"):
             if i >= 1 and w[i - 1] == "e":
                 w, step3_removed = w[:i], True
@@ -149,31 +108,25 @@ def finnish_stem(word: str) -> str:
             w, step3_removed = w[:-1], True
             if w[-2:] == "ie" or w[-2:] in _FI_LV:
                 w = w[:-1]
-        else:  # plain case suffixes
+        else:  # siin/den/tten/seen and the plain case suffixes
             w, step3_removed = w[:i], True
 
-    # Step 4: comparatives/other in R2 (limit-mode)
-    suf = _fi_longest(w, _FI_OTHER, r2)
-    if suf is not None:
-        i = len(w) - len(suf)
-        if suf.startswith(("mp", "mm")):
-            if not w[:i].endswith("po"):
-                w = w[:i]
-        else:
+    # Step 4: comparatives/other in R2
+    m = among(w, _FI_OTHER, limit=r2)
+    if m is not None:
+        i = m[0]
+        if not (w.startswith(("mp", "mm"), i) and w[:i].endswith("po")):
             w = w[:i]
 
     # Step 5: plurals
     if step3_removed:
         if w and w[-1] in "ij" and len(w) - 1 >= r1:
             w = w[:-1]
-    else:
-        if w.endswith("t") and len(w) - 1 >= r1 and len(w) >= 2 and w[-2] in _FI_VOWELS:
-            w = w[:-1]
-            suf = _fi_longest(w, ["imma", "mma"], r2)
-            if suf == "imma":
-                w = w[:-4]
-            elif suf == "mma" and not w[:-3].endswith("po"):
-                w = w[:-3]
+    elif w.endswith("t") and len(w) - 1 >= r1 and len(w) >= 2 and w[-2] in _FI_VOWELS:
+        w = w[:-1]
+        m = among(w, _FI_PLURAL_MMA, limit=r2)
+        if m is not None and (w.endswith("imma") or not w[:m[0]].endswith("po")):
+            w = w[:m[0]]
 
     # Step 6: tidy
     if len(w) >= 2 and w[-2:] in _FI_LV and len(w) - 1 >= r1:
@@ -202,44 +155,45 @@ def finnish_stem(word: str) -> str:
 # word-initial-vowel/digraph rule, then the nine steps in program
 # order: instrumental (with consonant undoubling), frequent cases with
 # á->a/é->e restoration, special cases, 'stul' cases, factive (with
-# undoubling), owned, singular-owner, plural-owner, plural.
+# undoubling), owned, singular-owner, plural-owner, plural. Every step
+# is a gated among: the longest entry is chosen first and a match
+# outside R1 fails the step.
 # ---------------------------------------------------------------------------
 _HU_VOWELS = frozenset("aáeéiíoóöőuúüű")
 _HU_DIGRAPHS = ("dzs", "cs", "dz", "gy", "ly", "ny", "sz", "ty", "zs")
 
 # double consonants (digraph doubles spelled with the first letter
 # repeated: ccs = cs+cs etc.); undoubling removes the repeated letter
-_HU_DOUBLES = (
+_HU_DOUBLES = compile_among((d, d[1:]) for d in (
     "ccs", "ggy", "lly", "nny", "ssz", "tty", "zzs",
     "bb", "cc", "dd", "ff", "gg", "jj", "kk", "ll", "mm", "nn",
     "pp", "rr", "ss", "tt", "vv", "zz",
-)
+))
+# -al/-el (instrumental) and -á/-é (factive) after a double consonant
+_HU_INSTRUMENTAL = compile_among(["al", "el"])
+_HU_FACTIVE = compile_among(["á", "é"])
 
-_HU_CASES = sorted(
-    [
-        "ban", "ben", "ba", "be", "ra", "re", "nak", "nek", "val", "vel",
-        "tól", "től", "ról", "ről", "ból", "ből", "hoz", "hez", "höz",
-        "nál", "nél", "ig", "at", "et", "ot", "öt", "ért", "képp",
-        "képpen", "kor", "ul", "ül", "vá", "vé", "onként", "enként",
-        "anként", "ként", "en", "on", "an", "ön", "n", "t",
-    ],
-    key=len,
-    reverse=True,
-)
+_HU_CASES = compile_among([
+    "ban", "ben", "ba", "be", "ra", "re", "nak", "nek", "val", "vel",
+    "tól", "től", "ról", "ről", "ból", "ből", "hoz", "hez", "höz",
+    "nál", "nél", "ig", "at", "et", "ot", "öt", "ért", "képp",
+    "képpen", "kor", "ul", "ül", "vá", "vé", "onként", "enként",
+    "anként", "ként", "en", "on", "an", "ön", "n", "t",
+])
 
 # suffix -> replacement ('' = delete, 'a'/'e' = accent restoration)
-_HU_CASE_SPECIAL = (("ánként", "a"), ("én", "e"), ("án", "a"))
-_HU_CASE_OTHER = (
+_HU_CASE_SPECIAL = compile_among([("ánként", "a"), ("én", "e"), ("án", "a")])
+_HU_CASE_OTHER = compile_among([
     ("ástul", "a"), ("éstül", "e"),
     ("astul", ""), ("estül", ""), ("stul", ""), ("stül", ""),
-)
-_HU_OWNED = (
+])
+_HU_OWNED = compile_among([
     ("áéi", "a"), ("ééi", "e"), ("éi", ""),
     ("áké", "a"), ("éké", "e"),
     ("aké", ""), ("eké", ""), ("oké", ""), ("öké", ""),
     ("ké", ""), ("éé", "e"), ("é", ""),
-)
-_HU_SING_OWNER = (
+])
+_HU_SING_OWNER = compile_among([
     ("ánk", "a"), ("énk", "e"), ("unk", ""), ("ünk", ""), ("nk", ""),
     ("ájuk", "a"), ("éjük", "e"), ("juk", ""), ("jük", ""),
     ("uk", ""), ("ük", ""),
@@ -248,8 +202,8 @@ _HU_SING_OWNER = (
     ("öd", ""), ("d", ""),
     ("ja", ""), ("je", ""),
     ("a", ""), ("e", ""), ("o", ""), ("á", "a"), ("é", "e"),
-)
-_HU_PLUR_OWNER = (
+])
+_HU_PLUR_OWNER = compile_among([
     ("jaitok", ""), ("jeitek", ""), ("áitok", "a"), ("éitek", "e"),
     ("aitok", ""), ("eitek", ""), ("itek", ""),
     ("jaink", ""), ("jeink", ""), ("áink", "a"), ("éink", "e"),
@@ -262,11 +216,11 @@ _HU_PLUR_OWNER = (
     ("aik", ""), ("eik", ""), ("ik", ""),
     ("jai", ""), ("jei", ""), ("ái", "a"), ("éi", "e"),
     ("ai", ""), ("ei", ""), ("i", ""),
-)
-_HU_PLURAL = (
+])
+_HU_PLURAL = compile_among([
     ("ák", "a"), ("ék", "e"),
     ("ök", ""), ("ok", ""), ("ek", ""), ("ak", ""), ("k", ""),
-)
+])
 
 
 def _hu_r1(w: str) -> int:
@@ -285,35 +239,16 @@ def _hu_r1(w: str) -> int:
             i += 1
         return n
     # starts with consonant: after the first vowel
-    for i in range(1, n):
-        if w[i] in _HU_VOWELS:
-            return i + 1
-    return n
+    return after_vowel(w, _HU_VOWELS, 1)
 
 
-def _hu_apply(w: str, r1: int, table) -> tuple[str, bool]:
-    """Among commit semantics: the longest matching suffix is chosen
-    FIRST; if its match point is outside R1 the whole step fails (no
-    shorter entry is retried)."""
-    best = None
-    for suf, repl in table:
-        if w.endswith(suf) and (best is None or len(suf) > len(best[0])):
-            best = (suf, repl)
-    if best is None:
-        return w, False
-    suf, repl = best
-    i = len(w) - len(suf)
-    if i >= r1:
-        return w[:i] + repl, True
-    return w, False
-
-
-def _hu_undouble(w: str) -> str:
-    for d in _HU_DOUBLES:
-        if w.endswith(d):
-            # drop the repeated first letter: 'bb'->'b', 'ccs'->'cs'
-            return w[: len(w) - len(d)] + d[1:]
-    return w
+def _hu_undouble_step(w: str, r1: int, table) -> str | None:
+    """Delete a gated suffix that follows a double consonant, then
+    undouble it."""
+    m = among(w, table, gate=r1)
+    if m is None:
+        return None
+    return replace_among(w[:m[0]], _HU_DOUBLES)
 
 
 def _hu_v_ending(w: str, r1: int) -> str:
@@ -331,38 +266,21 @@ def hungarian_stem(word: str) -> str:
     r1 = _hu_r1(w)
 
     # 1. instrumental case: -al/-el after a double consonant; undouble
-    for suf in ("al", "el"):
-        i = len(w) - len(suf)
-        if w.endswith(suf) and i >= r1 and any(
-            w[:i].endswith(d) for d in _HU_DOUBLES
-        ):
-            w = _hu_undouble(w[:i])
-            break
+    w = _hu_undouble_step(w, r1, _HU_INSTRUMENTAL) or w
 
     # 2. frequent cases, then á/é restoration
-    w2, hit = _hu_apply(w, r1, [(s, "") for s in _HU_CASES])
-    if hit:
+    w2 = replace_among(w, _HU_CASES, gate=r1)
+    if w2 is not None:
         w = _hu_v_ending(w2, r1)
     # 3./4. special and 'stul' cases run regardless (each step is a
-    # separate `do` in the published program)
-    for table in (_HU_CASE_SPECIAL, _HU_CASE_OTHER):
-        w2, hit = _hu_apply(w, r1, table)
-        if hit:
-            w = w2
-            break
+    # separate `do` in the published program); 4 only if 3 failed
+    w = (replace_among(w, _HU_CASE_SPECIAL, gate=r1)
+         or replace_among(w, _HU_CASE_OTHER, gate=r1) or w)
 
     # 5. factive case: -á/-é after a double consonant; undouble
-    for suf in ("á", "é"):
-        i = len(w) - len(suf)
-        if w.endswith(suf) and i >= r1 and any(
-            w[:i].endswith(d) for d in _HU_DOUBLES
-        ):
-            w = _hu_undouble(w[:i])
-            break
+    w = _hu_undouble_step(w, r1, _HU_FACTIVE) or w
 
     # 6. owned  7. singular owner  8. plural owner  9. plural
-    w, _ = _hu_apply(w, r1, _HU_OWNED)
-    w, _ = _hu_apply(w, r1, _HU_SING_OWNER)
-    w, _ = _hu_apply(w, r1, _HU_PLUR_OWNER)
-    w, _ = _hu_apply(w, r1, _HU_PLURAL)
+    for table in (_HU_OWNED, _HU_SING_OWNER, _HU_PLUR_OWNER, _HU_PLURAL):
+        w = replace_among(w, table, gate=r1) or w
     return w

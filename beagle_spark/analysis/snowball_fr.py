@@ -14,6 +14,8 @@ un-accent.
 
 from __future__ import annotations
 
+from .snowball_rt import after_vowel, among, compile_among, regions
+
 _VOWELS = frozenset("aeiouyâàëéêèïîôûù")
 
 
@@ -57,232 +59,143 @@ def _prelude(w: str) -> str:
     return "".join(chars).replace("ë", "He").replace("ï", "Hi")
 
 
-def _regions(w: str) -> tuple[int, int, int]:
-    n = len(w)
-
-    def is_v(i):
-        return w[i] in _VOWELS
-
-    rv = n
-    if n >= 3 and ((is_v(0) and is_v(1)) or w[:3] in ("par", "col", "tap")):
-        rv = 3
-    else:
-        for i in range(1, n):
-            if is_v(i):
-                rv = i + 1
-                break
-
-    def nonvowel_after_vowel(start):
-        for i in range(start + 1, n):
-            if not is_v(i) and is_v(i - 1):
-                return i + 1
-        return n
-
-    r1 = nonvowel_after_vowel(0)
-    r2 = nonvowel_after_vowel(r1 - 1) if r1 < n else n
-    return rv, r1, r2
+def _rv(w: str) -> int:
+    """French RV: after the third letter if the word starts with two
+    vowels or with par/col/tap, else after the first vowel that is not
+    the first letter."""
+    if len(w) >= 3 and ((w[0] in _VOWELS and w[1] in _VOWELS)
+                        or w[:3] in ("par", "col", "tap")):
+        return 3
+    return after_vowel(w, _VOWELS, 1)
 
 
-_STEP1_R2_DELETE = (
-    "ances", "iqUes", "ismes", "ables", "istes", "ance", "iqUe", "isme",
-    "able", "iste", "eux",
+# Step 1: a (region, replacement) result is a plain step; an int
+# selects a step with chained conditions below.
+_STEP1 = compile_among(
+    [(s, 1) for s in ("issements", "issement")]
+    + [(s, 2) for s in ("atrices", "atrice", "ateurs", "ations", "ateur", "ation")]
+    + [(s, ("R2", "log")) for s in ("logies", "logie")]
+    + [(s, ("R2", "u")) for s in ("usions", "utions", "usion", "ution")]
+    + [(s, ("R2", "ent")) for s in ("ences", "ence")]
+    + [(s, 3) for s in ("ements", "ement")]
+    + [(s, 4) for s in ("ités", "ité")]
+    + [(s, 5) for s in ("ives", "ifs", "ive", "if")]
+    + [("eaux", (None, "eau")), ("aux", ("R1", "al")), ("euses", 6), ("euse", 6)]
+    + [(s, ("R2", "")) for s in ("ances", "iqUes", "ismes", "ables", "istes",
+                                "ance", "iqUe", "isme", "able", "iste", "eux")]
+    + [("amment", ("RV", "ant")), ("emment", ("RV", "ent")), ("ments", 7), ("ment", 7)]
 )
-_STEP1_AT = ("atrices", "atrice", "ateurs", "ations", "ateur", "ation")
-_STEP2A = (
+_STEP2A = compile_among([
     "issaIent", "issantes", "issants", "issante", "issions", "issent",
     "issant", "issais", "issait", "issiez", "issons", "iraIent", "issez",
     "isses", "irions", "irais", "irait", "irent", "iriez", "irons",
     "iront", "isse", "îtes", "îmes", "irai", "iras", "irez", "ies",
     "ira", "ît", "ie", "ir", "is", "it", "i",
-)
-_STEP2B_ER = (
+])
+# Step 2b: one RV-limited among; 'ions' also needs R2, the a-family
+# (result "a") also drops a preceding e in RV
+_STEP2B = compile_among([("ions", "ions")] + [
     "eraIent", "erions", "èrent", "erais", "erait", "eriez", "erons",
     "eront", "erai", "eras", "erez", "ées", "era", "iez", "ée", "és",
     "er", "ez", "é",
-)
-_STEP2B_A = (
+] + [(s, "a") for s in (
     "assions", "assent", "assiez", "aIent", "antes", "asses", "âtes",
     "âmes", "ante", "ants", "asse", "ais", "ait", "ant", "ât", "ai",
     "as", "a",
-)
+)])
+# Step 4: RV-limited among; 'ion' needs R2 and s/t before it in RV
+_STEP4 = compile_among([("Ière", "i"), ("ière", "i"), ("Ier", "i"),
+                        ("ier", "i"), ("ion", "ion"), "e"])
+
+
+def _ic(w: str, r2: int) -> str:
+    """A trailing 'ic' is deleted in R2, else becomes iqU."""
+    if w.endswith("ic"):
+        return w[:-2] if len(w) - 2 >= r2 else w[:-2] + "iqU"
+    return w
+
+
+def _step1(w: str, rv: int, r1: int, r2: int) -> tuple[str, bool]:
+    """Step 1; returns (word, whether a -ment/-mment ending went)."""
+    m = among(w, _STEP1)
+    if m is None:
+        return w, False
+    i, res = m
+    if isinstance(res, tuple):
+        gate, repl = res
+        if i >= {None: 0, "RV": rv, "R1": r1, "R2": r2}[gate]:
+            return w[:i] + repl, w.endswith("mment")
+        return w, False
+    if res == 1:
+        if i >= r1 and i >= 1 and w[i - 1] not in _VOWELS:
+            w = w[:i]
+    elif res == 2:
+        if i >= r2:
+            w = _ic(w[:i], r2)
+    elif res == 3:
+        if i >= rv:
+            w = w[:i]
+            if w.endswith("iv") and len(w) - 2 >= r2:
+                w = w[:-2]
+                if w.endswith("at") and len(w) - 2 >= r2:
+                    w = w[:-2]
+            elif w.endswith("eus"):
+                if len(w) - 3 >= r2:
+                    w = w[:-3]
+                elif len(w) - 3 >= r1:
+                    w = w[:-3] + "eux"
+            elif w.endswith(("abl", "iqU")) and len(w) - 3 >= r2:
+                w = w[:-3]
+            elif w.endswith(("ièr", "Ièr")) and len(w) - 3 >= rv:
+                w = w[:-3] + "i"
+    elif res == 4:
+        if i >= r2:
+            w = w[:i]
+            if w.endswith("abil"):
+                w = w[:-4] if len(w) - 4 >= r2 else w[:-4] + "abl"
+            elif w.endswith("ic"):
+                w = _ic(w, r2)
+            elif w.endswith("iv") and len(w) - 2 >= r2:
+                w = w[:-2]
+    elif res == 5:
+        if i >= r2:
+            w = w[:i]
+            if w.endswith("at") and len(w) - 2 >= r2:
+                w = _ic(w[:-2], r2)
+    elif res == 6:
+        if i >= r2:
+            w = w[:i]
+        elif i >= r1:
+            w = w[:i] + "eux"
+    elif i >= 1 and w[i - 1] in _VOWELS and i - 1 >= rv:  # ment(s)
+        return w[:i], True
+    return w, False
 
 
 def french_stem(word: str) -> str:
     w = _prelude(word.lower())
-    rv, r1, r2 = _regions(w)
-
-    def in_rv(p):
-        return p >= rv
-
-    def in_r1(p):
-        return p >= r1
-
-    def in_r2(p):
-        return p >= r2
+    rv = _rv(w)
+    r1, r2 = regions(w, _VOWELS)
 
     before = w
-    step1_did_mment = False
-
-    # ---- Step 1: standard suffixes (longest applicable family first) ----
-    done = False
-    # families sorted so longer suffixes are tried before their tails
-    if w.endswith(("issements", "issement")):
-        suf = "issements" if w.endswith("issements") else "issement"
-        i = len(w) - len(suf)
-        if in_r1(i) and i >= 1 and w[i - 1] not in _VOWELS:
-            w = w[:i]
-        done = True
-    elif w.endswith(_STEP1_AT):
-        suf = next(s for s in _STEP1_AT if w.endswith(s))
-        i = len(w) - len(suf)
-        if in_r2(i):
-            w = w[:i]
-            if w.endswith("ic"):
-                if in_r2(len(w) - 2):
-                    w = w[:-2]
-                else:
-                    w = w[:-2] + "iqU"
-        done = True
-    elif w.endswith(("logies", "logie")):
-        suf = "logies" if w.endswith("logies") else "logie"
-        if in_r2(len(w) - len(suf)):
-            w = w[: -len(suf)] + "log"
-        done = True
-    elif w.endswith(("usions", "utions", "usion", "ution")):
-        suf = next(s for s in ("usions", "utions", "usion", "ution") if w.endswith(s))
-        if in_r2(len(w) - len(suf)):
-            w = w[: -len(suf)] + "u"
-        done = True
-    elif w.endswith(("ences", "ence")):
-        suf = "ences" if w.endswith("ences") else "ence"
-        if in_r2(len(w) - len(suf)):
-            w = w[: -len(suf)] + "ent"
-        done = True
-    elif w.endswith(("ements", "ement")):
-        suf = "ements" if w.endswith("ements") else "ement"
-        i = len(w) - len(suf)
-        if in_rv(i):
-            w = w[:i]
-            if w.endswith("iv") and in_r2(len(w) - 2):
-                w = w[:-2]
-                if w.endswith("at") and in_r2(len(w) - 2):
-                    w = w[:-2]
-            elif w.endswith("eus"):
-                if in_r2(len(w) - 3):
-                    w = w[:-3]
-                elif in_r1(len(w) - 3):
-                    w = w[:-3] + "eux"
-            elif w.endswith(("abl", "iqU")) and in_r2(len(w) - 3):
-                w = w[:-3]
-            elif w.endswith(("ièr", "Ièr")) and in_rv(len(w) - 3):
-                w = w[:-3] + "i"
-        done = True
-    elif w.endswith(("ités", "ité")):
-        suf = "ités" if w.endswith("ités") else "ité"
-        i = len(w) - len(suf)
-        if in_r2(i):
-            w = w[:i]
-            if w.endswith("abil"):
-                if in_r2(len(w) - 4):
-                    w = w[:-4]
-                else:
-                    w = w[:-4] + "abl"
-            elif w.endswith("ic"):
-                if in_r2(len(w) - 2):
-                    w = w[:-2]
-                else:
-                    w = w[:-2] + "iqU"
-            elif w.endswith("iv") and in_r2(len(w) - 2):
-                w = w[:-2]
-        done = True
-    elif w.endswith(("ives", "ifs", "ive", "if")):
-        suf = next(s for s in ("ives", "ifs", "ive", "if") if w.endswith(s))
-        i = len(w) - len(suf)
-        if in_r2(i):
-            w = w[:i]
-            if w.endswith("at") and in_r2(len(w) - 2):
-                w = w[:-2]
-                if w.endswith("ic"):
-                    if in_r2(len(w) - 2):
-                        w = w[:-2]
-                    else:
-                        w = w[:-2] + "iqU"
-        done = True
-    elif w.endswith("eaux"):
-        w = w[:-4] + "eau"
-        done = True
-    elif w.endswith("aux"):
-        if in_r1(len(w) - 3):
-            w = w[:-3] + "al"
-        done = True
-    elif w.endswith(("euses", "euse")):
-        suf = "euses" if w.endswith("euses") else "euse"
-        i = len(w) - len(suf)
-        if in_r2(i):
-            w = w[:i]
-        elif in_r1(i):
-            w = w[:i] + "eux"
-        done = True
-    elif w.endswith(_STEP1_R2_DELETE):
-        suf = next(s for s in _STEP1_R2_DELETE if w.endswith(s))
-        if in_r2(len(w) - len(suf)):
-            w = w[: -len(suf)]
-        done = True
-    elif w.endswith("amment"):
-        if in_rv(len(w) - 6):
-            w = w[:-6] + "ant"
-            step1_did_mment = True
-        done = True
-    elif w.endswith("emment"):
-        if in_rv(len(w) - 6):
-            w = w[:-6] + "ent"
-            step1_did_mment = True
-        done = True
-    elif w.endswith(("ments", "ment")):
-        suf = "ments" if w.endswith("ments") else "ment"
-        i = len(w) - len(suf)
-        if i >= 1 and w[i - 1] in _VOWELS and in_rv(i - 1):
-            w = w[:i]
-            step1_did_mment = True
-        done = True
-
+    w, step1_did_mment = _step1(w, rv, r1, r2)
     step1_removed = w != before
 
     # ---- Steps 2a / 2b: verb suffixes, all in RV ----
     altered = step1_removed
     if not step1_removed or step1_did_mment:
-        did_2a = False
-        for suf in _STEP2A:
-            if w.endswith(suf):
-                i = len(w) - len(suf)
-                # branch guard: (not 'H') non-v delete — the diaeresis
-                # marker H blocks i-verb stripping (ï is not a verb i)
-                if (in_rv(i) and i >= 1 and w[i - 1] not in _VOWELS
-                        and w[i - 1] != "H" and in_rv(i - 1)):
-                    w = w[:i]
-                    did_2a = True
-                break
-        if did_2a:
+        # 2a branch guard: (not 'H') non-v delete — the diaeresis
+        # marker H blocks i-verb stripping (ï is not a verb i)
+        m = among(w, _STEP2A, gate=rv)
+        if (m is not None and m[0] >= 1 and w[m[0] - 1] not in _VOWELS
+                and w[m[0] - 1] != "H" and m[0] - 1 >= rv):
+            w = w[:m[0]]
             altered = True
         else:
-            # 2b, longest among three families
-            cand = None
-            if w.endswith("ions") and in_r2(len(w) - 4):
-                cand = ("ions", "")
-            for suf in _STEP2B_ER:
-                if w.endswith(suf) and in_rv(len(w) - len(suf)):
-                    if cand is None or len(suf) > len(cand[0]):
-                        cand = (suf, "er-family")
-                    break
-            for suf in _STEP2B_A:
-                if w.endswith(suf) and in_rv(len(w) - len(suf)):
-                    if cand is None or len(suf) > len(cand[0]):
-                        cand = (suf, "a-family")
-                    break
-            if cand:
-                suf, fam = cand
-                w = w[: -len(suf)]
-                if fam == "a-family" and w.endswith("e") and in_rv(len(w) - 1):
+            m = among(w, _STEP2B, limit=rv)
+            if m is not None and (m[1] != "ions" or m[0] >= r2):
+                w = w[:m[0]]
+                if m[1] == "a" and w.endswith("e") and len(w) - 1 >= rv:
                     w = w[:-1]
                 altered = True
 
@@ -299,20 +212,14 @@ def french_stem(word: str) -> str:
             w[-3:-1] == "Hi" or w[-2] not in "aiouès"
         ):
             w = w[:-1]
-        for suf in ("Ière", "ière", "Ier", "ier", "ion", "e"):
-            if not w.endswith(suf) or not in_rv(len(w) - len(suf)):
-                continue
-            i = len(w) - len(suf)
-            if suf == "ion":
+        m = among(w, _STEP4, limit=rv)
+        if m is not None:
+            i, repl = m
+            if repl != "ion":
+                w = w[:i] + repl
+            elif i >= r2 and i >= 1 and w[i - 1] in "st" and i - 1 >= rv:
                 # R2 + preceded by s/t, the s/t itself inside RV
-                if in_r2(i) and i >= 1 and w[i - 1] in "st" and in_rv(i - 1):
-                    w = w[:i]
-                break
-            if suf in ("Ière", "ière", "Ier", "ier"):
-                w = w[:i] + "i"
-            else:
                 w = w[:i]
-            break
 
     # ---- Step 5: undouble ----
     if w.endswith(("enn", "onn", "ett", "ell", "eill")):

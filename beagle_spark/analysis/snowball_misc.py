@@ -16,11 +16,16 @@ from __future__ import annotations
 
 from .snowball_rt import (
     BackwardWord,
-    make_regions_spanish,
-    repeat_b,
-    run_among_b,
+    after_vowel,
+    among,
+    among_prefix,
+    compile_among,
+    regions,
+    replace_among,
+    rv_spanish,
 )
 from .snowball_tables import (
+    AR_NORM_PRE,
     EU_ADJ,
     EU_NOUN,
     EU_VERB,
@@ -78,14 +83,11 @@ def _tr_mark(w, sufs, harmony=True, buf=None):
     after a consonant; without it the core must follow a vowel)."""
     if harmony and not _tr_harmony(w):
         return None
-    m = None
-    for suf in sufs:
-        if w.endswith(suf) and (m is None or len(suf) > len(m)):
-            m = suf
+    m = among(w, sufs)
     if m is None:
         return None
-    n = len(m)
-    rest = w[: len(w) - n]
+    n = len(w) - m[0]
+    rest = w[:m[0]]
     if buf is None:
         return n
     if buf == "U":
@@ -154,6 +156,10 @@ _TR_MARKS = {
     "ki": (("ki",), False, "ki"),
     "cAsInA": (("casına", "cesine"), False, None),
 }
+
+# each mark's suffix set, compiled for the shared `among` search
+_TR_MARKS = {name: (compile_among(sufs), harmony, buf)
+             for name, (sufs, harmony, buf) in _TR_MARKS.items()}
 
 
 def _m(w, name):
@@ -482,33 +488,97 @@ _AR_NORM_POST_FWD = {"\u0622": "\u0627", "\u0623": "\u0627", "\u0625": "\u0627",
                      "\u0624": "\u0648", "\u0626": "\u064a"}
 _AR_FINAL_HAMZA = ("\u0622", "\u0623", "\u0624", "\u0625", "\u0626")
 
-_AR_VERB_S1 = {"\u0647": 1, "\u0643": 1, "\u0643\u0645": 2, "\u0647\u0645": 2,
-               "\u0643\u0646": 2, "\u0647\u0646": 2, "\u0646\u064a": 2,
-               "\u0646\u0627": 2, "\u0647\u0627": 2, "\u0643\u0645\u0648": 3,
-               "\u0643\u0645\u0627": 3, "\u0647\u0645\u0627": 3}
-_AR_VERB_S2A = {"\u0646": 1, "\u064a": 1, "\u0627": 1, "\u062a": 1,
-                "\u062a\u0646": 2, "\u0646\u0627": 2, "\u062a\u0627": 2,
-                "\u0648\u0646": 3, "\u064a\u0646": 3, "\u0627\u0646": 3,
-                "\u062a\u0645\u0627": 4}
-_AR_VERB_S2B = ("\u062a\u0645", "\u0648\u0627")
-_AR_VERB_S2C = {"\u0648": 1, "\u062a\u0645\u0648": 2}
-_AR_NOUN_S1A = {"\u064a": 1, "\u0643": 1, "\u0647": 1, "\u0643\u0645": 2,
-                "\u0647\u0645": 2, "\u0647\u0646": 2, "\u0646\u0627": 2,
-                "\u0647\u0627": 2, "\u0643\u0645\u0627": 3,
-                "\u0647\u0645\u0627": 3}
+# result: the shortest word the suffix may be stripped from
+_AR_VERB_S1 = compile_among([
+    ("\u0647", 4), ("\u0643", 4), ("\u0643\u0645", 5), ("\u0647\u0645", 5),
+    ("\u0643\u0646", 5), ("\u0647\u0646", 5), ("\u0646\u064a", 5),
+    ("\u0646\u0627", 5), ("\u0647\u0627", 5), ("\u0643\u0645\u0648", 6),
+    ("\u0643\u0645\u0627", 6), ("\u0647\u0645\u0627", 6)])
+_AR_VERB_S2A = compile_among([
+    ("\u0646", 4), ("\u064a", 4), ("\u0627", 4), ("\u062a", 4),
+    ("\u062a\u0646", 5), ("\u0646\u0627", 5), ("\u062a\u0627", 5),
+    ("\u0648\u0646", 6), ("\u064a\u0646", 6), ("\u0627\u0646", 6),
+    ("\u062a\u0645\u0627", 6)])
+_AR_VERB_S2B = compile_among(["\u062a\u0645", "\u0648\u0627"])
+_AR_VERB_S2C = compile_among([("\u0648", 4), ("\u062a\u0645\u0648", 6)])
+_AR_NOUN_S1A = compile_among([
+    ("\u064a", 4), ("\u0643", 4), ("\u0647", 4), ("\u0643\u0645", 5),
+    ("\u0647\u0645", 5), ("\u0647\u0646", 5), ("\u0646\u0627", 5),
+    ("\u0647\u0627", 5), ("\u0643\u0645\u0627", 6),
+    ("\u0647\u0645\u0627", 6)])
+# Prefix_Step1 (doubled initial hamza), Prefix_Step3_Verb (future sa-)
+# and Prefix_Step4_Verb (yst/nst/tst -> ist): prefix -> replacement
+_AR_PRE_HAMZA = compile_among([
+    ("\u0623\u0622", "\u0622"), ("\u0623\u0623", "\u0623"),
+    ("\u0623\u0624", "\u0623"), ("\u0623\u0625", "\u0625"),
+    ("\u0623\u0627", "\u0622")])
+_AR_PRE_FUTURE = compile_among([
+    ("\u0633\u064a", "\u064a"), ("\u0633\u062a", "\u062a"),
+    ("\u0633\u0646", "\u0646"), ("\u0633\u0623", "\u0623")])
+_AR_PRE_IST = compile_among(
+    (p, "\u0627\u0633\u062a") for p in
+    ("\u064a\u0633\u062a", "\u0646\u0633\u062a", "\u062a\u0633\u062a"))
+# Normalize_pre maps single characters
+_AR_NORM_PRE = AR_NORM_PRE[1][1]
+_AR_S2A = ("\u0627", "\u064a", "\u0648")
 
 
-def _ar_longest(w: str, table) -> tuple[str, int] | None:
-    best = None
-    for suf, res in table.items():
-        if w.endswith(suf) and (best is None or len(suf) > len(best[0])):
-            best = (suf, res)
-    return best
+def _ar_strip(w: str, table) -> str | None:
+    """Delete the longest suffix from `table` if the word is at least
+    as long as the entry's result."""
+    m = among(w, table)
+    if m is None or len(w) < m[1]:
+        return None
+    return w[:m[0]]
+
+
+def _ar_verb_suffixes(w: str) -> str | None:
+    """The verb suffix steps; None when none applies."""
+    hit1 = False
+    while (w2 := _ar_strip(w, _AR_VERB_S1)) is not None:
+        # stacked object pronouns strip repeatedly
+        w, hit1 = w2, True
+    if hit1:
+        w2 = _ar_strip(w, _AR_VERB_S2A)
+        return w2 if w2 is not None else _ar_strip(w, _AR_VERB_S2C) or w
+    m = among(w, _AR_VERB_S2B)
+    if m is not None and len(w) >= 5:
+        return w[:m[0]]
+    return _ar_strip(w, _AR_VERB_S2A)
+
+
+def _ar_noun_step2(w: str) -> str:
+    """Suffix_Noun_Step2a (alef/yeh/waw), else 2b/2c (at, t)."""
+    if w.endswith(_AR_S2A) and len(w) >= 5:
+        return w[:-1]
+    if w.endswith("\u0627\u062a") and len(w) >= 5:
+        return w[:-2]
+    if w.endswith("\u062a") and len(w) >= 4:
+        return w[:-1]
+    return w
+
+
+def _ar_noun_suffixes(w: str, is_defined: bool) -> tuple[str, bool]:
+    """The noun suffix steps; also reports whether Step3 (final yeh)
+    ran."""
+    if w.endswith("\u0629") and len(w) >= 4:
+        w = w[:-1]
+    else:
+        w2 = None if is_defined else _ar_strip(w, _AR_NOUN_S1A)
+        if w2 is None and w.endswith("\u0646") and len(w) > 5:
+            w2 = w[:-1]
+        if w2 is not None:
+            w = _ar_noun_step2(w2)
+        elif not is_defined and w.endswith(_AR_S2A) and len(w) >= 5:
+            w = w[:-1]
+        elif w.endswith("\u0627\u062a") and len(w) >= 5:
+            w = w[:-2]
+    if w.endswith("\u064a") and len(w) >= 3:
+        return w[:-1], True
+    return w, False
 
 
 def arabic_stem(word: str) -> str:
-    from .snowball_tables import AR_NORM_PRE
-
     w = word
     is_noun = is_verb = True
     is_defined = False
@@ -523,7 +593,6 @@ def arabic_stem(word: str) -> str:
 
     # Normalize_pre: per-char fold (delete diacritics/tatweel, map
     # Arabic-Indic digits, canonicalize presentation forms)
-    lens, by_len = AR_NORM_PRE
     digits = "0123456789"
     canon = ["", "", "", "", "", "", "", "", "", "", "", "\u0621",
              "\u0623", "\u0625", "\u0626", "\u0622", "\u0624", "\u0627",
@@ -536,7 +605,7 @@ def arabic_stem(word: str) -> str:
              "\u0644\u0622"]
     out = []
     for ch in w:
-        res = by_len.get(1, {}).get(ch)
+        res = _AR_NORM_PRE.get(ch)
         if res is None or ch in _AR_FINAL_HAMZA:
             # hamza carriers pass through here; the leading entries of
             # the extracted table belong to the backward final-hamza
@@ -551,97 +620,13 @@ def arabic_stem(word: str) -> str:
     w = "".join(out)
 
     # ---- backward suffix steps ----
-    def strip_verb_suffixes(w: str) -> tuple[str, bool]:
-        hit1 = False
-        while True:  # stacked object pronouns strip repeatedly
-            m = _ar_longest(w, _AR_VERB_S1)
-            if m is None:
-                break
-            suf, res = m
-            need = {1: 4, 2: 5, 3: 6}[res]
-            if len(w) < need:
-                break
-            w = w[: -len(suf)]
-            hit1 = True
-        if hit1:
-                m2 = _ar_longest(w, _AR_VERB_S2A)
-                if m2 is not None:
-                    suf2, res2 = m2
-                    need2 = {1: 4, 2: 5, 3: 6, 4: 6}[res2]
-                    if len(w) >= need2:
-                        return w[: -len(suf2)], True
-                m2 = _ar_longest(w, _AR_VERB_S2C)
-                if m2 is not None:
-                    suf2, res2 = m2
-                    need2 = {1: 4, 2: 6}[res2]
-                    if len(w) >= need2:
-                        return w[: -len(suf2)], True
-                return w, True
-        for suf in _AR_VERB_S2B:
-            if w.endswith(suf) and len(w) >= 5:
-                return w[: -len(suf)], True
-        m = _ar_longest(w, _AR_VERB_S2A)
-        if m is not None:
-            suf, res = m
-            need = {1: 4, 2: 5, 3: 6, 4: 6}[res]
-            if len(w) >= need:
-                return w[: -len(suf)], True
-        return w, False
-
-    def strip_noun_suffixes(w: str) -> tuple[str, bool]:
-        changed = False
-        if w.endswith("\u0629") and len(w) >= 4:
-            w, changed = w[:-1], True
-        else:
-            done = False
-            if not is_defined:
-                m = _ar_longest(w, _AR_NOUN_S1A)
-                if m is not None:
-                    suf, res = m
-                    need = {1: 4, 2: 5, 3: 6}[res]
-                    if len(w) >= need:
-                        w, changed, done = w[: -len(suf)], True, True
-                        for s2a in ("\u0627", "\u064a", "\u0648"):
-                            if w.endswith(s2a) and len(w) >= 5:
-                                w = w[:-1]
-                                break
-                        else:
-                            if w.endswith("\u0627\u062a") and len(w) >= 5:
-                                w = w[:-2]
-                            elif w.endswith("\u062a") and len(w) >= 4:
-                                w = w[:-1]
-            if not done and w.endswith("\u0646") and len(w) > 5:
-                w, changed, done = w[:-1], True, True
-                for s2a in ("\u0627", "\u064a", "\u0648"):
-                    if w.endswith(s2a) and len(w) >= 5:
-                        w = w[:-1]
-                        break
-                else:
-                    if w.endswith("\u0627\u062a") and len(w) >= 5:
-                        w = w[:-2]
-                    elif w.endswith("\u062a") and len(w) >= 4:
-                        w = w[:-1]
-            if not done and not is_defined:
-                for s2a in ("\u0627", "\u064a", "\u0648"):
-                    if w.endswith(s2a) and len(w) >= 5:
-                        w, changed, done = w[:-1], True, True
-                        break
-            if not done and w.endswith("\u0627\u062a") and len(w) >= 5:
-                w, changed = w[:-2], True
-        step3 = False
-        if w.endswith("\u064a") and len(w) >= 3:
-            w, changed, step3 = w[:-1], True, True
-        return w, changed, step3
-
-    verb_handled = False
-    if is_verb:
-        w2, ok = strip_verb_suffixes(w)
-        if ok:
-            w, verb_handled = w2, True
-    if not verb_handled:
+    w2 = _ar_verb_suffixes(w) if is_verb else None
+    if w2 is not None:
+        w = w2
+    else:
         step3 = False
         if is_noun:
-            w, _ok, step3 = strip_noun_suffixes(w)
+            w, step3 = _ar_noun_suffixes(w, is_defined)
         # alef maqsura -> yeh: the or-alternative of Suffix_Noun_Step3
         if not step3 and w.endswith("\u0649"):
             w = w[:-1] + "\u064a"
@@ -653,14 +638,10 @@ def arabic_stem(word: str) -> str:
     # by Prefix_Step1's hamza folding).
     c = 0
     # Prefix_Step1: doubled initial hamza
-    if len(w) > 3:
-        for pre, repl in (("\u0623\u0622", "\u0622"), ("\u0623\u0623", "\u0623"),
-                          ("\u0623\u0624", "\u0623"), ("\u0623\u0625", "\u0625"),
-                          ("\u0623\u0627", "\u0622")):
-            if w.startswith(pre):
-                w = repl + w[2:]
-                c = len(repl)
-                break
+    m = among_prefix(w, _AR_PRE_HAMZA) if len(w) > 3 else None
+    if m is not None:
+        w = m[1] + w[m[0]:]
+        c = len(m[1])
     # Prefix_Step2: conjunction fa/waw (not before alef)
     if len(w) > 3 and w[c:c + 1] in ("\u0641", "\u0648") and w[c + 1:c + 2] != "\u0627":
         w = w[:c] + w[c + 1:]
@@ -683,21 +664,14 @@ def arabic_stem(word: str) -> str:
         elif rest.startswith("\u0628") and not rest.startswith("\u0628\u0627"):
             w, done3 = w[:c] + rest[1:], True
     if not done3 and is_verb and len(w) > 4:
-        sub = False
-        for pre, repl in (("\u0633\u064a", "\u064a"), ("\u0633\u062a", "\u062a"),
-                          ("\u0633\u0646", "\u0646"), ("\u0633\u0623", "\u0623")):
-            if rest.startswith(pre):
-                w = w[:c] + repl + rest[2:]
-                c += len(repl)
-                sub = True
-                break
-        rest = w[c:]
-        if not sub or len(w) > 4:
-            for pre in ("\u064a\u0633\u062a", "\u0646\u0633\u062a",
-                        "\u062a\u0633\u062a"):
-                if rest.startswith(pre):
-                    w = w[:c] + "\u0627\u0633\u062a" + rest[3:]
-                    break
+        m = among_prefix(w, _AR_PRE_FUTURE, c)
+        if m is not None:
+            w = w[:c] + m[1] + w[m[0]:]
+            c += len(m[1])
+        if m is None or len(w) > 4:
+            m = among_prefix(w, _AR_PRE_IST, c)
+            if m is not None:
+                w = w[:c] + m[1] + w[m[0]:]
 
     # ---- Normalize_post ----
     if w and w.endswith(_AR_FINAL_HAMZA):
@@ -719,43 +693,14 @@ _HY_R2_ACT = {1: ("R2", "")}
 _HY_DEL_ACT = {1: (None, "")}
 
 
-def _hy_regions(w: str) -> tuple[int, int]:
-    n = len(w)
-
-    def is_v(i):
-        return w[i] in _HY_VOWELS
-
-    pV = p2 = n
-    i = 0
-    while i < n and not is_v(i):
-        i += 1
-    if i < n:
-        pV = i + 1
-        i += 1
-        while i < n and is_v(i):
-            i += 1
-        if i < n:  # gopast non-v
-            i += 1
-            while i < n and not is_v(i):
-                i += 1
-            if i < n:  # gopast v
-                i += 1
-                while i < n and is_v(i):
-                    i += 1
-                if i < n:  # gopast non-v
-                    p2 = i + 1
-    return pV, p2
-
-
 def armenian_stem(word: str) -> str:
     w = word.lower()
-    pV, p2 = _hy_regions(w)
-    bw = BackwardWord(w, pV, 0, p2)
-    run_among_b(bw, HY_ENDING, _HY_R2_ACT, setlimit="RV")
-    run_among_b(bw, HY_VERB, _HY_DEL_ACT, setlimit="RV")
-    run_among_b(bw, HY_ADJ, _HY_DEL_ACT, setlimit="RV")
-    run_among_b(bw, HY_NOUN, _HY_DEL_ACT, setlimit="RV")
-    return bw.s
+    bw = BackwardWord(w, after_vowel(w, _HY_VOWELS), 0, regions(w, _HY_VOWELS)[1])
+    bw.step(HY_ENDING, _HY_R2_ACT, setlimit="RV")
+    bw.step(HY_VERB, _HY_DEL_ACT, setlimit="RV")
+    bw.step(HY_ADJ, _HY_DEL_ACT, setlimit="RV")
+    bw.step(HY_NOUN, _HY_DEL_ACT, setlimit="RV")
+    return str(bw)
 
 
 # ---------------------------------------------------------------------------
@@ -766,7 +711,6 @@ def armenian_stem(word: str) -> str:
 # left part only). Tables transcribed exactly (snowball_tables.py).
 # ---------------------------------------------------------------------------
 _EU_VOWELS = frozenset("aeiou")
-_eu_regions = make_regions_spanish(_EU_VOWELS)
 
 # action branches per result code: (region gate, replacement)
 _EU_VERB_ACT = {
@@ -783,12 +727,11 @@ _EU_ADJ_ACT = {1: ("RV", ""), 2: (None, "z")}
 
 def basque_stem(word: str) -> str:
     w = word.lower()
-    pV, p1, p2 = _eu_regions(w)
-    bw = BackwardWord(w, pV, p1, p2)
-    repeat_b(bw, EU_VERB, _EU_VERB_ACT)
-    repeat_b(bw, EU_NOUN, _EU_NOUN_ACT)
-    run_among_b(bw, EU_ADJ, _EU_ADJ_ACT)
-    return bw.s
+    bw = BackwardWord(w, rv_spanish(w, _EU_VOWELS), *regions(w, _EU_VOWELS))
+    bw.repeat(EU_VERB, _EU_VERB_ACT)
+    bw.repeat(EU_NOUN, _EU_NOUN_ACT)
+    bw.step(EU_ADJ, _EU_ADJ_ACT)
+    return str(bw)
 
 
 # ---------------------------------------------------------------------------
@@ -812,51 +755,16 @@ _GA_DERIV_ACT = {1: ("R1", ""), 2: ("R2", "")}
 _GA_VERB_ACT = {1: ("RV", ""), 2: ("R1", "")}
 
 
-def _ga_regions(w: str) -> tuple[int, int, int]:
-    n = len(w)
-
-    def is_v(i):
-        return w[i] in _GA_VOWELS
-
-    pV = n
-    for i in range(n):
-        if is_v(i):
-            pV = i + 1
-            break
-
-    def after_vc(start):
-        for i in range(start + 1, n):
-            if not is_v(i) and is_v(i - 1):
-                return i + 1
-        return n
-
-    p1 = after_vc(0)
-    p2 = after_vc(p1 - 1) if p1 < n else n
-    return pV, p1, p2
-
-
-def _ga_longest_prefix(w: str):
-    lens, by_len = GA_INIT
-    for ln in lens:
-        if ln <= len(w):
-            res = by_len[ln].get(w[:ln])
-            if res is not None:
-                return w[:ln], res
-    return None
-
-
 def irish_stem(word: str) -> str:
     w = word.lower()
-    m = _ga_longest_prefix(w)
+    m = among_prefix(w, GA_INIT)
     if m is not None:
-        pre, res = m
-        w = _GA_INIT_ACT[res] + w[len(pre):]
-    pV, p1, p2 = _ga_regions(w)
-    bw = BackwardWord(w, pV, p1, p2)
-    run_among_b(bw, GA_NOUN, _GA_NOUN_ACT)
-    run_among_b(bw, GA_DERIV, _GA_DERIV_ACT)
-    run_among_b(bw, GA_VERB, _GA_VERB_ACT)
-    return bw.s
+        w = _GA_INIT_ACT[m[1]] + w[m[0]:]
+    bw = BackwardWord(w, after_vowel(w, _GA_VOWELS), *regions(w, _GA_VOWELS))
+    bw.step(GA_NOUN, _GA_NOUN_ACT)
+    bw.step(GA_DERIV, _GA_DERIV_ACT)
+    bw.step(GA_VERB, _GA_VERB_ACT)
+    return str(bw)
 
 
 # ---------------------------------------------------------------------------
@@ -865,7 +773,7 @@ def irish_stem(word: str) -> str:
 # High-frequency subset of the 294 endings with their conditions; the
 # minimum-stem-length-2 rule applies throughout (condition A). The
 # full table's rare endings mostly overlap these via longest-match.
-_LOVINS_ENDINGS = sorted(
+_LOVINS_ENDINGS = compile_among(
     [
         "alistically", "arizability", "izationally",
         "antialness", "arisations", "arizations", "entialness",
@@ -914,12 +822,10 @@ _LOVINS_ENDINGS = sorted(
         "ae", "al", "ar", "as", "ed", "en", "es", "ia", "ic", "is",
         "ly", "on", "or", "um", "us", "yl",
         "a", "e", "i", "o", "s", "y",
-    ],
-    key=len,
-    reverse=True,
+    ]
 )
 # Recode/transformation rules (rule 1 undouble + the common recodings)
-_LOVINS_RECODE = [
+_LOVINS_RECODE = compile_among([
     ("iev", "ief"), ("uct", "uc"), ("umpt", "um"), ("rpt", "rb"),
     ("urs", "ur"), ("istr", "ister"), ("metr", "meter"), ("olv", "olut"),
     ("ul", "l"), ("bex", "bic"), ("dex", "dic"), ("pex", "pic"),
@@ -929,17 +835,15 @@ _LOVINS_RECODE = [
     ("ond", "ons"), ("lud", "lus"), ("rud", "rus"), ("her", "hes"),
     ("mit", "mis"), ("ent", "ens"), ("ert", "ers"), ("et", "es"),
     ("yt", "ys"), ("yz", "ys"),
-]
+])
 
 
 def lovins_stem(word: str) -> str:
     w = word.lower()
     if len(w) <= 2:
         return w
-    for suf in _LOVINS_ENDINGS:
-        if w.endswith(suf) and len(w) - len(suf) >= 2:
-            w = w[: -len(suf)]
-            break
+    # longest ending that leaves a stem of at least 2 letters
+    w = replace_among(w, _LOVINS_ENDINGS, limit=2) or w
     # rule 1: undouble a final double consonant (bb dd gg ll mm nn pp rr ss tt)
     if (
         len(w) >= 2
@@ -947,8 +851,4 @@ def lovins_stem(word: str) -> str:
         and w[-1] in "bdglmnprst"
     ):
         w = w[:-1]
-    for pat, rep in _LOVINS_RECODE:
-        if w.endswith(pat):
-            w = w[: -len(pat)] + rep
-            break
-    return w
+    return replace_among(w, _LOVINS_RECODE) or w

@@ -1,15 +1,16 @@
-"""Snowball Dutch stemmer, pure Python.
+"""Snowball Dutch and Kraaij-Pohlmann stemmers, pure Python.
 
-Implemented from the published algorithm specification
+Dutch is implemented from the published algorithm specification
 (snowballstem.org/algorithms/dutch/stemmer.html) — the same program
 Lucene runs for the reference's `:dutch` stemmer
 (reference: src/beagle/text_analysis.clj:26). The reference's `:kp`
-(Kraaij-Pohlmann) is a different Dutch stemmer; here it dispatches to
-this implementation (documented deviation — both collapse Dutch
-inflection families, which is what dictionary matching needs).
+(Kraaij-Pohlmann) is a different Dutch stemmer with its own
+implementation below.
 """
 
 from __future__ import annotations
+
+from .snowball_rt import among, compile_among, gopast, regions, replace_among
 
 _VOWELS = frozenset("aeiouyè")
 
@@ -35,95 +36,77 @@ def _prelude(w: str) -> str:
     return "".join(chars)
 
 
-def _regions(w: str) -> tuple[int, int]:
-    r1 = len(w)
-    for i in range(1, len(w)):
-        if w[i] not in _VOWELS and w[i - 1] in _VOWELS:
-            r1 = i + 1
-            break
-    # R2 is marked from the UNadjusted R1; only R1 gets the >=3 floor
-    r2 = len(w)
-    for i in range(r1 + 1, len(w)):
-        if w[i] not in _VOWELS and w[i - 1] in _VOWELS:
-            r2 = i + 1
-            break
-    return max(r1, 3), r2
-
-
 def _undouble(w: str) -> str:
     if w.endswith(("kk", "dd", "tt")):
         return w[:-1]
     return w
 
 
+# Step 1 results: "heid" replaces, "en" and "s" check the stem first
+_STEP1 = compile_among([("heden", "heid"), ("en", "en"), ("ene", "en"),
+                        ("s", "s"), ("se", "s")])
+_D_SUFFIX = compile_among(["end", "ing", "ig", "lijk", "baar", "bar"])
+
+
+def _step2(w: str, r1: int) -> str | None:
+    """Step 2: a final e after a non-vowel, in R1, goes (then undouble)."""
+    if w.endswith("e") and len(w) - 1 >= r1 and len(w) >= 2 and w[-2] not in _VOWELS:
+        return _undouble(w[:-1])
+    return None
+
+
+def _strip_en(stem: str) -> str | None:
+    """undouble(stem) when the stem ends in a non-vowel and not 'gem'."""
+    if stem and stem[-1] not in _VOWELS and not stem.endswith("gem"):
+        return _undouble(stem)
+    return None
+
+
 def dutch_stem(word: str) -> str:
     w = _prelude(word.lower())
-    r1, r2 = _regions(w)
-    e_removed = False
+    r1, r2 = regions(w, _VOWELS, floor=3)
 
-    # Step 1 — among commit semantics: the longest matching entry is
-    # chosen first; if its condition fails nothing shorter is tried
-    if w.endswith("heden"):
-        if len(w) - 5 >= r1:
-            w = w[:-5] + "heid"
-    elif w.endswith(("ene", "en")):
-        suf = "ene" if w.endswith("ene") else "en"
-        stem = w[: -len(suf)]
-        if (
-            len(w) - len(suf) >= r1
-            and stem
-            and stem[-1] not in _VOWELS
-            and not stem.endswith("gem")
-        ):
-            w = _undouble(stem)
-    elif w.endswith(("se", "s")):
-        suf = "se" if w.endswith("se") else "s"
-        stem = w[: -len(suf)]
-        if (len(w) - len(suf) >= r1 and stem and stem[-1] not in _VOWELS
-                and stem[-1] != "j"):
+    # Step 1: the longest entry is chosen first; if its condition
+    # fails nothing shorter is tried
+    m = among(w, _STEP1, gate=r1)
+    if m is not None:
+        start, res = m
+        stem = w[:start]
+        if res == "heid":
+            w = stem + res
+        elif res == "en":
+            w = _strip_en(stem) or w
+        elif stem[-1] not in _VOWELS and stem[-1] != "j":
             w = stem
 
     # Step 2
-    if w.endswith("e") and len(w) - 1 >= r1 and len(w) >= 2 and w[-2] not in _VOWELS:
-        w = _undouble(w[:-1])
-        e_removed = True
+    w2 = _step2(w, r1)
+    e_removed = w2 is not None
+    w = w2 or w
 
     # Step 3a
     if w.endswith("heid") and len(w) - 4 >= r2 and (len(w) < 5 or w[-5] != "c"):
         w = w[:-4]
-        if w.endswith("en"):
-            stem = w[:-2]
-            if (
-                len(w) - 2 >= r1
-                and stem
-                and stem[-1] not in _VOWELS
-                and not stem.endswith("gem")
-            ):
-                w = _undouble(stem)
+        if w.endswith("en") and len(w) - 2 >= r1:
+            w = _strip_en(w[:-2]) or w
 
     # Step 3b: d-suffixes
-    if w.endswith(("end", "ing")):
-        if len(w) - 3 >= r2:
-            w = w[:-3]
-            if w.endswith("ig") and len(w) - 2 >= r2 and (len(w) < 3 or w[-3] != "e"):
-                w = w[:-2]
+    m = among(w, _D_SUFFIX, gate=r2)
+    if m is not None:
+        start = m[0]
+        suf, stem = w[start:], w[:start]
+        if suf in ("end", "ing"):
+            if stem.endswith("ig") and len(stem) - 2 >= r2 and (len(stem) < 3 or stem[-3] != "e"):
+                w = stem[:-2]
             else:
-                w = _undouble(w)
-    elif w.endswith("ig"):
-        if len(w) - 2 >= r2 and (len(w) < 3 or w[-3] != "e"):
-            w = w[:-2]
-    elif w.endswith("lijk"):
-        if len(w) - 4 >= r2:
-            w = w[:-4]
-            # repeat step 2
-            if w.endswith("e") and len(w) - 1 >= r1 and len(w) >= 2 and w[-2] not in _VOWELS:
-                w = _undouble(w[:-1])
-    elif w.endswith("baar"):
-        if len(w) - 4 >= r2:
-            w = w[:-4]
-    elif w.endswith("bar"):
-        if len(w) - 3 >= r2 and e_removed:
-            w = w[:-3]
+                w = _undouble(stem)
+        elif suf == "ig":
+            if len(stem) < 1 or stem[-1] != "e":
+                w = stem
+        elif suf == "lijk":
+            w = _step2(stem, r1) or stem
+        elif suf == "baar" or e_removed:
+            w = stem
 
     # Step 4: undouble vowel  (CVVc -> CVc, VV in aa/ee/oo/uu)
     if (
@@ -139,7 +122,6 @@ def dutch_stem(word: str) -> str:
     return w.replace("Y", "y").replace("I", "i")
 
 
-# Kraaij-Pohlmann dispatches here (see module docstring).
 # ---------------------------------------------------------------------------
 # Kraaij-Pohlmann Dutch stemmer
 # ---------------------------------------------------------------------------
@@ -153,19 +135,17 @@ def dutch_stem(word: str) -> str:
 # f/s before a stripped vowel ending, and keep long-vowel stems intact.
 
 _KP_VOWELS = frozenset("aeiouy")
+# The kp conditions ask for a minimum Porter measure of the stem (its
+# number of vowel-consonant transitions). The measure of w[:i] is >= 1
+# exactly when i >= R1 and >= 2 exactly when i >= R2, so every
+# condition is a region mark: the published "shorter ending wins when
+# the stem is too short" search is the setlimit form of `among`.
 
-
-def _kp_measure(w: str) -> int:
-    """Number of vowel-consonant transitions (Porter-style measure) —
-    the kp conditions require a minimum stem measure before removal."""
-    m = 0
-    prev_v = False
-    for c in w:
-        is_v = c in _KP_VOWELS
-        if prev_v and not is_v:
-            m += 1
-        prev_v = is_v
-    return m
+# diminutives: -kje restores the g (koninkje -> koning)
+_KP_DIMINUTIVE = compile_among(["etje", "tje", "pje", ("kje", "g"), "je"])
+# derivational suffixes (measure >= 2; -ingen -> -ing needs only 1)
+_KP_DERIV = compile_among(["lijkheid", "heid", "ing", "baar", "lijk",
+                           "ster", "aar", "erd", "sel", "isch", "ig"])
 
 
 def _kp_repair(w: str) -> str:
@@ -178,88 +158,61 @@ def _kp_repair(w: str) -> str:
     return w
 
 
-def _kp_ends_vowel_y(w: str) -> bool:
-    return bool(w) and w[-1] in _KP_VOWELS
-
-
 def kp_stem(word: str) -> str:
     w = word.lower()
     if len(w) <= 3:
         return w
+    V = _KP_VOWELS
 
     # Step 1: inflectional suffixes -------------------------------------
-    if w.endswith("heden") and _kp_measure(w[:-5]) >= 1:
+    r1 = gopast(w, V)
+    if w.endswith("heden") and len(w) - 5 >= r1:
         # before the generic -en rule: plural of -heid nouns
         w = w[:-5] + "heid"
-    else:
-        # diminutives (longest first): -etje -tje -pje -kje -je
-        for suf, min_m in (("etje", 1), ("tje", 1), ("pje", 1), ("kje", 1), ("je", 1)):
-            if w.endswith(suf) and _kp_measure(w[: -len(suf)]) >= min_m:
-                stem = w[: -len(suf)]
-                if suf == "kje":  # boompje/koninkje: k replaces the g
-                    stem = stem + "g"
-                w = stem
-                break
-        else:
-            # plural / verb endings
-            if w.endswith("en") and _kp_measure(w[:-2]) >= 1 and not _kp_ends_vowel_y(w[:-2]):
-                w = _kp_repair(w[:-2])
-                # voiced-fricative restore: the f/s devoicing of v/z
-                # before a vowel ending reverses on removal
-                if w.endswith("v"):
-                    w = w[:-1] + "f"
-                if w.endswith("z"):
-                    w = w[:-1] + "s"
-            elif w.endswith("s") and not w.endswith(("aus", "eus")) and _kp_measure(w[:-1]) >= 1 \
-                    and len(w) >= 2 and w[-2] not in _KP_VOWELS:
-                w = w[:-1]
-                if w.endswith("'"):
-                    w = w[:-1]
-            elif w.endswith("t") and _kp_measure(w[:-1]) >= 1 and len(w) >= 2 \
-                    and w[-2] not in _KP_VOWELS and w[-2] not in "ts":
-                # 's' before 't' is left for the superlative rule
-                w = w[:-1]
-            elif w.endswith(("de", "te")) and _kp_measure(w[:-2]) >= 1:
-                w = _kp_repair(w[:-2])
-            elif w.endswith("e") and _kp_measure(w[:-1]) >= 1 and len(w) >= 2 \
-                    and w[-2] not in _KP_VOWELS:
-                w = _kp_repair(w[:-1])
+    elif (w2 := replace_among(w, _KP_DIMINUTIVE, limit=r1)) is not None:
+        w = w2
+    # plural / verb endings
+    elif w.endswith("en") and len(w) - 2 >= r1 and w[-3] not in V:
+        w = _kp_repair(w[:-2])
+        # voiced-fricative restore: the f/s devoicing of v/z
+        # before a vowel ending reverses on removal
+        if w.endswith("v"):
+            w = w[:-1] + "f"
+        if w.endswith("z"):
+            w = w[:-1] + "s"
+    elif w.endswith("s") and not w.endswith(("aus", "eus")) and len(w) - 1 >= r1 \
+            and w[-2] not in V:
+        w = w[:-1]
+        if w.endswith("'"):
+            w = w[:-1]
+    elif w.endswith("t") and len(w) - 1 >= r1 and w[-2] not in V and w[-2] not in "ts":
+        # 's' before 't' is left for the superlative rule
+        w = w[:-1]
+    elif w.endswith(("de", "te")) and len(w) - 2 >= r1:
+        w = _kp_repair(w[:-2])
+    elif w.endswith("e") and len(w) - 1 >= r1 and w[-2] not in V:
+        w = _kp_repair(w[:-1])
 
     # Step 2: degree adjectives -----------------------------------------
-    if w.endswith("st") and _kp_measure(w[:-2]) >= 1 and len(w) > 4:
+    r1 = gopast(w, V)
+    if w.endswith("st") and len(w) - 2 >= r1 and len(w) > 4:
         w = w[:-2]
-    elif w.endswith("er") and _kp_measure(w[:-2]) >= 1 and len(w) > 4 \
+    elif w.endswith("er") and len(w) - 2 >= r1 and len(w) > 4 \
             and not w.endswith(("eer", "ier")):
         w = _kp_repair(w[:-2])
 
     # Step 3: derivational suffixes (longest match) ---------------------
-    for suf, repl, min_m in sorted(
-        (
-            ("lijkheid", "", 2),
-            ("heid", "", 2),
-            ("ingen", "ing", 1),
-            ("ing", "", 2),
-            ("baar", "", 2),
-            ("lijk", "", 2),
-            ("ster", "", 2),
-            ("aar", "", 2),
-            ("erd", "", 2),
-            ("sel", "", 2),
-            ("isch", "", 2),
-            ("ig", "", 2),
-        ),
-        key=lambda t: len(t[0]),
-        reverse=True,
-    ):
-        if w.endswith(suf) and _kp_measure(w[: -len(suf)]) >= min_m:
-            w = _kp_repair(w[: -len(suf)] + repl)
-            break
+    r1, r2 = regions(w, V)
+    if w.endswith("ingen") and len(w) - 5 >= r1:
+        w = _kp_repair(w[:-2])
+    elif (w2 := replace_among(w, _KP_DERIV, limit=r2)) is not None:
+        w = _kp_repair(w2)
 
     # Lose_prefix: the characteristic kp past-participle 'ge-' removal
     # (gelopen -> lop collapses with lopen -> lop; Snowball dutch keeps
     # the prefix)
     if w.startswith("ge") and len(w) - 2 >= 3 and any(
-        c in _KP_VOWELS for c in w[2:]
+        c in V for c in w[2:]
     ):
         w = w[2:]
 

@@ -15,92 +15,107 @@ families, though individual rare forms may stem differently
 
 from __future__ import annotations
 
-# ---------------------------------------------------------------------------
-# Shared machinery (Spanish-style RV/R1/R2)
-# ---------------------------------------------------------------------------
+from .snowball_rt import among, compile_among, regions, replace_among, rv_spanish
+from .snowball_tables import (
+    CA_PRON, CA_RESID, CA_STD, CA_VERB,
+    RO_COMBO, RO_STD, RO_STEP0, RO_VERB, RO_VOWEL,
+)
 
 
-def _make_regions(vowels: frozenset):
-    def regions(w: str) -> tuple[int, int, int]:
-        n = len(w)
+def _marks(w: str, vowels) -> dict:
+    """pV/p1/p2 of the Spanish-family programs, by region name."""
+    r1, r2 = regions(w, vowels)
+    return {None: 0, "RV": rv_spanish(w, vowels), "R1": r1, "R2": r2}
 
-        def is_v(i):
-            return w[i] in vowels
 
-        rv = n
-        if n >= 3:
-            if not is_v(1):
-                for i in range(2, n):
-                    if is_v(i):
-                        rv = i + 1
-                        break
-            elif is_v(0) and is_v(1):
-                for i in range(2, n):
-                    if not is_v(i):
-                        rv = i + 1
-                        break
-            else:
-                rv = 3
-
-        def nonvowel_after_vowel(start):
-            for i in range(start + 1, n):
-                if not is_v(i) and is_v(i - 1):
-                    return i + 1
-            return n
-
-        r1 = nonvowel_after_vowel(0)
-        r2 = nonvowel_after_vowel(r1 - 1) if r1 < n else n
-        return rv, r1, r2
-
-    return regions
+def _r2_chain(w: str, r2: int, *suffixes) -> str:
+    """Delete the first of `suffixes` that ends `w` inside R2, then the
+    next group's, and so on; stop at the first group that fails."""
+    for group in suffixes:
+        m = among(w, group, gate=r2)
+        if m is None:
+            break
+        w = w[:m[0]]
+    return w
 
 
 # ---------------------------------------------------------------------------
 # Italian
 # ---------------------------------------------------------------------------
 _IT_VOWELS = frozenset("aeiouàèìòù")
-_it_regions = _make_regions(_IT_VOWELS)
 _IT_ACUTE = str.maketrans("áéíóú", "àèìòù")
 
-_IT_PRONOUNS = sorted(
-    [
-        "ci", "gli", "la", "le", "li", "lo", "mi", "ne", "si", "ti", "vi",
-        "sene", "gliela", "gliele", "glieli", "glielo", "gliene", "mela",
-        "mele", "meli", "melo", "mene", "tela", "tele", "teli", "telo",
-        "tene", "cela", "cele", "celi", "celo", "cene", "vela", "vele",
-        "veli", "velo", "vene",
-    ],
-    key=len,
-    reverse=True,
-)
-_IT_STEP1_R2 = sorted(
-    [
+_IT_PRONOUNS = compile_among([
+    "ci", "gli", "la", "le", "li", "lo", "mi", "ne", "si", "ti", "vi",
+    "sene", "gliela", "gliele", "glieli", "glielo", "gliene", "mela",
+    "mele", "meli", "melo", "mene", "tela", "tele", "teli", "telo",
+    "tene", "cela", "cele", "celi", "celo", "cene", "vela", "vele",
+    "veli", "velo", "vene",
+])
+# the gerund/infinitive left before the pronoun, in RV: its replacement
+_IT_PRONOUN_BASE = compile_among([("ando", "ando"), ("endo", "endo"),
+                                  ("ar", "are"), ("er", "ere"), ("ir", "ire")])
+_AT = compile_among(["at"])
+_IC = compile_among(["ic"])
+_ABIL = compile_among(["abil"])
+_IC_IV = compile_among(["ic", "iv"])
+_OS_IC = compile_among(["os", "ic"])
+_OS_IC_AD = compile_among(["os", "ic", "ad"])
+# Step 1 results: (region, replacement), or an int for a step whose
+# deletion chains into further R2 deletions
+_IT_STEP1 = compile_among(
+    [(s, ("R2", "")) for s in (
         "anza", "anze", "ico", "ici", "ica", "ice", "iche", "ichi", "ismo",
         "ismi", "abile", "abili", "ibile", "ibili", "ista", "iste", "isti",
         "istà", "istè", "istì", "oso", "osi", "osa", "ose", "mente",
-        "atrice", "atrici", "ante", "anti",
-    ],
-    key=len,
-    reverse=True,
+        "atrice", "atrici", "ante", "anti")]
+    + [(s, 1) for s in ("azione", "azioni", "atore", "atori")]
+    + [(s, ("R2", "log")) for s in ("logia", "logie")]
+    + [(s, ("R2", "u")) for s in ("uzione", "uzioni", "usione", "usioni")]
+    + [(s, ("R2", "ente")) for s in ("enza", "enze")]
+    + [(s, ("RV", "")) for s in ("amento", "amenti", "imento", "imenti")]
+    + [("amente", 2), ("ità", 3)]
+    + [(s, 4) for s in ("ivo", "ivi", "iva", "ive")]
 )
-_IT_STEP2 = sorted(
-    [
-        "ammo", "ando", "ano", "are", "arono", "asse", "assero", "assi",
-        "assimo", "ata", "ate", "ati", "ato", "ava", "avamo", "avano",
-        "avate", "avi", "avo", "emmo", "enda", "ende", "endi", "endo",
-        "erà", "erai", "eranno", "ere", "erebbe", "erebbero", "erei",
-        "eremmo", "eremo", "ereste", "eresti", "erete", "erò", "erono",
-        "essero", "ete", "eva", "evamo", "evano", "evate", "evi", "evo",
-        "Yamo", "iamo", "immo", "irà", "irai", "iranno", "ire", "irebbe",
-        "irebbero", "irei", "iremmo", "iremo", "ireste", "iresti",
-        "irete", "irò", "irono", "isca", "iscano", "isce", "isci",
-        "isco", "iscono", "issero", "ita", "ite", "iti", "ito", "iva",
-        "ivamo", "ivano", "ivate", "ivi", "ivo", "ono", "uta", "ute",
-        "uti", "uto", "ar", "ir",
-    ],
-    key=len,
-    reverse=True,
-)
+_IT_STEP2 = compile_among([
+    "ammo", "ando", "ano", "are", "arono", "asse", "assero", "assi",
+    "assimo", "ata", "ate", "ati", "ato", "ava", "avamo", "avano",
+    "avate", "avi", "avo", "emmo", "enda", "ende", "endi", "endo",
+    "erà", "erai", "eranno", "ere", "erebbe", "erebbero", "erei",
+    "eremmo", "eremo", "ereste", "eresti", "erete", "erò", "erono",
+    "essero", "ete", "eva", "evamo", "evano", "evate", "evi", "evo",
+    "Yamo", "iamo", "immo", "irà", "irai", "iranno", "ire", "irebbe",
+    "irebbero", "irei", "iremmo", "iremo", "ireste", "iresti",
+    "irete", "irò", "irono", "isca", "iscano", "isce", "isci",
+    "isco", "iscono", "issero", "ita", "ite", "iti", "ito", "iva",
+    "ivamo", "ivano", "ivate", "ivi", "ivo", "ono", "uta", "ute",
+    "uti", "uto", "ar", "ir",
+])
+
+
+def _it_step1(w: str, marks: dict) -> str:
+    m = among(w, _IT_STEP1)
+    if m is None:
+        return w
+    i, res = m
+    r2 = marks["R2"]
+    if isinstance(res, tuple):
+        return w[:i] + res[1] if i >= marks[res[0]] else w
+    if res == 2:  # amente: R1, then iv(at) / abil / os / ic in R2
+        if i < marks["R1"]:
+            return w
+        w = w[:i]
+        if w.endswith("iv") and len(w) - 2 >= r2:
+            return _r2_chain(w[:-2], r2, _AT)
+        return replace_among(w, _ABIL, gate=r2) or _r2_chain(w, r2, _OS_IC)
+    if i < r2:
+        return w
+    w = w[:i]
+    if res == 1:
+        return _r2_chain(w, r2, _IC)
+    if res == 3:
+        return replace_among(w, _ABIL, gate=r2) or _r2_chain(w, r2, _IC_IV)
+    return _r2_chain(w, r2, _AT, _IC)
 
 
 def italian_stem(word: str) -> str:
@@ -119,93 +134,29 @@ def italian_stem(word: str) -> str:
     w = "".join(chars)
     if len(w) <= 2:
         return w.replace("I", "i").replace("U", "u")
-    rv, r1, r2 = _it_regions(w)
-
-    def in_rv(p):
-        return p >= rv
-
-    def in_r2(p):
-        return p >= r2
+    marks = _marks(w, _IT_VOWELS)
+    rv = marks["RV"]
 
     # Step 0: attached pronouns
-    for pron in _IT_PRONOUNS:
-        if w.endswith(pron):
-            base = w[: -len(pron)]
-            if base.endswith(("ando", "endo")) and in_rv(len(base) - 4):
-                w = base
-            elif base.endswith(("ar", "er", "ir")) and in_rv(len(base) - 2):
-                w = base + "e"
-            break
+    m = among(w, _IT_PRONOUNS)
+    if m is not None:
+        base = w[:m[0]]
+        w = replace_among(base, _IT_PRONOUN_BASE, gate=rv) or w
 
+    # Step 1: standard suffixes; Step 2: verb suffixes (only if step 1
+    # removed nothing), setlimit RV
     before = w
-
-    # Step 1: standard suffixes
-    if w.endswith(("azione", "azioni", "atore", "atori")):
-        suf = next(s for s in ("azione", "azioni", "atore", "atori") if w.endswith(s))
-        if in_r2(len(w) - len(suf)):
-            w = w[: -len(suf)]
-            if w.endswith("ic") and in_r2(len(w) - 2):
-                w = w[:-2]
-    elif w.endswith(("logia", "logie")):
-        if in_r2(len(w) - 5):
-            w = w[:-5] + "log"
-    elif w.endswith(("uzione", "uzioni", "usione", "usioni")):
-        if in_r2(len(w) - 6):
-            w = w[:-6] + "u"
-    elif w.endswith(("enza", "enze")):
-        if in_r2(len(w) - 4):
-            w = w[:-4] + "ente"
-    elif w.endswith(("amento", "amenti", "imento", "imenti")):
-        if in_rv(len(w) - 6):
-            w = w[:-6]
-    elif w.endswith("amente"):
-        if len(w) - 6 >= r1:
-            w = w[:-6]
-            if w.endswith("iv") and in_r2(len(w) - 2):
-                w = w[:-2]
-                if w.endswith("at") and in_r2(len(w) - 2):
-                    w = w[:-2]
-            elif w.endswith("abil") and in_r2(len(w) - 4):
-                w = w[:-4]
-            elif w.endswith(("os", "ic")) and in_r2(len(w) - 2):
-                w = w[:-2]
-    elif w.endswith("ità"):
-        if in_r2(len(w) - 3):
-            w = w[:-3]
-            if w.endswith("abil") and in_r2(len(w) - 4):
-                w = w[:-4]
-            elif w.endswith(("ic", "iv")) and in_r2(len(w) - 2):
-                w = w[:-2]
-    elif w.endswith(("ivo", "ivi", "iva", "ive")):
-        if in_r2(len(w) - 3):
-            w = w[:-3]
-            if w.endswith("at") and in_r2(len(w) - 2):
-                w = w[:-2]
-                if w.endswith("ic") and in_r2(len(w) - 2):
-                    w = w[:-2]
-    else:
-        for suf in _IT_STEP1_R2:
-            if w.endswith(suf):
-                if in_r2(len(w) - len(suf)):
-                    w = w[: -len(suf)]
-                break
-
-    # Step 2: verb suffixes (only if step 1 removed nothing)
+    w = _it_step1(w, marks)
     if w == before:
-        # setlimit tomark pV: a region-crossing longer entry never
-        # blocks a shorter in-RV one
-        for suf in _IT_STEP2:
-            if w.endswith(suf) and in_rv(len(w) - len(suf)):
-                w = w[: -len(suf)]
-                break
+        w = replace_among(w, _IT_STEP2, limit=rv) or w
 
     # Step 3a: residual vowel (then a further final i)
-    if w and w[-1] in "aeioàèìò" and in_rv(len(w) - 1):
+    if w and w[-1] in "aeioàèìò" and len(w) - 1 >= rv:
         w = w[:-1]
-        if w.endswith("i") and in_rv(len(w) - 1):
+        if w.endswith("i") and len(w) - 1 >= rv:
             w = w[:-1]
     # Step 3b: the whole ch/gh must sit in RV
-    if w.endswith(("ch", "gh")) and in_rv(len(w) - 2):
+    if w.endswith(("ch", "gh")) and len(w) - 2 >= rv:
         w = w[:-1]
 
     return w.replace("I", "i").replace("U", "u").replace("Y", "y")
@@ -215,141 +166,96 @@ def italian_stem(word: str) -> str:
 # Portuguese
 # ---------------------------------------------------------------------------
 _PT_VOWELS = frozenset("aeiouáéíóúâêô")
-_pt_regions = _make_regions(_PT_VOWELS)
 
-_PT_STEP1_R2 = sorted(
-    [
+_ANTE_AVEL_IVEL = compile_among(["ante", "avel", "ível"])
+_ABIL_IC_IV = compile_among(["abil", "ic", "iv"])
+# Step 1 results: (region, replacement), or an int as in Italian
+_PT_STEP1 = compile_among(
+    [(s, ("R2", "")) for s in (
         "eza", "ezas", "ico", "ica", "icos", "icas", "ismo", "ismos",
         "ável", "ível", "ista", "istas", "oso", "osa", "osos", "osas",
         "amento", "amentos", "imento", "imentos", "adora", "ador",
-        "aça~o", "adoras", "adores", "aço~es", "ante", "antes", "ância",
-    ],
-    key=len,
-    reverse=True,
+        "aça~o", "adoras", "adores", "aço~es", "ante", "antes", "ância")]
+    + [(s, ("R2", "log")) for s in ("logia", "logias")]
+    + [(s, ("R2", "u")) for s in ("uça~o", "uço~es")]
+    + [(s, ("R2", "ente")) for s in ("ência", "ências")]
+    + [("amente", 1), ("mente", 2), ("idade", 3), ("idades", 3)]
+    + [(s, 4) for s in ("iva", "ivo", "ivas", "ivos")]
+    + [("ira", 5), ("iras", 5)]
 )
-_PT_STEP2 = sorted(
-    [
-        "ada", "ida", "ia", "aria", "eria", "iria", "ará", "ara", "erá",
-        "era", "irá", "ava", "asse", "esse", "isse", "aste", "este",
-        "iste", "ei", "arei", "erei", "irei", "am", "iam", "ariam",
-        "eriam", "iriam", "aram", "eram", "iram", "avam", "em", "arem",
-        "erem", "irem", "assem", "essem", "issem", "ado", "ido", "ando",
-        "endo", "indo", "ara~o", "era~o", "ira~o", "ar", "er", "ir",
-        "as", "adas", "idas", "ias", "arias", "erias", "irias", "arás",
-        "erás", "irás", "avas", "es", "ardes", "erdes", "irdes", "ares",
-        "eres", "ires", "asses", "esses", "isses", "astes", "estes",
-        "istes", "is", "ais", "aras", "eras", "eis", "áreis", "areis",
-        "éreis", "ereis", "íreis", "ireis", "ásseis", "ésseis",
-        "ísseis", "áveis", "íeis", "aríeis", "eríeis", "iríeis", "ados",
-        "idos", "amos", "ámos", "íamos", "aríamos", "eríamos",
-        "iríamos", "áramos", "éramos", "íramos", "ávamos",
-        "emos", "aremos", "eremos", "iremos", "ássemos", "êssemos",
-        "íssemos", "imos", "armos", "ermos", "irmos", "eu", "iu", "ou",
-        "ira", "iras",
-    ],
-    key=len,
-    reverse=True,
-)
+_PT_STEP2 = compile_among([
+    "ada", "ida", "ia", "aria", "eria", "iria", "ará", "ara", "erá",
+    "era", "irá", "ava", "asse", "esse", "isse", "aste", "este",
+    "iste", "ei", "arei", "erei", "irei", "am", "iam", "ariam",
+    "eriam", "iriam", "aram", "eram", "iram", "avam", "em", "arem",
+    "erem", "irem", "assem", "essem", "issem", "ado", "ido", "ando",
+    "endo", "indo", "ara~o", "era~o", "ira~o", "ar", "er", "ir",
+    "as", "adas", "idas", "ias", "arias", "erias", "irias", "arás",
+    "erás", "irás", "avas", "es", "ardes", "erdes", "irdes", "ares",
+    "eres", "ires", "asses", "esses", "isses", "astes", "estes",
+    "istes", "is", "ais", "aras", "eras", "eis", "áreis", "areis",
+    "éreis", "ereis", "íreis", "ireis", "ásseis", "ésseis",
+    "ísseis", "áveis", "íeis", "aríeis", "eríeis", "iríeis", "ados",
+    "idos", "amos", "ámos", "íamos", "aríamos", "eríamos",
+    "iríamos", "áramos", "éramos", "íramos", "ávamos",
+    "emos", "aremos", "eremos", "iremos", "ássemos", "êssemos",
+    "íssemos", "imos", "armos", "ermos", "irmos", "eu", "iu", "ou",
+    "ira", "iras",
+])
+_PT_RESIDUAL = compile_among(["os", "a", "i", "o", "á", "í", "ó"])
+
+
+def _pt_step1(w: str, marks: dict) -> str:
+    m = among(w, _PT_STEP1)
+    if m is None:
+        return w
+    i, res = m
+    r2 = marks["R2"]
+    if isinstance(res, tuple):
+        return w[:i] + res[1] if i >= marks[res[0]] else w
+    if res == 5:  # ira(s) -> ir after e, in RV
+        rv = marks["RV"]
+        return w[:i] + "ir" if i >= rv and i >= 1 and w[i - 1] == "e" else w
+    if i < (marks["R1"] if res == 1 else r2):
+        return w
+    w = w[:i]
+    if res == 1:  # amente: then iv(at) / os / ic / ad in R2
+        if w.endswith("iv") and len(w) - 2 >= r2:
+            return _r2_chain(w[:-2], r2, _AT)
+        return _r2_chain(w, r2, _OS_IC_AD)
+    if res == 2:
+        return _r2_chain(w, r2, _ANTE_AVEL_IVEL)
+    if res == 3:
+        return _r2_chain(w, r2, _ABIL_IC_IV)
+    return _r2_chain(w, r2, _AT)
 
 
 def portuguese_stem(word: str) -> str:
     w = word.lower().replace("ã", "a~").replace("õ", "o~")
-    rv, r1, r2 = _pt_regions(w)
+    marks = _marks(w, _PT_VOWELS)
+    rv = marks["RV"]
 
-    def in_rv(p):
-        return p >= rv
-
-    def in_r2(p):
-        return p >= r2
-
+    # Step 1: standard suffixes; Step 2: verb suffixes (only if step 1
+    # removed nothing) — the published program matches under
+    # `setlimit tomark pV`, so a region-crossing longer entry never
+    # blocks a shorter in-RV one
     before = w
-
-    # Step 1: standard suffixes
-    if w.endswith(("logia", "logias")):
-        suf = "logias" if w.endswith("logias") else "logia"
-        if in_r2(len(w) - len(suf)):
-            w = w[: -len(suf)] + "log"
-    elif w.endswith(("uça~o", "uço~es")):
-        suf = "uço~es" if w.endswith("uço~es") else "uça~o"
-        if in_r2(len(w) - len(suf)):
-            w = w[: -len(suf)] + "u"
-    elif w.endswith(("ência", "ências")):
-        suf = "ências" if w.endswith("ências") else "ência"
-        if in_r2(len(w) - len(suf)):
-            w = w[: -len(suf)] + "ente"
-    elif w.endswith("amente"):
-        if len(w) - 6 >= r1:
-            w = w[:-6]
-            if w.endswith("iv") and in_r2(len(w) - 2):
-                w = w[:-2]
-                if w.endswith("at") and in_r2(len(w) - 2):
-                    w = w[:-2]
-            elif w.endswith(("os", "ic", "ad")) and in_r2(len(w) - 2):
-                w = w[:-2]
-    elif w.endswith("mente"):
-        if in_r2(len(w) - 5):
-            w = w[:-5]
-            for p in ("ante", "avel", "ível"):
-                if w.endswith(p) and in_r2(len(w) - 4):
-                    w = w[:-4]
-                    break
-    elif w.endswith(("idade", "idades")):
-        suf = "idades" if w.endswith("idades") else "idade"
-        if in_r2(len(w) - len(suf)):
-            w = w[: -len(suf)]
-            for p in ("abil", "ic", "iv"):
-                if w.endswith(p) and in_r2(len(w) - len(p)):
-                    w = w[: -len(p)]
-                    break
-    elif w.endswith(("iva", "ivo", "ivas", "ivos")):
-        suf = next(s for s in ("ivas", "ivos", "iva", "ivo") if w.endswith(s))
-        if in_r2(len(w) - len(suf)):
-            w = w[: -len(suf)]
-            if w.endswith("at") and in_r2(len(w) - 2):
-                w = w[:-2]
-    elif w.endswith(("ira", "iras")):
-        suf = "iras" if w.endswith("iras") else "ira"
-        i = len(w) - len(suf)
-        if in_rv(i) and i >= 1 and w[i - 1] == "e":
-            w = w[:i] + "ir"
-    else:
-        for suf in _PT_STEP1_R2:
-            if w.endswith(suf):
-                if in_r2(len(w) - len(suf)):
-                    w = w[: -len(suf)]
-                break
-
-    step1_removed = w != before
-
-    # Step 2: verb suffixes (only if step 1 removed nothing) — the
-    # published program matches under `setlimit tomark pV`, so a
-    # region-crossing longer entry never blocks a shorter in-RV one
-    if not step1_removed:
-        for suf in _PT_STEP2:
-            if w.endswith(suf) and in_rv(len(w) - len(suf)):
-                w = w[: -len(suf)]
-                break
-
-    altered = w != before
+    w = _pt_step1(w, marks)
+    if w == before:
+        w = replace_among(w, _PT_STEP2, limit=rv) or w
 
     # Step 3 / Step 4
-    if altered:
-        if w.endswith("i") and in_rv(len(w) - 1) and len(w) >= 2 and w[-2] == "c":
+    if w != before:
+        if w.endswith("i") and len(w) - 1 >= rv and len(w) >= 2 and w[-2] == "c":
             w = w[:-1]
     else:
-        for suf in ("os", "a", "i", "o", "á", "í", "ó"):
-            if w.endswith(suf):
-                if in_rv(len(w) - len(suf)):
-                    w = w[: -len(suf)]
-                break
+        w = replace_among(w, _PT_RESIDUAL, gate=rv) or w
 
     # Step 5: ( ['e'|'é'|'ê'] RV delete + gu/ci fix ) OR ( ['ç'] <- 'c' )
     # — an or-chain: a successful e-removal skips the cedilla rewrite
-    if w and w[-1] in "eéê" and in_rv(len(w) - 1):
+    if w and w[-1] in "eéê" and len(w) - 1 >= rv:
         w = w[:-1]
-        if w.endswith("gu") and in_rv(len(w) - 1):
-            w = w[:-1]
-        elif w.endswith("ci") and in_rv(len(w) - 1):
+        if w.endswith(("gu", "ci")) and len(w) - 1 >= rv:
             w = w[:-1]
     elif w.endswith("ç"):
         w = w[:-1] + "c"
@@ -363,8 +269,6 @@ def portuguese_stem(word: str) -> str:
 # verb_suffix, then residual_suffix; forward cleaning pass strips
 # accents and the ela geminada dot. Tables in snowball_tables.py.
 # ---------------------------------------------------------------------------
-from .snowball_tables import CA_PRON, CA_RESID, CA_STD, CA_VERB
-
 _CA_VOWELS = frozenset("aeiou\u00e0\u00e1\u00e8\u00e9\u00ed\u00f2\u00f3\u00f9\u00fa\u00ef\u00fc")
 
 _CA_CLEAN = str.maketrans(
@@ -373,79 +277,36 @@ _CA_CLEAN = str.maketrans(
      "\u00f3": "o", "\u00f9": "u", "\u00fa": "u", "\u00fc": "u",
      "\u00b7": None}
 )
-
-
-def _ca_regions(w: str) -> tuple[int, int]:
-    n = len(w)
-
-    def is_v(i):
-        return w[i] in _CA_VOWELS
-
-    def after_vc(start):
-        for i in range(start + 1, n):
-            if not is_v(i) and is_v(i - 1):
-                return i + 1
-        return n
-
-    p1 = after_vc(0)
-    p2 = after_vc(p1 - 1) if p1 < n else n
-    return p1, p2
-
-
-def _ca_find(w: str, among):
-    lens, by_len = among
-    n = len(w)
-    for ln in lens:
-        if ln > n:
-            continue
-        res = by_len[ln].get(w[n - ln:])
-        if res is not None:
-            return w[n - ln:], res
-    return None
+# standard_suffix result -> (region, replacement)
+_CA_STD_ACT = {1: ("R1", ""), 2: ("R2", ""), 3: ("R2", "log"),
+               4: ("R2", "ic"), 5: ("R1", "c")}
 
 
 def catalan_stem(word: str) -> str:
     w = word.lower()
-    p1, p2 = _ca_regions(w)
+    p1, p2 = regions(w, _CA_VOWELS)
+    marks = {"R1": p1, "R2": p2}
 
     # attached pronouns (R1 delete)
-    m = _ca_find(w, CA_PRON)
+    m = among(w, CA_PRON, gate=p1)
     if m is not None:
-        suf, _res = m
-        if len(w) - len(suf) >= p1:
-            w = w[: len(w) - len(suf)]
+        w = w[:m[0]]
 
     # standard suffixes; verb suffixes only if no standard matched
-    std = False
-    m = _ca_find(w, CA_STD)
-    if m is not None:
-        suf, res = m
-        start = len(w) - len(suf)
-        if res == 1 and start >= p1:
-            w, std = w[:start], True
-        elif res == 2 and start >= p2:
-            w, std = w[:start], True
-        elif res == 3 and start >= p2:
-            w, std = w[:start] + "log", True
-        elif res == 4 and start >= p2:
-            w, std = w[:start] + "ic", True
-        elif res == 5 and start >= p1:
-            w, std = w[:start] + "c", True
-    if not std:
-        m = _ca_find(w, CA_VERB)
-        if m is not None:
-            suf, res = m
-            # branch 2 ('ando') needs R2; the rest R1
-            if len(w) - len(suf) >= (p2 if res == 2 else p1):
-                w = w[: len(w) - len(suf)]
+    m = among(w, CA_STD)
+    gate, repl = _CA_STD_ACT[m[1]] if m is not None else (None, "")
+    if m is not None and m[0] >= marks[gate]:
+        w = w[:m[0]] + repl
+    else:
+        m = among(w, CA_VERB)
+        # branch 2 ('ando') needs R2; the rest R1
+        if m is not None and m[0] >= (p2 if m[1] == 2 else p1):
+            w = w[:m[0]]
 
     # residual suffix
-    m = _ca_find(w, CA_RESID)
+    m = among(w, CA_RESID, gate=p1)
     if m is not None:
-        suf, res = m
-        start = len(w) - len(suf)
-        if start >= p1:
-            w = w[:start] + ("ic" if res == 2 else "")
+        w = w[:m[0]] + ("ic" if m[1] == 2 else "")
 
     # cleaning: deaccent + drop ela geminada dot
     return w.translate(_CA_CLEAN)
@@ -459,27 +320,10 @@ def catalan_stem(word: str) -> str:
 # verb_suffix (RV-limited, consonant/u guard) if no standard suffix
 # was removed -> vowel_suffix (RV). Tables in snowball_tables.py.
 # ---------------------------------------------------------------------------
-from .snowball_rt import BackwardWord, apply_b, find_b
-from .snowball_tables import RO_COMBO, RO_STD, RO_STEP0, RO_VERB, RO_VOWEL
-
 _RO_VOWELS = frozenset("aeiouâîă")
-_ro_regions = _make_regions(_RO_VOWELS)
 
 _RO_COMBO_REPL = {1: "abil", 2: "ibil", 3: "iv", 4: "ic", 5: "at", 6: "it"}
 _RO_STEP0_REPL = {1: "", 2: "a", 3: "e", 4: "i", 5: "i", 6: "at", 7: "aţi"}
-
-
-def _ro_find(w: str, among, limit: int = 0):
-    """Longest suffix of w in `among` not reaching left of `limit`."""
-    lens, by_len = among
-    n = len(w)
-    for ln in lens:
-        if ln > n - limit:
-            continue
-        res = by_len[ln].get(w[n - ln:])
-        if res is not None:
-            return w[n - ln:], res
-    return None
 
 
 def romanian_stem(word: str) -> str:
@@ -492,65 +336,52 @@ def romanian_stem(word: str) -> str:
             chars[i] = chars[i].upper()
     w = "".join(chars)
 
-    pV, p1, p2 = _ro_regions(w)
+    pV = rv_spanish(w, _RO_VOWELS)
+    p1, p2 = regions(w, _RO_VOWELS)
 
     # step_0: plural/article removal in R1
-    m = _ro_find(w, RO_STEP0)
+    m = among(w, RO_STEP0, gate=p1)
     if m is not None:
-        suf, res = m
-        start = len(w) - len(suf)
-        if start >= p1 and not (res == 5 and w.endswith("ab" + suf)):
+        start, res = m
+        if not (res == 5 and w.endswith("ab" + w[start:])):
             w = w[:start] + _RO_STEP0_REPL[res]
 
     # standard_suffix: repeat combo (R1; `test` semantics - matching
     # restarts from the full new end each iteration), then main (R2)
     std_removed = False
-    while True:
-        m = _ro_find(w, RO_COMBO)
-        if m is None:
-            break
-        suf, res = m
-        start = len(w) - len(suf)
-        if start < p1:
-            break
-        w = w[:start] + _RO_COMBO_REPL[res]
+    while (m := among(w, RO_COMBO, gate=p1)) is not None:
+        w = w[:m[0]] + _RO_COMBO_REPL[m[1]]
         std_removed = True
-    m = _ro_find(w, RO_STD)
+    m = among(w, RO_STD, gate=p2)
     if m is not None:
-        suf, res = m
-        start = len(w) - len(suf)
-        if start >= p2:
-            if res == 1:
-                w = w[:start]
+        start, res = m
+        if res == 1:
+            w = w[:start]
+            std_removed = True
+        elif res == 2:  # 'iune'/'iuni' after ţ -> 't'
+            if w[:start].endswith("ţ"):
+                w = w[:start - 1] + "t"
                 std_removed = True
-            elif res == 2:  # 'iune'/'iuni' after ţ -> 't'
-                if w[:start].endswith("ţ"):
-                    w = w[:start - 1] + "t"
-                    std_removed = True
-            else:  # 3: unify -ism/-ist family to 'ist'
-                w = w[:start] + "ist"
-                std_removed = True
+        else:  # 3: unify -ism/-ist family to 'ist'
+            w = w[:start] + "ist"
+            std_removed = True
 
     # verb_suffix: only when no standard suffix was removed; matching
     # limited to RV; branch 1 requires a consonant or 'u' before
     if not std_removed:
-        m = _ro_find(w, RO_VERB, pV)
+        m = among(w, RO_VERB, limit=pV)
         if m is not None:
-            suf, res = m
-            start = len(w) - len(suf)
-            if res == 2:
-                w = w[:start]
+            start, res = m
             # branch 1 guard: preceding char is a consonant or 'u';
             # the RV setlimit applies to the guard's movement too, so
             # the guard char itself must sit inside RV
-            elif start - 1 >= pV and (w[start - 1] not in _RO_VOWELS or w[start - 1] == "u"):
+            if res == 2 or (start - 1 >= pV and (
+                    w[start - 1] not in _RO_VOWELS or w[start - 1] == "u")):
                 w = w[:start]
 
     # vowel_suffix: residual vowel in RV
-    m = _ro_find(w, RO_VOWEL)
+    m = among(w, RO_VOWEL, gate=pV)
     if m is not None:
-        suf, _res = m
-        if len(w) - len(suf) >= pV:
-            w = w[: len(w) - len(suf)]
+        w = w[:m[0]]
 
     return w.lower()

@@ -1,156 +1,175 @@
-"""Minimal Snowball backward-mode runtime.
+"""Snowball runtime shared by every stemmer.
 
-Implements the published Snowball execution semantics (snowballstem.org
-manual) needed by the table-driven stemmers: a backward cursor that
-starts at the word end and persists across routine calls, longest-match
-`among` over suffix tables with NO retry of shorter entries when a
-branch's region gate fails, region marks (pV/p1/p2) fixed at
-mark_regions time, and delete / replace actions that leave the cursor
-at the left edge of the replaced region (inserted text is never
-rescanned).
+Every Snowball program (snowballstem.org/compiler/snowman.html) is
+built from two ideas, and this module is their one implementation:
+
+- region marks: R1/R2 (`gopast v gopast non-v`, optionally floored at
+  3) and the RV rules more than one language shares (after the first
+  vowel; the Spanish-family rule on the first two letters);
+- the longest-match `among` over a compiled suffix table, in its two
+  forms. `setlimit tomark X for ([substring] among ...)` restricts the
+  match to the region up front, so a shorter entry wins over a longer
+  one that crosses the mark (`limit=`). The gated form matches first
+  and checks the region in the chosen branch, so a failed gate fails
+  the step and no shorter entry is tried (`gate=`). An entry may carry
+  a condition routine, checked during the search like Snowball's
+  `among` routines. `among_prefix` is the same search in forward mode.
+
+`BackwardWord` adds the backward-mode cursor for the programs that
+chain several steps over one persistent cursor: a replacement is never
+rescanned.
 
 The per-language suffix tables in the sibling modules are transcribed
-from the published Snowball programs (verified byte-exact against the
-Snowball 2.x implementations compiled into PostgreSQL 15's
-dict_snowball.so — the same generated sources Lucene 8.x runs for the
-reference, /root/reference/deps.edn).
+from the published Snowball programs and checked word by word against
+the Snowball 2.x implementations compiled into PostgreSQL 15's
+dict_snowball.so (the generated sources Lucene 8.x runs for the
+reference) with tools/snowball_oracle.py; DEVIATIONS.md §3 says which
+languages match and where the others differ.
 """
 
 from __future__ import annotations
 
 
-def make_regions_spanish(vowels: frozenset):
-    """Standard romance-style (pV, p1, p2) marker.
-
-    pV: if the 2nd letter is a consonant, after the next vowel; if the
-    first two letters are vowels, after the next consonant; else
-    (consonant+vowel) position 3.  p1/p2: after the 1st/2nd
-    vowel-followed-by-consonant sequence.
-    """
-
-    def regions(w: str) -> tuple[int, int, int]:
-        n = len(w)
-
-        def is_v(i):
-            return w[i] in vowels
-
-        pV = n
-        if n >= 2:
-            if is_v(0):
-                if not is_v(1):          # v non-v: gopast v
-                    for i in range(2, n):
-                        if is_v(i):
-                            pV = i + 1
-                            break
-                else:                    # v v: gopast non-v
-                    for i in range(2, n):
-                        if not is_v(i):
-                            pV = i + 1
-                            break
-            else:
-                if not is_v(1):          # non-v non-v: gopast v
-                    for i in range(2, n):
-                        if is_v(i):
-                            pV = i + 1
-                            break
-                else:                    # non-v v: next
-                    if n >= 3:
-                        pV = 3
-
-        def after_vc(start):
-            for i in range(start + 1, n):
-                if not is_v(i) and is_v(i - 1):
-                    return i + 1
-            return n
-
-        p1 = after_vc(0)
-        p2 = after_vc(p1 - 1) if p1 < n else n
-        return pV, p1, p2
-
-    return regions
+def gopast(w: str, vowels, i: int = 0) -> int:
+    """`gopast v gopast non-v` from i: the position just after the first
+    non-vowel that follows a vowel at or after i; len(w) if none."""
+    n = len(w)
+    while i < n and w[i] not in vowels:
+        i += 1
+    i += 1
+    while i < n and w[i] in vowels:
+        i += 1
+    return i + 1 if i < n else n
 
 
-class BackwardWord:
-    """Word being stemmed in backward mode. `cursor` is the index of
-    the left edge of the consumed (matched) region; the stemmable
-    text is s[:cursor]."""
+def regions(w: str, vowels, floor: int = 0) -> tuple[int, int]:
+    """(R1, R2), R2 marked from the unfloored R1; `floor` then raises R1
+    to at least that position (3 in German, Dutch, Estonian and the
+    Scandinavian programs). A program whose R1 starts elsewhere
+    (Lithuanian, English's gener/commun/arsen) marks it with `gopast`."""
+    r1 = gopast(w, vowels)
+    return max(r1, floor), gopast(w, vowels, r1)
 
-    __slots__ = ("s", "cursor", "pV", "p1", "p2")
 
-    def __init__(self, s: str, pV: int = 0, p1: int = 0, p2: int = 0):
-        self.s = s
-        self.cursor = len(s)
-        self.pV, self.p1, self.p2 = pV, p1, p2
+def after_vowel(w: str, vowels, i: int = 0) -> int:
+    """`gopast v` from i: just after the first vowel at or after i;
+    len(w) if none. RV of Russian, Armenian and Irish is
+    after_vowel(w, vowels)."""
+    n = len(w)
+    while i < n and w[i] not in vowels:
+        i += 1
+    return i + 1 if i < n else n
 
-    # region gates: matched suffix must start at or after the mark
-    def gate(self, name: str | None, start: int) -> bool:
-        if name is None:
-            return True
-        if name == "RV":
-            return start >= self.pV
-        if name == "R1":
-            return start >= self.p1
-        if name == "R2":
-            return start >= self.p2
-        raise ValueError(name)
+
+def after_nonvowel(w: str, vowels, i: int = 0) -> int:
+    """`gopast non-v` from i."""
+    n = len(w)
+    while i < n and w[i] in vowels:
+        i += 1
+    return i + 1 if i < n else n
+
+
+def rv_spanish(w: str, vowels) -> int:
+    """RV of the Spanish-family programs (Spanish, Italian, Portuguese,
+    Romanian, Basque): if the second letter is a consonant, after the
+    next vowel; if the first two letters are vowels, after the next
+    consonant; otherwise (consonant, vowel) after the third letter."""
+    if len(w) < 3:
+        return len(w)
+    if w[1] not in vowels:
+        return after_vowel(w, vowels, 2)
+    if w[0] in vowels:
+        return after_nonvowel(w, vowels, 2)
+    return 3
 
 
 def compile_among(entries):
-    """entries: iterable of (suffix, result). Returns a matcher usable
-    with among_b. Longest-match via length-bucketed dicts."""
-    by_len: dict[int, dict[str, int]] = {}
-    for suf, res in entries:
-        by_len.setdefault(len(suf), {})[suf] = res
-    lens = sorted(by_len, reverse=True)
-    return lens, by_len
+    """A suffix table for `among`. Entries are non-empty bare suffixes
+    (result "" = delete), (suffix, result) pairs, or (suffix, result,
+    test) triples: test(w, start) is the entry's condition routine,
+    checked during the search; when it fails the search goes on to
+    shorter entries, as Snowball does for an among entry with a
+    routine."""
+    by_len: dict[int, dict[str, object]] = {}
+    tests = {}
+    for e in entries:
+        if isinstance(e, str):
+            e = (e, "")
+        by_len.setdefault(len(e[0]), {})[e[0]] = e[1]
+        if len(e) > 2:
+            tests[e[0]] = e[2]
+    # the last letters of the entries: most words end in none of them
+    lasts = frozenset(s[-1] for d in by_len.values() for s in d)
+    return sorted(by_len, reverse=True), by_len, tests, lasts
 
 
-def find_b(word: BackwardWord, among, limit: int = 0) -> tuple[str, int] | None:
-    """Longest suffix of s[:cursor] present in `among`; returns
-    (suffix, result) without consuming. `limit` implements Snowball's
-    `setlimit tomark X for [substring]`: entries reaching left of
-    `limit` can't match, so shorter in-limit entries win instead."""
-    lens, by_len = among
-    text = word.s
-    c = word.cursor
+def among(w: str, table, limit: int = 0, gate: int = 0):
+    """Longest entry of `table` ending `w`: (start, result), or None.
+
+    limit: setlimit form: an entry starting before `limit` cannot
+    match, so a shorter one wins. gate: gated form: when the longest
+    match starts before `gate`, the step fails (None); no shorter entry
+    is tried."""
+    lens, by_len, tests, lasts = table
+    if not w or w[-1] not in lasts:
+        return None
+    n = len(w)
     for ln in lens:
-        if ln > c - limit:
-            continue
-        suf = text[c - ln:c]
-        res = by_len[ln].get(suf)
-        if res is not None:
-            return suf, res
+        if ln <= n - limit:
+            suf = w[n - ln:]
+            res = by_len[ln].get(suf)
+            if res is not None and (not tests or suf not in tests
+                                    or tests[suf](w, n - ln)):
+                return None if n - ln < gate else (n - ln, res)
     return None
 
 
-def apply_b(word: BackwardWord, suffix: str, replacement: str) -> None:
-    """Replace the matched suffix (ending at cursor) with
-    `replacement`; cursor moves to the left edge of the replacement."""
-    start = word.cursor - len(suffix)
-    word.s = word.s[:start] + replacement + word.s[word.cursor:]
-    word.cursor = start
+def among_prefix(w: str, table, i: int = 0):
+    """Forward-mode `among`: the longest entry of `table` that starts at
+    i: (end, result), or None."""
+    for ln in table[0]:
+        res = table[1][ln].get(w[i:i + ln])
+        if res is not None:
+            return i + ln, res
+    return None
 
 
-def run_among_b(word: BackwardWord, among, actions, setlimit: str | None = None) -> bool:
-    """One `[substring] among(...)` step: longest match, gate check,
-    delete/replace. Gate failure fails the whole step (no shorter-entry
-    retry), matching generated-code semantics for branch conditions.
-    `setlimit` instead restricts matching to the named region up front
-    (shorter entries win over region-crossing longer ones)."""
-    limit = 0
-    if setlimit is not None:
-        limit = {"RV": word.pV, "R1": word.p1, "R2": word.p2}[setlimit]
-    m = find_b(word, among, limit)
-    if m is None:
-        return False
-    suf, res = m
-    gate, repl = actions[res]
-    if not word.gate(gate, word.cursor - len(suf)):
-        return False
-    apply_b(word, suf, repl)
-    return True
+def replace_among(w: str, table, limit: int = 0, gate: int = 0) -> str | None:
+    """One `[substring] among (... <- result)` step: `w` with its longest
+    match replaced by the entry's result string, or None if the step
+    fails (see `among` for limit and gate)."""
+    m = among(w, table, limit, gate)
+    return None if m is None else w[:m[0]] + m[1]
 
 
-def repeat_b(word: BackwardWord, among, actions, setlimit: str | None = None) -> None:
-    while run_among_b(word, among, actions, setlimit):
-        pass
+class BackwardWord:
+    """A word stemmed in backward mode: `head` is the text left of the
+    cursor (still matchable), `tail` the text the steps have replaced
+    (never rescanned). `marks` maps a region name to its position."""
+
+    __slots__ = ("head", "tail", "marks")
+
+    def __init__(self, s: str, pV: int = 0, p1: int = 0, p2: int = 0):
+        self.head, self.tail = s, ""
+        self.marks = {None: 0, "RV": pV, "R1": p1, "R2": p2}
+
+    def step(self, table, actions, setlimit: str | None = None) -> bool:
+        """One `[substring] among(...)` step. `actions` maps each result
+        to (gate region, replacement); `setlimit` names the region the
+        match is limited to."""
+        m = among(self.head, table, self.marks[setlimit])
+        if m is None:
+            return False
+        start, res = m
+        gate, repl = actions[res]
+        if start < self.marks[gate]:
+            return False
+        self.head, self.tail = self.head[:start], repl + self.tail
+        return True
+
+    def repeat(self, table, actions, setlimit: str | None = None) -> None:
+        while self.step(table, actions, setlimit):
+            pass
+
+    def __str__(self) -> str:
+        return self.head + self.tail

@@ -11,131 +11,91 @@ DERIVATIONAL additionally requires R2.
 
 from __future__ import annotations
 
+from .snowball_rt import after_vowel, among, compile_among, regions
+
 _VOWELS = frozenset("аеиоуыэюя")
 
-_PERFECTIVE_1 = ("вшись", "вши", "в")          # require preceding а/я
-_PERFECTIVE_2 = ("ившись", "ывшись", "ивши", "ывши", "ив", "ыв")
-_REFLEXIVE = ("ся", "сь")
-_ADJECTIVE = (
+
+def _table(group1, group2=()):
+    """Group-1 endings (result "а") need а or я right before them, inside
+    RV; the а/я itself is kept."""
+    return compile_among([(s, "а") for s in group1] + list(group2))
+
+
+_PERFECTIVE = _table(("вшись", "вши", "в"),
+                     ("ившись", "ывшись", "ивши", "ывши", "ив", "ыв"))
+_REFLEXIVE = _table((), ("ся", "сь"))
+_ADJECTIVE = _table((), (
     "ими", "ыми", "его", "ого", "ему", "ому", "ее", "ие", "ые", "ое",
     "ей", "ий", "ый", "ой", "ем", "им", "ым", "ом", "их", "ых", "ую",
     "юю", "ая", "яя", "ою", "ею",
-)
-_PARTICIPLE_1 = ("ем", "нн", "вш", "ющ", "щ")  # require preceding а/я
-_PARTICIPLE_2 = ("ивш", "ывш", "ующ")
-_VERB_1 = (
+))
+_PARTICIPLE = _table(("ем", "нн", "вш", "ющ", "щ"), ("ивш", "ывш", "ующ"))
+_VERB = _table((
     "ете", "йте", "ешь", "нно", "ла", "на", "ли", "ем", "ло", "но",
     "ет", "ют", "ны", "ть", "й", "л", "н",
-)  # require preceding а/я
-_VERB_2 = (
+), (
     "ейте", "уйте", "ила", "ыла", "ена", "ите", "или", "ыли", "ило",
     "ыло", "ено", "ует", "уют", "ены", "ить", "ыть", "ишь", "ей", "уй",
     "ил", "ыл", "им", "ым", "ен", "ят", "ит", "ыт", "ую", "ю",
-)
-_NOUN = (
+))
+_NOUN = _table((), (
     "иями", "ями", "ами", "ией", "иям", "ием", "иях", "ию", "ья", "ия",
     "ей", "ой", "ий", "ям", "ем", "ам", "ом", "ах", "ях", "ью", "ие",
     "ье", "еи", "ии", "а", "ев", "ов", "е", "и", "й", "о", "у", "ы",
     "ь", "ю", "я",
-)
+))
+_DERIVATIONAL = _table((), ("ость", "ост"))
+_SUPERLATIVE = _table((), ("ейше", "ейш"))
 
 
-def _longest(w: str, rv: int, suffixes) -> str | None:
-    best = None
-    for suf in suffixes:
-        if w.endswith(suf) and len(w) - len(suf) >= rv:
-            if best is None or len(suf) > len(best):
-                best = suf
-    return best
-
-
-def _strip_group1(w: str, rv: int, suffixes) -> str | None:
-    """Group-1 endings require а or я immediately before the suffix; the
-    а/я itself is kept."""
-    best = None
-    for suf in suffixes:
-        if w.endswith(suf):
-            i = len(w) - len(suf)
-            if i - 1 >= rv and i >= 1 and w[i - 1] in "ая":
-                if best is None or len(suf) > len(best):
-                    best = suf
-    return best
+def _strip(w: str, rv: int, table) -> str | None:
+    """One RV-limited among step: the longest entry inside RV is
+    deleted; a group-1 entry without а/я before it fails the step."""
+    m = among(w, table, limit=rv)
+    if m is None:
+        return None
+    start, res = m
+    if res and not (start - 1 >= rv and w[start - 1] in "ая"):
+        return None
+    return w[:start]
 
 
 def russian_stem(word: str) -> str:
     w = word.lower().replace("ё", "е")
-    rv = len(w)
-    for i, c in enumerate(w):
-        if c in _VOWELS:
-            rv = i + 1
-            break
-    # R2
-    r1 = len(w)
-    for i in range(1, len(w)):
-        if w[i] not in _VOWELS and w[i - 1] in _VOWELS:
-            r1 = i + 1
-            break
-    r2 = len(w)
-    for i in range(r1 + 1, len(w)):
-        if w[i] not in _VOWELS and w[i - 1] in _VOWELS:
-            r2 = i + 1
-            break
+    rv = after_vowel(w, _VOWELS)
+    r2 = regions(w, _VOWELS)[1]
 
     # Step 1: perfective gerund, else reflexive + adjectival/verb/noun
-    suf = _strip_group1(w, rv, _PERFECTIVE_1)
-    g2 = _longest(w, rv, _PERFECTIVE_2)
-    if g2 and (suf is None or len(g2) > len(suf)):
-        suf = g2
-    if suf:
-        w = w[: -len(suf)]
+    w2 = _strip(w, rv, _PERFECTIVE)
+    if w2 is not None:
+        w = w2
     else:
-        r = _longest(w, rv, _REFLEXIVE)
-        if r:
-            w = w[: -len(r)]
+        w = _strip(w, rv, _REFLEXIVE) or w
         # adjectival = adjective, optionally preceded by participle
-        adj = _longest(w, rv, _ADJECTIVE)
-        if adj:
-            w = w[: -len(adj)]
-            p1 = _strip_group1(w, rv, _PARTICIPLE_1)
-            p2 = _longest(w, rv, _PARTICIPLE_2)
-            if p2 and (p1 is None or len(p2) > len(p1)):
-                p1 = p2
-            if p1:
-                w = w[: -len(p1)]
+        w2 = _strip(w, rv, _ADJECTIVE)
+        if w2 is not None:
+            w = _strip(w2, rv, _PARTICIPLE) or w2
         else:
-            v1 = _strip_group1(w, rv, _VERB_1)
-            v2 = _longest(w, rv, _VERB_2)
-            if v2 and (v1 is None or len(v2) > len(v1)):
-                v1 = v2
-            if v1:
-                w = w[: -len(v1)]
-            else:
-                n = _longest(w, rv, _NOUN)
-                if n:
-                    w = w[: -len(n)]
+            w = _strip(w, rv, _VERB) or _strip(w, rv, _NOUN) or w
 
     # Step 2: final и
     if w.endswith("и") and len(w) - 1 >= rv:
         w = w[:-1]
 
     # Step 3: derivational (ость/ост) in R2
-    for suf in ("ость", "ост"):
-        if w.endswith(suf) and len(w) - len(suf) >= r2:
-            w = w[: -len(suf)]
-            break
+    m = among(w, _DERIVATIONAL, gate=r2)
+    if m is not None:
+        w = w[:m[0]]
 
     # Step 4: an or-chain — undouble нн, OR strip the superlative
     # (then undouble нн), OR strip a soft sign; only one branch runs
     if w.endswith("нн") and len(w) - 1 >= rv:
         w = w[:-1]
-    else:
-        for suf in ("ейше", "ейш"):
-            if w.endswith(suf) and len(w) - len(suf) >= rv:
-                w = w[: -len(suf)]
-                if w.endswith("нн") and len(w) - 1 >= rv:
-                    w = w[:-1]
-                break
-        else:
-            if w.endswith("ь") and len(w) - 1 >= rv:
-                w = w[:-1]
+    elif (w2 := _strip(w, rv, _SUPERLATIVE)) is not None:
+        w = w2
+        if w.endswith("нн") and len(w) - 1 >= rv:
+            w = w[:-1]
+    elif w.endswith("ь") and len(w) - 1 >= rv:
+        w = w[:-1]
     return w

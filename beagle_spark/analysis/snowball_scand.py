@@ -14,40 +14,23 @@ step.
 
 from __future__ import annotations
 
+from .snowball_rt import among, compile_among, regions, replace_among
+
 _DA_VOWELS = frozenset("aeiouyæåø")
 _NO_VOWELS = frozenset("aeiouyæåø")
 _SV_VOWELS = frozenset("aeiouyäåö")
 
-
-def _r1(w: str, vowels: frozenset) -> int:
-    """Start of R1, adjusted so at least 3 chars precede it."""
-    r1 = len(w)
-    for i in range(1, len(w)):
-        if w[i] not in vowels and w[i - 1] in vowels:
-            r1 = i + 1
-            break
-    return max(r1, 3)
-
-
-def _longest_in_r1(w: str, r1: int, suffixes) -> str | None:
-    for suf in suffixes:  # pre-sorted longest-first
-        if w.endswith(suf) and len(w) - len(suf) >= r1:
-            return suf
-    return None
-
-
-_DA_STEP1 = sorted(
-    [
-        "hed", "ethed", "ered", "e", "erede", "ende", "erende", "ene",
-        "erne", "ere", "en", "heden", "eren", "er", "heder", "erer",
-        "heds", "es", "endes", "erendes", "enes", "ernes", "eres",
-        "ens", "hedens", "erens", "ers", "ets", "erets", "et", "eret",
-    ],
-    key=len,
-    reverse=True,
-)
+# Every step is a setlimit-R1 among. In step 1 the bare 's' (result
+# "s") also needs a valid s-ending before it.
+_DA_STEP1 = compile_among([
+    "hed", "ethed", "ered", "e", "erede", "ende", "erende", "ene",
+    "erne", "ere", "en", "heden", "eren", "er", "heder", "erer",
+    "heds", "es", "endes", "erendes", "enes", "ernes", "eres",
+    "ens", "hedens", "erens", "ers", "ets", "erets", "et", "eret",
+    ("s", "s"),
+])
 _DA_S_ENDING = frozenset("abcdfghjklmnoprtvyzå")
-_DA_STEP3 = sorted(["ig", "lig", "elig", "els"], key=len, reverse=True)
+_DA_STEP3 = compile_among(["ig", "lig", "elig", "els", ("løst", "løs")])
 
 
 def _da_step2(w: str, r1: int) -> str:
@@ -61,28 +44,22 @@ def danish_stem(word: str) -> str:
     w = word.lower()
     if len(w) <= 2:
         return w
-    r1 = _r1(w, _DA_VOWELS)
+    r1 = regions(w, _DA_VOWELS, floor=3)[0]
 
     # step 1
-    suf = _longest_in_r1(w, r1, _DA_STEP1)
-    if suf:
-        w = w[: -len(suf)]
-    elif w.endswith("s") and len(w) - 1 >= r1 and len(w) >= 2 and w[-2] in _DA_S_ENDING:
-        w = w[:-1]
+    m = among(w, _DA_STEP1, limit=r1)
+    if m is not None and (m[1] != "s" or w[-2] in _DA_S_ENDING):
+        w = w[:m[0]]
 
     # step 2
     w = _da_step2(w, r1)
 
-    # step 3
+    # step 3: 'igst' -> 'ig', then løst -> løs or delete + step 2
     if w.endswith("igst"):
         w = w[:-2]
-    if w.endswith("løst") and len(w) - 4 >= r1:
-        w = w[:-1]
-    else:
-        suf = _longest_in_r1(w, r1, _DA_STEP3)
-        if suf:
-            w = w[: -len(suf)]
-            w = _da_step2(w, r1)
+    m = among(w, _DA_STEP3, limit=r1)
+    if m is not None:
+        w = w[:m[0]] + m[1] if m[1] else _da_step2(w[:m[0]], r1)
 
     # step 4: undouble final consonants in R1
     if (
@@ -95,99 +72,75 @@ def danish_stem(word: str) -> str:
     return w
 
 
-_NO_STEP1 = sorted(
-    [
-        "a", "e", "ede", "ande", "ende", "ane", "ene", "hetene", "en",
-        "heten", "ar", "er", "heter", "as", "es", "edes", "endes",
-        "enes", "hetenes", "ens", "hetens", "ers", "ets", "et", "het",
-        "ast",
-    ],
-    key=len,
-    reverse=True,
-)
+# step 1: 'erte'/'ert' -> 'er'; bare 's' needs a valid s-ending (or k
+# after a non-vowel)
+_NO_STEP1 = compile_among([
+    "a", "e", "ede", "ande", "ende", "ane", "ene", "hetene", "en",
+    "heten", "ar", "er", "heter", "as", "es", "edes", "endes",
+    "enes", "hetenes", "ens", "hetens", "ers", "ets", "et", "het",
+    "ast", ("erte", "er"), ("ert", "er"), ("s", "s"),
+])
 _NO_S_ENDING = frozenset("bcdfghjlmnoprtvyz")
-_NO_STEP1_ALL = sorted(_NO_STEP1 + ["erte", "ert", "s"], key=len, reverse=True)
-_NO_STEP3 = sorted(
-    ["leg", "eleg", "ig", "eig", "lig", "elig", "els", "lov", "elov",
-     "slov", "hetslov"],
-    key=len,
-    reverse=True,
-)
+_NO_STEP3 = compile_among([
+    "leg", "eleg", "ig", "eig", "lig", "elig", "els", "lov", "elov",
+    "slov", "hetslov",
+])
 
 
 def norwegian_stem(word: str) -> str:
     w = word.lower()
     if len(w) <= 2:
         return w
-    r1 = _r1(w, _NO_VOWELS)
+    r1 = regions(w, _NO_VOWELS, floor=3)[0]
 
-    # step 1: one limit-mode among; 'erte'/'ert' map to 'er', bare 's'
-    # needs a valid s-ending (or k after a non-vowel)
-    suf = _longest_in_r1(w, r1, _NO_STEP1_ALL)
-    if suf in ("erte", "ert"):
-        w = w[: -len(suf)] + "er"
-    elif suf == "s":
-        prev = w[-2] if len(w) >= 2 else ""
-        if prev in _NO_S_ENDING or (
-            prev == "k" and (len(w) < 3 or w[-3] not in _NO_VOWELS)
-        ):
-            w = w[:-1]
-    elif suf:
-        w = w[: -len(suf)]
+    # step 1
+    m = among(w, _NO_STEP1, limit=r1)
+    if m is not None:
+        start, res = m
+        if res != "s":
+            w = w[:start] + res
+        else:
+            prev = w[-2]
+            if prev in _NO_S_ENDING or (
+                prev == "k" and (len(w) < 3 or w[-3] not in _NO_VOWELS)
+            ):
+                w = w[:-1]
 
     # step 2: dt / vt -> drop t (whole pair inside R1)
     if w[-2:] in ("dt", "vt") and len(w) - 2 >= r1:
         w = w[:-1]
 
     # step 3
-    suf = _longest_in_r1(w, r1, _NO_STEP3)
-    if suf:
-        w = w[: -len(suf)]
-    return w
+    return replace_among(w, _NO_STEP3, limit=r1) or w
 
 
-_SV_STEP1 = sorted(
-    [
-        "a", "arna", "erna", "heterna", "orna", "ad", "e", "ade", "ande",
-        "arne", "are", "aste", "en", "anden", "aren", "heten", "ern",
-        "ar", "er", "heter", "or", "as", "arnas", "ernas", "ornas",
-        "es", "ades", "andes", "ens", "arens", "hetens", "erns", "at",
-        "andet", "het", "ast",
-    ],
-    key=len,
-    reverse=True,
-)
+_SV_STEP1 = compile_among([
+    "a", "arna", "erna", "heterna", "orna", "ad", "e", "ade", "ande",
+    "arne", "are", "aste", "en", "anden", "aren", "heten", "ern",
+    "ar", "er", "heter", "or", "as", "arnas", "ernas", "ornas",
+    "es", "ades", "andes", "ens", "arens", "hetens", "erns", "at",
+    "andet", "het", "ast", ("s", "s"),
+])
 _SV_S_ENDING = frozenset("bcdfghjklmnoprtvy")
-_SV_STEP1_ALL = sorted(_SV_STEP1 + ["s"], key=len, reverse=True)
 _SV_STEP2_CLUSTERS = ("dd", "gd", "nn", "dt", "gt", "kt", "tt")
+# step 3: lig/ig/els delete, löst -> lös, fullt -> full
+_SV_STEP3 = compile_among(["lig", "els", "ig", ("löst", "lös"), ("fullt", "full")])
 
 
 def swedish_stem(word: str) -> str:
     w = word.lower()
     if len(w) <= 2:
         return w
-    r1 = _r1(w, _SV_VOWELS)
+    r1 = regions(w, _SV_VOWELS, floor=3)[0]
 
-    # step 1: limit-mode among incl. the conditioned bare 's'
-    suf = _longest_in_r1(w, r1, _SV_STEP1_ALL)
-    if suf == "s":
-        if len(w) >= 2 and w[-2] in _SV_S_ENDING:
-            w = w[:-1]
-    elif suf:
-        w = w[: -len(suf)]
+    # step 1
+    m = among(w, _SV_STEP1, limit=r1)
+    if m is not None and (m[1] != "s" or w[-2] in _SV_S_ENDING):
+        w = w[:m[0]]
 
     # step 2: drop the final letter of a double cluster inside R1
     if w[-2:] in _SV_STEP2_CLUSTERS and len(w) - 2 >= r1:
         w = w[:-1]
 
-    # step 3: limit-mode among: lig/ig/els delete, löst->lös, fullt->full
-    for suf in ("fullt", "löst", "lig", "els", "ig"):
-        if w.endswith(suf) and len(w) - len(suf) >= r1:
-            if suf == "fullt":
-                w = w[:-1]
-            elif suf == "löst":
-                w = w[:-1]
-            else:
-                w = w[: -len(suf)]
-            break
-    return w
+    # step 3
+    return replace_among(w, _SV_STEP3, limit=r1) or w

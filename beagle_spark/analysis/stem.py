@@ -1,15 +1,14 @@
 """Snowball-compatible stemming.
 
 The reference uses Lucene's Snowball programs for 26 languages
-(reference: src/beagle/text_analysis.clj:15-49). This container has no
-Snowball bindings, so every language ships a pure-Python
-implementation (see _PURE_PYTHON below; the snowball_* sibling modules
-implement the published snowballstem.org algorithms — the larger
-well-specified ones faithfully, the rest following the published
-program's structure with reconstructed suffix tables, documented in
-each module). If the optional `snowballstemmer` / `Stemmer`
-(PyStemmer) package is present at runtime (e.g. a fuller cluster
-image), all 26 languages dispatch to it instead.
+(reference: src/beagle/text_analysis.clj:15-49). Every language runs an
+in-repo pure-Python implementation (the `_STEMMERS` table below), the
+same code on the driver, which compiles the dictionary, and on the
+executors, which stem the documents. The snowball_* sibling modules
+implement the published snowballstem.org programs on the shared
+runtime in snowball_rt.py (region marks and the `among` suffix
+search); see DEVIATIONS.md §3 for which languages are checked word by
+word against the Snowball 2.x programs.
 
 Stemmers are resolved per *analysis config* once per Arrow batch, never
 per row.
@@ -18,29 +17,11 @@ per row.
 from __future__ import annotations
 
 import logging
-import warnings
 from functools import lru_cache
 
+from .snowball_rt import among, compile_among, gopast
+
 logger = logging.getLogger(__name__)
-
-_SNOWBALL_LANGS = {
-    "arabic": "arabic", "armenian": "armenian", "basque": "basque",
-    "catalan": "catalan", "danish": "danish", "dutch": "dutch",
-    "english": "english", "estonian": "estonian", "finnish": "finnish",
-    "french": "french", "german": "german", "german2": "german2",
-    "hungarian": "hungarian", "irish": "irish", "italian": "italian",
-    "kp": "kp", "lithuanian": "lithuanian", "lovins": "lovins",
-    "norwegian": "norwegian", "porter": "porter", "portuguese": "portuguese",
-    "romanian": "romanian", "russian": "russian", "spanish": "spanish",
-    "swedish": "swedish", "turkish": "turkish",
-}
-
-# Languages whose algorithm has no same-named counterpart in the
-# snowballstemmer/PyStemmer bindings. Aliasing them to the closest
-# binding name (kp->dutch, lovins->english, german2->german) would
-# silently run a DIFFERENT algorithm, so they always dispatch to the
-# faithful in-repo pure-Python programs even when bindings are present.
-_PURE_ONLY = frozenset({"kp", "lovins", "german2"})
 
 
 # ---------------------------------------------------------------------------
@@ -94,22 +75,22 @@ def _cvc(word: str) -> bool:
     return word[-1] not in "wxy"
 
 
-_STEP2 = [
+_STEP2 = compile_among([
     ("ational", "ate"), ("tional", "tion"), ("enci", "ence"), ("anci", "ance"),
     ("izer", "ize"), ("bli", "ble"), ("alli", "al"), ("entli", "ent"),
     ("eli", "e"), ("ousli", "ous"), ("ization", "ize"), ("ation", "ate"),
     ("ator", "ate"), ("alism", "al"), ("iveness", "ive"), ("fulness", "ful"),
     ("ousness", "ous"), ("aliti", "al"), ("iviti", "ive"), ("biliti", "ble"),
     ("logi", "log"),
-]
-_STEP3 = [
+])
+_STEP3 = compile_among([
     ("icate", "ic"), ("ative", ""), ("alize", "al"), ("iciti", "ic"),
     ("ical", "ic"), ("ful", ""), ("ness", ""),
-]
-_STEP4 = [
+])
+_STEP4 = compile_among([
     "al", "ance", "ence", "er", "ic", "able", "ible", "ant", "ement",
     "ment", "ent", "ion", "ou", "ism", "ate", "iti", "ous", "ive", "ize",
-]
+])
 
 
 def porter_stem(word: str) -> str:
@@ -151,31 +132,18 @@ def porter_stem(word: str) -> str:
     if w.endswith("y") and _has_vowel(w[:-1]):
         w = w[:-1] + "i"
 
-    # Step 2
-    for suf, rep in _STEP2:
-        if w.endswith(suf):
-            stem = w[: -len(suf)]
-            if _measure(stem) > 0:
-                w = stem + rep
-            break
+    # Steps 2 and 3: replace when the stem has m > 0
+    for table in (_STEP2, _STEP3):
+        m = among(w, table)
+        if m is not None and _measure(w[:m[0]]) > 0:
+            w = w[:m[0]] + m[1]
 
-    # Step 3
-    for suf, rep in _STEP3:
-        if w.endswith(suf):
-            stem = w[: -len(suf)]
-            if _measure(stem) > 0:
-                w = stem + rep
-            break
-
-    # Step 4
-    for suf in _STEP4:
-        if w.endswith(suf):
-            stem = w[: -len(suf)]
-            if suf == "ion" and not stem.endswith(("s", "t")):
-                continue
-            if _measure(stem) > 1:
-                w = stem
-            break
+    # Step 4: delete when m > 1; 'ion' only after s or t
+    m = among(w, _STEP4)
+    if m is not None:
+        stem = w[:m[0]]
+        if (not w.endswith("ion") or stem.endswith(("s", "t"))) and _measure(stem) > 1:
+            w = stem
 
     # Step 5a
     if w.endswith("e"):
@@ -211,45 +179,49 @@ _P2_EXCEPTIONS2 = frozenset(
     ["inning", "outing", "canning", "herring", "earring",
      "proceed", "exceed", "succeed"]
 )
-
-
-def _p2_is_vowel(w: str, i: int) -> bool:
-    return w[i] in _P2_VOWELS
-
-
-def _p2_regions(w: str) -> tuple[int, int]:
-    """(R1, R2) start indexes."""
-    n = len(w)
-    r1 = n
-    if w.startswith(("gener", "arsen")):
-        r1 = 5
-    elif w.startswith("commun"):
-        r1 = 6
-    else:
-        for i in range(1, n):
-            if not _p2_is_vowel(w, i) and _p2_is_vowel(w, i - 1):
-                r1 = i + 1
-                break
-    r2 = n
-    for i in range(r1 + 1, n):
-        if not _p2_is_vowel(w, i) and _p2_is_vowel(w, i - 1):
-            r2 = i + 1
-            break
-    return r1, r2
+_P2_STEP0 = compile_among(["'s'", "'s", "'"])
+# eed/eedly -> ee in R1; the others delete when the stem has a vowel
+_P2_STEP1B = compile_among([("eedly", "ee"), ("eed", "ee"),
+                            "ingly", "edly", "ing", "ed"])
+# results: replacement in R1; 'ogi' needs a preceding 'l' (-> og),
+# 'li' a valid li-ending (-> delete)
+_P2_STEP2 = compile_among([
+    ("ization", "ize"), ("ational", "ate"), ("fulness", "ful"),
+    ("ousness", "ous"), ("iveness", "ive"), ("tional", "tion"),
+    ("biliti", "ble"), ("lessli", "less"), ("entli", "ent"),
+    ("ation", "ate"), ("alism", "al"), ("aliti", "al"),
+    ("ousli", "ous"), ("iviti", "ive"), ("fulli", "ful"),
+    ("enci", "ence"), ("anci", "ance"), ("abli", "able"),
+    ("izer", "ize"), ("ator", "ate"), ("alli", "al"),
+    ("bli", "ble"), ("ogi", "og"), ("li", "li"),
+])
+# results: replacement in R1; 'ative' deletes in R2
+_P2_STEP3 = compile_among([
+    ("ational", "ate"), ("tional", "tion"), ("alize", "al"),
+    ("icate", "ic"), ("iciti", "ic"), ("ical", "ic"),
+    "ness", "ful", "ative",
+])
+# delete in R2; 'ion' only after s or t
+_P2_STEP4 = compile_among([
+    "ement", "ance", "ence", "able", "ible", "ment",
+    "ant", "ent", "ism", "ate", "iti", "ous", "ive", "ize",
+    "al", "er", "ic", "ion",
+])
 
 
 def _p2_short_syllable(w: str, i: int) -> bool:
     """Short syllable ending at index i (inclusive of the consonant)."""
+    v = _P2_VOWELS
     # (a) vowel followed by non-vowel (not w/x/Y), preceded by non-vowel
     if i >= 2:
         return (
-            _p2_is_vowel(w, i - 1)
-            and not _p2_is_vowel(w, i)
+            w[i - 1] in v
+            and w[i] not in v
             and w[i] not in "wxY"
-            and not _p2_is_vowel(w, i - 2)
+            and w[i - 2] not in v
         )
     # (b) vowel at beginning followed by non-vowel
-    return i == 1 and _p2_is_vowel(w, 0) and not _p2_is_vowel(w, 1)
+    return i == 1 and w[0] in v and w[1] not in v
 
 
 def _p2_is_short(w: str, r1: int) -> bool:
@@ -268,21 +240,25 @@ def porter2_stem(word: str) -> str:
         w = w[1:]
     if w in _P2_EXCEPTIONS:
         return _P2_EXCEPTIONS[w]
+    v = _P2_VOWELS
     # mark consonant-y as Y
-    chars = list(w)
-    if chars[0] == "y":
-        chars[0] = "Y"
-    for i in range(1, len(chars)):
-        if chars[i] == "y" and _p2_is_vowel("".join(chars), i - 1):
-            chars[i] = "Y"
-    w = "".join(chars)
-    r1, r2 = _p2_regions(w)
+    if "y" in w:
+        chars = list(w)
+        if chars[0] == "y":
+            chars[0] = "Y"
+        for i in range(1, len(chars)):
+            if chars[i] == "y" and chars[i - 1] in v:
+                chars[i] = "Y"
+        w = "".join(chars)
+    # R1 exceptions: gener/arsen/commun mark R1 after the prefix
+    r1 = (5 if w.startswith(("gener", "arsen"))
+          else 6 if w.startswith("commun") else gopast(w, v))
+    r2 = gopast(w, v, r1)
 
     # Step 0
-    for suf in ("'s'", "'s", "'"):
-        if w.endswith(suf):
-            w = w[: -len(suf)]
-            break
+    m = among(w, _P2_STEP0)
+    if m is not None:
+        w = w[:m[0]]
 
     # Step 1a
     if w.endswith("sses"):
@@ -292,98 +268,54 @@ def porter2_stem(word: str) -> str:
     elif w.endswith(("us", "ss")):
         pass
     elif w.endswith("s"):
-        if any(_p2_is_vowel(w, i) for i in range(len(w) - 2)):
+        if any(c in v for c in w[:-2]):
             w = w[:-1]
 
     if w in _P2_EXCEPTIONS2:
         return w
 
     # Step 1b
-    if w.endswith(("eedly", "eed")):
-        suf = "eedly" if w.endswith("eedly") else "eed"
-        if len(w) - len(suf) >= r1:
-            w = w[: -len(suf)] + "ee"
-    else:
-        for suf in ("ingly", "edly", "ing", "ed"):
-            if w.endswith(suf):
-                stem = w[: -len(suf)]
-                if any(_p2_is_vowel(stem, i) for i in range(len(stem))):
-                    w = stem
-                    if w.endswith(("at", "bl", "iz")):
-                        w += "e"
-                    elif w.endswith(_P2_DOUBLES):
-                        w = w[:-1]
-                    elif _p2_is_short(w, r1):
-                        w += "e"
-                break
+    m = among(w, _P2_STEP1B)
+    if m is not None:
+        start, ee = m
+        if ee:
+            if start >= r1:
+                w = w[:start] + ee
+        elif any(c in v for c in w[:start]):
+            w = w[:start]
+            if w.endswith(("at", "bl", "iz")):
+                w += "e"
+            elif w.endswith(_P2_DOUBLES):
+                w = w[:-1]
+            elif _p2_is_short(w, r1):
+                w += "e"
 
     # Step 1c
-    if (
-        len(w) > 2
-        and w[-1] in "yY"
-        and not _p2_is_vowel(w, len(w) - 2)
-    ):
+    if len(w) > 2 and w[-1] in "yY" and w[-2] not in v:
         w = w[:-1] + "i"
 
     # Step 2 (longest suffix, in R1)
-    step2 = [
-        ("ization", "ize"), ("ational", "ate"), ("fulness", "ful"),
-        ("ousness", "ous"), ("iveness", "ive"), ("tional", "tion"),
-        ("biliti", "ble"), ("lessli", "less"), ("entli", "ent"),
-        ("ation", "ate"), ("alism", "al"), ("aliti", "al"),
-        ("ousli", "ous"), ("iviti", "ive"), ("fulli", "ful"),
-        ("enci", "ence"), ("anci", "ance"), ("abli", "able"),
-        ("izer", "ize"), ("ator", "ate"), ("alli", "al"),
-        ("bli", "ble"),
-    ]
-    done2 = False
-    for suf, rep in step2:
-        if w.endswith(suf):
-            if len(w) - len(suf) >= r1:
-                w = w[: -len(suf)] + rep
-            done2 = True
-            break
-    if not done2:
-        if w.endswith("ogi"):
-            if len(w) - 3 >= r1 and len(w) >= 4 and w[-4] == "l":
-                w = w[:-1]
-        elif w.endswith("li"):
-            if len(w) - 2 >= r1 and len(w) >= 3 and w[-3] in _P2_LI_ENDING:
-                w = w[:-2]
+    m = among(w, _P2_STEP2, gate=r1)
+    if m is not None:
+        start, rep = m
+        if rep == "og":
+            if start >= 1 and w[start - 1] == "l":
+                w = w[:start] + rep
+        elif rep == "li":
+            if start >= 1 and w[start - 1] in _P2_LI_ENDING:
+                w = w[:start]
+        else:
+            w = w[:start] + rep
 
-    # Step 3 (in R1)
-    step3 = [
-        ("ational", "ate"), ("tional", "tion"), ("alize", "al"),
-        ("icate", "ic"), ("iciti", "ic"), ("ical", "ic"),
-        ("ness", ""), ("ful", ""),
-    ]
-    done3 = False
-    for suf, rep in step3:
-        if w.endswith(suf):
-            if len(w) - len(suf) >= r1:
-                w = w[: -len(suf)] + rep
-            done3 = True
-            break
-    if not done3 and w.endswith("ative"):
-        if len(w) - 5 >= r1 and len(w) - 5 >= r2:
-            w = w[:-5]
+    # Step 3 (in R1; 'ative' in R2)
+    m = among(w, _P2_STEP3, gate=r1)
+    if m is not None and (m[0] >= r2 or not w.endswith("ative")):
+        w = w[:m[0]] + m[1]
 
     # Step 4 (in R2)
-    step4 = [
-        "ement", "ance", "ence", "able", "ible", "ment",
-        "ant", "ent", "ism", "ate", "iti", "ous", "ive", "ize",
-        "al", "er", "ic",
-    ]
-    done4 = False
-    for suf in step4:
-        if w.endswith(suf):
-            if len(w) - len(suf) >= r2:
-                w = w[: -len(suf)]
-            done4 = True
-            break
-    if not done4 and w.endswith("ion"):
-        if len(w) - 3 >= r2 and len(w) >= 4 and w[-4] in "st":
-            w = w[:-3]
+    m = among(w, _P2_STEP4, gate=r2)
+    if m is not None and (not w.endswith("ion") or w[m[0] - 1] in "st"):
+        w = w[:m[0]]
 
     # Step 5
     if w.endswith("e"):
@@ -398,9 +330,6 @@ def porter2_stem(word: str) -> str:
     return w.replace("Y", "y")
 
 
-_warned: set[str] = set()
-
-
 @lru_cache(maxsize=64)
 def get_stemmer(lang: str):
     """Return a str->str stem function for `lang`.
@@ -409,34 +338,10 @@ def get_stemmer(lang: str):
     text_analysis.clj:47-49 logs+defaults to English).
     """
     lang = (lang or "english").lstrip(":").lower()
-    if lang not in _SNOWBALL_LANGS:
+    if lang not in _STEMMERS:
         logger.debug("Unknown stemmer %r; defaulting to english", lang)
         lang = "english"
-    if lang not in _PURE_ONLY:
-        try:  # optional real Snowball bindings
-            import snowballstemmer  # type: ignore
-
-            return snowballstemmer.stemmer(_SNOWBALL_LANGS[lang]).stemWord
-        except ImportError:
-            pass
-        try:
-            import Stemmer  # type: ignore  # PyStemmer
-
-            return Stemmer.Stemmer(_SNOWBALL_LANGS[lang]).stemWord
-        except ImportError:
-            pass
-    fn = _PURE_PYTHON.get(lang)
-    if fn is not None:
-        return fn()
-    # unreachable for the 26 known names; kept as a guard for future
-    # additions to _SNOWBALL_LANGS without a pure-Python entry
-    if lang not in _warned:  # pragma: no cover
-        _warned.add(lang)
-        warnings.warn(
-            f"No Snowball implementation available for {lang!r}; "
-            "stemming is identity for this language in this environment."
-        )
-    return lambda w: w
+    return _STEMMERS[lang]()
 
 
 def _lazy(module: str, name: str):
@@ -448,10 +353,9 @@ def _lazy(module: str, name: str):
     return load
 
 
-# All 26 reference stemmer names resolve to a pure-Python
-# implementation — no identity fallback (reference:
-# src/beagle/text_analysis.clj:15-49).
-_PURE_PYTHON = {
+# The one implementation per reference stemmer name (reference:
+# src/beagle/text_analysis.clj:15-49); no name falls back to identity.
+_STEMMERS = {
     "english": lambda: porter2_stem,
     "porter": lambda: porter_stem,
     "german": _lazy(".snowball_de", "german_stem"),
@@ -479,3 +383,4 @@ _PURE_PYTHON = {
     "irish": _lazy(".snowball_misc", "irish_stem"),
     "lovins": _lazy(".snowball_misc", "lovins_stem"),
 }
+_SNOWBALL_LANGS = _STEMMERS.keys()

@@ -2,7 +2,9 @@
 (reference: src/beagle/dictionary_optimizer.clj).
 
 Grouping key: the full analysis identity (text, case-sensitivity,
-ascii-folding, stemming, stemmer, tokenizer). NOTE this deliberately
+ascii-folding, stemming, stemmer, tokenizer) plus the match shape
+(slop, in-order, fuzzy, fuzziness), each key read through
+`schema.norm_key` so both spellings group together. NOTE this deliberately
 deviates from the reference's code, which groups only on
 [text case-sensitive? ascii-fold?] (dictionary_optimizer.clj:41-42) and
 therefore merges entries that differ in stemming/tokenizer — its own
@@ -10,29 +12,24 @@ README (README.md:284-285) documents the stricter intent. We follow the
 README semantics: strictly safer (SURVEY.md A24 fidelity note).
 
 Within a group, entries merge only when their shared meta keys agree
-(mergeable-meta?, dictionary_optimizer.clj:24-26): synonyms are unioned
-(minus the primary text), metas merged, first id wins.
+(mergeable-meta?, dictionary_optimizer.clj:24-26): the merged entry is
+the first one with synonyms unioned (minus the primary text) and metas
+merged, so its id and every other key come from the first entry.
 """
 
 from __future__ import annotations
 
+from ..schema import norm_keys
 
-def _k(entry: dict, *names):
-    for n in names:
-        if n in entry:
-            return entry[n]
-    return None
+# Entries merge only when all of these agree: the analysis identity
+# and the match shape (a merged entry must match what each input did).
+_GROUP_FIELDS = ("text", "case_sensitive", "ascii_fold", "stem", "stemmer",
+                 "tokenizer", "slop", "in_order", "fuzzy", "fuzziness")
 
 
 def _group_key(entry: dict):
-    return (
-        entry.get("text"),
-        _k(entry, "case-sensitive?", "case_sensitive"),
-        _k(entry, "ascii-fold?", "ascii_fold"),
-        _k(entry, "stem?", "stem"),
-        entry.get("stemmer"),
-        entry.get("tokenizer"),
-    )
+    keys = norm_keys(entry)
+    return tuple(keys.get(f) for f in _GROUP_FIELDS)
 
 
 def _mergeable_meta(a: dict, b: dict) -> bool:
@@ -41,6 +38,8 @@ def _mergeable_meta(a: dict, b: dict) -> bool:
 
 
 def _merge_entries(entries: list[dict]) -> dict:
+    """A copy of the first entry (keys keep their spelling) with the
+    synonyms unioned and the metas merged."""
     first = entries[0]
     text = first.get("text")
     synonyms: list[str] = []
@@ -53,27 +52,11 @@ def _merge_entries(entries: list[dict]) -> dict:
     meta: dict = {}
     for e in entries:
         meta.update(e.get("meta") or {})
-    out = {"text": text}
+    out = {k: v for k, v in first.items() if k not in ("synonyms", "meta")}
     if synonyms:
         out["synonyms"] = synonyms
     if meta:
         out["meta"] = meta
-    if first.get("id") is not None:
-        out["id"] = first["id"]
-    for src, dst in (
-        ("case-sensitive?", "case-sensitive?"),
-        ("case_sensitive", "case_sensitive"),
-        ("ascii-fold?", "ascii-fold?"),
-        ("ascii_fold", "ascii_fold"),
-        ("stem?", "stem?"),
-        ("stem", "stem"),
-        ("stemmer", "stemmer"),
-        ("tokenizer", "tokenizer"),
-        ("type", "type"),
-        ("slop", "slop"),
-    ):
-        if first.get(src) is not None:
-            out[dst] = first[src]
     return out
 
 

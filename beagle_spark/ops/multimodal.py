@@ -153,7 +153,7 @@ def _image_feature(payload: bytes, fmt: str, dim: int) -> list | None:
 
 
 def extract_features(
-    df: DataFrame, dim: int = 8, batch_hint: int = 1024, fake: bool = True
+    df: DataFrame, dim: int = 8, fake: bool = True
 ) -> DataFrame:
     """mapInPandas feature extraction over binary payloads. Arrow ships
     the bytes zero-copy; each pandas batch is processed vectorized.

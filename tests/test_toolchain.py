@@ -99,6 +99,32 @@ def test_dictionary_optimization():  # dictionary_optimization_test.clj:47-86
         assert set(e.get("synonyms") or []) == expected[key]
 
 
+def test_optimize_keeps_match_shape():
+    """Entries that differ in slop/in-order/fuzzy never merge, and a
+    merged entry keeps every key of the first one, so optimizing the
+    dictionary does not change what it matches."""
+    out = optimize([
+        {"text": "big data", "fuzzy": True, "in_order": True, "slop": 3},
+        {"text": "big data", "slop": 0},
+    ])
+    assert out == [
+        {"text": "big data", "fuzzy": True, "in_order": True, "slop": 3},
+        {"text": "big data", "slop": 0},
+    ]
+    # both spellings of a shape key group together; keys keep the
+    # first entry's spelling
+    out = optimize([
+        {"text": "a b", "fuzzy?": True, "fuzziness": 1, "synonyms": ["x"]},
+        {"text": "a b", "fuzzy": True, "fuzziness": 1, "synonyms": ["y"]},
+    ])
+    assert out == [{"text": "a b", "fuzzy?": True, "fuzziness": 1,
+                    "synonyms": ["x", "y"]}]
+    dictionary = [{"text": "big data", "fuzzy?": True}, {"text": "big data"}]
+    plain = highlighter(dictionary)("bog data")
+    assert plain
+    assert highlighter(dictionary, {"optimize-dictionary?": True})("bog data") == plain
+
+
 def test_meta_merge_mergeable():  # dictionary_optimization_test.clj:6-45
     from beagle_spark.dictionary.optimizer import _aggregate_by_meta, _mergeable_meta
 

@@ -1,263 +1,170 @@
-"""Dev-only: generate probe vocabularies for snowball_oracle.py.
+"""Dev-only: generate a probe vocabulary for one stemmer language.
 
-For each language: hand-written real inflected words, plus systematic
-stem x suffix combinations (suffix pool = the implementation's own
-tables perturbed with neighboring forms), plus deterministic
-pseudo-words. Randomness is seeded — vocab files are reproducible.
+Used with tools/snowball_oracle.py (diff against the Snowball programs
+compiled into PostgreSQL's dict_snowball.so) and for before/after
+diffs of the in-repo stemmers. Covers all 26 language names.
+
+Probe words are stem x suffix combinations plus seeded random strings:
+
+- suffixes: every string held in the module-level tables of the
+  language's in-repo implementation, plus, when a dump from
+  tools/extract_among.py is given, the language's among tables from
+  dict_snowball.so; each suffix also appears with its first letter
+  dropped and with a vowel added on either side;
+- stems: the PostgreSQL stopword list for the language (real inflected
+  words, when installed) topped up with seeded random cores.
+
+Randomness is seeded, so the output is reproducible for a given tree.
+
+Usage:
+    python tools/extract_among.py > tables.txt      # optional
+    python tools/gen_vocab.py <lang> <out.txt> [tables.txt]
 """
 
 from __future__ import annotations
 
+import ast
+import importlib
 import random
+import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+
+# among-table ids (UTF-8 variants) in an extract_among.py dump
+TABLE_IDS = {
+    "danish": range(147, 150), "dutch": range(150, 156),
+    "english": range(156, 166), "finnish": range(166, 176),
+    "french": range(176, 183), "german": range(183, 187),
+    "hungarian": range(308, 317), "italian": range(326, 334),
+    "lithuanian": range(334, 338), "norwegian": range(342, 345),
+    "portuguese": range(351, 360), "russian": range(365, 390),
+    "spanish": range(394, 404), "swedish": range(404, 407),
+    "turkish": range(430, 447),
+}
+TABLE_IDS.update(porter=TABLE_IDS["english"], lovins=TABLE_IDS["english"],
+                 german2=TABLE_IDS["german"], kp=TABLE_IDS["dutch"])
 
 ALPHABET = {
-    "catalan": "abcdefghijlmnopqrstuvxyzàèéíïòóúüç",
-    "romanian": "abcdefghijlmnoprstuvzâîășț",
-    "basque": "abdefghijklmnoprstuxz",
-    "irish": "abcdefghilmnoprstuáéíóú",
+    "arabic": "ابتثجحخدذرزسشصضطظعغفقكلمنهويةىأإآؤئءـًٌٍَُِّْ",
     "armenian": "աբգդեզէըթժիլխծկհձղճմյնշոչպջռսվտրցւփքօֆ",
-    "arabic": "ابتثجحخدذرزسشصضطظعغفقكلمنهويةى",
+    "basque": "abdefghijklmnoprstuxzñ",
+    "catalan": "abcdefghijlmnopqrstuvxyzàèéíïòóúüç·'-",
+    "danish": "abcdefghijklmnopqrstuvwxyzæøå",
+    "dutch": "abcdefghijklmnopqrstuvwxyzëïèéäöü",
+    "english": "abcdefghijklmnopqrstuvwxyz'",
+    "estonian": "abdefghijklmnoprstuvõäöüšž",
+    "finnish": "abcdefghijklmnopqrstuvwxyzäö",
+    "french": "abcdefghijklmnopqrstuvwxyzàâçèéêëîïôùûü",
+    "german": "abcdefghijklmnopqrstuvwxyzäöüß",
+    "hungarian": "abcdefghijklmnopqrstuvwxyzáéíóöúüőű",
+    "irish": "abcdefghilmnoprstuáéíóú'-",
+    "italian": "abcdefghijklmnopqrstuvwxyzàèéìòùáíóú",
+    "lithuanian": "abcdefghijklmnoprstuvyzążčęėįšūųž",
+    "norwegian": "abcdefghijklmnopqrstuvwxyzæøå",
+    "portuguese": "abcdefghijklmnopqrstuvwxyzáâãàçéêíóôõú",
+    "romanian": "abcdefghijlmnoprstuvzâîășțşţ",
+    "russian": "абвгдежзийклмнопрстуфхцчшщъыьэюяё",
+    "spanish": "abcdefghijklmnopqrstuvwxyzáéíñóúü",
+    "swedish": "abcdefghijklmnopqrstuvwxyzäåö",
     "turkish": "abcçdefgğhıijklmnoöprsştuüvyz",
 }
+ALPHABET.update(porter=ALPHABET["english"], lovins=ALPHABET["english"],
+                german2=ALPHABET["german"], kp=ALPHABET["dutch"])
 
-VOWELS = {
-    "catalan": "aeiouàèéíïòóúü",
-    "romanian": "aeiouâîă",
-    "basque": "aeiou",
-    "irish": "aeiouáéíóú",
-    "armenian": "աեէըիուօ",
-    "arabic": "اوي",
-    "turkish": "aeıioöuü",
-}
-
-# realistic stem cores per language (mix of vowel/consonant endings,
-# lengths, accents) — pseudo-stems are fine, the oracle defines truth
-STEMS = {
-    "catalan": ["barc", "catal", "form", "public", "trebal", "cas", "nou",
-                "gran", "pet", "llibr", "taul", "finestr", "amic", "profess",
-                "direc", "nac", "program", "estud", "univers", "ràp", "feli",
-                "content", "estr", "blanc", "negr", "vermell", "jug", "cant",
-                "ball", "pens", "parl", "mir", "salt", "dorm", "serv", "ven",
-                "perd", "bat", "tem", "decid", "constru", "produ", "z", "xyzz"],
-    "romanian": ["lucr", "cânt", "copil", "fet", "băiat", "cas", "mas",
-                 "fereastr", "cart", "școl", "universitat", "naț", "form",
-                 "public", "programat", "studi", "frumos", "mar", "mic",
-                 "alb", "negr", "roș", "verd", "merg", "vorb", "gând",
-                 "dorm", "serv", "vând", "pierd", "decid", "construi", "z",
-                 "abilit", "icit", "ativ", "xyzz"],
-    "basque": ["etxe", "mendi", "herri", "lagun", "liburu", "ikasle",
-               "irakasle", "haur", "gizon", "emakume", "zuhaitz", "ibai",
-               "itsaso", "eguzki", "ilargi", "txakur", "katu", "zaldi",
-               "eder", "handi", "txiki", "zabal", "garbi", "z", "xyzz"],
-    "irish": ["feidhm", "obair", "scoil", "leabhar", "múinteoir", "cail",
-              "buachaill", "teach", "bail", "cathair", "tír", "fear", "bean",
-              "páist", "madr", "capall", "mór", "beag", "maith", "deas",
-              "bán", "dubh", "imeacht", "z", "xyzz"],
-    "armenian": ["գիրք", "տուն", "քաղաք", "երեխ", "ուսանող", "ուսուցիչ",
-                 "մարդ", "կին", "շուն", "կատու", "ձի", "ծառ", "գետ", "ծով",
-                 "արև", "լուսին", "մեծ", "փոքր", "լավ", "վատ", "սպիտակ",
-                 "սև", "գնալ", "խոսել", "մտած", "քնել", "զ"],
-    "arabic": ["كتب", "درس", "علم", "عمل", "قرأ", "فهم", "خرج", "دخل",
-               "مدرس", "طالب", "جامع", "مكتب", "بيت", "سيار", "طريق",
-               "مدين", "بلد", "شمس", "قمر", "بحر", "نهر", "جبل", "كبير",
-               "صغير", "جديد", "قديم", "ز"],
-    "turkish": ["ev", "araba", "kitap", "okul", "öğretmen", "öğrenci",
-                "çocuk", "adam", "kadın", "köpek", "kedi", "at", "ağaç",
-                "nehir", "deniz", "güneş", "ay", "büyük", "küçük", "iyi",
-                "kötü", "beyaz", "siyah", "git", "gel", "konuş", "düşün",
-                "uyu", "z"],
-}
-
-# hand-written real inflected words (beyond stem x suffix coverage)
-REAL = {
-    "catalan": """
-        obligatòries associacions crítiques decisions casos cases noies nois
-        arribaven arribarà arribaria cantàvem cantéssiu canteu cantem cantes
-        portaré portaràs portarem portarien perdria perdríem temíem temies
-        dormia dormien dormíssiu serveix serveixen construïa construïen
-        produeixen decideixen nacional nacionals nacionalisme nacionalitat
-        felicitat felicitats amistat amistats claredat varietat varietats
-        grandesa bellesa tristesa pobresa riquesa naturalesa
-        lentament ràpidament feliçment antigament novament
-        coneixement coneixements naixement moviment moviments pensament
-        cantant cantants estudiant estudiants caminant
-        jugador jugadors jugadora jugadores treballador treballadores
-        professor professora professors professores
-        biblioteca biblioteques música músiques pràctica pràctiques
-        històric històrica històriques històrics lògic lògica lògiques
-        portar-me portar-te portar-nos portar-vos portar-lo portar-la
-        portar-los portar-les donar-li donar-ho anar-hi anar-se'n
-        veure'l veure'ls veure'm veure't veure's comprar-ne parlar-ne
-        aquest aquesta aquests aquestes aquell aquella aquells aquelles
-        meva teva seva nostra vostra meves teves seves nostres vostres
-        """,
-    "romanian": """
-        abilitățile abilității abilitate capacitatea capacității
-        lucrează lucrau lucram lucrați lucrând lucrat lucrată lucrate
-        cântând cântece cântecele cântăreț cântăreți copiii copilului
-        fetele fetelor băieții băieților casele caselor mesele meselor
-        ferestrele cartea cărțile școala școlile universitatea
-        universitățile națiunea națiunile naționale naționalism
-        frumoasă frumoase frumoși frumosului mare mari mici micile
-        albastru albastre merge mergea mergeau mergând mers mersese
-        vorbește vorbesc vorbeau vorbind vorbit gândește gândesc
-        gândire gândirea dormea dormind dormit servește serveau
-        vindea vindeau vândut pierdea pierdut decidea decis
-        construiește construiau construit acțiune acțiunea acțiunile
-        creație creația creațiile organizație organizația organizațiile
-        informația informațiile importantă importante important
-        politică politice politic economică economice economic
-        românesc românească românești studenții studentul studenta
-        profesorul profesoara profesorii muncitorul muncitorii
-        """,
-    "basque": """
-        etxea etxeak etxearen etxeari etxean etxeko etxetik etxera
-        etxeekin etxeetan etxeetako etxeetatik etxeetara etxeez
-        mendia mendiak mendiaren mendian mendiko mendira menditik
-        herria herriak herriaren herrian herriko herritik herrira
-        lagunak lagunaren lagunari lagunarekin lagunekin lagunen
-        liburua liburuak liburuaren liburuan liburuko ikaslea ikasleak
-        ikaslearen irakaslea irakasleak gizona gizonak gizonaren
-        emakumea emakumeak haurra haurrak haurren zuhaitza zuhaitzak
-        ibaia ibaiak itsasoa itsasoan eguzkia ilargia txakurra txakurrak
-        katua katuak zaldia zaldiak ederra ederrak handia handiak
-        txikia txikiak zabala zabalak garbia garbiak etxerako
-        etxeraino etxerantz lagunengan lagunengana lagunentzat
-        diruagatik egunero kaleetan kaleetako
-        """,
-    "irish": """
-        bhfeidhmeannach feidhmeannach feidhmeannaigh bhfuil dhuine
-        ndéanamh gcathair gcathrach mbaile mbailte bpáiste bpáistí
-        dtír dtíortha tsagart tsagairt n-athair n-éan t-úll h-éin
-        oibreacha oibre oibrí oibrithe scoileanna scoile leabhair
-        leabharlann leabharlanna múinteoirí múinteora cailíní cailín
-        buachaillí buachalla teaghlaigh teaghlach cathracha fearacha
-        mnáacha páistíocht madraí capaill capaillín móracha beagacha
-        maitheacha deasacha imeachtaí imeachta eagraíochtaí eagraíocht
-        náisiúnta náisiúnacha polaitíochta polaitíocht stairiúla
-        stairiúil áitiúla áitiúil ceolmhar ceolmhaire fileata
-        laethanta laethúil seachtainiúil míosúil bliantúil
-        """,
-    "armenian": """
-        գրքերը գրքերի գրքերին գրքերում գրքով գրքից գիրքը գրքի
-        տները տների տներին տներում տնով տնից տունը տան
-        քաղաքները քաղաքների քաղաքներում քաղաքով քաղաքից քաղաքը
-        երեխաները երեխաների երեխաներին երեխայի երեխան
-        ուսանողները ուսանողների ուսանողին ուսանողը
-        մարդիկ մարդկանց մարդու մարդը կինը կանայք կանանց
-        շները շների շանը կատուները կատուների ձիերը ձիերի
-        ծառերը ծառերի գետերը գետերի ծովերը ծովերի
-        մեծերը մեծի փոքրերը փոքրի լավերը լավի
-        գնալու գնում գնացել խոսելու խոսում խոսացել
-        մտածելու մտածում մտածել քնելու քնում քնել
-        գրականության գրականություն ժողովրդական ժողովուրդ
-        """,
-    "arabic": """
-        المكتبات المكتبة مكتبات مكتبة الكتاب الكتب كتابهم كتابنا
-        كتابكم كتابها كتابه المدرسة المدارس مدرسون مدرسين مدرسات
-        الطلاب الطالب طالبات طالبة الجامعة الجامعات جامعتنا
-        البيوت البيت بيوتهم بيتها السيارة السيارات سياراتهم
-        الطرق الطريق المدينة المدن الشمس القمر البحار البحر
-        الأنهار النهر الجبال الجبل الكبيرة الكبير الصغيرة الصغير
-        الجديدة الجديد القديمة القديم يكتبون يكتب تكتب كتبوا كتبنا
-        يدرسون درسوا يعملون عملوا يفهمون فهموا يخرجون خرجوا
-        والكتاب بالكتاب كالكتاب فالكتاب للكتاب وللبيت والمدرسة
-        """,
-    "turkish": """
-        evler evleri evlerin evlerden evlerde evimiz eviniz evlerimiz
-        arabalar arabaları arabanın arabaya arabada arabadan arabamız
-        kitaplar kitapları kitabın kitaba kitapta kitaptan kitabımız
-        okullar okulları okulun okula okulda okuldan okulumuz
-        öğretmenler öğretmenleri öğretmenin öğretmene öğretmenimiz
-        öğrenciler öğrencileri öğrencinin öğrenciye öğrencimiz
-        çocuklar çocukları çocuğun çocuğa çocukta çocuğumuz
-        adamlar adamları adamın adama adamda kadınlar kadınları
-        köpekler köpekleri köpeğin köpeğe kediler kedileri kedinin
-        atlar atları atın ata ağaçlar ağaçları ağacın ağaca
-        nehirler nehirleri denizler denizleri güneşler ayları
-        büyükler büyüklerin küçükler küçüklerin iyiler iyilerin
-        gidiyor geliyor konuşuyor düşünüyor uyuyor gitmiş gelmiş
-        gidecek gelecek konuşacak düşünecek gitti geldi konuştu
-        evdeki okuldaki arabadaki kitaptaki yoldaki
-        """,
-}
+STOPWORDS = "/usr/share/postgresql/15/tsearch_data/{}.stop"
 
 
-def suffix_pool(lang: str) -> list[str]:
-    """The implementation's own tables + neighbors."""
-    import importlib
+def _strings(obj, depth: int = 0):
+    """Every str inside a (nested) table value."""
+    if isinstance(obj, str):
+        yield obj
+    elif depth < 4 and isinstance(obj, (tuple, list, set, frozenset)):
+        for x in obj:
+            yield from _strings(x, depth + 1)
+    elif depth < 4 and isinstance(obj, dict):
+        for k, v in obj.items():
+            yield from _strings(k, depth + 1)
+            yield from _strings(v, depth + 1)
 
-    mods = {
-        "catalan": ("beagle_spark.analysis.snowball_romance", []),
-        "romanian": ("beagle_spark.analysis.snowball_romance", []),
-        "basque": ("beagle_spark.analysis.snowball_misc", ["_EU_SUFFIXES"]),
-        "irish": ("beagle_spark.analysis.snowball_misc", ["_GA_SUFFIXES"]),
-        "armenian": ("beagle_spark.analysis.snowball_misc", ["_HY_SUFFIXES"]),
-        "arabic": ("beagle_spark.analysis.snowball_misc",
-                   ["_AR_PREFIXES", "_AR_SUFFIXES"]),
-        "turkish": ("beagle_spark.analysis.snowball_misc", []),
-    }
-    modname, attrs = mods[lang]
-    mod = importlib.import_module(modname)
-    pool: set[str] = set()
-    for a in attrs:
-        for item in getattr(mod, a, []):
-            if isinstance(item, tuple):
-                item = item[0]
-            pool.add(item)
-    # exact among tables, once transcribed (compile_among matchers)
-    try:
-        import beagle_spark.analysis.snowball_tables as st
 
-        prefix = {"basque": "EU_", "catalan": "CA_", "romanian": "RO_",
-                  "irish": "GA_", "armenian": "HY_", "arabic": "AR_",
-                  "turkish": "TR_"}[lang]
-        for name in dir(st):
-            if name.startswith(prefix):
-                _lens, by_len = getattr(st, name)
-                for d in by_len.values():
-                    pool.update(d)
-    except Exception:
-        pass
-    vowels = VOWELS[lang]
-    extra: set[str] = set()
-    for s in pool:
+def repo_suffixes(lang: str) -> set[str]:
+    """Strings from the module-level tables of the in-repo stemmer."""
+    from beagle_spark.analysis import stem
+
+    fn = stem.get_stemmer(lang)
+    mod = importlib.import_module(fn.__module__)
+    mods = {mod}
+    if fn.__module__ != stem.__name__:
+        mods.add(importlib.import_module("beagle_spark.analysis.snowball_tables"))
+    alpha = set(ALPHABET[lang])
+    out: set[str] = set()
+    for m in mods:
+        for name, val in vars(m).items():
+            if name.startswith("__") or callable(val):
+                continue
+            out.update(s for s in _strings(val)
+                       if 0 < len(s) <= 12 and set(s.lower()) <= alpha)
+    return {s.lower() for s in out}
+
+
+def dump_suffixes(lang: str, dump: str) -> set[str]:
+    ids = set(TABLE_IDS.get(lang, ()))
+    out: set[str] = set()
+    cur = None
+    for line in open(dump, encoding="utf-8"):
+        m = re.match(r"=== t(\d+) ", line)
+        if m:
+            cur = int(m.group(1))
+            continue
+        if cur in ids:
+            m = re.match(r"  (.*)\t(-?\d+)\t(-?\d+)\t(\d)$", line.rstrip("\n"))
+            if m:
+                out.add(ast.literal_eval(m.group(1)))
+    return out
+
+
+def gen(lang: str, dump: str | None = None) -> list[str]:
+    rng = random.Random(1234)
+    alpha = ALPHABET[lang]
+    vowels = [c for c in alpha if c in "aeiouyàáâãäåæèéêëìíîïòóôõöøùúûüőűąęėįųūıõ"
+              "аеиоуыэюяёաեէըիոօւاوي"] or list(alpha[:5])
+    sufs = repo_suffixes(lang)
+    if dump:
+        sufs |= dump_suffixes(lang, dump)
+    pool = set(sufs)
+    for s in sufs:
         if len(s) > 1:
-            extra.add(s[1:])
+            pool.add(s[1:])
         for v in vowels[:5]:
-            extra.add(s + v)
-            extra.add(v + s)
-        extra.add(s + "s")
-    return sorted(pool | extra)
-
-
-def gen(lang: str, n_random: int = 4000) -> list[str]:
-    rng = random.Random(42)
-    vocab: set[str] = set(REAL[lang].split())
-    stems = STEMS[lang]
-    pool = suffix_pool(lang)
-    for st in stems:
+            pool.add(s + v)
+            pool.add(v + s)
+    stems: set[str] = set()
+    vocab: set[str] = set()
+    try:
+        with open(STOPWORDS.format(lang), encoding="utf-8") as f:
+            for w in f:
+                if w.strip():
+                    stems.add(w.strip())
+    except OSError:
+        pass
+    vocab |= stems
+    stems = set(sorted(stems)[:40])
+    while len(stems) < 60:
+        stems.add("".join(rng.choice(alpha) for _ in range(rng.randint(2, 7))))
+    for st in sorted(stems):
         for suf in pool:
             vocab.add(st + suf)
-    alpha = ALPHABET[lang]
-    vowels = VOWELS[lang]
-    for _ in range(n_random):
-        n = rng.randint(2, 12)
-        w = "".join(
-            rng.choice(vowels) if i % 2 == rng.randint(0, 1)
-            else rng.choice(alpha)
-            for i in range(n)
-        )
-        vocab.add(w)
-    return sorted(vocab)
+    vocab |= pool
+    for _ in range(6000):
+        vocab.add("".join(rng.choice(alpha) for _ in range(rng.randint(2, 14))))
+    return sorted(w for w in vocab if w)
 
 
 if __name__ == "__main__":
     lang, out = sys.argv[1], sys.argv[2]
-    words = gen(lang)
+    words = gen(lang, sys.argv[3] if len(sys.argv) > 3 else None)
     with open(out, "w", encoding="utf-8") as f:
         f.write("\n".join(words) + "\n")
     print(f"{lang}: {len(words)} words -> {out}")

@@ -6,7 +6,8 @@ generated sources Lucene 8.x runs for the reference,
 
 Not used at runtime and not imported by the package: it requires a
 local throwaway postgres (initdb to /tmp/pgdata, socket /tmp/pgsock)
-and is the tool that generated tests/golden/stem_*.tsv.
+and is the tool that generated the oracle-pinned tests/golden/stem_*.tsv
+files (probe words from tools/gen_vocab.py).
 
 Usage:
     python tools/snowball_oracle.py diff <lang> <wordfile>
