@@ -36,17 +36,15 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, Optional
+from typing import Callable, Optional
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf
-from pyspark.sql.pandas.types import to_arrow_type
-from pyspark.sql.types import DataType
 
 from .dictionary.optimizer import optimize
 from .dictionary.validator import validate_dictionary
+from .kernel import arrow_kernel, per_value
+from .kernel import map_batches  # noqa: F401  (in-process form of Annotator.udf)
 from .matcher import CompiledDictionary, compile_dictionary, match_text
 from .schema import ANNOTATIONS_TYPE, DictionaryEntry, norm_keys
 
@@ -92,31 +90,6 @@ def highlighter(dictionary, opts: dict | None = None):
 annotator = highlighter
 
 
-def map_batches(
-    batches: Iterator[pa.Array], fn: Callable, return_type: DataType
-) -> Iterator[pa.Array]:
-    """Apply `fn` to every value of every Arrow batch and build each
-    result batch with one `pa.array` call. The Arrow type is exactly
-    `to_arrow_type(return_type)`, so the Arrow-UDF serializer passes the
-    array through without a per-batch cast."""
-    arrow_type = to_arrow_type(return_type)
-    for arr in batches:
-        yield pa.array([fn(v) for v in arr.to_pylist()], type=arrow_type)
-
-
-def arrow_map_udf(bc, make_fn: Callable, return_type: DataType):
-    """Iterator `arrow_udf` mapping one column through `make_fn(bc.value)`:
-    the broadcast is read and the per-row function built once per
-    partition, not once per batch. Marked non-deterministic; see
-    `Annotator.udf` for why."""
-
-    @arrow_udf(return_type)
-    def batch_map(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
-        return map_batches(batches, make_fn(bc.value), return_type)
-
-    return batch_map.asNondeterministic()
-
-
 def _text_matcher(cd: CompiledDictionary) -> Callable:
     return lambda text: match_text(text, cd)
 
@@ -140,20 +113,12 @@ class Annotator:
         return self._bc
 
     def udf(self, spark: SparkSession):
-        """Arrow UDF: string column -> array<struct> of annotations
-        (`arrow_map_udf` over `match_text`). Iterator form so the
-        broadcast is resolved once per partition, not once per batch.
-        Null and blank text give `[]`, never null.
-
-        Marked NON-DETERMINISTIC (it is pure, but this stops the
-        optimizer pushing filters below it WITH A COPY of the UDF —
-        spark_optimization_guide.md §4.4). Before this, every query of
-        the form annotate -> filter/explode evaluated the dictionary
-        match TWICE per document, and the pushed copy ran below the
-        caller's repartition, i.e. single-threaded on a single-file
-        scan (see plans/r21/t5_dict_match_counts_before.txt: two
-        ArrowEvalPython nodes, the lower one under the Exchange)."""
-        return arrow_map_udf(self._broadcast(spark), _text_matcher, ANNOTATIONS_TYPE)
+        """Arrow UDF: string column -> array<struct> of annotations, a
+        per-value `kernel.arrow_kernel` over `match_text`. The broadcast
+        is read once per partition, not once per batch. Null and blank
+        text give `[]`, never null."""
+        bc = self._broadcast(spark)
+        return arrow_kernel(lambda: per_value(_text_matcher(bc.value)), ANNOTATIONS_TYPE)
 
     def annotate_df(
         self,

@@ -465,13 +465,13 @@ def lucene_annotator(dictionary, opts: dict | None = None):
 def lucene_annotate_df(df, dictionary, text_col: str = "text", opts: dict | None = None,
                        output_col: str = "query_matches"):
     """DataFrame operator: array<struct> of boolean query matches per row.
-    Same broadcast + Arrow UDF as the phrase annotator
-    (`annotator.arrow_map_udf`, non-deterministic for the same reason)."""
+    Same broadcast + per-value `kernel.arrow_kernel` as the phrase
+    annotator."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import (ArrayType, MapType, StringType, StructField,
                                    StructType)
 
-    from .annotator import arrow_map_udf
+    from .kernel import arrow_kernel, per_value
 
     schema = ArrayType(
         StructType(
@@ -486,5 +486,5 @@ def lucene_annotate_df(df, dictionary, text_col: str = "text", opts: dict | None
     # broadcast the picklable compiled form; rebuild the evaluator per
     # executor (closures over module functions don't pickle)
     bc = df.sparkSession.sparkContext.broadcast(compile_lucene_dictionary(dictionary, opts))
-    udf = arrow_map_udf(bc, lambda v: _make_matcher(*v), schema)
+    udf = arrow_kernel(lambda: per_value(_make_matcher(*bc.value)), schema)
     return df.withColumn(output_col, udf(F.col(text_col)))

@@ -1,1 +1,1 @@
-from . import dedup, multimodal, rollup, similarity, skew, textstats  # noqa: F401
+from . import dedup, multimodal, rollup, similarity, textstats  # noqa: F401

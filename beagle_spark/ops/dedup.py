@@ -11,7 +11,7 @@ driver-side step is connected_components' finish for small graphs.
                             MinHash-LSH banding trick; candidate
                             verification is an equi-join, never an
                             all-pairs product
-- simhash_fingerprints_md5: map-only Arrow kernel (oracle-exact hash
+- simhash_fingerprints_md5: map-only column kernel (oracle-exact hash
                             family); simhash_pairs bands it through
                             bucket_pairs and verifies hamming JVM-side
 - bucket_pairs:             the one "rows keyed by bucket -> member
@@ -48,17 +48,15 @@ from __future__ import annotations
 import hashlib
 import re
 import time
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
+from ..kernel import arrow_kernel
 from .textstats import fingerprint, tokens_ws, word_grams
 
 # Default oversized-bucket guard of the MinHash-LSH path: buckets above
@@ -676,7 +674,7 @@ def simhash_fingerprints_md5(
     strpos('0123..ef', digit)-1 formulation.
 
     Plan shape: simhash is a pure per-document function, so this is a
-    MAP-ONLY Arrow pandas UDF — no token explode, no groupBy, no
+    MAP-ONLY column kernel — no token explode, no groupBy, no
     shuffle. (The previous explode + 64-conditional-sum aggregate
     multiplied rows ~40x, shuffled them, and its 64-aggregate
     HashAggregate fell out of whole-stage codegen into interpreted
@@ -697,14 +695,13 @@ def simhash_fingerprints_md5(
         dtype=np.int64,
     )
 
-    @pandas_udf("long")
-    def _simhash(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        # Iterator form: the per-unique-token contribution cache lives
-        # for the whole TASK, amortizing md5 work across batches (the
-        # scalar form rebuilt it per batch). Per-batch accumulation is
-        # one fancy-index + reduceat + matmul instead of a Python-level
-        # 64-add loop per token (r20 shape) — the md5-per-unique-token
-        # cost is the only remaining per-row Python work.
+    def factory():
+        # Built once per partition: the per-unique-token contribution
+        # cache lives for the whole TASK, amortizing md5 work across
+        # batches. Per-batch accumulation is one fancy-index + reduceat
+        # + matmul instead of a Python-level 64-add loop per token — the
+        # md5-per-unique-token cost is the only remaining per-row Python
+        # work.
         tok_idx: dict = {}
         vecs: list = []  # parallel to tok_idx values: 64-vector each
         stacked = [np.empty((0, 64), dtype=np.int64)]  # memoized vstack
@@ -724,14 +721,15 @@ def simhash_fingerprints_md5(
 
         weights = (np.int64(1) << np.arange(63)).astype(np.int64)
         int64_min = np.int64(-(1 << 63))
-        for texts in batches:
+
+        def simhash(texts: pa.Array) -> np.ndarray:
             if len(vecs) > _CACHE_CAP:
                 tok_idx.clear()
                 vecs.clear()
                 stacked[0] = np.empty((0, 64), dtype=np.int64)
             flat: list[int] = []
             starts: list[int] = [0]
-            for t in texts:
+            for t in texts.to_pylist():
                 # trim SPACES ONLY and keep empty tokens from the split:
                 # Spark's trim() strips ' ' (not \t\n) and split(limit=-1)
                 # keeps leading/trailing '' elements, as does DuckDB's
@@ -741,9 +739,6 @@ def simhash_fingerprints_md5(
                 toks = _ws.split(t) if t else [""]
                 flat.extend(idx(tok) for tok in toks)
                 starts.append(len(flat))
-            if not texts.size:
-                yield pd.Series([], dtype="int64")
-                continue
             if stacked[0].shape[0] != len(vecs):  # vocab grew this batch
                 stacked[0] = np.vstack(vecs)
             V = stacked[0]  # (n_unique_tokens_so_far, 64)
@@ -753,13 +748,13 @@ def simhash_fingerprints_md5(
             bits = sums > 0
             fps = bits[:, :63].astype(np.int64) @ weights
             fps[bits[:, 63]] += int64_min
-            yield pd.Series(fps)
+            return fps
 
-    # non-deterministic mark: stop pushed filters (isnotnull from the
-    # downstream band joins) duplicating the UDF evaluation (guide §4.4)
+        return simhash
+
     out = df.select(
         F.col(id_col).alias("id"),
-        _simhash.asNondeterministic()(F.col(text_col)).alias("simhash"),
+        arrow_kernel(factory, LongType())(F.col(text_col)).alias("simhash"),
     )
     n_bands = 64 // band_bits
     mask = (1 << band_bits) - 1

@@ -1,5 +1,5 @@
 """Multimodal column plumbing: image/audio/video as opaque binary
-columns + typed metadata, processed via Arrow-batched mapInPandas.
+columns + typed metadata, processed via Arrow-batched mapInArrow.
 
 Uncompressed 24/32-bit BMP decodes natively end-to-end (`decode_bmp`
 below — dependency-free, header-validated), proving the decode seam
@@ -22,9 +22,10 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -60,7 +61,7 @@ FEATURE_SCHEMA = StructType(
 def decode_bmp(payload: bytes) -> np.ndarray:
     """Dependency-free decoder for uncompressed 24/32-bit BMP
     (BITMAPINFOHEADER): returns an (h, w, 3) uint8 RGB array. Proves
-    the mapInPandas decode seam end-to-end without an imaging library;
+    the mapInArrow decode seam end-to-end without an imaging library;
     rows are stored bottom-up and padded to 4-byte boundaries."""
     import struct
 
@@ -155,33 +156,29 @@ def _image_feature(payload: bytes, fmt: str, dim: int) -> list | None:
 def extract_features(
     df: DataFrame, dim: int = 8, fake: bool = True
 ) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads. Arrow ships
-    the bytes zero-copy; each pandas batch is processed vectorized.
-    With fake=False, payloads decode for real (BMP natively; other
-    formats raise until an imaging library is present)."""
+    """mapInArrow feature extraction over binary payloads: Arrow ships
+    the bytes to the worker and each record batch comes back as one
+    (media_id, n_bytes, feature) batch. With fake=False, payloads
+    decode for real (BMP natively; other formats raise until an imaging
+    library is present)."""
+    schema = to_arrow_schema(FEATURE_SCHEMA)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if fake:
-                feats = [
-                    _fake_feature(p, dim).tolist() if p is not None else None
-                    for p in pdf["payload"]
-                ]
-            else:
-                fmts = pdf["format"] if "format" in pdf else [""] * len(pdf)
-                feats = [
-                    _image_feature(p, f, dim) if p is not None else None
-                    for p, f in zip(pdf["payload"], fmts)
-                ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_bytes": [len(p) if p is not None else 0 for p in pdf["payload"]],
-                    "feature": feats,
-                }
-            )
+    def feature(p, fmt):
+        if p is None:
+            return None
+        return _fake_feature(p, dim).tolist() if fake else _image_feature(p, fmt, dim)
 
-    return df.mapInPandas(run, schema=FEATURE_SCHEMA)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            payloads = rb.column("payload").to_pylist()
+            has_fmt = "format" in rb.schema.names
+            fmts = rb.column("format").to_pylist() if has_fmt else [""] * len(payloads)
+            n_bytes = [len(p) if p is not None else 0 for p in payloads]
+            feats = [feature(p, f) for p, f in zip(payloads, fmts)]
+            cols = {"media_id": rb.column("media_id"), "n_bytes": n_bytes, "feature": feats}
+            yield pa.RecordBatch.from_pydict(cols, schema=schema)
+
+    return df.mapInArrow(run, schema=FEATURE_SCHEMA)
 
 
 def synthesize_media_from_docs(docs: DataFrame) -> DataFrame:

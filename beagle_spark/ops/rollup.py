@@ -1,27 +1,17 @@
-"""Hypertable-style continuous aggregates + bucketed co-location.
+"""Hypertable-style continuous aggregates.
 
-Two scale primitives the relational surface leans on at 100 TB:
-
-- Rollups (continuous aggregates): maintain a small pre-aggregated
-  table of MERGEABLE partials (count/sum/min/max per time bucket x
-  dims). Queries over long ranges hit the rollup instead of the fact
-  table; partials from different ingests merge by re-aggregation —
-  the TimescaleDB continuous-aggregate / materialized-view pattern
-  expressed as plain Spark jobs over partitioned parquet.
-
-- Bucketed tables: pre-shuffle both sides of a recurring join on the
-  join key ONCE at write time (CLUSTERED BY ... INTO n BUCKETS); every
-  subsequent join on that key is exchange-free (SortMergeJoin with no
-  Exchange). This is how a 100 TB fact-to-fact join avoids paying the
-  shuffle per query.
+Rollups maintain a small pre-aggregated table of MERGEABLE partials
+(count/sum/min/max per time bucket x dims). Queries over long ranges
+hit the rollup instead of the fact table; partials from different
+ingests merge by re-aggregation — the TimescaleDB continuous-aggregate
+/ materialized-view pattern expressed as plain Spark jobs over
+partitioned parquet.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MERGEABLE_AGGS = ("count", "sum", "min", "max")
 
 
 def build_rollup(
@@ -67,26 +57,3 @@ def query_rollup(rollup: DataFrame, dims: list[str]) -> DataFrame:
         F.min("min_v").alias("min_v"),
         F.max("max_v").alias("max_v"),
     )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int = 16,
-    sort_col: str | None = None,
-) -> None:
-    """Persist as a bucketed managed table: the one-time shuffle that
-    makes every later equi-join/agg on `bucket_col` exchange-free."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    writer = writer.sortBy(sort_col or bucket_col)
-    writer.saveAsTable(table_name, format="parquet")
-
-
-def bucketed_join(spark: SparkSession, left_table: str, right_table: str,
-                  key: str) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key. The physical
-    plan must contain no Exchange (asserted in tests/test_plans.py)."""
-    lt = spark.table(left_table)
-    rt = spark.table(right_table)
-    return lt.join(rt, key)

@@ -8,11 +8,12 @@ Two paths:
   computed scan-side, candidates come from the query's bucket (+
   optional multi-probe), exact cosine re-rank only within candidates.
 
-All vector math runs in Arrow-batched Pandas UDFs over NumPy —
-vectorized ACROSS rows (one C-loop per dimension, not per element) but
-accumulated SEQUENTIALLY across dimensions, so every row's dot/norm is
-computed with the exact IEEE op order of the sequential fold it
-replaced: results are bit-for-bit unchanged and oracle-comparable.
+All vector math runs in column kernels (`kernel.arrow_kernel`, Arrow
+batches in and out) over NumPy — vectorized ACROSS rows (one C-loop
+per dimension, not per element) but accumulated SEQUENTIALLY across
+dimensions, so every row's dot/norm is computed with the exact IEEE op
+order of the sequential fold it replaced: results are bit-for-bit
+unchanged and oracle-comparable.
 
 Why not pure SQL expressions: higher-order lambdas
 (aggregate/zip_with/transform) are interpreted per element with
@@ -25,22 +26,27 @@ and is the 100 TB scan path.
 
 from __future__ import annotations
 
-import json
-from contextlib import closing
-
 import numpy as np
-import pandas as pd
-
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType, IntegerType
 
+from ..kernel import arrow_kernel
 from .dedup import bucket_pairs
 
 
-def _mat(series: pd.Series) -> np.ndarray:
-    """Series of array<float> -> (n, dim) float64 matrix (exact widen)."""
-    return np.array(series.tolist(), dtype=np.float64)
+def _matrix(arr: pa.ListArray) -> np.ndarray:
+    """A batch of array<float> rows -> (n, dim) float64 matrix (exact
+    widen). A null row, or rows of different lengths, raise ValueError:
+    a bare reshape would silently regroup the values."""
+    if arr.null_count:
+        raise ValueError(f"{arr.null_count} null vector row(s) in a batch")
+    lengths = np.diff(arr.offsets.to_numpy())
+    if (lengths != lengths[0]).any():
+        raise ValueError(f"vector rows of lengths {lengths.min()}..{lengths.max()} in one batch")
+    values = arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    return values.reshape(len(arr), int(lengths[0]))
 
 
 def _seq_sum(M: np.ndarray) -> np.ndarray:
@@ -65,33 +71,21 @@ def cosine_col(vec_col, query: list[float]):
     q = _vec(query)
     qn = np.sqrt(_seq_sum(q * q))
 
-    @pandas_udf("double")
-    def _cos(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="float64")
-        V = _mat(v)
-        return pd.Series(_seq_sum(V * q) / (np.sqrt(_seq_sum(V * V)) * qn))
+    def cos(v):
+        V = _matrix(v)
+        return _seq_sum(V * q) / (np.sqrt(_seq_sum(V * V)) * qn)
 
-    return _cos(vec_col)
+    return arrow_kernel(lambda: cos, DoubleType())(vec_col)
 
 
 def cosine_pair_col(a_col, b_col):
     """Cosine(vector column, vector column) as an Arrow-batched Column."""
 
-    @pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        A, B = _mat(a), _mat(b)
-        return pd.Series(
-            _seq_sum(A * B) / (np.sqrt(_seq_sum(A * A)) * np.sqrt(_seq_sum(B * B)))
-        )
+    def cos(a, b):
+        A, B = _matrix(a), _matrix(b)
+        return _seq_sum(A * B) / (np.sqrt(_seq_sum(A * A)) * np.sqrt(_seq_sum(B * B)))
 
-    # non-deterministic mark: callers filter directly on the cosine
-    # (where cos >= threshold); without it the optimizer pushes the
-    # filter below the projection WITH A COPY of the UDF, scoring every
-    # candidate pair twice (guide §4.4)
-    return _cos.asNondeterministic()(a_col, b_col)
+    return arrow_kernel(lambda: cos, DoubleType())(a_col, b_col)
 
 
 def brute_force_topk(
@@ -107,10 +101,12 @@ def brute_force_topk(
     a per-partition top-k then a single driver merge, not a full sort.
     `payload_cols` names extra columns to carry through (none by
     default — the input only needs `id_col` and `vec_col`)."""
+    if exclude_ids:
+        # before scoring: the kernel's non-deterministic mark keeps a
+        # filter on the scored relation from reaching the scan
+        df = df.where(~F.col(id_col).isin(list(exclude_ids)))
     cols = [F.col(id_col), *[F.col(c) for c in payload_cols]]
     scored = df.select(*cols, cosine_col(F.col(vec_col), query).alias("_cos"))
-    if exclude_ids:
-        scored = scored.where(~F.col(id_col).isin(list(exclude_ids)))
     return (
         scored.orderBy(F.desc("_cos"), F.col(id_col))
         .limit(k)
@@ -120,24 +116,19 @@ def brute_force_topk(
 
 def hyperplane_bucket(vec_col, planes: list[list[float]]):
     """LSH bucket id: bit h = sign(dot(v, plane_h)). Planes are literal
-    numpy rows closed over the UDF — deterministic, no state. Per-plane
-    dots use the sequential-over-dims order, matching the fold."""
+    numpy rows closed over the kernel — deterministic, no state.
+    Per-plane dots use the sequential-over-dims order, matching the
+    fold."""
     P = [_vec(p) for p in planes]
 
-    @pandas_udf("int")
-    def _bucket(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        V = _mat(v)
+    def bucket_of(v):
+        V = _matrix(v)
         bucket = np.zeros(V.shape[0], dtype=np.int64)
         for h, plane in enumerate(P):
             bucket |= (_seq_sum(V * plane) > 0).astype(np.int64) << h
-        return pd.Series(bucket.astype("int32"))
+        return bucket.astype(np.int32)
 
-    # non-deterministic mark: lsh_ann_topk filters on the bucket column
-    # (_bucket == query bucket); stop the pushed filter duplicating the
-    # UDF evaluation (guide §4.4)
-    return _bucket.asNondeterministic()(vec_col)
+    return arrow_kernel(lambda: bucket_of, IntegerType())(vec_col)
 
 
 def make_planes(dim: int, n_planes: int = 8, seed: int = 42) -> list[list[float]]:
@@ -166,106 +157,13 @@ def lsh_ann_topk(
     payload_cols: tuple = (),
 ) -> DataFrame:
     """ANN: restrict exact scoring to vectors in the query's hyperplane
-    bucket. Scans the corpus and evaluates the bucket UDF on every row
-    per query — right for one-off queries over transient data. For a
-    standing corpus serving many queries, build the bucket layout ONCE
-    with :func:`build_lsh_bucket_index` and probe it with
-    :func:`lsh_ann_topk_indexed`: the probe is then a partition-pruned
-    scan (reads only the query bucket's files, no UDF at all)."""
+    bucket. Scans the corpus and evaluates the bucket kernel on every
+    row per query."""
     dim = len(query)
     planes = make_planes(dim, n_planes, seed)
     qbucket = _query_bucket(query, planes)
     bucketed = df.withColumn("_bucket", hyperplane_bucket(F.col(vec_col), planes))
     cands = bucketed.where(F.col("_bucket") == qbucket)
-    return brute_force_topk(cands, query, k, vec_col, id_col, payload_cols=payload_cols)
-
-
-# Build parameters of a bucket index, stored beside its parquet files.
-# The leading underscore keeps Spark's parquet listing from reading it.
-_INDEX_PARAMS = "_lsh_index.json"
-
-
-def _index_params_file(spark, path: str):
-    """(Hadoop FileSystem, Path) of the index's parameter file, so the
-    index works on any filesystem Spark can write the parquet to."""
-    meta = spark._jvm.org.apache.hadoop.fs.Path(path, _INDEX_PARAMS)
-    return meta.getFileSystem(spark._jsc.hadoopConfiguration()), meta
-
-
-def build_lsh_bucket_index(
-    df: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_planes: int = 6,
-    seed: int = 42,
-    payload_cols: tuple = (),
-    dim: int | None = None,
-) -> None:
-    """Write the corpus as parquet PARTITIONED BY the hyperplane bucket
-    id (guide §6: partition by the low-cardinality column lookups
-    filter on). One pass evaluates the bucket kernel once per row; from
-    then on every :func:`lsh_ann_topk_indexed` probe is a
-    partition-pruned scan of one bucket directory — the bucket
-    predicate never touches row data and the Python kernel never runs
-    at query time. 2^n_planes buckets => with the default 6 planes, 64
-    partition directories; at 100 TB each holds ~1.6 TB of vectors,
-    well past the small-files hazard. The (dim, n_planes, seed) the
-    index was built with are written to ``_lsh_index.json`` in ``path``
-    and checked by every probe."""
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
-    planes = make_planes(dim, n_planes, seed)
-    (
-        df.select(
-            F.col(id_col),
-            F.col(vec_col),
-            *[F.col(c) for c in payload_cols],
-            hyperplane_bucket(F.col(vec_col), planes).alias("bucket"),
-        )
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(path)
-    )
-    fs, meta = _index_params_file(df.sparkSession, path)
-    with closing(fs.create(meta, True)) as out:
-        out.write(json.dumps({"dim": dim, "n_planes": n_planes, "seed": seed}).encode())
-
-
-def lsh_ann_topk_indexed(
-    spark,
-    path: str,
-    query: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_planes: int = 6,
-    seed: int = 42,
-    payload_cols: tuple = (),
-) -> DataFrame:
-    """ANN probe against a :func:`build_lsh_bucket_index` layout. The
-    ``bucket = <query bucket>`` predicate is a PARTITION filter on the
-    parquet scan (visible as ``PartitionFilters`` in the plan): only
-    the matching bucket directory is listed and read — no full-corpus
-    pass, no UDF evaluation. Same result set as :func:`lsh_ann_topk`
-    with matching planes/seed over the same data.
-
-    Raises ValueError when the probe's (dim, n_planes, seed) differ from
-    the ones the index was built with: the planes would differ, and the
-    probe would prune to the wrong bucket."""
-    fs, meta = _index_params_file(spark, path)
-    if not fs.exists(meta):
-        raise ValueError(
-            f"{path} has no {_INDEX_PARAMS}; rebuild it with build_lsh_bucket_index"
-        )
-    with closing(fs.open(meta)) as inp:
-        built = json.loads(spark._jvm.org.apache.commons.io.IOUtils.toString(inp, "UTF-8"))
-    probe = {"dim": len(query), "n_planes": n_planes, "seed": seed}
-    if built != probe:
-        raise ValueError(f"LSH index {path} was built with {built}, probed with {probe}")
-    planes = make_planes(len(query), n_planes, seed)
-    qbucket = _query_bucket(query, planes)
-    cands = spark.read.parquet(path).where(F.col("bucket") == qbucket)
     return brute_force_topk(cands, query, k, vec_col, id_col, payload_cols=payload_cols)
 
 
@@ -344,28 +242,22 @@ def train_ivf_centroids(
 
 def ivf_assign(vec_col, centroids: list[list[float]]):
     """Nearest-centroid id (argmin over squared distances; centroids are
-    driver-side constants closed over an Arrow-batched UDF). Computed
+    driver-side constants closed over a column kernel). Computed
     scan-side — at scale, write it as a partition column for pruned
     probes. Per-centroid distances use the sequential-over-dims order
     (matches a fold); np.argmin picks the first minimum, so ties pick
     the lowest centroid id — same semantics as a strict < fold."""
     C = [_vec(c) for c in centroids]
 
-    @pandas_udf("int")
-    def _cell(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        V = _mat(v)
+    def cell_of(v):
+        V = _matrix(v)
         dists = np.empty((V.shape[0], len(C)))
         for i, c in enumerate(C):
             D = V - c
             dists[:, i] = _seq_sum(D * D)
-        return pd.Series(np.argmin(dists, axis=1).astype("int32"))
+        return np.argmin(dists, axis=1).astype(np.int32)
 
-    # non-deterministic mark: ivf_ann_topk filters on the cell column
-    # (_cell IN probe set); stop the pushed filter duplicating the UDF
-    # evaluation (guide §4.4)
-    return _cell.asNondeterministic()(vec_col)
+    return arrow_kernel(lambda: cell_of, IntegerType())(vec_col)
 
 
 def ivf_ann_topk(

@@ -75,3 +75,22 @@ def test_sql_function_registration(spark):
         "SELECT count(*) AS n FROM docs_v WHERE size(beagle_annotate(text)) > 0"
     ).collect()[0]
     assert row["n"] > 0
+
+
+def test_import_loads_no_pandas():
+    """Every column kernel is an Arrow UDF, so importing the package
+    (on the driver, and in each Python worker that unpickles a kernel)
+    does not load pandas; only streaming.stateful_match_totals imports
+    it, lazily."""
+    import pathlib
+    import subprocess
+    import sys
+
+    out = subprocess.run(
+        [sys.executable, "-c", "import beagle_spark, sys; print('pandas' in sys.modules)"],
+        capture_output=True,
+        text=True,
+        check=True,
+        cwd=pathlib.Path(__file__).resolve().parents[1],
+    )
+    assert out.stdout.strip() == "False"

@@ -574,48 +574,50 @@ def test_adversarial_cc_graph_driver_finish(spark):
     }, rows
 
 
-def test_lsh_ann_indexed_partition_pruned(spark, emb, tmp_path):
-    """VERDICT r21 item 8: a standing corpus serves ANN lookups from a
-    bucket-partitioned parquet layout. Build the index once, then
-    assert (a) the probe returns exactly lsh_ann_topk's result on the
-    same data, (b) the probe plan prunes on the bucket PARTITION column
-    (PartitionFilters carries the bucket equality) and contains NO
-    Python eval node — the bucket kernel runs only at build time."""
-    path = str(tmp_path / "lsh_index")
-    similarity.build_lsh_bucket_index(emb, path, payload_cols=("label",))
-    q = [float(x) for x in emb.where(F.col("vec_id") == 0).first()["embedding"]]
-    probe = similarity.lsh_ann_topk_indexed(
-        spark, path, q, k=10, payload_cols=("label",)
-    )
-    got = [(r.vec_id, r.label) for r in probe.collect()]
-    want = [
-        (r.vec_id, r.label)
-        for r in similarity.lsh_ann_topk(emb, q, k=10, payload_cols=("label",)).collect()
-    ]
-    assert got == want and len(got) > 0
-    plan = probe._sc._jvm.PythonSQLUtils.explainString(
-        probe._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters" in plan and "bucket" in plan.split("PartitionFilters", 1)[1][:200]
-    # exactly ONE Python eval node: the cosine scorer over the pruned
-    # bucket. The bucket kernel itself never runs at probe time (the
-    # unindexed plan has two: bucket + cosine).
-    # (tree-form "ArrowEvalPython (n" only: the formatted dump repeats
-    # each node as a "(n) ArrowEvalPython" detail header)
-    assert plan.count("ArrowEvalPython (") == 1
+@pytest.mark.parametrize(
+    "rows",
+    [[[1.0, 2.0, 3.0], [1.0, 2.0, 3.0, 4.0, 5.0]], [[1.0, 2.0, 3.0], None]],
+    ids=["ragged", "null_row"],
+)
+def test_vector_kernels_reject_ragged_or_null_batch(spark, rows):
+    """A list<float> batch whose rows differ in length, or that holds a
+    null row, has no (n, dim) matrix: the bucket and pair-cosine
+    kernels fail with ValueError and return nothing, rather than
+    regrouping the values (a flat reshape turns rows of lengths 3 and 5
+    into shape (2, 4) without an error)."""
+    from pyspark.errors import PythonException
+
+    one_batch = spark.createDataFrame([(r,) for r in rows], "v array<float>").coalesce(1)
+    planes = similarity.make_planes(3, 4)
+    for kernel in (
+        similarity.hyperplane_bucket(F.col("v"), planes),
+        similarity.cosine_pair_col(F.col("v"), F.col("v")),
+    ):
+        with pytest.raises(PythonException, match="ValueError"):
+            one_batch.select(kernel.alias("out")).collect()
 
 
-def test_lsh_ann_indexed_rejects_mismatched_params(spark, emb, tmp_path):
-    """A probe whose planes differ from the build's would prune to the wrong bucket and return wrong neighbours without
-    a trace. Built with 6 planes, probed with 5: the probe must raise."""
-    path = str(tmp_path / "lsh_index")
-    similarity.build_lsh_bucket_index(emb, path, n_planes=6)
-    q = [float(x) for x in emb.where(F.col("vec_id") == 0).first()["embedding"]]
-    with pytest.raises(ValueError, match="n_planes"):
-        similarity.lsh_ann_topk_indexed(spark, path, q, k=10, n_planes=5)
-    with pytest.raises(ValueError, match="dim"):
-        similarity.lsh_ann_topk_indexed(spark, path, q[:32], k=10)
-    assert similarity.lsh_ann_topk_indexed(spark, path, q, k=10).count() > 0
+def test_zero_vector_cosine_is_null(spark):
+    """A zero vector's cosine is 0/0. The kernels return NULL for it,
+    not NaN: Spark orders NaN above every double, so a NaN would pass
+    any `>=` threshold and rank first in a top-k."""
+    df = spark.createDataFrame(
+        [(0, [0.0, 0.0, 0.0]), (1, [1.0, 2.0, 3.0]), (2, [1.0, 2.0, 3.5])],
+        "vec_id long, embedding array<float>",
+    ).coalesce(1)
+    q = [1.0, 2.0, 3.0]
+    one = df.select(
+        "vec_id",
+        similarity.cosine_col(F.col("embedding"), q).alias("c"),
+        similarity.cosine_pair_col(F.col("embedding"), F.col("embedding")).alias("cc"),
+    )
+    rows = {r.vec_id: (r.c, r.cc) for r in one.collect()}
+    assert rows[0] == (None, None), rows
+    assert rows[1] == (pytest.approx(1.0), pytest.approx(1.0)), rows
+    pairs = similarity.cosine_pairs(df, threshold=0.0)
+    assert [(r.id_a, r.id_b) for r in pairs.collect()] == [(1, 2)]
+    top = similarity.brute_force_topk(df, q, k=3)
+    assert [r.vec_id for r in top.collect()] == [1, 2, 0]
 
 
 def test_lsh_ann_finds_query_row_with_near_zero_dot(spark):

@@ -1,7 +1,7 @@
 """Golden semantics tests ported from the reference's behavioral spec
 (reference: test/beagle/phrases_test.clj — file:line cited per test).
 No Spark needed: these exercise the local highlighter core that the
-pandas UDF wraps."""
+Arrow UDF wraps."""
 
 import pytest
 

@@ -74,28 +74,6 @@ def test_topk_is_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan  # not a global sort
 
 
-def test_bucketed_join_is_exchange_free(spark, tmp_path):
-    from beagle_spark.ops.rollup import bucketed_join, write_bucketed
-
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-        write_bucketed(
-            orders.withColumnRenamed("o_orderkey", "k"), "b_orders", "k", 4
-        )
-        write_bucketed(li.withColumnRenamed("l_orderkey", "k"), "b_lineitem", "k", 4)
-        joined = bucketed_join(spark, "b_orders", "b_lineitem", "k")
-        plan = plan_of(joined)
-        assert "Exchange" not in plan  # co-located: bucketing replaced the shuffle
-        assert joined.count() > 0
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_rollup_merge_equals_direct(spark):
     from beagle_spark.ops.rollup import build_rollup, merge_rollups, query_rollup
     from beagle_spark.relational import load_events
@@ -118,64 +96,6 @@ def test_rollup_merge_equals_direct(spark):
         .orderBy("event_type")
     )
     assert [tuple(r) for r in merged.collect()] == [tuple(r) for r in direct.collect()]
-
-
-def test_salted_join_row_identical(spark):
-    from beagle_spark.ops.skew import salted_count, salted_join
-    from pyspark.sql import functions as F
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    # nanos ts unused here; keep columns simple
-    facts = ev.select("event_id", "user_id", "event_type")
-    dims = facts.select("user_id").distinct().withColumn(
-        "segment", F.pmod("user_id", F.lit(3))
-    )
-    plain = facts.join(dims, "user_id").orderBy("event_id")
-    salted = salted_join(facts, dims, "user_id", n_salts=4,
-                         salt_source="event_id").orderBy("event_id")
-    assert sorted(plain.columns) == sorted(salted.columns)
-    cols = sorted(plain.columns)
-    assert [tuple(r[c] for c in cols) for r in plain.collect()] == [
-        tuple(r[c] for c in cols) for r in salted.collect()
-    ]
-
-    counted = {r["user_id"]: r["n"] for r in salted_count(facts, "user_id").collect()}
-    direct = {
-        r["user_id"]: r["count"]
-        for r in facts.groupBy("user_id").count().collect()
-    }
-    assert counted == direct
-
-
-def test_salted_count_spreads_hot_key(spark):
-    """A planted hot key must be split across ~n_salts partial groups in
-    the first aggregation stage — the whole point of salting. (The r1
-    implementation salted by hash(key), which is constant per key and
-    spread nothing.)"""
-    from pyspark.sql import functions as F
-
-    hot = spark.range(10_000).select(F.lit("whale").alias("k"))
-    cold = spark.range(100).select(F.concat(F.lit("u"), F.col("id")).alias("k"))
-    df = hot.unionByName(cold)
-
-    n_salts = 8
-    # replicate salted_count's partial stage to count distinct salts per key
-    partial = (
-        df.withColumn(
-            "_salt",
-            F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(n_salts)).cast("int"),
-        )
-        .groupBy("k", "_salt")
-        .count()
-    )
-    hot_groups = partial.where(F.col("k") == "whale").count()
-    assert hot_groups >= n_salts - 1, f"hot key landed in only {hot_groups} groups"
-
-    from beagle_spark.ops.skew import salted_count
-
-    got = {r["k"]: r["n"] for r in salted_count(df, "k", n_salts=n_salts).collect()}
-    assert got["whale"] == 10_000
-    assert len(got) == 101
 
 
 def test_partition_pruning(spark, tmp_path):
