@@ -25,7 +25,8 @@ from typing import Optional
 import regex as re
 
 from .analysis import analyze, merge_config
-from .matcher.core import _match_unordered, dl_distance_leq
+from .matcher.core import (_match_unordered, _positions_exact, build_token_index,
+                           dl_distance_leq)
 from .schema import norm_keys, norm_meta
 
 logger = logging.getLogger(__name__)
@@ -303,36 +304,40 @@ def _in_range(t: str, node: "RangeQ") -> bool:
     return True
 
 
-def eval_query(node, token_list: list[str], token_set: set) -> bool:
+def eval_query(node, index: dict) -> bool:
+    """Boolean match of `node` against one document's token index
+    (`matcher.core.build_token_index`: token -> sorted positions, the
+    same per-document index the phrase matcher probes). Term-level
+    nodes read its keys; a phrase runs the phrase matcher's sloppy
+    search over its position lists."""
     if isinstance(node, TermQ):
-        return node.term in token_set
+        return node.term in index
     if isinstance(node, FuzzyQ):
-        return any(dl_distance_leq(node.term, t, node.max_edits) for t in token_set)
+        return any(dl_distance_leq(node.term, t, node.max_edits) for t in index)
     if isinstance(node, WildcardQ):
         rx = _wildcard_to_regex(node.pattern)
-        return any(rx.fullmatch(t) for t in token_set)
+        return any(rx.fullmatch(t) for t in index)
     if isinstance(node, RegexpQ):
         rx = re.compile(node.pattern)
-        return any(rx.fullmatch(t) for t in token_set)
+        return any(rx.fullmatch(t) for t in index)
     if isinstance(node, RangeQ):
-        return any(_in_range(t, node) for t in token_set)
+        return any(_in_range(t, node) for t in index)
     if isinstance(node, PhraseQ):
-        k = len(node.terms)
-        if k == 1:
-            return node.terms[0] in token_set
-        # sloppy-phrase existence over string positions
-        positions = [[i for i, t in enumerate(token_list) if t == term]
-                     for term in node.terms]
-        return all(positions) and bool(_match_unordered(positions, node.slop, node.slop))
+        positions = _positions_exact(index, node.terms)
+        if positions is None:
+            return False
+        return len(positions) == 1 or bool(
+            _match_unordered(positions, node.slop, node.slop)
+        )
     if isinstance(node, BoolQ):
         for m in node.must_not:
-            if eval_query(m, token_list, token_set):
+            if eval_query(m, index):
                 return False
         for m in node.must:
-            if not eval_query(m, token_list, token_set):
+            if not eval_query(m, index):
                 return False
         if node.should and not node.must:
-            return any(eval_query(s, token_list, token_set) for s in node.should)
+            return any(eval_query(s, index) for s in node.should)
         return bool(node.must) or not node.should
     raise TypeError(f"unknown node {node!r}")
 
@@ -432,14 +437,12 @@ def _make_matcher(compiled, type_name):
         if text is None or not text.strip():
             return []
         out = []
-        by_conf: dict = {}
+        by_conf: dict = {}  # one token index per (document, config)
         for cq in compiled:
-            key = cq.conf
-            if key not in by_conf:
-                tl = analyze(text, key).texts
-                by_conf[key] = (tl, set(tl))
-            token_list, token_set = by_conf[key]
-            if eval_query(cq.ast, token_list, token_set):
+            index = by_conf.get(cq.conf)
+            if index is None:
+                index = by_conf[cq.conf] = build_token_index(analyze(text, cq.conf))
+            if eval_query(cq.ast, index):
                 out.append(
                     {
                         "text": cq.query_string,

@@ -9,21 +9,25 @@ per document, README.md:11):
 - annotate_stream: readStream -> annotate -> (optional) explode
 - windowed_annotation_counts: event-time tumbling windows + watermark
   over the annotation stream (late data handled by Spark state GC)
+- stateful_match_totals: running match totals per dictionary entry, a
+  declarative streaming aggregation (state is one counter per entry)
+- stream_exact_dedup: watermarked dropDuplicates on the text fingerprint
 - run_with_dictionary_refresh: foreachBatch driver that recompiles +
   re-broadcasts the dictionary when its source changes — the Spark
   equivalent of updating Lucene Monitor's query index in place.
 
-Scale notes: annotation adds no shuffle to a stream; only the windowed
-aggregation shuffles (keyed by window x type). State size is bounded by
-the watermark horizon; choose shuffle partitions to match key
-cardinality (event types x windows), not input volume.
+Scale notes: annotation adds no shuffle to a stream; the stateful
+operators shuffle by their key (window x entry, entry, text hash).
+Windowed and dedup state is bounded by the watermark horizon, the
+running totals by the dictionary size; choose shuffle partitions to
+match key cardinality, not input volume.
 """
 
 from __future__ import annotations
 
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .annotator import Annotator
@@ -67,51 +71,17 @@ def windowed_annotation_counts(
     )
 
 
-def stateful_match_totals(
-    exploded_annotations: DataFrame,
-    timeout_minutes: int = 0,
-):
-    """Custom stateful streaming operator via applyInPandasWithState:
-    running total of matches per dictionary entry across micro-batches
-    (what the reference's users script around the library by hand).
-
-    State per dict_entry_id is a single counter — O(#dictionary) total
-    state, independent of stream length. An optional processing-time
-    timeout expires idle entries. Input: the exploded annotation stream
-    (explode=True), needing columns dict_entry_id (+ any)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (LongType, StringType, StructField,
-                                   StructType)
-
-    out_schema = StructType(
-        [
-            StructField("dict_entry_id", StringType()),
-            StructField("total_matches", LongType()),
-        ]
-    )
-    state_schema = StructType([StructField("n", LongType())])
-
-    def update(key, pdfs, state: GroupState):
-        n = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            n += len(pdf)
-        state.update((n,))
-        if timeout_minutes:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame({"dict_entry_id": [key[0]], "total_matches": [n]})
-
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_minutes
-        else GroupStateTimeout.NoTimeout
-    )
-    return exploded_annotations.groupBy("dict_entry_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=timeout,
+def stateful_match_totals(exploded_annotations: DataFrame) -> DataFrame:
+    """Running total of matches per dictionary entry across
+    micro-batches (what the reference's users script around the library
+    by hand), as Spark's built-in streaming aggregation: in update mode
+    each micro-batch emits the new (dict_entry_id, total_matches) of
+    every entry it touched. The state store keeps one counter per entry,
+    O(#dictionary) state independent of stream length. Input: the
+    exploded annotation stream (``explode=True``), with a
+    ``dict_entry_id`` column."""
+    return exploded_annotations.groupBy("dict_entry_id").agg(
+        F.count(F.lit(1)).alias("total_matches")
     )
 
 

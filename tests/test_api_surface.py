@@ -78,10 +78,10 @@ def test_sql_function_registration(spark):
 
 
 def test_import_loads_no_pandas():
-    """Every column kernel is an Arrow UDF, so importing the package
-    (on the driver, and in each Python worker that unpickles a kernel)
-    does not load pandas; only streaming.stateful_match_totals imports
-    it, lazily."""
+    """Every column kernel is an Arrow UDF and the streaming totals are
+    a built-in aggregation, so importing the package (on the driver,
+    and in each Python worker that unpickles a kernel) does not load
+    pandas; no module of the package imports it."""
     import pathlib
     import subprocess
     import sys
