@@ -306,7 +306,10 @@ def winnow_fingerprint_pairs(
     MEMORY BOUND: a gram-hash array holds one 32-char hex string per
     char position (~64x the text once the selection array is counted),
     so a 100 MB document in one array builds a multi-GB row. Segments
-    bound the live per-row memory at O(doc + 64*chunk + selected set).
+    bound the live per-row memory at O(doc + 4*n_chars + 64*chunk +
+    selected set): the UTF-32 view costs 4 bytes per char, 4x the text
+    of an ASCII document. A binary value holds at most 2^31-1 bytes, so
+    the longest document this winnows is ~512M chars.
 
     The gram hash is md5 over the gram's UTF-8 bytes (decoded from
     UTF-32, cast to binary) rather than xxhash64, so DuckDB computes the
@@ -333,9 +336,8 @@ def winnow_fingerprint_pairs(
     # winnow positions: 1-based p in [1, greatest(n_grams - window + 1, 1)]
     n_pos = F.greatest(n_grams(F.col("_u32")) - (window - 1), F.lit(1))
     # segment j: positions [j*chunk+1, min((j+1)*chunk, n_pos)], chars
-    # [j*chunk+1, j*chunk + chunk+window+k-2] (truncated at the doc tail;
-    # the byte length is capped at the largest int a binary can hold)
-    seg_bytes = min(4 * (chunk + window + k - 2), 2**31 - 1)
+    # [j*chunk+1, j*chunk + chunk+window+k-2] (truncated at the doc tail)
+    seg_bytes = 4 * (chunk + window + k - 2)
     segments = F.transform(
         F.sequence(F.lit(0), ((n_pos - 1) / chunk).cast("int")),
         lambda j: F.struct(
@@ -344,12 +346,19 @@ def winnow_fingerprint_pairs(
         ),
     )
 
+    # The UTF-32 decoder reads a leading 00 00 FE FF as a byte-order
+    # mark and drops it; an explicit big-endian mark in front of each
+    # gram keeps a real U+FEFF (a BOM or zero-width no-break space).
+    bom = F.unhex(F.lit("0000FEFF"))
+
     def selected(seg):
         ghs = F.transform(
             F.sequence(F.lit(1), n_grams(seg["u32"])),
             lambda i: F.md5(
-                F.decode(seg["u32"].substr(4 * i - 3, F.lit(4 * k)), "UTF-32")
-                .cast("binary")
+                F.decode(
+                    F.concat(bom, seg["u32"].substr(4 * i - 3, F.lit(4 * k))),
+                    "UTF-32",
+                ).cast("binary")
             ),
         )
         return F.element_at(

@@ -90,6 +90,9 @@ def test_winnow_chunked_matches_reference(spark):
         (14, "abc日本def語gh😀é" * 4),  # every width inside one gram
         (15, "x" * 6 + "日" + "y" * 6 + "😀" + "z" * 6 + "é"),  # edges at 7
         (16, "tab\there\nnew line 日本 " * 3),  # whitespace collapse
+        # U+FEFF is a character, not a byte-order mark, wherever it sits
+        (17, "\ufeffhello world"),
+        (18, "ab\ufeffcd\ufeff" * 5),
     ]
     docs = spark.createDataFrame(texts, ["doc_id", "text"])
     got = {
@@ -127,7 +130,7 @@ def test_winnow_chunked_long_doc_bounded(spark):
     }
     unchunked = {
         r.fp
-        for r in textstats.winnow_fingerprint_pairs(pdocs, chunk=10**9).collect()
+        for r in textstats.winnow_fingerprint_pairs(pdocs, chunk=200_000).collect()
     }
     assert chunked == unchunked
 
