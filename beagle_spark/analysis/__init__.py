@@ -21,7 +21,7 @@ filter rewrites `texts` and drops emptied tokens from all three).
 from __future__ import annotations
 
 import unicodedata
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 from functools import lru_cache
 
 from .stem import get_stemmer
@@ -39,14 +39,6 @@ __all__ = [
     "ascii_fold",
 ]
 
-DEFAULT_CONF = {
-    "tokenizer": "standard",
-    "case_sensitive": True,
-    "ascii_fold": False,
-    "stem": False,
-    "stemmer": "english",
-}
-
 
 @dataclass(frozen=True)
 class AnalysisConfig:
@@ -57,25 +49,20 @@ class AnalysisConfig:
     stemmer: str = "english"
 
 
-def _pick(key, entry: dict, defaults: dict):
-    """Three-way merge for one key (reference: text_analysis.clj:110-126):
-    entry value if set, else highlighter default, else library default."""
-    for src in (entry, defaults, DEFAULT_CONF):
-        v = src.get(key)
-        if v is not None:
-            return v
-    return None
+# the library defaults, keyed by option name
+DEFAULT_CONF = asdict(AnalysisConfig())
 
 
 def merge_config(entry: dict, defaults: dict | None = None) -> AnalysisConfig:
+    """Three-way merge per key (reference: text_analysis.clj:110-126):
+    entry value if set, else highlighter default, else library default;
+    keyword values lose their leading colon."""
     defaults = defaults or {}
-    return AnalysisConfig(
-        tokenizer=str(_pick("tokenizer", entry, defaults)).lstrip(":"),
-        case_sensitive=bool(_pick("case_sensitive", entry, defaults)),
-        ascii_fold=bool(_pick("ascii_fold", entry, defaults)),
-        stem=bool(_pick("stem", entry, defaults)),
-        stemmer=str(_pick("stemmer", entry, defaults)).lstrip(":"),
-    )
+    kw = {}
+    for k, lib in DEFAULT_CONF.items():
+        v = next(v for v in (entry.get(k), defaults.get(k), lib) if v is not None)
+        kw[k] = str(v).lstrip(":") if isinstance(lib, str) else bool(v)
+    return AnalysisConfig(**kw)
 
 
 def field_name(conf: AnalysisConfig) -> str:

@@ -44,31 +44,25 @@ from pyspark.sql import functions as F
 from .dictionary.optimizer import optimize
 from .dictionary.validator import validate_dictionary
 from .kernel import arrow_kernel, per_value
-from .kernel import map_batches  # noqa: F401  (in-process form of Annotator.udf)
 from .matcher import CompiledDictionary, compile_dictionary, match_text
-from .schema import ANNOTATIONS_TYPE, DictionaryEntry, norm_keys
+from .schema import ANNOTATIONS_TYPE, norm_keys
 
 __all__ = ["highlighter", "Annotator", "annotate_df"]
 
 def _compile(dictionary, opts: dict | None) -> CompiledDictionary:
     """Compile-phase of the reference highlighter (phrases.clj:265-273):
-    optional validation, optional optimization, default type name."""
+    optional validation of the entries as given, optional optimization,
+    default type name; `compile_dictionary` converts the entries."""
     opts = norm_keys(opts)
-    entries = [
-        e if isinstance(e, DictionaryEntry) else DictionaryEntry.from_dict(e)
-        for e in dictionary
-    ]
+    dictionary = list(dictionary)
     if opts.pop("validate_dictionary", False):
-        validate_dictionary([e.to_dict() for e in entries], raise_on_error=True)
+        validate_dictionary(dictionary, raise_on_error=True)
     if opts.pop("optimize_dictionary", False):
-        entries = [
-            DictionaryEntry.from_dict(d)
-            for d in optimize([e.to_dict() for e in entries])
-        ]
+        dictionary = optimize(dictionary)
     type_name = opts.pop("type_name", None) or "PHRASE"
     merge = bool(opts.pop("merge_annotations", False))
     return compile_dictionary(
-        entries, default_conf=opts, type_name=type_name, merge_annotations=merge
+        dictionary, default_conf=opts, type_name=type_name, merge_annotations=merge
     )
 
 

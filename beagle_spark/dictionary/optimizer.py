@@ -19,12 +19,13 @@ merged, so its id and every other key come from the first entry.
 
 from __future__ import annotations
 
-from ..schema import norm_keys
+from ..schema import FIELD_TYPES, norm_keys
 
-# Entries merge only when all of these agree: the analysis identity
-# and the match shape (a merged entry must match what each input did).
-_GROUP_FIELDS = ("text", "case_sensitive", "ascii_fold", "stem", "stemmer",
-                 "tokenizer", "slop", "in_order", "fuzzy", "fuzziness")
+# Entries merge only when all of these agree: every field but the
+# annotation's own (type, id) and the merged ones (synonyms, meta), i.e.
+# the text, the analysis identity and the match shape (a merged entry
+# must match what each input did).
+_GROUP_FIELDS = tuple(f for f in FIELD_TYPES if f not in ("type", "id", "synonyms", "meta"))
 
 
 def _group_key(entry: dict):

@@ -1,15 +1,16 @@
 """Dictionary readers: CSV / JSON / EDN (reference:
 src/beagle/readers.clj:11-51).
 
-Semantics carried over exactly:
-- CSV is header-driven: header tokens become keys (readers.clj:20-25).
-- All cells trimmed; blank cells dropped (readers.clj:23-25).
-- `synonyms` split on `;`, items trimmed (readers.clj:26-29).
-- `case-sensitive?`/`ascii-fold?` parsed Java-`Boolean/valueOf`-style:
-  any string other than case-insensitive "true" is False
-  (readers.clj:30-37).
-- `meta` split on `;` into consecutive k/v pairs; an odd trailing key is
-  dropped (readers.clj:38-46, README.md:232).
+CSV semantics carried over exactly (readers.clj:18-47):
+- header-driven: header tokens become keys, in the header's own
+  spelling; each column is parsed by the field its key names
+  (`schema.entry_key`);
+- all cells trimmed; blank cells dropped;
+- `synonyms` split on `;`, items trimmed;
+- flags parsed Java-`Boolean/valueOf`-style: any string other than
+  case-insensitive "true" is False;
+- `meta` split on `;` into consecutive k/v pairs; an odd trailing key
+  is dropped (README.md:232).
 
 Dictionaries are small, slowly-changing data: reading is driver-side
 plain Python (no Spark job), the compiled form is broadcast. A
@@ -23,6 +24,8 @@ import io
 import json
 from typing import IO, Union
 
+from ..schema import BOOL_FIELDS, INT_FIELDS, entry_key
+
 Source = Union[str, IO]
 
 
@@ -34,7 +37,33 @@ def _reader(source: Source, mode="r"):
 
 def _java_boolean(s: str) -> bool:
     """Boolean/valueOf: true iff equalsIgnoreCase('true')."""
-    return str(s).strip().lower() == "true"
+    return s.lower() == "true"
+
+
+def _meta(s: str) -> dict:
+    parts = [p.strip() for p in s.split(";")]
+    # an odd trailing key is dropped
+    return {parts[i]: parts[i + 1] for i in range(0, len(parts) - 1, 2) if parts[i + 1]}
+
+
+# field -> parser of its (trimmed, non-blank) CSV cell; other fields stay strings
+_PARSE = {
+    "synonyms": lambda s: [x.strip() for x in s.split(";")],
+    "meta": _meta,
+    **dict.fromkeys(BOOL_FIELDS, _java_boolean),
+    **dict.fromkeys(INT_FIELDS, int),
+}
+
+
+def _parse_cells(cells: dict) -> dict:
+    """A CSV row's string cells as an entry: trimmed, blanks dropped,
+    each cell parsed by the field its key names."""
+    out = {}
+    for k, v in cells.items():
+        v = v.strip() if v is not None else ""
+        if v:
+            out[k] = _PARSE.get(entry_key(k), str)(v)
+    return out
 
 
 def read_csv(source: Source) -> list[dict]:
@@ -44,30 +73,7 @@ def read_csv(source: Source) -> list[dict]:
         return []
     header, *lines = rows
     header = [h.strip() for h in header]
-    out = []
-    for line in lines:
-        if not line:
-            continue
-        d = {k: v.strip() for k, v in zip(header, line)}
-        d = {k: v for k, v in d.items() if v}  # drop blank cells
-        if "synonyms" in d:
-            d["synonyms"] = [s.strip() for s in d["synonyms"].split(";")]
-        for bkey in ("case-sensitive?", "ascii-fold?", "stem?", "fuzzy?", "in-order?"):
-            if bkey in d:
-                d[bkey] = _java_boolean(d[bkey])
-        if "slop" in d:
-            d["slop"] = int(d["slop"])
-        if "fuzziness" in d:
-            d["fuzziness"] = int(d["fuzziness"])
-        if "meta" in d and isinstance(d["meta"], str):
-            parts = [p.strip() for p in d["meta"].split(";")]
-            meta = {}
-            for i in range(0, len(parts) - 1, 2):  # odd trailing key dropped
-                if parts[i + 1]:
-                    meta[parts[i]] = parts[i + 1]
-            d["meta"] = meta
-        out.append(d)
-    return out
+    return [_parse_cells(dict(zip(header, line))) for line in lines if line]
 
 
 def read_json(source: Source) -> list[dict]:
@@ -199,4 +205,6 @@ def read_dictionary_df(spark, path: str, fmt: str = "csv") -> list[dict]:
     else:
         raise ValueError(f"File type not supported: `{fmt}`")
     rows = [r.asDict(recursive=True) for r in df.collect()]
+    if fmt == "csv":  # every cell is a string, as in read_csv
+        return [_parse_cells(r) for r in rows]
     return [{k: v for k, v in r.items() if v is not None} for r in rows]

@@ -1,9 +1,9 @@
 """Dictionary validation (reference: src/beagle/validator.clj,
 src/beagle/schema.clj:25-29) + CLI entry point.
 
-The reference validates with clojure.spec; here we check the same
-constraints explicitly: `text` required non-blank string; optional
-fields type-checked; tokenizer/stemmer enums.
+The reference validates with clojure.spec; here each field of the
+entry format (`schema`) has one explicit check, applied to the entry
+with its keys normalized: `text` required; tokenizer/stemmer enums.
 """
 
 from __future__ import annotations
@@ -11,43 +11,43 @@ from __future__ import annotations
 import sys
 
 from ..analysis import stem, tokenizers
+from ..schema import BOOL_FIELDS, INT_FIELDS, entry_key
 
 
 def _err(errors, idx, msg):
     errors.append(f"entry {idx}: {msg}")
 
 
+def _string(v):
+    return isinstance(v, str)
+
+
+# field -> (check of a non-None value, what the check wants)
+_CHECKS = {
+    "text": (lambda v: _string(v) and bool(v.strip()), "a non-blank string"),
+    "type": (_string, "a string"),
+    "id": (_string, "a string"),
+    "synonyms": (
+        lambda v: isinstance(v, (list, tuple)) and all(_string(s) and s.strip() for s in v),
+        "a list of non-blank strings",
+    ),
+    "stemmer": (lambda v: str(v).lstrip(":") in stem._SNOWBALL_LANGS, "a known stemmer"),
+    "tokenizer": (lambda v: str(v).lstrip(":") in tokenizers._PATTERNS, "a known tokenizer"),
+    "meta": (lambda v: isinstance(v, dict), "a map"),
+    **dict.fromkeys(BOOL_FIELDS, (lambda v: isinstance(v, bool), "boolean")),
+    **dict.fromkeys(
+        INT_FIELDS,
+        (lambda v: isinstance(v, int) and not isinstance(v, bool) and v >= 0, "an integer >= 0"),
+    ),
+}
+
+
 def validate_entry(entry: dict, idx: int, errors: list[str]) -> None:
-    text = entry.get("text")
-    if not isinstance(text, str) or not text.strip():
-        _err(errors, idx, f"`text` must be a non-blank string, got {text!r}")
-    for key in ("type", "id"):
+    """Check one entry whose keys are spelled by `schema.entry_key`."""
+    for key, (ok, want) in _CHECKS.items():
         v = entry.get(key)
-        if v is not None and not isinstance(v, str):
-            _err(errors, idx, f"`{key}` must be a string, got {v!r}")
-    syn = entry.get("synonyms")
-    if syn is not None:
-        if not isinstance(syn, (list, tuple)) or any(
-            not isinstance(s, str) or not s.strip() for s in syn
-        ):
-            _err(errors, idx, f"`synonyms` must be non-blank strings, got {syn!r}")
-    for key in ("case-sensitive?", "ascii-fold?", "stem?", "in-order?", "fuzzy?",
-                "case_sensitive", "ascii_fold", "stem", "in_order", "fuzzy"):
-        v = entry.get(key)
-        if v is not None and not isinstance(v, bool):
-            _err(errors, idx, f"`{key}` must be boolean, got {v!r}")
-    slop = entry.get("slop")
-    if slop is not None and (not isinstance(slop, (int, float)) or slop < 0):
-        _err(errors, idx, f"`slop` must be a number >= 0, got {slop!r}")
-    tok = entry.get("tokenizer")
-    if tok is not None and str(tok).lstrip(":") not in tokenizers._PATTERNS:
-        _err(errors, idx, f"unknown tokenizer {tok!r}")
-    stemmer = entry.get("stemmer")
-    if stemmer is not None and str(stemmer).lstrip(":") not in stem._SNOWBALL_LANGS:
-        _err(errors, idx, f"unknown stemmer {stemmer!r}")
-    meta = entry.get("meta")
-    if meta is not None and not isinstance(meta, dict):
-        _err(errors, idx, f"`meta` must be a map, got {meta!r}")
+        if (v is not None or key == "text") and not ok(v):
+            _err(errors, idx, f"`{key}` must be {want}, got {v!r}")
 
 
 def validate_dictionary(dictionary, raise_on_error: bool = False) -> list[str]:
@@ -62,7 +62,7 @@ def validate_dictionary(dictionary, raise_on_error: bool = False) -> list[str]:
             if not isinstance(e, dict):
                 _err(errors, i, f"entry must be a map, got {type(e).__name__}")
                 continue
-            validate_entry({str(k).lstrip(":"): v for k, v in e.items()}, i, errors)
+            validate_entry({entry_key(k): v for k, v in e.items()}, i, errors)
     if errors and raise_on_error:
         raise ValueError("invalid dictionary: " + "; ".join(errors))
     return errors

@@ -1,13 +1,16 @@
 """Dictionary persistence (reference A10: queries are serialized as
 (id, query-string, metadata) JSON and recompiled from source text on
 load — monitor.clj:12-25; we persist the dictionary itself and always
-recompile, never the compiled form)."""
+recompile, never the compiled form). Keys are written in the
+reference's file spelling, `schema.FILE_KEYS`."""
 
 from __future__ import annotations
 
 import csv
 import json
 from typing import IO, Union
+
+from ..schema import FILE_KEYS, entry_key
 
 Sink = Union[str, IO]
 
@@ -27,11 +30,7 @@ def write_json(dictionary: list[dict], sink: Sink) -> None:
             f.close()
 
 
-CSV_COLUMNS = [
-    "text", "type", "id", "synonyms", "case-sensitive?", "ascii-fold?",
-    "stem?", "stemmer", "slop", "in-order?", "tokenizer", "fuzzy?",
-    "fuzziness", "meta",
-]
+CSV_COLUMNS = list(FILE_KEYS.values())
 
 
 def write_csv(dictionary: list[dict], sink: Sink) -> None:
@@ -63,15 +62,8 @@ def write_csv(dictionary: list[dict], sink: Sink) -> None:
 
 
 def _clean(entry) -> dict:
+    """`entry` with every field key in its file spelling; a key that
+    names no field keeps its own."""
     if hasattr(entry, "to_dict"):
         entry = entry.to_dict()
-    out = {}
-    for k, v in entry.items():
-        k = str(k).lstrip(":")
-        # normalize snake_case back to the reference's file spelling
-        k = {
-            "case_sensitive": "case-sensitive?", "ascii_fold": "ascii-fold?",
-            "stem": "stem?", "in_order": "in-order?", "fuzzy": "fuzzy?",
-        }.get(k, k)
-        out[k] = v
-    return out
+    return {FILE_KEYS.get(entry_key(k), str(k).lstrip(":")): v for k, v in entry.items()}

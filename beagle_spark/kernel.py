@@ -32,16 +32,6 @@ def per_value(fn: Callable) -> Callable:
     return lambda arr: [fn(v) for v in arr.to_pylist()]
 
 
-def map_batches(
-    batches: Iterator[pa.Array], fn: Callable, return_type: DataType
-) -> Iterator[pa.Array]:
-    """In-process form of a per-value kernel: the batches the UDF built
-    by ``arrow_kernel(lambda: per_value(fn), return_type)`` returns. The
-    Arrow type is exactly `to_arrow_type(return_type)`, so the
-    Arrow-UDF serializer passes each array through without a cast."""
-    return _apply(batches, per_value(fn), to_arrow_type(return_type))
-
-
 def arrow_kernel(factory: Callable[[], Callable], return_type: DataType):
     """Column kernel: an iterator `arrow_udf` of `return_type`, applied
     to one or more columns. `factory()` runs once per partition and

@@ -18,16 +18,16 @@ Engine design: query string -> small AST -> either
 from __future__ import annotations
 
 import logging
-import uuid
 from dataclasses import dataclass, field as dc_field
 from typing import Optional
 
 import regex as re
 
-from .analysis import analyze, merge_config
-from .matcher.core import (_match_unordered, _positions_exact, build_token_index,
-                           dl_distance_leq)
-from .schema import norm_keys, norm_meta
+from .analysis import analyze
+from .matcher.compile import _conf_for, _entries
+from .matcher.core import (_match_unordered, _positions_exact, _positions_fuzzy,
+                           build_token_index)
+from .schema import DictionaryEntry, norm_keys
 
 logger = logging.getLogger(__name__)
 
@@ -313,7 +313,7 @@ def eval_query(node, index: dict) -> bool:
     if isinstance(node, TermQ):
         return node.term in index
     if isinstance(node, FuzzyQ):
-        return any(dl_distance_leq(node.term, t, node.max_edits) for t in index)
+        return _positions_fuzzy(index, (node.term,), node.max_edits) is not None
     if isinstance(node, WildcardQ):
         rx = _wildcard_to_regex(node.pattern)
         return any(rx.fullmatch(t) for t in index)
@@ -408,25 +408,30 @@ class CompiledLuceneQuery:
 
 
 def compile_lucene_dictionary(dictionary, opts: dict | None = None):
-    default_conf = norm_keys(opts)
-    type_name = default_conf.pop("type_name", None) or "QUERY"
+    """Entries are read by the phrase compiler's front end
+    (`matcher.compile._entries`: ids, failure isolation) and analyzed
+    under the same per-entry config; an entry whose query does not
+    parse is logged and dropped (lucene_alpha.clj:41-43)."""
+    opts = norm_keys(opts)
+    type_name = opts.pop("type_name", None) or "QUERY"
+    defaults = DictionaryEntry.from_dict(opts)
+    conf_cache: dict = {}
     compiled = []
-    for idx, entry in enumerate(dictionary):
-        entry = norm_keys(entry)
-        conf = merge_config(entry, default_conf)
+    for query_id, entry in _entries(dictionary):
         try:
-            ast = parse_query(entry["text"], conf)
-        except Exception as e:  # parse failure -> drop entry (lucene_alpha.clj:41-43)
-            logger.error("Failed to parse query %r: %s", entry.get("text"), e)
+            conf = _conf_for(entry, defaults, conf_cache)
+            ast = parse_query(entry.text or "", conf)
+        except Exception as e:
+            logger.error("Failed to parse query %r: %s", entry.text, e)
             continue
         compiled.append(
             CompiledLuceneQuery(
-                query_id=str(entry.get("id") or idx),
-                query_string=entry["text"],
+                query_id=query_id,
+                query_string=entry.text,
                 ast=ast,
                 conf=conf,
-                type=entry.get("type"),
-                meta=norm_meta(entry.get("meta")),
+                type=entry.type,
+                meta=entry.meta or {},
             )
         )
     return compiled, type_name

@@ -20,10 +20,11 @@ from __future__ import annotations
 
 import logging
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
+from operator import attrgetter
 
-from ..analysis import AnalysisConfig, Tokens, analyze, merge_config
-from ..schema import DictionaryEntry, norm_keys, norm_meta
+from ..analysis import DEFAULT_CONF, AnalysisConfig, Tokens, analyze, merge_config
+from ..schema import DictionaryEntry
 from .core import CompiledQuery, build_token_index, find_matches, normalize_slop
 
 logger = logging.getLogger(__name__)
@@ -194,66 +195,68 @@ class CompiledDictionary:
         return sum(len(f.queries) + f.n_exact for f in self.fields)
 
 
+def _entries(dictionary):
+    """The front end of both compilers: `(query id, DictionaryEntry)`
+    for every entry that converts (`DictionaryEntry.from_dict`); one
+    that does not is logged and skipped (per-query failure isolation,
+    monitor.clj:34-46). An entry keeps its id unless it is None, and
+    then its id is its position (phrases.clj:206-215)."""
+    for idx, raw in enumerate(dictionary):
+        try:
+            entry = raw if isinstance(raw, DictionaryEntry) else DictionaryEntry.from_dict(raw)
+            query_id = str(entry.id if entry.id is not None else idx)
+        except Exception:
+            logger.exception("Failed to compile dictionary entry %r", raw)
+            continue
+        yield query_id, entry
+
+
 def _prepare_synonyms(query_id: str, entry: DictionaryEntry) -> list[DictionaryEntry]:
     """Each synonym becomes its own query with a fresh UUID id, meta
     synonym?=true + query-id=parent (reference: phrases.clj:125-140);
     inherits every analysis/match option of the parent."""
-    out = []
-    for syn in entry.synonyms or []:
-        if syn is None or not str(syn).strip():
-            continue
-        d = entry.to_dict()
-        d["text"] = syn
-        d["id"] = str(uuid.uuid4())
-        d["synonyms"] = None
-        meta = dict(d.get("meta") or {})
-        meta["synonym?"] = "true"
-        meta["query-id"] = query_id
-        d["meta"] = meta
-        out.append(DictionaryEntry.from_dict(d))
-    return out
+    return [
+        replace(entry, text=syn, id=str(uuid.uuid4()), synonyms=None,
+                meta={**(entry.meta or {}), "synonym?": "true", "query-id": query_id})
+        for syn in entry.synonyms or []
+        if syn is not None and str(syn).strip()
+    ]
 
 
-def _conf_for(entry: DictionaryEntry, default_conf: dict, cache: dict) -> AnalysisConfig:
-    """Per-entry analysis config with memoization — dictionaries have
-    few distinct configs (the reference memoizes analyzers the same
-    way, text_analysis.clj:98-99)."""
-    key = (entry.tokenizer, entry.case_sensitive, entry.ascii_fold, entry.stem,
-           entry.stemmer)
+# the entry fields that make its analysis config
+_conf_key = attrgetter(*DEFAULT_CONF)
+
+
+def _conf_for(entry: DictionaryEntry, defaults: DictionaryEntry, cache: dict) -> AnalysisConfig:
+    """Per-entry analysis config, the entry's fields over the defaults'
+    (the highlighter options), memoized: dictionaries have few
+    distinct configs (the reference memoizes analyzers the same way,
+    text_analysis.clj:98-99)."""
+    key = _conf_key(entry)
     conf = cache.get(key)
     if conf is None:
-        conf = merge_config(
-            {
-                "tokenizer": entry.tokenizer,
-                "case_sensitive": entry.case_sensitive,
-                "ascii_fold": entry.ascii_fold,
-                "stem": entry.stem,
-                "stemmer": entry.stemmer,
-            },
-            default_conf,
-        )
-        cache[key] = conf
+        conf = cache[key] = merge_config(vars(entry), vars(defaults))
     return conf
 
 
 def _compile_entry(
     entry: DictionaryEntry,
-    default_conf: dict,
-    idx,
+    query_id: str,
+    defaults: DictionaryEntry,
     conf_cache: dict,
 ) -> tuple[AnalysisConfig, CompiledQuery] | None:
-    conf = _conf_for(entry, default_conf, conf_cache)
+    conf = _conf_for(entry, defaults, conf_cache)
     terms = tuple(analyze(entry.text or "", conf).texts)
     if not terms:
-        # 0-token entries discarded with a warning (phrases.clj:204)
+        # 0-token entries, and entries without text, are discarded
+        # with a warning (phrases.clj:204)
         logger.warning("Discarding dictionary entry (no tokens): %r", entry.text)
         return None
-    query_id = entry.id if entry.id is not None else str(idx)
 
     # slop/in_order cascade separately from analysis opts
     # (phrases.clj:146-158)
-    slop_raw = entry.slop if entry.slop is not None else default_conf.get("slop")
-    in_order = entry.in_order if entry.in_order is not None else default_conf.get("in_order")
+    slop_raw = entry.slop if entry.slop is not None else defaults.slop
+    in_order = entry.in_order if entry.in_order is not None else defaults.in_order
     fuzzy = bool(entry.fuzzy)
     slop = normalize_slop(slop_raw)
 
@@ -266,13 +269,13 @@ def _compile_entry(
     else:
         ordered = False
 
-    meta = norm_meta(entry.meta)
+    meta = dict(entry.meta or {})
     if span_path:
         # "_in-order" flag kept in metadata (phrases.clj:192)
         meta["_in-order"] = "true"
 
     q = CompiledQuery(
-        query_id=str(query_id),
+        query_id=query_id,
         terms=terms,
         slop=slop,
         ordered=bool(ordered),
@@ -290,25 +293,24 @@ def compile_dictionary(
     type_name: str = "PHRASE",
     merge_annotations: bool = False,
 ) -> CompiledDictionary:
-    """dictionary: iterable of dicts or DictionaryEntry. Mirrors
-    dict-entries->monitor-queries (phrases.clj:206-215): ordinal default
-    ids are position-stable; synonyms appended right after their parent;
-    per-entry compile errors logged and skipped (monitor.clj:34-46)."""
-    default_conf = norm_keys(default_conf)
+    """dictionary: iterable of dicts or DictionaryEntry; `default_conf`
+    holds the highlighter options, defaults for the entry fields they
+    name. Mirrors dict-entries->monitor-queries (phrases.clj:206-215):
+    ordinal default ids are position-stable; synonyms appended right
+    after their parent; per-entry compile errors logged and skipped
+    (monitor.clj:34-46)."""
+    defaults = DictionaryEntry.from_dict(default_conf or {})
     by_conf: dict[AnalysisConfig, FieldProgram] = {}
     conf_cache: dict = {}
-    entries = [
-        e if isinstance(e, DictionaryEntry) else DictionaryEntry.from_dict(e)
-        for e in dictionary
-    ]
-    for idx, entry in enumerate(entries):
-        query_id = entry.id if entry.id is not None else str(idx)
-        todo = [(entry, idx)]
-        if entry.synonyms:
-            todo.extend((syn, None) for syn in _prepare_synonyms(str(query_id), entry))
-        for ent, i in todo:
+    for query_id, entry in _entries(dictionary):
+        todo = [(entry, query_id)]
+        try:
+            todo += [(syn, syn.id) for syn in _prepare_synonyms(query_id, entry)]
+        except Exception:
+            logger.exception("Failed to expand the synonyms of %r", entry)
+        for ent, qid in todo:
             try:
-                compiled = _compile_entry(ent, default_conf, i, conf_cache)
+                compiled = _compile_entry(ent, qid, defaults, conf_cache)
             except Exception:  # per-query failure isolation (monitor.clj:41-46)
                 logger.exception("Failed to compile dictionary entry %r", ent)
                 compiled = None

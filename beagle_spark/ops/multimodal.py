@@ -1,5 +1,6 @@
 """Multimodal column plumbing: image/audio/video as opaque binary
-columns + typed metadata, processed via Arrow-batched mapInArrow.
+columns + typed metadata; features come from a column kernel
+(`kernel.arrow_kernel`) over the payload and format columns.
 
 Uncompressed 24/32-bit BMP decodes natively end-to-end (`decode_bmp`
 below — dependency-free, header-validated), proving the decode seam
@@ -19,13 +20,9 @@ metadata column.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -36,6 +33,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from ..kernel import arrow_kernel
 
 MEDIA_SCHEMA = StructType(
     [
@@ -49,19 +48,11 @@ MEDIA_SCHEMA = StructType(
     ]
 )
 
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("n_bytes", IntegerType(), True),
-        StructField("feature", ArrayType(FloatType()), True),
-    ]
-)
-
 
 def decode_bmp(payload: bytes) -> np.ndarray:
     """Dependency-free decoder for uncompressed 24/32-bit BMP
     (BITMAPINFOHEADER): returns an (h, w, 3) uint8 RGB array. Proves
-    the mapInArrow decode seam end-to-end without an imaging library;
+    the feature kernel's decode seam end-to-end without an imaging library;
     rows are stored bottom-up and padded to 4-byte boundaries."""
     import struct
 
@@ -156,29 +147,27 @@ def _image_feature(payload: bytes, fmt: str, dim: int) -> list | None:
 def extract_features(
     df: DataFrame, dim: int = 8, fake: bool = True
 ) -> DataFrame:
-    """mapInArrow feature extraction over binary payloads: Arrow ships
-    the bytes to the worker and each record batch comes back as one
-    (media_id, n_bytes, feature) batch. With fake=False, payloads
-    decode for real (BMP natively; other formats raise until an imaging
-    library is present)."""
-    schema = to_arrow_schema(FEATURE_SCHEMA)
+    """(media_id, n_bytes, feature) per media row: `n_bytes` is a JVM
+    expression, `feature` an `array<float>` column kernel over
+    (payload, format) that Arrow feeds batch by batch. With fake=False,
+    payloads decode for real (BMP natively; other formats raise until an
+    imaging library is present)."""
 
     def feature(p, fmt):
         if p is None:
             return None
         return _fake_feature(p, dim).tolist() if fake else _image_feature(p, fmt, dim)
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            payloads = rb.column("payload").to_pylist()
-            has_fmt = "format" in rb.schema.names
-            fmts = rb.column("format").to_pylist() if has_fmt else [""] * len(payloads)
-            n_bytes = [len(p) if p is not None else 0 for p in payloads]
-            feats = [feature(p, f) for p, f in zip(payloads, fmts)]
-            cols = {"media_id": rb.column("media_id"), "n_bytes": n_bytes, "feature": feats}
-            yield pa.RecordBatch.from_pydict(cols, schema=schema)
+    def features(payloads, fmts):
+        return [feature(p, f) for p, f in zip(payloads.to_pylist(), fmts.to_pylist())]
 
-    return df.mapInArrow(run, schema=FEATURE_SCHEMA)
+    kernel = arrow_kernel(lambda: features, ArrayType(FloatType()))
+    fmt = F.col("format") if "format" in df.columns else F.lit(None).cast("string")
+    return df.select(
+        "media_id",
+        F.coalesce(F.length("payload"), F.lit(0)).alias("n_bytes"),
+        kernel(F.col("payload"), fmt).alias("feature"),
+    )
 
 
 def synthesize_media_from_docs(docs: DataFrame) -> DataFrame:

@@ -896,7 +896,7 @@ ORDER BY doc_id
 
 
 def mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: synth binary payloads -> mapInArrow feature
+    """Multimodal plumbing: synth binary payloads -> column-kernel feature
     extraction (deterministic fake kernel; decode stubs documented)."""
     media = multimodal.synthesize_media_from_docs(_docs(spark, sf_dir))
     return (

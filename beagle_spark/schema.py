@@ -1,4 +1,5 @@
-"""Data model for the PySpark beagle engine.
+"""Data model for the PySpark beagle engine, and the one home of the
+dictionary-entry format.
 
 Mirrors the reference's two record types (reference:
 src/beagle/schema.clj:25-44) as Spark StructTypes plus plain-Python
@@ -6,12 +7,25 @@ dataclasses used on the driver during dictionary compilation.
 
 - DictionaryEntry  <- defrecord DictionaryEntry (schema.clj:31-32)
 - Annotation       <- defrecord Highlight       (schema.clj:44)
+
+The entry format, which the readers, writers, validator, optimizer and
+both compilers read from here:
+
+- keys: every key is read by `entry_key`, the option rule `norm_key`
+  (`:case-sensitive?` -> `case_sensitive`) plus the one alias
+  `dict-entry-id` -> `id`;
+- fields: the `DictionaryEntry` fields, in CSV column order;
+- types: `BOOL_FIELDS` (the five flags) and `INT_FIELDS` (`slop`,
+  `fuzziness`), read off the field annotations;
+- file spelling: `FILE_KEYS`, the reference's spelling of each field
+  in CSV/JSON/EDN files (`case_sensitive` -> `case-sensitive?`; every
+  field but the flags is spelled as its name).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Optional
+from dataclasses import dataclass, fields
+from typing import Optional, get_type_hints
 
 from pyspark.sql.types import (
     ArrayType,
@@ -57,17 +71,29 @@ def norm_meta(meta: dict | None) -> dict:
     return {str(k).lstrip(":"): str(v) for k, v in (meta or {}).items()}
 
 
+# the one entry spelling `norm_key` cannot derive
+_ALIASES = {"dict_entry_id": "id"}
+
+
+def entry_key(k) -> str:
+    """The `DictionaryEntry` field an entry key names (unknown keys come
+    back normalized and name no field)."""
+    k = norm_key(k)
+    return _ALIASES.get(k, k)
+
+
 @dataclass
 class DictionaryEntry:
     """Python-side dictionary entry (reference: schema.clj:31-32).
 
-    Field spellings follow the reference's keywords with `?`/`-` mapped to
-    snake_case (`case-sensitive?` -> `case_sensitive`). `from_dict` accepts
-    both spellings so CSV/JSON dictionaries written for the reference load
-    unchanged.
+    `from_dict` reads every key through `entry_key`, so dictionaries
+    written for the reference load unchanged. Nothing is checked here
+    (that is the opt-in validator's job): an entry without `text`
+    compiles to no tokens and is discarded like any other such entry.
+    `meta` is always a str -> str map.
     """
 
-    text: str
+    text: Optional[str] = None
     type: Optional[str] = None
     id: Optional[str] = None
     synonyms: Optional[list[str]] = None
@@ -82,26 +108,27 @@ class DictionaryEntry:
     fuzziness: Optional[int] = None
     meta: Optional[dict] = None
 
-    # the one spelling `norm_key` cannot derive
-    _ALIASES = {"dict-entry-id": "id"}
+    def __post_init__(self):
+        if self.meta is not None:
+            self.meta = norm_meta(self.meta)
 
     @classmethod
     def from_dict(cls, d: dict) -> "DictionaryEntry":
         kw = {}
         for k, v in d.items():
-            k = cls._ALIASES.get(str(k).lstrip(":")) or norm_key(k)
-            if k in cls.__dataclass_fields__:
+            k = entry_key(k)
+            if k in FIELD_TYPES:
                 kw[k] = v
-        if kw.get("meta") is not None:
-            kw["meta"] = norm_meta(kw["meta"])
         return cls(**kw)
 
     def to_dict(self) -> dict:
-        return {
-            k: getattr(self, k)
-            for k in self.__dataclass_fields__
-            if not k.startswith("_") and getattr(self, k) is not None
-        }
+        return {k: getattr(self, k) for k in FIELD_TYPES if getattr(self, k) is not None}
+
+
+FIELD_TYPES = {f.name: get_type_hints(DictionaryEntry)[f.name] for f in fields(DictionaryEntry)}
+BOOL_FIELDS = tuple(k for k, t in FIELD_TYPES.items() if t == Optional[bool])
+INT_FIELDS = tuple(k for k, t in FIELD_TYPES.items() if t == Optional[int])
+FILE_KEYS = {k: f"{k.replace('_', '-')}?" if k in BOOL_FIELDS else k for k in FIELD_TYPES}
 
 
 @dataclass

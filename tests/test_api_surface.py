@@ -39,6 +39,16 @@ def test_csv_roundtrip():
     assert back[0]["case-sensitive?"] is True
     assert back[0]["meta"] == {"k": "v", "k2": "v2"}
     assert back[0]["slop"] == 1
+    # flags in any spelling `norm_key` reads are written, so the
+    # dictionary matches the same before and after
+    d = [{"text": "Big Data", "case-sensitive": False, "in_order?": True, "slop": 2}]
+    buf = io.StringIO()
+    write_csv(d, buf)
+    back = read_csv(io.StringIO(buf.getvalue()))
+    assert back[0]["case-sensitive?"] is False and back[0]["in-order?"] is True
+    for text in ("big data", "data big", "big and data"):
+        assert highlighter(back)(text) == highlighter(d)(text)
+    assert highlighter(back)("big data")
 
 
 def test_dictionary_entry_aliases():

@@ -65,7 +65,8 @@ def test_arrow_batches_have_exact_output_type():
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
-    from beagle_spark.annotator import _text_matcher, map_batches
+    from beagle_spark.annotator import _text_matcher
+    from beagle_spark.kernel import _apply, per_value
     from beagle_spark.matcher import match_text
     from beagle_spark.schema import ANNOTATIONS_TYPE
 
@@ -75,7 +76,8 @@ def test_arrow_batches_have_exact_output_type():
         pa.array(["spark on pyspark: hash the join", "in İstanbul straße ok", ""]),
     ]
     texts = [t for b in batches for t in b.to_pylist()]
-    out = list(map_batches(batches, _text_matcher(ann.compiled), ANNOTATIONS_TYPE))
+    fn = per_value(_text_matcher(ann.compiled))
+    out = list(_apply(batches, fn, to_arrow_type(ANNOTATIONS_TYPE)))
     assert [len(a) for a in out] == [3, 3]
     got = [row for a in out for row in a.to_pylist()]
     for a in out:

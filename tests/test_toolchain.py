@@ -188,6 +188,23 @@ def test_read_csv_semantics():
     # odd trailing meta key dropped
     assert "meta" not in out[1] or out[1]["meta"] == {}
     assert out[2]["case-sensitive?"] is True  # trimmed, case-insensitive parse
+    # columns parse by the field their header names, in any spelling,
+    # and keep the header's own spelling
+    out = read_csv(io.StringIO("text,case_sensitive,stem,:slop\nRunning,false,false,1\n"))
+    assert out == [{"text": "Running", "case_sensitive": False, "stem": False, ":slop": 1}]
+    assert highlighter(out)("running") and not highlighter(out)("run")
+
+
+def test_read_dictionary_df_csv(spark, tmp_path):
+    """A CSV dictionary read through Spark parses its cells like
+    `read_csv`: flags are booleans, not the strings "true"/"false"."""
+    from beagle_spark.dictionary import read_dictionary_df
+
+    p = tmp_path / "dict.csv"
+    p.write_text("text,case_sensitive,slop,synonyms\nBig Data,false,2,bd;b d\n")
+    assert read_dictionary_df(spark, str(p)) == read_csv(str(p)) == [
+        {"text": "Big Data", "case_sensitive": False, "slop": 2, "synonyms": ["bd", "b d"]}
+    ]
 
 
 def test_read_json():
@@ -224,6 +241,15 @@ def test_validator():
     )
     with pytest.raises(ValueError):
         validate_dictionary([{"text": None}], raise_on_error=True)
+    # every spelling of a field is checked, and `fuzziness` is an integer
+    assert validate_dictionary([{"text": "a", "in-order": "yes"}])
+    assert validate_dictionary([{"text": "a", "fuzziness": "2"}])
+    assert validate_dictionary([{"text": "a", "fuzzy?": True, "fuzziness": "2"}])
+    assert validate_dictionary([{"text": "a", "fuzziness": -1}])
+    assert not validate_dictionary([{"text": "a", "fuzzy?": True, "fuzziness": 2}])
+    # the raw entries are validated before they are converted
+    with pytest.raises(ValueError, match="meta"):
+        highlighter([{"text": "a", "meta": "x"}], {"validate-dictionary?": True})
 
 
 def test_validator_cli(tmp_path):
@@ -235,6 +261,15 @@ def test_validator_cli(tmp_path):
     bad.write_text('[{"id": "no-text"}]')
     assert main([str(good), "csv"]) == 0
     assert main([str(bad), "json"]) == 1
+    # a snake_case CSV is typed by `read_csv` before it is checked
+    snake = tmp_path / "snake.csv"
+    snake.write_text("text,case_sensitive,in_order,slop\nhello there,false,true,1\n")
+    assert main([str(snake), "csv"]) == 0
+    snake.write_text("text,fuzzy,fuzziness\nhello,true,-1\n")
+    assert main([str(snake), "csv"]) == 1
+    fuzziness = tmp_path / "fuzziness.json"
+    fuzziness.write_text('[{"text": "hello", "fuzzy?": true, "fuzziness": "2"}]')
+    assert main([str(fuzziness), "json"]) == 1
     assert main([str(good)]) == 1  # odd arg count
     assert main([str(good), "xml"]) == 1  # unsupported type
 
@@ -253,9 +288,27 @@ def test_compile_error_isolation():
             {"text": "good entry", "id": "ok"},
             {"text": "x", "id": Exploding()},  # str(id) raises in compile
             {"text": "", "id": "blank"},  # 0 tokens -> discarded with warning
+            {"id": "no-text"},  # no text -> discarded like a 0-token entry
+            "not a map",  # does not convert -> logged and skipped
+            {"text": "", "synonyms": 5},  # synonyms do not expand -> logged
         ]
     )
     assert cd.n_queries == 1
     from beagle_spark.matcher import match_text
 
     assert match_text("a good entry here", cd)[0]["dict_entry_id"] == "ok"
+
+
+def test_both_compilers_read_entries_alike():
+    """The phrase and the Lucene compiler read entries through one front
+    end: an entry without text is dropped by both, and an id is kept
+    unless it is None (`0` and `""` included), else it is the entry's
+    position."""
+    from beagle_spark.lucene_query import lucene_annotator
+
+    d = [{"text": "alpha", "id": "a"}, {"id": "no-text"}, {"text": "beta", "id": 0},
+         {"text": "gamma", "id": ""}, {"text": "delta"}]
+    text = "alpha beta gamma delta"
+    phrase_ids = [a["dict_entry_id"] for a in highlighter(d)(text)]
+    lucene_ids = [a["dict_entry_id"] for a in lucene_annotator(d)(text)]
+    assert phrase_ids == lucene_ids == ["a", "0", "", "4"]
