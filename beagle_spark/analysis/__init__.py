@@ -11,7 +11,8 @@ Mirrors the reference's analyzer construction and config cascade
   used as the derived token-column identity so each document is analyzed
   once per distinct config, not once per query (monitor.clj:48-59).
 - Filter order: tokenize -> lowercase -> fold -> stem
-  (text_analysis.clj:73-80).
+  (text_analysis.clj:73-80); lowercase is :func:`lower`, per code
+  point as Lucene's LowerCaseFilter.
 
 `analyze` returns one flat `Tokens(texts, begins, ends)`: the filtered
 token strings and their ORIGINAL char offsets as parallel lists (a
@@ -25,7 +26,7 @@ from dataclasses import asdict, dataclass
 from functools import lru_cache
 
 from .stem import get_stemmer
-from .tokenizers import Token, Tokens, get_tokenizer, tokenize_classic_typed
+from .tokenizers import Token, Tokens, get_tokenizer, lower, tokenize_classic_typed
 
 __all__ = [
     "AnalysisConfig",
@@ -37,6 +38,7 @@ __all__ = [
     "analyze",
     "text_to_token_strings",
     "ascii_fold",
+    "lower",
 ]
 
 

@@ -196,22 +196,36 @@ def tokenize_classic_typed(text: str) -> list[tuple[Token, str]]:
     ]
 
 
-def _make_scanner(pattern, ascii_twin, lower: bool):
+# The two code points whose `str.lower` is not their per-code-point
+# lowercase: 'İ' lowers to two chars and 'Σ' to a final 'ς' by context.
+_LOWER_FIXUPS = {0x130: "i", 0x3A3: "σ"}
+
+
+def lower(s: str) -> str:
+    """Lucene's LowerCaseFilter: each code point lowered on its own
+    (`Character.toLowerCase(int)`), so 'İSTANBUL ΣΟΣ' gives
+    'istanbul σοσ'. Never changes a string's length."""
+    return s.translate(_LOWER_FIXUPS).lower()
+
+
+def _make_scanner(pattern, ascii_twin, lowercase: bool):
     """Build fn(text) -> Tokens. Pure-ASCII input goes to the faster
-    stdlib-re twin when there is one. ``lower`` fuses the
+    stdlib-re twin when there is one. ``lowercase`` fuses the
     LowerCaseFilter: ASCII text is lowered whole before the split
-    (ASCII lowering keeps every offset and character class); other text
-    is split as is and each token lowered (`str.lower` can change a
-    string's length, e.g. 'İ')."""
+    (ASCII lowering keeps every character class); other text is split
+    as is and each token lowered, because lowering before the split is
+    not case-invariant there ('Ⓜ' is a pictograph the standard split
+    keeps, 'ⓜ' is not; the strict split drops the Kelvin sign and 'İ'
+    but keeps their lowercase forms)."""
     split = _splitter(pattern)
     ascii_split = _splitter(ascii_twin) if ascii_twin is not None else split
 
     def scan(text: str) -> Tokens:
         if text.isascii():
-            return _flat(ascii_split(text.lower() if lower else text))
+            return _flat(ascii_split(text.lower() if lowercase else text))
         toks = _flat(split(text))
-        if lower:
-            toks.texts = [t.lower() for t in toks.texts]
+        if lowercase:
+            toks.texts = [lower(t) for t in toks.texts]
         return toks
 
     return scan

@@ -10,7 +10,7 @@ import csv
 import json
 from typing import IO, Union
 
-from ..schema import FILE_KEYS, entry_key
+from ..schema import FILE_KEYS, entry_key, norm_meta
 
 Sink = Union[str, IO]
 
@@ -35,30 +35,42 @@ CSV_COLUMNS = list(FILE_KEYS.values())
 
 def write_csv(dictionary: list[dict], sink: Sink) -> None:
     """Inverse of readers.read_csv: synonyms joined with ';', meta
-    flattened to alternating k;v."""
+    flattened to alternating k;v with values as strings
+    (`schema.norm_meta`). The format has no escape for ';', so one
+    inside a synonym or a meta key or value raises ValueError before
+    anything is written."""
+    rows = [_csv_row(_clean(e), i) for i, e in enumerate(dictionary)]
     f, close = _writer(sink)
     try:
         w = csv.writer(f)
         w.writerow(CSV_COLUMNS)
-        for e in dictionary:
-            e = _clean(e)
-            row = []
-            for col in CSV_COLUMNS:
-                v = e.get(col)
-                if v is None:
-                    row.append("")
-                elif col == "synonyms":
-                    row.append(";".join(v))
-                elif col == "meta":
-                    row.append(";".join(x for kv in v.items() for x in kv))
-                elif isinstance(v, bool):
-                    row.append("true" if v else "false")
-                else:
-                    row.append(str(v))
-            w.writerow(row)
+        w.writerows(rows)
     finally:
         if close:
             f.close()
+
+
+def _csv_row(e: dict, i: int) -> list[str]:
+    row = []
+    for col in CSV_COLUMNS:
+        v = e.get(col)
+        if v is None:
+            row.append("")
+        elif col == "synonyms":
+            row.append(_joined(v, i))
+        elif col == "meta":
+            row.append(_joined([x for kv in norm_meta(v).items() for x in kv], i))
+        elif isinstance(v, bool):
+            row.append("true" if v else "false")
+        else:
+            row.append(str(v))
+    return row
+
+
+def _joined(items: list[str], i: int) -> str:
+    if any(";" in x for x in items):
+        raise ValueError(f"dictionary entry {i}: ';' in a synonym or meta item has no CSV form")
+    return ";".join(items)
 
 
 def _clean(entry) -> dict:

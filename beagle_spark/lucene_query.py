@@ -117,12 +117,8 @@ def _lex(s: str):
                 raise ParseError(f"cannot lex at {i}: {s[i:]!r}")
             break
         i = m.end()
-        kind = m.lastgroup if m.lastgroup != "pslop" else "phrase"
-        for k in ("lparen", "rparen", "and", "or", "not", "plus", "minus",
-                  "range", "phrase", "regex", "boost", "term"):
-            if m.group(k):
-                out.append((k, m.group(k), m.groupdict().get("pslop")))
-                break
+        kind = m.lastgroup  # the outer group: "phrase" closes after "pslop"
+        out.append((kind, m.group(kind), m.group("pslop")))
     return out
 
 

@@ -46,11 +46,11 @@ Jaccard ratio.
 from __future__ import annotations
 
 import hashlib
-import re
 import time
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -673,88 +673,24 @@ def simhash_fingerprints_md5(
     md5(token) — identical to the DuckDB oracle's
     strpos('0123..ef', digit)-1 formulation.
 
+    The tokens are :func:`~.textstats.tokens_ws`, split in the JVM; a
+    null text hashes as the one empty token, like an empty one.
+
     Plan shape: simhash is a pure per-document function, so this is a
     MAP-ONLY column kernel — no token explode, no groupBy, no
     shuffle. (The previous explode + 64-conditional-sum aggregate
     multiplied rows ~40x, shuffled them, and its 64-aggregate
     HashAggregate fell out of whole-stage codegen into interpreted
     eval; a stateless per-row kernel is both the faster and the
-    100 TB-shaped plan. Tokenization mirrors the JVM expression chain
-    split(trim(lower(text)), '\\s+') EXACTLY — trim strips spaces
-    only, split keeps leading/trailing empty tokens — matching the
-    DuckDB oracle's trim()/regexp_split_to_array semantics on docs
-    with \\t/\\n edges, and md5 runs over the UTF-8 bytes.)
+    100 TB-shaped plan.)
 
     Returns (id, simhash: bigint, bands: array<bigint>), consumable by
     :func:`simhash_pairs`."""
-    # Java's \s is ASCII-only — match it, not Python's unicode \s.
-    _ws = re.compile(r"[ \t\n\x0b\f\r]+")
-    # nibble value -> its four (2*bit - 1) contributions
-    _contrib = np.array(
-        [[1 if (d >> b) & 1 else -1 for b in range(4)] for d in range(16)],
-        dtype=np.int64,
-    )
-
-    def factory():
-        # Built once per partition: the per-unique-token contribution
-        # cache lives for the whole TASK, amortizing md5 work across
-        # batches. Per-batch accumulation is one fancy-index + reduceat
-        # + matmul instead of a Python-level 64-add loop per token — the
-        # md5-per-unique-token cost is the only remaining per-row Python
-        # work.
-        tok_idx: dict = {}
-        vecs: list = []  # parallel to tok_idx values: 64-vector each
-        stacked = [np.empty((0, 64), dtype=np.int64)]  # memoized vstack
-        _CACHE_CAP = 1_000_000  # ~0.5 GB of vectors; reset beyond (memoization only)
-
-        def idx(tok: str) -> int:
-            i = tok_idx.get(tok)
-            if i is None:
-                m = hashlib.md5(tok.encode("utf-8")).hexdigest()[:16]
-                v = np.empty(64, dtype=np.int64)
-                for j, ch in enumerate(m):
-                    v[4 * j : 4 * j + 4] = _contrib[int(ch, 16)]
-                i = len(vecs)
-                vecs.append(v)
-                tok_idx[tok] = i
-            return i
-
-        weights = (np.int64(1) << np.arange(63)).astype(np.int64)
-        int64_min = np.int64(-(1 << 63))
-
-        def simhash(texts: pa.Array) -> np.ndarray:
-            if len(vecs) > _CACHE_CAP:
-                tok_idx.clear()
-                vecs.clear()
-                stacked[0] = np.empty((0, 64), dtype=np.int64)
-            flat: list[int] = []
-            starts: list[int] = [0]
-            for t in texts.to_pylist():
-                # trim SPACES ONLY and keep empty tokens from the split:
-                # Spark's trim() strips ' ' (not \t\n) and split(limit=-1)
-                # keeps leading/trailing '' elements, as does DuckDB's
-                # trim()/regexp_split_to_array — so 'foo bar\n' must
-                # tokenize to ['foo','bar',''], not ['foo','bar'].
-                t = ("" if t is None else t).lower().strip(" ")
-                toks = _ws.split(t) if t else [""]
-                flat.extend(idx(tok) for tok in toks)
-                starts.append(len(flat))
-            if stacked[0].shape[0] != len(vecs):  # vocab grew this batch
-                stacked[0] = np.vstack(vecs)
-            V = stacked[0]  # (n_unique_tokens_so_far, 64)
-            # per-doc bit sums: every doc has >= 1 token, so reduceat
-            # boundaries are strictly increasing
-            sums = np.add.reduceat(V[np.asarray(flat)], np.asarray(starts[:-1]))
-            bits = sums > 0
-            fps = bits[:, :63].astype(np.int64) @ weights
-            fps[bits[:, 63]] += int64_min
-            return fps
-
-        return simhash
-
     out = df.select(
         F.col(id_col).alias("id"),
-        arrow_kernel(factory, LongType())(F.col(text_col)).alias("simhash"),
+        arrow_kernel(lambda: _simhash, LongType())(
+            F.coalesce(tokens_ws(F.col(text_col)), F.array(F.lit("")))
+        ).alias("simhash"),
     )
     n_bands = 64 // band_bits
     mask = (1 << band_bits) - 1
@@ -767,6 +703,25 @@ def simhash_fingerprints_md5(
             ]
         ),
     )
+
+
+# token-hash bit 4j+b is bit b of hex digit j: bit 60-4j+b of the
+# first 16 hex digits read as one big-endian integer
+_SIMHASH_SHIFTS = np.array([60 - 4 * (i // 4) + i % 4 for i in range(64)], dtype=np.uint64)
+
+
+def _simhash(toks: pa.ListArray) -> np.ndarray:
+    """SimHash of each row's token list: each distinct token of the
+    batch is hashed once, and every row has at least one token."""
+    offsets = toks.offsets.to_numpy()
+    words = pc.dictionary_encode(toks.flatten())
+    digests = (hashlib.md5(w.encode("utf-8")).digest()[:8] for w in words.dictionary.to_pylist())
+    h = np.frombuffer(b"".join(digests), dtype=">u8")
+    signs = ((h[:, None] >> _SIMHASH_SHIFTS) & 1).astype(np.int8) * 2 - 1
+    sums = np.add.reduceat(
+        signs[words.indices.to_numpy()], offsets[:-1] - offsets[0], axis=0, dtype=np.int32
+    )
+    return np.packbits(sums > 0, axis=1, bitorder="little").view("<i8").ravel()
 
 
 def simhash_pairs(

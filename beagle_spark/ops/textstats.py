@@ -1,4 +1,4 @@
-"""Text analysis operators for training-data pipelines: token counting,
+r"""Text analysis operators for training-data pipelines: token counting,
 quality scoring, language-ID heuristic, document fingerprinting.
 
 Every operator is a pure Spark SQL expression (no UDF) with an exact
@@ -7,7 +7,17 @@ chosen so both engines compute bit-identical results (integer counts,
 identically-rounded ratios, md5 on identical normalized strings).
 
 The corpus-text vocabulary of every JVM text operator (here, in
-``dedup`` and in ``streaming``) is defined once, below:
+``dedup`` and in ``streaming``) is defined once, below. Its two rules
+are those of the DuckDB twins, which define these operators:
+
+- :data:`WS`: whitespace is RE2's ``\s``, ``[\t\n\f\r ]`` (Java's
+  ``\s`` also takes ``\x0b``; neither takes ``\xa0`` or other
+  Unicode spaces),
+- :func:`case_fold`: lowercase is per code point, as DuckDB's
+  ``lower`` (Spark's ``lower`` maps 'İ' to two chars and a final 'Σ'
+  to 'ς').
+
+Built on them:
 
 - :func:`normalized_text`: whitespace-collapsed lowercase text,
 - :func:`fingerprint`: md5 of the normalized text,
@@ -31,11 +41,20 @@ STOPWORDS = {
 }
 
 
+# RE2's \s as a Java regex class (see the module docstring)
+_WS_CHARS = r"\t\n\f\r "
+WS = f"[{_WS_CHARS}]"
+
+
+def case_fold(col):
+    """Lowercase per code point, DuckDB's ``lower``."""
+    return F.lower(F.translate(col, "İΣ", "iσ"))
+
+
 def normalized_text(col):
     """Whitespace-collapsed lowercase — the canonical form for exact
-    dedup and fingerprints. Identical expression exists in DuckDB
-    (regexp_replace + lower), so the oracle replicates it verbatim."""
-    return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
+    dedup and fingerprints (DuckDB: regexp_replace + lower)."""
+    return F.regexp_replace(case_fold(F.trim(col)), WS + "+", " ")
 
 
 def fingerprint(col):
@@ -47,7 +66,7 @@ def tokens_ws(col):
     """Whitespace word split of the lowercased text. ``trim`` strips
     spaces only and ``split`` keeps leading/trailing empty tokens, as
     DuckDB's trim()/regexp_split_to_array do."""
-    return F.split(F.trim(F.lower(col)), r"\s+")
+    return F.split(F.trim(case_fold(col)), WS + "+")
 
 
 def word_grams(toks, k: int):
@@ -74,7 +93,7 @@ def token_count(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
         F.size(tokens_ws(F.col(text_col))).alias("n_tokens_ws"),
         F.size(
             F.regexp_extract_all(
-                F.lower(F.col(text_col)), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]"), 0
+                case_fold(F.col(text_col)), F.lit(f"[a-z]+|[0-9]+|[^a-z0-9{_WS_CHARS}]"), 0
             )
         ).alias("n_tokens_bpeish"),
     )
@@ -230,7 +249,7 @@ def quality_gopher(
     :func:`lang_id` — per-token work, never per-token-pair)."""
     toks = tokens_ws(F.col(text_col))
     n_tokens = F.greatest(F.size(toks), F.lit(1))
-    non_ws_chars = F.length(F.regexp_replace(F.col(text_col), r"\s+", ""))
+    non_ws_chars = F.length(F.regexp_replace(F.col(text_col), WS + "+", ""))
     mean_word_len = F.round(non_ws_chars.cast("double") / n_tokens, 3)
     n_hash = F.length(F.col(text_col)) - F.length(
         F.regexp_replace(F.col(text_col), "#", "")

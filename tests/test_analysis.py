@@ -3,6 +3,7 @@ tokenizer offset invariants."""
 
 import pytest
 
+from beagle_spark import analysis
 from beagle_spark.analysis import (
     AnalysisConfig,
     analyze,
@@ -304,6 +305,7 @@ def test_ascii_fastpath_equivalence():
         "a\u00a0b\u2007c\u202fd\u3000e\u2028f\u1680g\u2003h  \t\n",
         "\u00a0\u00a0lead and trail\u3000", "x" + "\u0301" * 3 + " y\u0308",
         "two\nlines\r\n and İ\n",
+        "Ⓜ x", "\u212aelvin", "İSTANBUL ΣΟΣ",
     ]
     for name, full in _PATTERNS.items():
         twin = _ASCII_TWINS.get(name)
@@ -315,12 +317,29 @@ def test_ascii_fastpath_equivalence():
                 assert spans(twin, s) == want, (name, s)
 
     # fused lower: analyze(case_sensitive=False) == the tokenizer's
-    # tokens lowered, offsets from the original text ('İ'.lower() is two
-    # chars long: offsets must not move)
+    # tokens lowered per code point (Lucene's LowerCaseFilter), offsets
+    # from the original text
     for name in _PATTERNS:
         ci = merge_config({"tokenizer": name, "case_sensitive": False})
         for s in cases + non_ascii + ["Mixed CASE Wörds Straße ÄÖÜ É 3.14 John's"]:
-            want = [(t.lower(), b, e) for t, b, e in flat(get_tokenizer(name)(s))]
+            want = [(analysis.lower(t), b, e) for t, b, e in flat(get_tokenizer(name)(s))]
             assert flat(analyze(s, ci)) == want, (name, s)
     toks = analyze("İstanbul Straße", merge_config({"case_sensitive": False}))
-    assert flat(toks) == [("i̇stanbul", 0, 8), ("straße", 9, 15)]
+    assert flat(toks) == [("istanbul", 0, 8), ("straße", 9, 15)]
+
+
+def test_lowercase_per_code_point_like_lucene():
+    """Lucene's LowerCaseFilter lowers each code point on its own
+    (`Character.toLowerCase(int)`): 'İ' -> 'i' and every 'Σ' -> 'σ',
+    where `str.lower` gives 'i̇' (two chars) and a word-final 'ς'."""
+    from beagle_spark.annotator import highlighter
+
+    assert analysis.lower("İSTANBUL ΣΟΣ") == "istanbul σοσ"
+    dictionary = [
+        {"text": "istanbul", "case-sensitive?": False},
+        {"text": "σοσ", "case-sensitive?": False},
+    ]
+    got = highlighter(dictionary)("İSTANBUL ΣΟΣ")
+    assert [(a["text"], a["begin_offset"], a["end_offset"]) for a in got] == [
+        ("İSTANBUL", 0, 8), ("ΣΟΣ", 9, 12)
+    ]

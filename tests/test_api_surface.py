@@ -3,6 +3,8 @@ registration, DictionaryEntry conversions."""
 
 import io
 
+import pytest
+
 from beagle_spark import DictionaryEntry, highlighter
 from beagle_spark.dictionary.readers import read_csv, read_json
 from beagle_spark.dictionary.writers import write_csv, write_json
@@ -49,6 +51,17 @@ def test_csv_roundtrip():
     for text in ("big data", "data big", "big and data"):
         assert highlighter(back)(text) == highlighter(d)(text)
     assert highlighter(back)("big data")
+    # a non-string meta value is written as the string the compilers
+    # read it as
+    d = [{"text": "a", "meta": {"k": 1, "k2": 2.5}}]
+    buf = io.StringIO()
+    write_csv(d, buf)
+    back = read_csv(io.StringIO(buf.getvalue()))
+    assert back[0]["meta"] == {"k": "1", "k2": "2.5"}
+    # ';' has no escape in the format: refused, not split on read
+    for bad in ({"meta": {"k": "x;y"}}, {"synonyms": ["b;c"]}, {"meta": {"k;": "x"}}):
+        with pytest.raises(ValueError, match="entry 1"):
+            write_csv([{"text": "a"}, {"text": "b", **bad}], io.StringIO())
 
 
 def test_dictionary_entry_aliases():

@@ -50,11 +50,11 @@ def test_simhash_near_dups_have_small_hamming(spark, docs):
 
 
 def test_simhash_md5_whitespace_edges_match_duckdb(spark):
-    """Docs with \\t/\\n edges: the Arrow UDF must tokenize exactly like
-    the JVM chain and the DuckDB oracle — trim strips SPACES only, the
-    split keeps leading/trailing empty tokens — so 'foo bar\\n' hashes
-    ['foo','bar',''] on both sides (advisor-found divergence that the
-    synthetic corpus masked)."""
+    """Docs with \\t/\\n edges: the kernel hashes the DuckDB oracle's
+    tokens — trim strips SPACES only, the split keeps leading/trailing
+    empty tokens — so 'foo bar\\n' hashes ['foo','bar',''] on both
+    sides; \\x0b, 'İ' and medial and final 'Σ' split and lower as
+    DuckDB does."""
     import duckdb
     import pandas as pd
 
@@ -69,6 +69,11 @@ def test_simhash_md5_whitespace_edges_match_duckdb(spark):
             ("d5", "\n"),
             ("d6", "x\r\ny"),
             ("d7", "   "),
+            # Java's \s takes \x0b, DuckDB's does not; Spark's lower
+            # maps 'İ' to two chars and a final 'Σ' to 'ς'
+            ("d8", "a\x0bb c"),
+            ("d9", "İSTANBUL ΣΟΣ"),
+            ("d10", "ΟΔΥΣΣΕΥΣ και ΣΑΣ"),
         ],
         columns=["doc_id", "text"],
     )

@@ -10,16 +10,19 @@ import time
 
 import pytest
 
+from beagle_spark.analysis import lower
 from beagle_spark.ops import textstats
 
 
 def _py_winnow(text: str, k: int = 5, window: int = 4) -> set:
     """Direct-from-paper reference: min hash of every `window`
     consecutive k-gram hashes over the normalized text (truncated
-    tail windows, matching slice semantics)."""
+    tail windows, matching slice semantics). Normalized as
+    ``textstats.normalized_text``: spaces trimmed, lowered per code
+    point, runs of [\\t\\n\\f\\r ] collapsed."""
     import re
 
-    norm = re.sub(r"\s+", " ", text.strip().lower())
+    norm = re.sub(r"[\t\n\f\r ]+", " ", lower(text.strip(" ")))
     m = max(len(norm) - k + 1, 1)
     grams = [hashlib.md5(norm[i : i + k].encode()).hexdigest() for i in range(m)]
     out = set()
@@ -93,6 +96,9 @@ def test_winnow_chunked_matches_reference(spark):
         # U+FEFF is a character, not a byte-order mark, wherever it sits
         (17, "\ufeffhello world"),
         (18, "ab\ufeffcd\ufeff" * 5),
+        # the case-and-space rule: \x0b and \xa0 are not whitespace,
+        # 'İ' lowers to 'i' and every 'Σ' to 'σ'
+        (19, "İSTANBUL ΣΟΣ a\x0bb c\xa0d ΟΔΥΣΣΕΥΣ"),
     ]
     docs = spark.createDataFrame(texts, ["doc_id", "text"])
     got = {
@@ -242,3 +248,41 @@ def test_quality_gopher(spark):
     assert not rows[2].passes_gopher
     assert not rows[3].passes_gopher and rows[3].symbol_word_ratio > 0.1
     assert not rows[4].passes_gopher and rows[4].alpha_word_frac == 0.0
+
+
+# Capitals added in Unicode 13 and 14 whose lowercase DuckDB's case
+# tables lack (its lower keeps them); Spark lowers them.
+_NEWER_THAN_DUCKDB = {
+    0x2C2F, 0xA7C0, 0xA7C7, 0xA7C9, 0xA7D0, 0xA7D6, 0xA7D8, 0xA7F5,
+    *range(0x10570, 0x1057B), *range(0x1057C, 0x1058B),
+    *range(0x1058C, 0x10593), 0x10594, 0x10595,
+}
+
+
+def test_case_fold_is_duckdb_lower(spark, tmp_path):
+    """``textstats.case_fold`` equals DuckDB's ``lower`` on every
+    assigned code point below U+30000, alone and word-final after a
+    letter (the final-sigma context), except on the code points
+    DuckDB's case tables are too old for."""
+    import unicodedata
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    cps = [c for c in range(0x30000) if unicodedata.category(chr(c)) not in ("Cn", "Cs")]
+    texts = [chr(c) for c in cps] + ["a" + chr(c) for c in cps]
+    pq.write_table(pa.table({"cp": cps * 2, "s": texts}), tmp_path / "in.parquet")
+    duckdb.execute(
+        f"COPY (SELECT cp, s, lower(s) AS l FROM '{tmp_path}/in.parquet') "
+        f"TO '{tmp_path}/out.parquet' (FORMAT PARQUET)"
+    )
+    lowered = spark.read.parquet(str(tmp_path / "out.parquet"))
+    differ = lowered.where(textstats.case_fold(F.col("s")) != F.col("l"))
+    assert {r.cp for r in differ.select("cp").distinct().collect()} == _NEWER_THAN_DUCKDB
+    # Spark's own lower differs on 'İ' and the final 'Σ' as well
+    plain = lowered.where(F.lower(F.col("s")) != F.col("l"))
+    assert {r.cp for r in plain.select("cp").distinct().collect()} == (
+        _NEWER_THAN_DUCKDB | {0x130, 0x3A3}
+    )
