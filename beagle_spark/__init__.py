@@ -12,7 +12,7 @@ from . import io, ops, streaming  # noqa: F401
 from .annotator import (Annotator, annotate_df, annotator, highlighter,
                         register_sql_function)
 from .matcher import compile_dictionary, match_text
-from .schema import ANNOTATION_STRUCT, ANNOTATIONS_TYPE, Annotation, DictionaryEntry
+from .schema import ANNOTATION_STRUCT, ANNOTATIONS_TYPE, DictionaryEntry
 
 __version__ = "0.1.0"
 
@@ -28,7 +28,6 @@ __all__ = [
     "compile_dictionary",
     "match_text",
     "DictionaryEntry",
-    "Annotation",
     "ANNOTATION_STRUCT",
     "ANNOTATIONS_TYPE",
 ]

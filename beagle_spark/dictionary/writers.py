@@ -36,9 +36,11 @@ CSV_COLUMNS = list(FILE_KEYS.values())
 def write_csv(dictionary: list[dict], sink: Sink) -> None:
     """Inverse of readers.read_csv: synonyms joined with ';', meta
     flattened to alternating k;v with values as strings
-    (`schema.norm_meta`). The format has no escape for ';', so one
-    inside a synonym or a meta key or value raises ValueError before
-    anything is written."""
+    (`schema.norm_meta`). The format has no escape for ';', and the
+    reader trims every cell and item and drops blank ones, so a ';'
+    inside a synonym or a meta key or value, and an empty or padded
+    string (a field value, a synonym, a meta key or value), raises
+    ValueError naming the entry's index before anything is written."""
     rows = [_csv_row(_clean(e), i) for i, e in enumerate(dictionary)]
     f, close = _writer(sink)
     try:
@@ -63,14 +65,20 @@ def _csv_row(e: dict, i: int) -> list[str]:
         elif isinstance(v, bool):
             row.append("true" if v else "false")
         else:
-            row.append(str(v))
+            row.append(_cell(str(v), i))
     return row
 
 
 def _joined(items: list[str], i: int) -> str:
     if any(";" in x for x in items):
         raise ValueError(f"dictionary entry {i}: ';' in a synonym or meta item has no CSV form")
-    return ";".join(items)
+    return ";".join(_cell(x, i) for x in items)
+
+
+def _cell(s: str, i: int) -> str:
+    if not s or s != s.strip():
+        raise ValueError(f"dictionary entry {i}: {s!r} would not read back (cells are trimmed, blanks dropped)")
+    return s
 
 
 def _clean(entry) -> dict:

@@ -7,26 +7,38 @@ returning the query text + id + meta but NO offsets
 (lucene_alpha.clj:18-28). Default type "QUERY" (lucene_alpha.clj:60).
 Parse errors are logged and the entry dropped (lucene_alpha.clj:41-43).
 
-Engine design: query string -> small AST -> either
-  (a) a per-document Python evaluator over the analyzed token list
-      (used inside the same Arrow-batched UDF as the phrase matcher), or
-  (b) a Spark SQL boolean Column over a token-array column
-      (`to_spark_predicate`) for queries without phrase clauses —
-      pure JVM, whole-stage-codegen'able, the Spark-first fast path.
+Engine design: the annotator keeps only what is Lucene-specific, the
+query language and the boolean layer; every leaf decision the phrase
+matcher already makes is the phrase matcher's. A query string parses
+to a small AST whose leaves are
+  - `TermQ`, a key test on the document's token index;
+  - `RegexpQ`, a full match over the distinct tokens (a wildcard is
+    translated to its regexp once, at parse time);
+  - `RangeQ`, a lexicographic test over the distinct tokens;
+  - `matcher.core.CompiledQuery` for a phrase of two or more terms and
+    for a fuzzy term, matched by `find_matches`, the phrase
+    annotator's own rule (a one-term phrase is a `TermQ`).
+`compile_lucene_dictionary` gives the distinct analysis configs and,
+per stored query in dictionary order, `(config index, AST, match)`
+with the match record resolved once. The matcher analyzes a document
+once per config and returns a copy of `match` for each query whose AST
+matches. The same AST compiles to a Spark SQL boolean Column over a
+token-array column (`to_spark_predicate`) for queries without phrase
+or fuzzy leaves: pure JVM, whole-stage-codegen'able, the Spark-first
+fast path.
 """
 
 from __future__ import annotations
 
 import logging
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass
 from typing import Optional
 
 import regex as re
 
 from .analysis import analyze
 from .matcher.compile import _conf_for, _entries
-from .matcher.core import (_match_unordered, _positions_exact, _positions_fuzzy,
-                           build_token_index)
+from .matcher.core import CompiledQuery, build_token_index, find_matches
 from .schema import DictionaryEntry, norm_keys
 
 logger = logging.getLogger(__name__)
@@ -41,25 +53,8 @@ class TermQ:
 
 
 @dataclass(frozen=True)
-class FuzzyQ:
-    term: str
-    max_edits: int = 2
-
-
-@dataclass(frozen=True)
-class WildcardQ:
-    pattern: str  # original with * and ?
-
-
-@dataclass(frozen=True)
 class RegexpQ:
     pattern: str
-
-
-@dataclass(frozen=True)
-class PhraseQ:
-    terms: tuple[str, ...]
-    slop: int = 0
 
 
 @dataclass(frozen=True)
@@ -120,6 +115,27 @@ def _lex(s: str):
         kind = m.lastgroup  # the outer group: "phrase" closes after "pslop"
         out.append((kind, m.group(kind), m.group("pslop")))
     return out
+
+
+def _wildcard_to_regex(pattern: str) -> str:
+    """The regexp of a wildcard term: `*` is `.*`, `?` is `.`, and every
+    other character, escaped ones included, is literal."""
+    parts = []
+    i = 0
+    while i < len(pattern):
+        ch = pattern[i]
+        if ch == "\\" and i + 1 < len(pattern):  # escaped char is literal
+            parts.append(re.escape(pattern[i + 1]))
+            i += 2
+            continue
+        if ch == "*":
+            parts.append(".*")
+        elif ch == "?":
+            parts.append(".")
+        else:
+            parts.append(re.escape(ch))
+        i += 1
+    return "".join(parts)
 
 
 class _Parser:
@@ -213,11 +229,12 @@ class _Parser:
             return node
         if kind == "phrase":
             body = text[1 : text.rindex('"')]
-            slop = int(pslop) if pslop else 0
             terms = tuple(analyze(_unescape(body), self.conf).texts)
             if not terms:
                 raise ParseError(f"phrase analyzes to no terms: {body!r}")
-            return PhraseQ(terms=terms, slop=slop)
+            if len(terms) == 1:
+                return TermQ(term=terms[0])
+            return CompiledQuery(query_id="", terms=terms, slop=int(pslop) if pslop else 0)
         if kind == "regex":
             return RegexpQ(pattern=text[1:-1])
         if kind == "range":
@@ -252,16 +269,16 @@ class _Parser:
                 text, n = m.group(1), m.group(2)
                 fuzzy = int(n) if n else 2
             if re.search(r"(?<!\\)[*?]", text):
-                return WildcardQ(pattern=text)
+                return RegexpQ(pattern=_wildcard_to_regex(text))
             analyzed = analyze(_unescape(text), self.conf).texts
             term = analyzed[0] if analyzed else _unescape(text)
             if fuzzy is not None:
-                return FuzzyQ(term=term, max_edits=fuzzy)
+                return CompiledQuery(query_id="", terms=(term,), fuzzy=True, fuzziness=fuzzy)
             return TermQ(term=term)
         raise ParseError(f"unexpected token {kind}:{text}")
 
 
-def parse_query(query_string: str, conf) -> BoolQ | TermQ | PhraseQ | RegexpQ | WildcardQ | FuzzyQ:
+def parse_query(query_string: str, conf) -> BoolQ | TermQ | RegexpQ | RangeQ | CompiledQuery:
     toks = _lex(query_string)
     if not toks:
         raise ParseError("empty query")
@@ -271,25 +288,6 @@ def parse_query(query_string: str, conf) -> BoolQ | TermQ | PhraseQ | RegexpQ | 
 # ---------------------------------------------------------------------------
 # Local evaluation over an analyzed token list
 # ---------------------------------------------------------------------------
-def _wildcard_to_regex(pattern: str) -> re.Pattern:
-    parts = []
-    i = 0
-    while i < len(pattern):
-        ch = pattern[i]
-        if ch == "\\" and i + 1 < len(pattern):  # escaped char is literal
-            parts.append(re.escape(pattern[i + 1]))
-            i += 2
-            continue
-        if ch == "*":
-            parts.append(".*")
-        elif ch == "?":
-            parts.append(".")
-        else:
-            parts.append(re.escape(ch))
-        i += 1
-    return re.compile("".join(parts))
-
-
 def _in_range(t: str, node: "RangeQ") -> bool:
     if node.lower is not None:
         if t < node.lower or (not node.incl_lower and t == node.lower):
@@ -300,64 +298,48 @@ def _in_range(t: str, node: "RangeQ") -> bool:
     return True
 
 
-def eval_query(node, index: dict) -> bool:
-    """Boolean match of `node` against one document's token index
-    (`matcher.core.build_token_index`: token -> sorted positions, the
-    same per-document index the phrase matcher probes). Term-level
-    nodes read its keys; a phrase runs the phrase matcher's sloppy
-    search over its position lists."""
+def eval_query(node, tokens, index: dict) -> bool:
+    """Boolean match of `node` against one document's analyzed `tokens`
+    and their index (`matcher.core.build_token_index`: token -> sorted
+    positions, the same per-document index the phrase matcher probes).
+    Term-level nodes read its keys; a phrase or fuzzy leaf is the phrase
+    matcher's own query and is matched by `find_matches`."""
     if isinstance(node, TermQ):
         return node.term in index
-    if isinstance(node, FuzzyQ):
-        return _positions_fuzzy(index, (node.term,), node.max_edits) is not None
-    if isinstance(node, WildcardQ):
-        rx = _wildcard_to_regex(node.pattern)
-        return any(rx.fullmatch(t) for t in index)
+    if isinstance(node, CompiledQuery):
+        return bool(find_matches(tokens, node, index))
     if isinstance(node, RegexpQ):
         rx = re.compile(node.pattern)
         return any(rx.fullmatch(t) for t in index)
     if isinstance(node, RangeQ):
         return any(_in_range(t, node) for t in index)
-    if isinstance(node, PhraseQ):
-        positions = _positions_exact(index, node.terms)
-        if positions is None:
-            return False
-        return len(positions) == 1 or bool(
-            _match_unordered(positions, node.slop, node.slop)
-        )
     if isinstance(node, BoolQ):
         for m in node.must_not:
-            if eval_query(m, index):
+            if eval_query(m, tokens, index):
                 return False
         for m in node.must:
-            if not eval_query(m, index):
+            if not eval_query(m, tokens, index):
                 return False
         if node.should and not node.must:
-            return any(eval_query(s, index) for s in node.should)
+            return any(eval_query(s, tokens, index) for s in node.should)
         return bool(node.must) or not node.should
     raise TypeError(f"unknown node {node!r}")
 
 
 # ---------------------------------------------------------------------------
-# Spark Column compilation (phrase-free queries): pure JVM predicate
+# Spark Column compilation (no phrase or fuzzy leaf): pure JVM predicate
 # ---------------------------------------------------------------------------
 def to_spark_predicate(node, tokens_col):
-    """Compile a phrase-free AST to a Column over an array<string> token
-    column: array_contains / exists(rlike) / AND/OR/NOT. Stays inside
+    """Compile an AST without `CompiledQuery` leaves (phrases, fuzzy
+    terms) to a Column over an array<string> token column:
+    array_contains / exists(rlike) / AND/OR/NOT. Stays inside
     whole-stage codegen — no Python in the hot path."""
     from pyspark.sql import functions as F
 
     if isinstance(node, TermQ):
         return F.array_contains(tokens_col, node.term)
-    if isinstance(node, (RegexpQ, WildcardQ)):
-        pat = (
-            node.pattern
-            if isinstance(node, RegexpQ)
-            else _wildcard_to_regex(node.pattern).pattern
-        )
-        return F.exists(tokens_col, lambda t: t.rlike(f"^(?:{pat})$"))
-    if isinstance(node, PhraseQ) and len(node.terms) == 1:
-        return F.array_contains(tokens_col, node.terms[0])
+    if isinstance(node, RegexpQ):
+        return F.exists(tokens_col, lambda t: t.rlike(f"^(?:{node.pattern})$"))
     if isinstance(node, RangeQ):
         def in_range(t):
             cond = F.lit(True)
@@ -370,8 +352,6 @@ def to_spark_predicate(node, tokens_col):
             return cond
 
         return F.exists(tokens_col, in_range)
-    if isinstance(node, FuzzyQ):
-        raise ValueError("fuzzy term not SQL-expressible; use the UDF path")
     if isinstance(node, BoolQ):
         import functools
 
@@ -393,26 +373,22 @@ def to_spark_predicate(node, tokens_col):
 # ---------------------------------------------------------------------------
 # Public API (parity with lucene_alpha/annotator)
 # ---------------------------------------------------------------------------
-@dataclass
-class CompiledLuceneQuery:
-    query_id: str
-    query_string: str
-    ast: object
-    conf: object
-    type: Optional[str] = None
-    meta: dict = dc_field(default_factory=dict)
-
-
 def compile_lucene_dictionary(dictionary, opts: dict | None = None):
-    """Entries are read by the phrase compiler's front end
-    (`matcher.compile._entries`: ids, failure isolation) and analyzed
-    under the same per-entry config; an entry whose query does not
-    parse is logged and dropped (lucene_alpha.clj:41-43)."""
+    """`(configs, queries)`: the distinct analysis configs in first-seen
+    order, and per stored query in dictionary order `(config index,
+    AST, match)`, where `match` is the `{text, type, dict_entry_id,
+    meta}` record it emits, its type already resolved (the entry's,
+    else the dictionary default). Entries are read by the phrase
+    compiler's front end (`matcher.compile._entries`: ids, failure
+    isolation) and analyzed under the same per-entry config; an entry
+    whose query does not parse is logged and dropped
+    (lucene_alpha.clj:41-43)."""
     opts = norm_keys(opts)
     type_name = opts.pop("type_name", None) or "QUERY"
     defaults = DictionaryEntry.from_dict(opts)
     conf_cache: dict = {}
-    compiled = []
+    conf_index: dict = {}  # config -> its position in `configs`
+    queries = []
     for query_id, entry in _entries(dictionary):
         try:
             conf = _conf_for(entry, defaults, conf_cache)
@@ -420,39 +396,23 @@ def compile_lucene_dictionary(dictionary, opts: dict | None = None):
         except Exception as e:
             logger.error("Failed to parse query %r: %s", entry.text, e)
             continue
-        compiled.append(
-            CompiledLuceneQuery(
-                query_id=query_id,
-                query_string=entry.text,
-                ast=ast,
-                conf=conf,
-                type=entry.type,
-                meta=entry.meta or {},
-            )
-        )
-    return compiled, type_name
+        match = {
+            "text": entry.text,
+            "type": entry.type if entry.type is not None else type_name,
+            "dict_entry_id": query_id,
+            "meta": entry.meta or {},
+        }
+        queries.append((conf_index.setdefault(conf, len(conf_index)), ast, match))
+    return list(conf_index), queries
 
 
-def _make_matcher(compiled, type_name):
+def _make_matcher(configs, queries):
     def annotate(text: str, _opts: dict | None = None) -> list[dict]:
         if text is None or not text.strip():
             return []
-        out = []
-        by_conf: dict = {}  # one token index per (document, config)
-        for cq in compiled:
-            index = by_conf.get(cq.conf)
-            if index is None:
-                index = by_conf[cq.conf] = build_token_index(analyze(text, cq.conf))
-            if eval_query(cq.ast, index):
-                out.append(
-                    {
-                        "text": cq.query_string,
-                        "type": cq.type if cq.type is not None else type_name,
-                        "dict_entry_id": cq.query_id,
-                        "meta": cq.meta,
-                    }
-                )
-        return out
+        docs = [(tokens, build_token_index(tokens))
+                for tokens in (analyze(text, conf) for conf in configs)]
+        return [dict(match) for i, ast, match in queries if eval_query(ast, *docs[i])]
 
     return annotate
 
@@ -460,8 +420,8 @@ def _make_matcher(compiled, type_name):
 def lucene_annotator(dictionary, opts: dict | None = None):
     """Local API parity (lucene_alpha.clj:57-66): fn(text) -> matches
     with {text: query-string, type, dict_entry_id, meta} — no offsets."""
-    compiled, type_name = compile_lucene_dictionary(dictionary, opts)
-    annotate = _make_matcher(compiled, type_name)
+    compiled = compile_lucene_dictionary(dictionary, opts)
+    annotate = _make_matcher(*compiled)
     annotate.compiled = compiled  # type: ignore[attr-defined]
     return annotate
 
@@ -487,8 +447,8 @@ def lucene_annotate_df(df, dictionary, text_col: str = "text", opts: dict | None
             ]
         )
     )
-    # broadcast the picklable compiled form; rebuild the evaluator per
-    # executor (closures over module functions don't pickle)
+    # broadcast the picklable (configs, queries) pair; rebuild the
+    # evaluator per executor (closures over module functions don't pickle)
     bc = df.sparkSession.sparkContext.broadcast(compile_lucene_dictionary(dictionary, opts))
     udf = arrow_kernel(lambda: per_value(_make_matcher(*bc.value)), schema)
     return df.withColumn(output_col, udf(F.col(text_col)))

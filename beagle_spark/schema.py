@@ -2,11 +2,14 @@
 dictionary-entry format.
 
 Mirrors the reference's two record types (reference:
-src/beagle/schema.clj:25-44) as Spark StructTypes plus plain-Python
-dataclasses used on the driver during dictionary compilation.
+src/beagle/schema.clj:25-44):
 
-- DictionaryEntry  <- defrecord DictionaryEntry (schema.clj:31-32)
-- Annotation       <- defrecord Highlight       (schema.clj:44)
+- DictionaryEntry    <- defrecord DictionaryEntry (schema.clj:31-32), a
+  plain-Python dataclass read on the driver during dictionary
+  compilation;
+- ANNOTATION_STRUCT  <- defrecord Highlight       (schema.clj:44), the
+  Spark struct of one match (`highlighter` returns the same fields as
+  a dict).
 
 The entry format, which the readers, writers, validator, optimizer and
 both compilers read from here:
@@ -130,24 +133,3 @@ BOOL_FIELDS = tuple(k for k, t in FIELD_TYPES.items() if t == Optional[bool])
 INT_FIELDS = tuple(k for k, t in FIELD_TYPES.items() if t == Optional[int])
 FILE_KEYS = {k: f"{k.replace('_', '-')}?" if k in BOOL_FIELDS else k for k in FIELD_TYPES}
 
-
-@dataclass
-class Annotation:
-    """Match result (reference: schema.clj:44)."""
-
-    text: str
-    type: Optional[str]
-    dict_entry_id: Optional[str]
-    meta: dict
-    begin_offset: int
-    end_offset: int
-
-    def as_row(self) -> dict:
-        return {
-            "text": self.text,
-            "type": self.type,
-            "dict_entry_id": self.dict_entry_id,
-            "meta": self.meta,
-            "begin_offset": self.begin_offset,
-            "end_offset": self.end_offset,
-        }

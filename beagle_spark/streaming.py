@@ -112,20 +112,22 @@ def run_with_dictionary_refresh(
     checkpoint_dir: Optional[str] = None,
     refresh_every_n_batches: int = 10,
 ):
-    """foreachBatch loop that re-reads the dictionary source every N
-    micro-batches and recompiles/re-broadcasts it (the old broadcast is
-    unpersisted). Dictionary updates take effect at a batch boundary —
-    the same consistency unit as the reference's thread-safe Monitor
-    updates (CHANGELOG:36-39)."""
-    state = {"annotator": Annotator(load_dictionary(), opts), "batches": 0}
+    """foreachBatch loop that re-reads the dictionary source at every
+    N-th micro-batch id (`batch_id % N == 0`, batch 0 excepted) and
+    recompiles/re-broadcasts it (the old broadcast is unpersisted).
+    Dictionary updates take effect at a batch boundary — the same
+    consistency unit as the reference's thread-safe Monitor updates
+    (CHANGELOG:36-39). Keyed on `batch_id`, refreshes fall on the same
+    batches after a restart from the checkpoint; the restart itself
+    loads the dictionary again."""
+    state = {"annotator": Annotator(load_dictionary(), opts)}
 
     def process(batch_df: DataFrame, batch_id: int):
-        if state["batches"] and state["batches"] % refresh_every_n_batches == 0:
+        if batch_id and batch_id % refresh_every_n_batches == 0:
             old = state["annotator"]
             state["annotator"] = Annotator(load_dictionary(), opts)
             if old._bc is not None:
                 old._bc.unpersist()
-        state["batches"] += 1
         sink(state["annotator"].annotate_df(batch_df, text_col=text_col), batch_id)
 
     writer = stream_df.writeStream.foreachBatch(process)

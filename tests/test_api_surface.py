@@ -58,8 +58,12 @@ def test_csv_roundtrip():
     write_csv(d, buf)
     back = read_csv(io.StringIO(buf.getvalue()))
     assert back[0]["meta"] == {"k": "1", "k2": "2.5"}
-    # ';' has no escape in the format: refused, not split on read
-    for bad in ({"meta": {"k": "x;y"}}, {"synonyms": ["b;c"]}, {"meta": {"k;": "x"}}):
+    # ';' has no escape in the format: refused, not split on read; an
+    # empty or padded string is refused, not trimmed or dropped on read
+    for bad in ({"meta": {"k": "x;y"}}, {"synonyms": ["b;c"]}, {"meta": {"k;": "x"}},
+                {"meta": {"k": ""}}, {"meta": {"j": " x "}}, {"meta": {" k": "x"}},
+                {"synonyms": [" b "]}, {"synonyms": ["c", ""]},
+                {"text": " padded "}, {"type": " T"}, {"id": ""}):
         with pytest.raises(ValueError, match="entry 1"):
             write_csv([{"text": "a"}, {"text": "b", **bad}], io.StringIO())
 

@@ -198,6 +198,27 @@ def test_spark_predicate_range(spark):
     assert got == [1, 3]
 
 
+PREDICATE_ROWS = [["cat", "zebra"], ["bat"], ["ant", "bat"], ["dog", "ape"], ["cot", "zeal"],
+                  ["bar", "cut"], ["emu"], ["cat", "ant", "axe"], ["baz", "zebra", "bat"]]
+
+
+@pytest.mark.parametrize("query", [
+    "[bat TO dog]", "ba*", "c?t", '"cat"', "/ze.*/", "cat OR zebra",
+    "bat AND NOT zebra", "+bat -ant", '"cat"~2 AND [a TO b]',
+])
+def test_spark_predicate_agrees_with_local(spark, query):
+    """The JVM predicate keeps exactly the rows whose joined tokens the
+    local annotator matches."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(list(enumerate(PREDICATE_ROWS)), ["id", "tokens"])
+    got = sorted(
+        r["id"] for r in df.filter(to_spark_predicate(parse_query(query, CONF), F.col("tokens"))).collect()
+    )
+    local = lucene_annotator([{"text": query}])
+    assert got == [i for i, toks in enumerate(PREDICATE_ROWS) if local(" ".join(toks))]
+
+
 def test_lucene_annotate_df_matches_local(spark, sf_dir):
     """The DataFrame operator returns, per row, exactly the local
     `lucene_annotator` matches; null and blank text give `[]`."""

@@ -7,6 +7,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from beagle_spark import highlighter
+from beagle_spark.lucene_query import lucene_annotator
 from beagle_spark.matcher import merge_same_type_annotations
 
 WORD = st.text(alphabet="abcdefgXYZ0123456789", min_size=1, max_size=8)
@@ -91,6 +92,24 @@ def test_merge_output_subset(dictionary, text):
 def test_blank_or_any_text_never_raises(text):
     hl = highlighter([{"text": "a b", "slop": 2}, {"text": "x", "fuzzy?": True}])
     assert isinstance(hl(text), list)
+
+
+# near neighbours of each other, so fuzzy and sloppy leaves both hit and miss
+LEAF_WORD = st.sampled_from(["ab", "abc", "ba", "bca", "cab", "ac", "cc"])
+LEAF_DOC = st.lists(LEAF_WORD, max_size=12).map(" ".join)
+
+
+@settings(max_examples=150, deadline=None)
+@given(LEAF_DOC, st.lists(LEAF_WORD, min_size=1, max_size=3).map(" ".join),
+       st.integers(0, 3), LEAF_WORD, st.integers(0, 2))
+def test_query_string_leaves_match_as_the_phrase_matcher(doc, phrase, slop, term, k):
+    """A query string's phrase and fuzzy leaves are the phrase matcher's
+    queries: `"p"~s` matches iff the entry `p` at slop `s` does, and
+    `t~k` iff the fuzzy entry `t` at fuzziness `k` does."""
+    lucene = bool(lucene_annotator([{"text": f'"{phrase}"~{slop}'}])(doc))
+    assert lucene == bool(highlighter([{"text": phrase, "slop": slop}])(doc))
+    lucene = bool(lucene_annotator([{"text": f"{term}~{k}"}])(doc))
+    assert lucene == bool(highlighter([{"text": term, "fuzzy": True, "fuzziness": k}])(doc))
 
 
 def test_merge_idempotent():

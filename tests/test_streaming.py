@@ -70,6 +70,43 @@ def test_dictionary_refresh(spark, sf_dir, tmp_path):
     assert seen and seen[0] == {"v1"}
 
 
+def test_dictionary_refresh_keyed_on_batch_id(spark, tmp_path):
+    """Refreshes fall on batch ids, not on a count of the batches this
+    run has seen: after a restart from the checkpoint, batch 2 of
+    `refresh_every_n_batches=2` still reloads the dictionary."""
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    docs = spark.createDataFrame([(1, "alpha beta")], "doc_id long, text string")
+    calls = {"n": 0}
+
+    def load_dictionary():
+        d = [{"text": "alpha", "id": f"v{calls['n']}"}]
+        calls["n"] += 1
+        return d
+
+    seen = {}
+
+    def sink(df, batch_id):
+        seen[batch_id] = sorted(
+            {r["a"]["dict_entry_id"] for r in df.select(F.explode("annotations").alias("a")).collect()}
+        )
+
+    def run():
+        stream = spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(src)
+        q = run_with_dictionary_refresh(stream, load_dictionary, sink,
+                                        refresh_every_n_batches=2, checkpoint_dir=ckpt)
+        q.processAllAvailable()
+        q.stop()
+
+    docs.coalesce(1).write.parquet(src)  # file A: batch 0
+    run()
+    for _ in range(2):  # files B and C: batches 1 and 2 after the restart
+        docs.coalesce(1).write.mode("append").parquet(src)
+    run()
+    # the restart loads v1; batch 2 refreshes to the third load
+    assert seen == {0: ["v0"], 1: ["v1"], 2: ["v2"]}
+
+
 def test_stream_exact_dedup(spark, tmp_path):
     from pyspark.sql import Row
     import datetime
