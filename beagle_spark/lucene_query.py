@@ -7,6 +7,17 @@ returning the query text + id + meta but NO offsets
 (lucene_alpha.clj:18-28). Default type "QUERY" (lucene_alpha.clj:60).
 Parse errors are logged and the entry dropped (lucene_alpha.clj:41-43).
 
+Grammar: the classic QueryParser's, default operator OR, one field.
+A query or group is one level of clauses whose occur `addClause` sets:
+`-`/`NOT`/`!` gives must_not, `+` or an `AND` before the clause gives
+must, anything else should; `AND` also makes the clause before it must
+unless it is must_not, and `OR` changes nothing. A term or phrase that
+analyzes to no tokens is dropped, and a level with no must and no
+should clause (a pure negative) matches nothing, as a Lucene
+BooleanQuery does. A bare term of several tokens is their disjunction
+(`foo-bar` is `foo OR bar`); a fuzzy term or range endpoint keeps its
+first token; a `field:` prefix is read and dropped; boosts are dropped.
+
 Engine design: the annotator keeps only what is Lucene-specific, the
 query language and the boolean layer; every leaf decision the phrase
 matcher already makes is the phrase matcher's. A query string parses
@@ -31,7 +42,7 @@ fast path.
 from __future__ import annotations
 
 import logging
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Optional
 
 import regex as re
@@ -39,7 +50,7 @@ import regex as re
 from .analysis import analyze
 from .matcher.compile import _conf_for, _entries
 from .matcher.core import CompiledQuery, build_token_index, find_matches
-from .schema import DictionaryEntry, norm_keys
+from .schema import QUERY_MATCHES_TYPE, DictionaryEntry, norm_keys
 
 logger = logging.getLogger(__name__)
 
@@ -54,7 +65,13 @@ class TermQ:
 
 @dataclass(frozen=True)
 class RegexpQ:
+    """A full match over the distinct tokens. `rx` is compiled once, at
+    parse time, and travels with the query when it is pickled."""
     pattern: str
+    rx: object = field(init=False, repr=False, compare=False)
+
+    def __post_init__(self):
+        object.__setattr__(self, "rx", re.compile(self.pattern))
 
 
 @dataclass(frozen=True)
@@ -80,14 +97,16 @@ class BoolQ:
 # ---------------------------------------------------------------------------
 _TOK = re.compile(
     r"""\s*(?:
-        (?P<lparen>\()|(?P<rparen>\))|
+        (?P<rparen>\))|
         (?P<and>AND\b|&&)|(?P<or>OR\b|\|\|)|(?P<not>NOT\b|!)|
         (?P<plus>\+)|(?P<minus>-)|
-        (?P<range>[\[\{][^\[\]{}]*?\sTO\s[^\[\]{}]*?[\]\}])|
-        (?P<phrase>"(?:[^"\\]|\\.)*"(?:~(?P<pslop>\d+))?)|
-        (?P<regex>/(?:[^/\\]|\\.)*/)|
         (?P<boost>\^\d+(?:\.\d+)?)|
-        (?P<term>(?:\\.|[^\s()"/\\^\[\]{}])+)
+        (?:(?:\\.|[^\s()"/\\^\[\]{}:])+:\s*)?  # `field:`, dropped: one field
+        (?:(?P<lparen>\()|
+           (?P<range>[\[\{][^\[\]{}]*?\sTO\s[^\[\]{}]*?[\]\}])|
+           (?P<phrase>"(?:[^"\\]|\\.)*"(?:~(?P<pslop>\d+))?)|
+           (?P<regex>/(?:[^/\\]|\\.)*/)|
+           (?P<term>(?:\\.|[^\s()"/\\^\[\]{}])+))
     )""",
     re.VERBOSE,
 )
@@ -139,8 +158,8 @@ def _wildcard_to_regex(pattern: str) -> str:
 
 
 class _Parser:
-    """Pratt-ish parser: OR < AND < NOT/unary; bare terms at the same
-    level combine as SHOULD (classic QueryParser default OR)."""
+    """Classic QueryParser over the lexed tokens: a query is one level of
+    clauses (`parse_query`), a group opens a nested level."""
 
     def __init__(self, toks, conf):
         self.toks = toks
@@ -156,85 +175,69 @@ class _Parser:
         return t
 
     def parse(self):
-        node = self.parse_or()
+        node = self.parse_query()
         if self.i < len(self.toks):
             raise ParseError(f"trailing tokens: {self.toks[self.i:]}")
+        if node is None:
+            raise ParseError("no clause left after analysis")
         return node
 
-    def parse_or(self):
-        parts = [self.parse_and()]
-        while self.peek()[0] == "or":
-            self.next()
-            parts.append(self.parse_and())
-        if len(parts) == 1:
-            return parts[0]
-        return BoolQ(should=tuple(parts))
-
-    def parse_and(self):
-        parts = [self.parse_clauses()]
-        while self.peek()[0] == "and":
-            self.next()
-            parts.append(self.parse_clauses())
-        if len(parts) == 1:
-            return parts[0]
-        return BoolQ(must=tuple(parts))
-
-    def parse_clauses(self):
-        """A run of +/-/bare atoms (implicit SHOULD combination)."""
-        must, should, must_not = [], [], []
+    def parse_query(self):
+        """One level: `Query()` with `addClause` at default operator OR
+        (the clause rule is in the module docstring). A dropped clause
+        (None) is skipped; a level with none left is None."""
+        clauses = []  # [occur, node] in clause order
+        conj = None
         while True:
-            kind, _, _ = self.peek()
-            if kind in (None, "rparen", "and", "or"):
+            mod = self.next()[0] if self.peek()[0] in ("plus", "minus", "not") else None
+            node = self.parse_clause()
+            if conj == "and" and clauses and clauses[-1][0] != "must_not":
+                clauses[-1][0] = "must"
+            if node is not None:
+                occur = ("must_not" if mod in ("minus", "not")
+                         else "must" if mod or conj == "and" else "should")
+                clauses.append([occur, node])
+            conj = self.peek()[0]
+            if conj in (None, "rparen"):
                 break
-            if kind == "plus":
+            if conj in ("and", "or"):
                 self.next()
-                must.append(self.parse_boosted_atom())
-            elif kind in ("minus", "not"):
-                self.next()
-                must_not.append(self.parse_boosted_atom())
-            else:
-                should.append(self.parse_boosted_atom())
-        if not (must or should or must_not):
-            raise ParseError("empty clause")
-        if len(should) == 1 and not must and not must_not:
-            return should[0]
-        return BoolQ(must=tuple(must), should=tuple(should), must_not=tuple(must_not))
+        if not clauses:
+            return None
+        if len(clauses) == 1 and clauses[0][0] != "must_not":
+            return clauses[0][1]
+        return BoolQ(**{occur: tuple(n for o, n in clauses if o == occur)
+                        for occur in ("must", "should", "must_not")})
 
-    def parse_boosted_atom(self):
-        """Atom plus any trailing boost tokens (`term^2`, `"a b"^3`,
-        `(x y)^0.5`). Boosts are irrelevant to boolean matching (the
-        reference's SIMPLE_MATCHER ignores scores), so they are parsed
-        and dropped — NOT a parse error."""
+    def parse_clause(self):
+        """One atom and any trailing boosts (`term^2`, `"a b"^3`,
+        `(x y)^0.5`), which are dropped: boolean matching ignores scores
+        (the reference's SIMPLE_MATCHER)."""
         node = self.parse_atom()
         while self.peek()[0] == "boost":
             self.next()
         return node
 
+    def _first_token(self, raw):
+        """A fuzzy term's or range endpoint's first analyzed token, else
+        `raw` itself."""
+        analyzed = analyze(raw, self.conf).texts
+        return analyzed[0] if analyzed else raw
+
     def parse_atom(self):
+        """One atom, or None when it analyzes to no tokens (Lucene's
+        null query, which `addClause` skips)."""
         kind, text, pslop = self.next()
-        if (
-            kind == "term"
-            and self.peek()[0] in ("range", "lparen", "phrase", "regex")
-            and re.fullmatch(r"(?:\\.|[^\\:])+:", text)
-        ):
-            # `field:` immediately before a range/group/phrase/regex binds
-            # the field to that clause; single-field engine drops the
-            # qualifier (same convention as field:term below) instead of
-            # emitting a spurious TermQ("field").
-            kind, text, pslop = self.next()
         if kind == "lparen":
-            node = self.parse_or()
+            node = self.parse_query()
             if self.next()[0] != "rparen":
                 raise ParseError("expected )")
             return node
         if kind == "phrase":
-            body = text[1 : text.rindex('"')]
-            terms = tuple(analyze(_unescape(body), self.conf).texts)
-            if not terms:
-                raise ParseError(f"phrase analyzes to no terms: {body!r}")
-            if len(terms) == 1:
-                return TermQ(term=terms[0])
-            return CompiledQuery(query_id="", terms=terms, slop=int(pslop) if pslop else 0)
+            terms = tuple(analyze(_unescape(text[1 : text.rindex('"')]), self.conf).texts)
+            if len(terms) > 1:
+                return CompiledQuery(query_id="", terms=terms, slop=int(pslop) if pslop else 0)
+            return TermQ(term=terms[0]) if terms else None
         if kind == "regex":
             return RegexpQ(pattern=text[1:-1])
         if kind == "range":
@@ -244,25 +247,13 @@ class _Parser:
             if not m:
                 raise ParseError(f"malformed range: {text!r}")
             lo_raw, hi_raw = _unescape(m.group(2)), _unescape(m.group(3))
-
-            def endpoint(raw):
-                if raw == "*":
-                    return None
-                analyzed = analyze(raw, self.conf).texts
-                return analyzed[0] if analyzed else raw
-
             return RangeQ(
-                lower=endpoint(lo_raw),
-                upper=endpoint(hi_raw),
+                lower=None if lo_raw == "*" else self._first_token(lo_raw),
+                upper=None if hi_raw == "*" else self._first_token(hi_raw),
                 incl_lower=m.group(1) == "[",
                 incl_upper=m.group(4) == "]",
             )
         if kind == "term":
-            # field:term -> ignore the field prefix (single-field
-            # engine); the colon must not be escaped
-            m = re.match(r"^(?:\\.|[^\\:])+:(?!$)", text)
-            if m and not text.startswith(":"):
-                text = text[m.end():]
             fuzzy = None
             m = re.fullmatch(r"(.+?)(?<!\\)~(\d*)", text)
             if m:
@@ -270,11 +261,12 @@ class _Parser:
                 fuzzy = int(n) if n else 2
             if re.search(r"(?<!\\)[*?]", text):
                 return RegexpQ(pattern=_wildcard_to_regex(text))
-            analyzed = analyze(_unescape(text), self.conf).texts
-            term = analyzed[0] if analyzed else _unescape(text)
             if fuzzy is not None:
+                term = self._first_token(_unescape(text))
                 return CompiledQuery(query_id="", terms=(term,), fuzzy=True, fuzziness=fuzzy)
-            return TermQ(term=term)
+            # createFieldQuery at default OR: several tokens are a disjunction
+            terms = tuple(TermQ(term=t) for t in analyze(_unescape(text), self.conf).texts)
+            return BoolQ(should=terms) if len(terms) > 1 else terms[0] if terms else None
         raise ParseError(f"unexpected token {kind}:{text}")
 
 
@@ -309,8 +301,7 @@ def eval_query(node, tokens, index: dict) -> bool:
     if isinstance(node, CompiledQuery):
         return bool(find_matches(tokens, node, index))
     if isinstance(node, RegexpQ):
-        rx = re.compile(node.pattern)
-        return any(rx.fullmatch(t) for t in index)
+        return any(node.rx.fullmatch(t) for t in index)
     if isinstance(node, RangeQ):
         return any(_in_range(t, node) for t in index)
     if isinstance(node, BoolQ):
@@ -322,7 +313,7 @@ def eval_query(node, tokens, index: dict) -> bool:
                 return False
         if node.should and not node.must:
             return any(eval_query(s, tokens, index) for s in node.should)
-        return bool(node.must) or not node.should
+        return bool(node.must)
     raise TypeError(f"unknown node {node!r}")
 
 
@@ -355,7 +346,7 @@ def to_spark_predicate(node, tokens_col):
     if isinstance(node, BoolQ):
         import functools
 
-        cond = F.lit(True)
+        cond = F.lit(False)
         if node.must:
             cond = functools.reduce(
                 lambda a, b: a & b, (to_spark_predicate(m, tokens_col) for m in node.must)
@@ -432,23 +423,11 @@ def lucene_annotate_df(df, dictionary, text_col: str = "text", opts: dict | None
     Same broadcast + per-value `kernel.arrow_kernel` as the phrase
     annotator."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import (ArrayType, MapType, StringType, StructField,
-                                   StructType)
 
     from .kernel import arrow_kernel, per_value
 
-    schema = ArrayType(
-        StructType(
-            [
-                StructField("text", StringType()),
-                StructField("type", StringType()),
-                StructField("dict_entry_id", StringType()),
-                StructField("meta", MapType(StringType(), StringType())),
-            ]
-        )
-    )
     # broadcast the picklable (configs, queries) pair; rebuild the
     # evaluator per executor (closures over module functions don't pickle)
     bc = df.sparkSession.sparkContext.broadcast(compile_lucene_dictionary(dictionary, opts))
-    udf = arrow_kernel(lambda: per_value(_make_matcher(*bc.value)), schema)
+    udf = arrow_kernel(lambda: per_value(_make_matcher(*bc.value)), QUERY_MATCHES_TYPE)
     return df.withColumn(output_col, udf(F.col(text_col)))

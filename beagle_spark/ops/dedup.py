@@ -210,20 +210,9 @@ def minhash_lsh_candidates(
     sig = minhash_signature_stage(
         df, text_col, id_col, num_perm, shingle_k, shingled=shingled
     )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                F.concat_ws(
-                    ",", *[F.col("sig")[b * rows + j].cast("string") for j in range(rows)]
-                )
-            ).alias("bucket"),
-        )
-        for b in range(bands)
-    ]
-    banded = sig.select("id", F.explode(F.array(*band_structs)).alias("bb")).select(
-        "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
+    values = [F.col("sig")[i] for i in range(num_perm)]
+    buckets = [F.xxhash64(*values[b * rows:(b + 1) * rows]) for b in range(bands)]
+    banded = sig.select("id", F.posexplode(F.array(*buckets)).alias("band", "bucket"))
     return (
         bucket_pairs(banded, ("band", "bucket"), bucket_cap)
         .groupBy("id_a", "id_b")

@@ -9,7 +9,8 @@ src/beagle/schema.clj:25-44):
   compilation;
 - ANNOTATION_STRUCT  <- defrecord Highlight       (schema.clj:44), the
   Spark struct of one match (`highlighter` returns the same fields as
-  a dict).
+  a dict); `QUERY_MATCHES_TYPE` is the query-string annotator's
+  array of the same record without its offsets.
 
 The entry format, which the readers, writers, validator, optimizer and
 both compilers read from here:
@@ -55,6 +56,9 @@ ANNOTATION_STRUCT = StructType(
     ]
 )
 ANNOTATIONS_TYPE = ArrayType(ANNOTATION_STRUCT, containsNull=False)
+# A query-string match is the same record without offsets
+# (lucene_alpha.clj:18-28).
+QUERY_MATCHES_TYPE = ArrayType(StructType(ANNOTATION_STRUCT.fields[:4]), containsNull=False)
 
 def norm_key(k) -> str:
     """The one spelling rule for option and entry keys: the reference's

@@ -205,6 +205,8 @@ PREDICATE_ROWS = [["cat", "zebra"], ["bat"], ["ant", "bat"], ["dog", "ape"], ["c
 @pytest.mark.parametrize("query", [
     "[bat TO dog]", "ba*", "c?t", '"cat"', "/ze.*/", "cat OR zebra",
     "bat AND NOT zebra", "+bat -ant", '"cat"~2 AND [a TO b]',
+    "cat AND bat OR zebra", "bat OR ant AND axe", "cat OR NOT ant", "-zebra",
+    "(NOT ant) OR emu", "+bat OR ze*", "bat-zebra", "bat AND .",
 ])
 def test_spark_predicate_agrees_with_local(spark, query):
     """The JVM predicate keeps exactly the rows whose joined tokens the
@@ -217,6 +219,49 @@ def test_spark_predicate_agrees_with_local(spark, query):
     )
     local = lucene_annotator([{"text": query}])
     assert got == [i for i, toks in enumerate(PREDICATE_ROWS) if local(" ".join(toks))]
+
+
+# --- the classic parser's clause rule (QueryParserBase.addClause, default
+# operator OR): one row per form, expected values from addClause ----------
+CLASSIC = [
+    ("a AND b OR c", {"c": False, "a b": True, "a c": False}),
+    ("a && b || c", {"c": False, "a b": True, "a c": False}),
+    ("a OR b AND c", {"a": False, "b c": True}),
+    ("a OR NOT b", {"a": True, "x": False, "a b": False}),
+    ("NOT b", {"x": False}),
+    ("-b", {"x": False}),
+    ("(NOT b) OR a", {"a": True, "x": False}),
+    ("a AND .", {"a": True}),
+    ('"..." OR cat', {"cat": True}),
+    ("+bat OR ze*", {"zebra": False, "bat": True}),
+    ("foo-bar", {"bar only": True}),
+    ("a AND b c", {"a b": True, "a c": False}),
+    ("a b AND c", {"a": False, "b c": True}),
+    ("-a b", {"b": True, "a b": False, "x": False}),
+    ("a AND NOT b", {"a": True, "a b": False}),
+    ("a AND (b OR c) AND NOT d", {"a b x": True, "a c x": True, "a x": False, "a b d": False}),
+]
+
+
+@pytest.mark.parametrize("query,expected", CLASSIC, ids=[q for q, _ in CLASSIC])
+def test_classic_clause_semantics(query, expected):
+    ann = lucene_annotator([{"text": query, "id": "q"}])
+    assert {doc: bool(ann(doc)) for doc in expected} == expected
+
+
+def test_regexps_compiled_once(monkeypatch):
+    """Regexps and wildcards are compiled at parse time, never per
+    document."""
+    from beagle_spark import lucene_query
+
+    ann = lucene_annotator([{"text": f"w{i}x*", "id": str(i)} for i in range(50)]
+                           + [{"text": "/ze.*/ OR c?t", "id": "r"}])
+    calls = []
+    compile_ = lucene_query.re.compile
+    monkeypatch.setattr(lucene_query.re, "compile", lambda *a, **k: calls.append(a) or compile_(*a, **k))
+    assert [m["dict_entry_id"] for m in ann("a zebra and w7xyz")] == ["7", "r"]
+    assert not ann("nothing here")
+    assert calls == []
 
 
 def test_lucene_annotate_df_matches_local(spark, sf_dir):
