@@ -14,19 +14,23 @@ Mirrors the reference's analyzer construction and config cascade
   (text_analysis.clj:73-80); lowercase is :func:`lower`, per code
   point as Lucene's LowerCaseFilter.
 
-`analyze` returns one flat `Tokens(texts, begins, ends)`: the filtered
-token strings and their ORIGINAL char offsets as parallel lists (a
-filter rewrites `texts` and drops emptied tokens from all three).
+`analyze_batch` analyzes a whole `TextBatch` under one config: one
+`tokenizers.scan` of the batch, then each filter runs once per distinct
+token of the batch (a token the filters empty is dropped), and no cache
+outlives the batch. It returns a `Scan`: per token its row, ORIGINAL
+char offsets and code into the filtered batch vocabulary. `analyze` is
+its one-row case and returns one flat `Tokens(texts, begins, ends)`.
 """
 
 from __future__ import annotations
 
 import unicodedata
 from dataclasses import asdict, dataclass
-from functools import lru_cache
+
+import numpy as np
 
 from .stem import get_stemmer
-from .tokenizers import Token, Tokens, get_tokenizer, lower, tokenize_classic_typed
+from .tokenizers import Scan, TextBatch, Token, Tokens, lower, scan, tokenize_classic_typed
 
 __all__ = [
     "AnalysisConfig",
@@ -36,6 +40,10 @@ __all__ = [
     "merge_config",
     "field_name",
     "analyze",
+    "analyze_batch",
+    "normalize",
+    "Scan",
+    "TextBatch",
     "text_to_token_strings",
     "ascii_fold",
     "lower",
@@ -115,10 +123,11 @@ def _classic_filtered_tokenize(text: str) -> Tokens:
     return out
 
 
-@lru_cache(maxsize=64)
-def _chain(conf: AnalysisConfig):
-    """Build the token-transform chain once per config (reference memoizes
-    analyzers, text_analysis.clj:98-99).
+def analyze_batch(batch: TextBatch, conf: AnalysisConfig, rows=None, scans=None) -> Scan:
+    """Tokenize + filter the ``rows`` of ``batch`` (a row mask; None:
+    every valid row), preserving original char offsets. ``scans``, a
+    dict the caller keeps for one batch, shares one scan among the
+    configs that differ only in their fold and stem filters.
 
     ClassicFilter parity (text_analysis.clj:77-81): the reference wraps
     the chain in ClassicFilter only when stem? is false AND the chain is
@@ -127,42 +136,45 @@ def _chain(conf: AnalysisConfig):
     ACRONYM/APOSTROPHE token types, which only ClassicTokenizer emits —
     for the standard tokenizer it is a no-op (StandardTokenizer emits
     <ALPHANUM>/<NUM>), so "John's" stays one unstripped token under the
-    DEFAULT config, and strips to "John" under tokenizer=classic."""
+    DEFAULT config, and strips to "John" under tokenizer=classic. The
+    LowerCaseFilter is fused into the scan."""
     if (
         conf.tokenizer == "classic"
         and not conf.stem
         and conf.case_sensitive
         and not conf.ascii_fold
     ):
-        return _classic_filtered_tokenize
-    # the optional LowerCaseFilter is fused into the tokenizer (see
-    # get_tokenizer); the common annotate configs need nothing more
-    tokenize = get_tokenizer(conf.tokenizer, lower=not conf.case_sensitive)
-    stem_fn = get_stemmer(conf.stemmer) if conf.stem else None
-    fold = conf.ascii_fold
-    if not fold and stem_fn is None:
-        return tokenize
-
-    def run(text: str) -> Tokens:
-        toks = tokenize(text)
-        out = Tokens([], [], [])
-        for s, b, e in zip(toks.texts, toks.begins, toks.ends):
-            if fold:
-                s = ascii_fold(s)
-            if stem_fn is not None:
-                s = stem_fn(s)
-            if s:
-                out.texts.append(s)
-                out.begins.append(b)
-                out.ends.append(e)
+        return scan(batch, "classic", rows=rows, row_fn=_classic_filtered_tokenize)
+    key = (conf.tokenizer, conf.case_sensitive)
+    out = scans.get(key) if scans is not None else None
+    if out is None:
+        out = scan(batch, conf.tokenizer, not conf.case_sensitive, rows)
+        if scans is not None:
+            scans[key] = out
+    if not conf.ascii_fold and not conf.stem:
         return out
-
-    return run
+    vocab = out.vocab
+    if conf.ascii_fold:
+        vocab = [ascii_fold(t) for t in vocab]
+    if conf.stem:
+        vocab = list(map(get_stemmer(conf.stemmer), vocab))
+    out = Scan(out.row, out.begin, out.end, out.code, vocab)
+    emptied = [i for i, t in enumerate(vocab) if not t]
+    return out.take(~np.isin(out.code, emptied)) if emptied else out
 
 
 def analyze(text: str, conf: AnalysisConfig) -> Tokens:
-    """Tokenize + filter, preserving original char offsets."""
-    return _chain(conf)(text)
+    """Tokenize + filter one text: the one-row case of `analyze_batch`."""
+    return analyze_batch(TextBatch.from_text(text), conf).tokens()
+
+
+def normalize(term: str, conf: AnalysisConfig) -> str:
+    """A multi-term query's term as Lucene's `Analyzer.normalize` gives
+    it: lowercased (per code point, `lower`) unless case-sensitive and
+    ascii-folded when folding; never split, never stemmed."""
+    if not conf.case_sensitive:
+        term = lower(term)
+    return ascii_fold(term) if conf.ascii_fold else term
 
 
 def text_to_token_strings(text: str, conf: AnalysisConfig) -> list[str]:

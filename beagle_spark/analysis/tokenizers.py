@@ -1,32 +1,46 @@
 """Offset-preserving tokenizers.
 
 Mirrors the reference's 7 tokenizers (reference:
-src/beagle/text_analysis.clj:51-63) as compiled regexes. A tokenizer
-returns one flat `Tokens(texts, begins, ends)`: the token strings and
-their char offsets into the original string as three parallel lists —
-offsets are required because annotations carry char spans
-(schema.clj:36-37), but the matcher reads them only for the positions
-it emits. Each regex tokenizer builds the three lists from one
-`split` with a capturing group (gaps and tokens alternate) plus a
-running sum of the piece lengths; no per-token object is built.
+src/beagle/text_analysis.clj:51-63) as compiled regexes (the `regex`
+module, for proper Unicode classes). `standard`/`classic` approximate
+Lucene's UAX#29 StandardTokenizer: word = letter run (with internal
+apostrophes kept by `classic` style possessive handling downstream),
+number = digit run with internal ./, separators. Validated against the
+HTML corner-case corpus (see tests/test_corner_cases.py).
 
-Implemented with the `regex` module for proper Unicode classes, and a
-stdlib-`re` twin for pure-ASCII input where the grammar allows it.
-`standard`/`classic` approximate Lucene's UAX#29 StandardTokenizer:
-word = letter run (with internal apostrophes kept by `classic` style
-possessive handling downstream), number = digit run with internal
-./, separators. Validated against the HTML corner-case corpus (see
-tests/test_corner_cases.py).
+A whole column is tokenized at once (`scan` over a `TextBatch`):
+
+- the ASCII rows of `standard`, `letter`, `whitespace`,
+  `unicode-whitespace` and `strict` are scanned as bytes over the
+  column's one data buffer: a 256-entry class table, derived by testing
+  the tokenizer's full pattern on every ASCII character
+  (`_byte_classes`), marks the token bytes (`bytes.translate`);
+  `standard`'s `'`/`.`/`,` joiners become token bytes by their
+  neighbours' classes; token runs and joiners stop at row ends; the
+  LowerCaseFilter is `bytes.lower`;
+- every other row (non-ASCII text, and the `keyword` and `classic`
+  tokenizers) takes one regex `split` of the full pattern with a
+  capturing group (gaps and tokens alternate) plus a running sum of the
+  piece lengths, and its tokens join the batch's in row order;
+- the batch's token strings are dictionary-encoded once, so later
+  filters run once per distinct token.
+
+The result is a `Scan`: per token its row, its char offsets in that row
+(annotations carry char spans, schema.clj:36-37) and its code into the
+batch vocabulary. `get_tokenizer(name)(text)` is the one-row case and
+returns one flat `Tokens(texts, begins, ends)`.
 """
 
 from __future__ import annotations
 
-import re as sre
 from dataclasses import dataclass
 from functools import lru_cache
 from itertools import accumulate
 from typing import NamedTuple
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import regex as re
 
 
@@ -153,21 +167,13 @@ _PATTERNS = {
     "keyword": _KEYWORD,
 }
 
-# ASCII-restricted twin of _STANDARD, compiled with the stdlib `re`
-# engine (~2.4x faster than the regex-module UAX#29 pattern on this
-# corpus). For pure-ASCII input the keycap / regional-indicator /
-# emoji / CJK branches of _STANDARD are unreachable (every char they
-# can match is non-ASCII, incl. the '’' joiner), so the full grammar
-# collapses to the alnum run + ASCII join rules below. Equivalence is
-# pinned by tests/test_analysis.py::test_ascii_fastpath_equivalence.
-_ASCII_STANDARD = sre.compile(
-    r"[0-9A-Za-z]+"
-    r"(?:(?:(?<=[A-Za-z])['.](?=[A-Za-z])|(?<=[0-9])[.,](?=[0-9]))[0-9A-Za-z]+)*"
-)
-# Same idea for the letter tokenizer: \p{L}\p{M} runs restricted to
-# ASCII are exactly [A-Za-z] runs.
-_ASCII_LETTER = sre.compile(r"[A-Za-z]+")
-_ASCII_TWINS = {"standard": _ASCII_STANDARD, "letter": _ASCII_LETTER}
+
+# the tokenizers whose ASCII rows are scanned as bytes (`_byte_classes`);
+# `keyword` and `classic` rows always take the per-row regex split
+_BYTE_SCANNED = frozenset({"standard", "letter", "whitespace", "unicode-whitespace", "strict"})
+
+# the bytes `str.isspace` accepts (what `text.strip()` removes)
+_SPACE_BYTES = np.array([chr(c).isspace() for c in range(256)]) & (np.arange(256) < 128)
 
 
 def _flat(pieces: list) -> Tokens:
@@ -182,8 +188,7 @@ def _splitter(pattern):
     """`split` of ``pattern`` wrapped in one capturing group. Every
     pattern here matches only non-empty text, so the split finds
     exactly the matches `finditer` finds."""
-    engine = sre if isinstance(pattern, sre.Pattern) else re
-    return engine.compile(f"({pattern.pattern})", pattern.flags).split
+    return re.compile(f"({pattern.pattern})", pattern.flags).split
 
 
 def tokenize_classic_typed(text: str) -> list[tuple[Token, str]]:
@@ -208,21 +213,243 @@ def lower(s: str) -> str:
     return s.translate(_LOWER_FIXUPS).lower()
 
 
-def _make_scanner(pattern, ascii_twin, lowercase: bool):
-    """Build fn(text) -> Tokens. Pure-ASCII input goes to the faster
-    stdlib-re twin when there is one. ``lowercase`` fuses the
-    LowerCaseFilter: ASCII text is lowered whole before the split
-    (ASCII lowering keeps every character class); other text is split
-    as is and each token lowered, because lowering before the split is
-    not case-invariant there ('Ⓜ' is a pictograph the standard split
-    keeps, 'ⓜ' is not; the strict split drops the Kelvin sign and 'İ'
-    but keeps their lowercase forms)."""
-    split = _splitter(pattern)
-    ascii_split = _splitter(ascii_twin) if ascii_twin is not None else split
+@lru_cache(maxsize=None)
+def _byte_classes(name: str) -> tuple:
+    """The byte scan of an ASCII row under tokenizer ``name``, derived
+    by testing its full pattern on every ASCII character:
+
+    - ``token``: byte b alone is a token (its runs are the tokens), as
+      a `bytes.translate` table of 0/1;
+    - ``joiner``: the same table of every joiner byte, None if none;
+    - ``joins``: ``(side, joiner)`` pairs of 256-entry bool arrays. A
+      joiner byte between two ``side`` bytes of the same row is a token
+      byte: character x belongs to the side of the joiners j for which
+      ``x j x`` is one token (standard's `'`/`.` between letters and
+      `.`/`,` between digits; the other four have none).
+
+    Lowercasing an ASCII character keeps its class, so the scan runs on
+    the original bytes and lowers only the token bytes."""
+    pattern = _PATTERNS[name]
+    chars = [chr(c) for c in range(128)]
+    token = np.zeros(256, dtype=bool)
+    token[:128] = [pattern.fullmatch(c) is not None for c in chars]
+    gaps = [j for j in range(128) if not token[j]]
+    sides: dict[frozenset, list[int]] = {}
+    for x in np.flatnonzero(token).tolist():
+        js = frozenset(j for j in gaps if pattern.fullmatch(chars[x] + chars[j] + chars[x]))
+        if js:
+            sides.setdefault(js, []).append(x)
+    joins = []
+    for js, xs in sides.items():
+        side = np.zeros(256, dtype=bool)
+        side[xs] = True
+        joiner = np.zeros(256, dtype=bool)
+        joiner[list(js)] = True
+        joins.append((side, joiner))
+    if not joins:
+        return token.tobytes(), None, ()
+    return token.tobytes(), np.logical_or.reduce([j for _, j in joins]).tobytes(), tuple(joins)
+
+
+# read-only one-row flags, shared by every one-row batch
+_ONE = {b: np.full(1, b) for b in (False, True)}
+for _flag in _ONE.values():
+    _flag.flags.writeable = False
+
+
+class TextBatch:
+    """A column of texts read once: the UTF-8 data as one `bytes` (and
+    a ``uint8`` view of it), the row byte offsets into it, which rows
+    are valid (not null), pure ASCII or blank; a row's `str` is decoded
+    only when asked for. Built from an Arrow string array (`from_arrow`,
+    one copy of the data buffer), from Python strings (`from_strings`)
+    or from one text (`from_text`)."""
+
+    __slots__ = ("n", "raw", "data", "offsets", "valid", "_ascii", "_blank", "_strings")
+
+    def __init__(self, raw: bytes, offsets: np.ndarray, valid: np.ndarray, strings,
+                 ascii=None, blank=None):
+        self.n = len(offsets) - 1
+        self.raw = raw  # the data as `bytes`, for `bytes.translate` / `lower`
+        self.data = np.frombuffer(raw, dtype=np.uint8)
+        self.offsets = offsets
+        self.valid = valid
+        self._ascii = ascii
+        self._blank = blank
+        self._strings = strings
+
+    @classmethod
+    def from_arrow(cls, arr) -> "TextBatch":
+        if isinstance(arr, pa.ChunkedArray):
+            arr = arr.combine_chunks()
+        n = len(arr)
+        validity, offs_buf, data_buf = arr.buffers()
+        width = 8 if pa.types.is_large_string(arr.type) else 4
+        offs = np.frombuffer(offs_buf, np.int64 if width == 8 else np.int32, n + 1,
+                             arr.offset * width).astype(np.int64)
+        lo, hi = int(offs[0]), int(offs[-1])
+        raw = data_buf.slice(lo, hi - lo).to_pybytes() if hi > lo else b""
+        if arr.null_count:
+            bits = np.unpackbits(np.frombuffer(validity, np.uint8), bitorder="little")
+            valid = bits[arr.offset : arr.offset + n].astype(bool)
+        else:
+            valid = np.ones(n, dtype=bool)
+        return cls(raw, offs - lo, valid, arr)
+
+    @classmethod
+    def from_strings(cls, texts) -> "TextBatch":
+        texts = list(texts)
+        enc = [b"" if t is None else t.encode("utf-8", "surrogatepass") for t in texts]
+        offs = np.zeros(len(enc) + 1, dtype=np.int64)
+        np.cumsum(list(map(len, enc)), out=offs[1:])
+        valid = np.array([t is not None for t in texts], dtype=bool)
+        return cls(b"".join(enc), offs, valid, texts)
+
+    @classmethod
+    def from_text(cls, text: str) -> "TextBatch":
+        """A one-row batch. A lone surrogate, which no Arrow string holds
+        but a Python `str` may, is kept (such a row is not ASCII, so it
+        takes the per-row scan)."""
+        data = text.encode("utf-8", "surrogatepass")
+        return cls(data, np.array([0, len(data)]), _ONE[True], [text], _ONE[text.isascii()],
+                   _ONE[not text.strip()])
+
+    @property
+    def ascii(self) -> np.ndarray:
+        """Per row: every byte is ASCII."""
+        if self._ascii is None:
+            self._ascii = np.ones(self.n, dtype=bool)
+            if not self.raw.isascii():
+                high = np.flatnonzero(self.data >= 0x80)
+                self._ascii[np.searchsorted(self.offsets, high, "right") - 1] = False
+        return self._ascii
+
+    def strings(self) -> list:
+        """Every row as a `str` (None for a null row)."""
+        if not isinstance(self._strings, list):
+            self._strings = self._strings.to_pylist()
+        return self._strings
+
+    @property
+    def blank(self) -> np.ndarray:
+        """Per row: null, or `text.strip()` is empty. Only rows that
+        start with a space or a non-ASCII byte are decoded to check."""
+        if self._blank is None:
+            offs, data = self.offsets, self.data
+            out = ~self.valid | (offs[1:] == offs[:-1])
+            if len(data):
+                first = data[np.minimum(offs[:-1], len(data) - 1)]
+                check = ~out & (_SPACE_BYTES[first] | (first >= 0x80))
+                if check.any():
+                    strings = self.strings()
+                    for r in np.flatnonzero(check).tolist():
+                        out[r] = not strings[r].strip()
+            self._blank = out
+        return self._blank
+
+
+@dataclass(slots=True)
+class Scan:
+    """A batch's tokens, row-major: per token its ``row``, its char
+    offsets in that row (``begin``, ``end``) and its ``code`` into the
+    batch vocabulary ``vocab`` (distinct token strings)."""
+
+    row: np.ndarray
+    begin: np.ndarray
+    end: np.ndarray
+    code: np.ndarray
+    vocab: list
+
+    def take(self, keep: np.ndarray) -> "Scan":
+        return Scan(self.row[keep], self.begin[keep], self.end[keep], self.code[keep], self.vocab)
+
+    def tokens(self, lo: int = 0, hi: int | None = None) -> Tokens:
+        """Tokens ``lo:hi`` as one flat `Tokens`."""
+        vocab = self.vocab
+        return Tokens([vocab[c] for c in self.code[lo:hi].tolist()],
+                      self.begin[lo:hi].tolist(), self.end[lo:hi].tolist())
+
+    def per_row(self, n_rows: int) -> list[Tokens]:
+        """One `Tokens` per row of an ``n_rows``-row batch."""
+        texts = [self.vocab[c] for c in self.code.tolist()]
+        begins, ends = self.begin.tolist(), self.end.tolist()
+        cuts = np.searchsorted(self.row, np.arange(n_rows + 1)).tolist()
+        return [Tokens(texts[a:b], begins[a:b], ends[a:b]) for a, b in zip(cuts, cuts[1:])]
+
+
+def _byte_scan(batch: TextBatch, name: str, lowercase: bool, rows):
+    """Token (row, begin, end) arrays and token strings (an Arrow
+    large-string array) of the ``rows`` (None: all) of ``batch``, all ASCII, under
+    ``name``'s byte classes. A token or joiner never reaches across two
+    rows."""
+    token, joiner, joins = _byte_classes(name)
+    raw, data, offs, n = batch.raw, batch.data, batch.offsets, batch.n
+    size = len(data)
+    t = np.frombuffer(bytearray(raw).translate(token), dtype=bool)
+    if joiner is not None:
+        jp = np.frombuffer(raw.translate(joiner), dtype=bool).nonzero()[0]
+        if len(jp):
+            jp = jp[(jp > 0) & (jp < size - 1)]
+            if n > 1:  # a joiner at a row's edge has no neighbour
+                edge = np.zeros(size + 1, dtype=bool)
+                edge[offs] = True
+                jp = jp[~edge[jp] & ~edge[jp + 1]]
+            left, right, here = data[jp - 1], data[jp + 1], data[jp]
+            for side, joins_here in joins:
+                t[jp[side[left] & side[right] & joins_here[here]]] = True
+    if rows is not None:
+        t &= np.repeat(rows, np.diff(offs))
+    padded = np.zeros(size + 2, dtype=bool)
+    padded[1:-1] = t
+    bounds = (padded[1:] != padded[:-1]).nonzero()[0]
+    begins, ends = bounds[::2], bounds[1::2]
+    if n > 1:
+        # split each run that goes on across a row start (empty rows
+        # repeat an offset)
+        inner = np.unique(offs[1:-1])
+        inner = inner[(inner > 0) & (inner < size)]
+        cut = inner[t[inner - 1] & t[inner]]
+        if len(cut):
+            begins = np.insert(begins, np.searchsorted(begins, cut), cut)
+            ends = np.insert(ends, np.searchsorted(ends, cut), cut)
+        row = np.repeat(np.arange(n), np.diff(np.searchsorted(begins, offs)))
+        base = offs[row]
+        begins_in_row, ends_in_row = begins - base, ends - base
+    else:
+        row = np.zeros(len(begins), dtype=np.int64)
+        begins_in_row, ends_in_row = begins, ends
+    body = (np.frombuffer(raw.lower(), dtype=np.uint8) if lowercase else data)[t]
+    toffs = np.zeros(len(begins) + 1, dtype=np.int64)
+    np.cumsum(ends - begins, out=toffs[1:])
+    strs = pa.LargeStringArray.from_buffers(len(begins), pa.py_buffer(toffs), pa.py_buffer(body))
+    return row, begins_in_row, ends_in_row, strs
+
+
+def _ascii_strings(arr) -> list[str]:
+    """The values of an Arrow large-string array of ASCII text, read
+    from its buffers (cheaper than `to_pylist` for short strings)."""
+    _, offs_buf, data_buf = arr.buffers()
+    offs = np.frombuffer(offs_buf, np.int64, len(arr) + 1, arr.offset * 8).tolist()
+    text = data_buf.to_pybytes().decode("ascii") if data_buf is not None else ""
+    return [text[a:b] for a, b in zip(offs, offs[1:])]
+
+
+@lru_cache(maxsize=64)
+def _row_scanner(name: str, lowercase: bool):
+    """fn(text) -> Tokens by one regex split of the full pattern: the
+    per-row scan of non-ASCII rows and of the `keyword` and `classic`
+    tokenizers. ``lowercase`` fuses the LowerCaseFilter: ASCII text is
+    lowered whole before the split (ASCII lowering keeps every
+    character class); other text is split as is and each token lowered,
+    because lowering before the split is not case-invariant there ('Ⓜ'
+    is a pictograph the standard split keeps, 'ⓜ' is not; the strict
+    split drops the Kelvin sign and 'İ' but keeps their lowercase
+    forms)."""
+    split = _splitter(_PATTERNS[name])
 
     def scan(text: str) -> Tokens:
         if text.isascii():
-            return _flat(ascii_split(text.lower() if lowercase else text))
+            return _flat(split(text.lower() if lowercase else text))
         toks = _flat(split(text))
         if lowercase:
             toks.texts = [lower(t) for t in toks.texts]
@@ -232,14 +459,61 @@ def _make_scanner(pattern, ascii_twin, lowercase: bool):
 
 
 @lru_cache(maxsize=64)
+def _resolve(name: str) -> str:
+    """Unknown name -> standard (reference: text_analysis.clj:62-63 logs
+    at debug and defaults)."""
+    name = (name or "standard").lstrip(":").lower()
+    return name if name in _PATTERNS else "standard"
+
+
+def scan(batch: TextBatch, name: str, lowercase: bool = False, rows=None, row_fn=None) -> Scan:
+    """Tokenize the ``rows`` of ``batch`` (a row mask; None: every valid
+    row) under tokenizer ``name``. ASCII rows of the byte-scanned
+    tokenizers are scanned as bytes in one pass; every other row takes
+    ``row_fn`` (by default the regex split, `_row_scanner`) and its
+    tokens are merged in row order. The token strings are
+    dictionary-encoded once per batch."""
+    name = _resolve(name)
+    rest = batch.valid if rows is None else rows
+    if row_fn is None and name in _BYTE_SCANNED:
+        by_bytes = rest & batch.ascii
+        rest = rest ^ by_bytes
+        every = np.count_nonzero(by_bytes) == batch.n
+        row, begin, end, strs = _byte_scan(batch, name, lowercase, None if every else by_bytes)
+        enc = pc.dictionary_encode(strs)
+        code = np.frombuffer(enc.indices.buffers()[1], np.int32, len(strs))
+        vocab = _ascii_strings(enc.dictionary)
+    else:
+        row = begin = end = code = np.empty(0, dtype=np.int64)
+        vocab = []
+    if not np.count_nonzero(rest):
+        return Scan(row, begin, end, code, vocab)
+    row_fn = row_fn or _row_scanner(name, lowercase)
+    ids = {s: i for i, s in enumerate(vocab)}
+    strings = batch.strings()
+    r_row, r_begin, r_end, r_code = [], [], [], []
+    for r in rest.nonzero()[0].tolist():
+        toks = row_fn(strings[r])
+        r_row += [r] * len(toks)
+        r_begin += toks.begins
+        r_end += toks.ends
+        r_code += [ids.setdefault(s, len(ids)) for s in toks.texts]
+    order = np.argsort(np.concatenate([row, r_row]), kind="stable")
+    return Scan(
+        np.concatenate([row, r_row]).astype(np.int64)[order],
+        np.concatenate([begin, r_begin]).astype(np.int64)[order],
+        np.concatenate([end, r_end]).astype(np.int64)[order],
+        np.concatenate([code, r_code]).astype(np.int64)[order],
+        list(ids),
+    )
+
+
+@lru_cache(maxsize=64)
 def get_tokenizer(name: str, lower: bool = False):
-    """Return fn(text) -> Tokens. Unknown name -> standard
-    (reference: text_analysis.clj:62-63 logs at debug and defaults).
+    """Return fn(text) -> Tokens, the one-row case of `scan`. Unknown
+    name -> standard.
 
     ``lower=True`` fuses the LowerCaseFilter into the scan (identical
     output to lowering each token afterwards — per-char lowercase never
     empties a token, and offsets are taken from the original text)."""
-    name = (name or "standard").lstrip(":").lower()
-    pattern = _PATTERNS.get(name, _STANDARD)
-    twin = _ASCII_TWINS.get(name if name in _PATTERNS else "standard")
-    return _make_scanner(pattern, twin, lower)
+    return lambda text: scan(TextBatch.from_text(text), name, lower).tokens()

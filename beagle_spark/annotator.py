@@ -5,16 +5,19 @@ Two surfaces:
 1. `highlighter(dictionary, opts)` — driver/local callable with the
    reference's calling convention (reference:
    src/beagle/phrases.clj:236-273): compile once, then
-   `fn(text) -> [annotation dict]`. Used to port the reference's test
-   suite verbatim and as the per-row core of the Spark operator.
+   `fn(text) -> [annotation dict]`, the one-row case of the Spark
+   operator's batch function. Used to port the reference's test suite
+   verbatim.
 
 2. `Annotator` / `annotate_df(df, text_col, ...)` — the Spark-native
    operator (no reference equivalent; the whole point of this engine).
    The compiled dictionary is broadcast once; matching runs as an
-   iterator `arrow_udf` that turns each `pa.Array` batch of texts into
-   the `array<struct>` annotations column with one `pa.array` call.
-   Stateless per row => identical on batch and streaming DataFrames,
-   embarrassingly parallel, no shuffle (SURVEY.md section 3.4).
+   iterator `arrow_udf` whose batch function is `matcher.match_batch`:
+   each `pa.Array` batch of texts is scanned, probed and emitted as
+   arrays, and the `array<struct>` annotations column is built from
+   buffers (`highlighter` runs the same path on one row). Stateless per
+   row => identical on batch and streaming DataFrames, embarrassingly
+   parallel, no shuffle (SURVEY.md section 3.4).
 
 Scale notes (100 TB design):
 - dictionary compile is driver-only; executors receive the compiled,
@@ -36,15 +39,15 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .dictionary.optimizer import optimize
 from .dictionary.validator import validate_dictionary
-from .kernel import arrow_kernel, per_value
-from .matcher import CompiledDictionary, compile_dictionary, match_text
+from .kernel import arrow_kernel
+from .matcher import CompiledDictionary, compile_dictionary, match_batch, match_text
 from .schema import ANNOTATIONS_TYPE, norm_keys
 
 __all__ = ["highlighter", "Annotator", "annotate_df"]
@@ -84,8 +87,9 @@ def highlighter(dictionary, opts: dict | None = None):
 annotator = highlighter
 
 
-def _text_matcher(cd: CompiledDictionary) -> Callable:
-    return lambda text: match_text(text, cd)
+def _batch_matcher(cd: CompiledDictionary):
+    """The annotate kernel's batch function: texts -> annotations column."""
+    return lambda texts: match_batch(texts, cd)
 
 
 class Annotator:
@@ -108,11 +112,12 @@ class Annotator:
 
     def udf(self, spark: SparkSession):
         """Arrow UDF: string column -> array<struct> of annotations, a
-        per-value `kernel.arrow_kernel` over `match_text`. The broadcast
-        is read once per partition, not once per batch. Null and blank
-        text give `[]`, never null."""
+        `kernel.arrow_kernel` that calls `match_batch` once per Arrow
+        batch and passes its column through. The broadcast is read once
+        per partition, not once per batch. Null and blank text give
+        `[]`, never null."""
         bc = self._broadcast(spark)
-        return arrow_kernel(lambda: per_value(_text_matcher(bc.value)), ANNOTATIONS_TYPE)
+        return arrow_kernel(lambda: _batch_matcher(bc.value), ANNOTATIONS_TYPE)
 
     def annotate_df(
         self,

@@ -17,28 +17,36 @@ from pyspark.sql.types import DataType
 
 def _apply(batches: Iterator, fn: Callable, arrow_type: pa.DataType) -> Iterator[pa.Array]:
     """Run `fn(*columns)` on every non-empty batch (one `pa.Array`, or a
-    tuple of them for a multi-column kernel) and build each result with
-    one `pa.array` of exactly `arrow_type`; an empty batch gives an
+    tuple of them for a multi-column kernel). A result that is already a
+    `pa.Array` of exactly `arrow_type` passes through; any other result
+    is built with one `pa.array` of `arrow_type`. An empty batch gives an
     empty array without calling `fn`. A NaN result is NULL, as Spark's
     pandas-to-Arrow conversion makes it: a zero-norm cosine (0/0) is
-    NULL, so it passes no `>=` threshold and sorts last under `desc`."""
+    NULL, so it passes no `>=` threshold and sorts last under `desc`.
+
+    pyarrow 16 imports pandas on the first `pa.array` call of a process
+    (even an empty one); a kernel whose `fn` returns ready arrays, and
+    its empty batches (`pa.nulls`), never do."""
     for batch in batches:
         cols = batch if isinstance(batch, tuple) else (batch,)
-        yield pa.array(fn(*cols) if len(cols[0]) else [], type=arrow_type, from_pandas=True)
-
-
-def per_value(fn: Callable) -> Callable:
-    """Batch function applying `fn` to every value of one column."""
-    return lambda arr: [fn(v) for v in arr.to_pylist()]
+        if not len(cols[0]):
+            yield pa.nulls(0, type=arrow_type)
+            continue
+        out = fn(*cols)
+        if isinstance(out, pa.Array) and out.type == arrow_type:
+            yield out
+        else:
+            yield pa.array(out, type=arrow_type, from_pandas=True)
 
 
 def arrow_kernel(factory: Callable[[], Callable], return_type: DataType):
     """Column kernel: an iterator `arrow_udf` of `return_type`, applied
     to one or more columns. `factory()` runs once per partition and
-    returns the batch function `fn(*arrays) -> values` (a list or a
-    NumPy array, one value per row); per-partition state such as a
-    broadcast read or a token cache lives in its closure, and a
-    kernel with none passes ``lambda: fn``.
+    returns the batch function `fn(*arrays) -> values`: a list or a
+    NumPy array, one value per row, or a ready `pa.Array` of exactly the
+    kernel's Arrow type, which `_apply` passes through; per-partition
+    state such as a broadcast read or a token cache lives in its
+    closure, and a kernel with none passes ``lambda: fn``.
 
     Marked NON-DETERMINISTIC. Every kernel is pure, but the mark stops
     the optimizer pushing a filter on the kernel's output below the

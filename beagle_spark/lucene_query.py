@@ -15,8 +15,11 @@ unless it is must_not, and `OR` changes nothing. A term or phrase that
 analyzes to no tokens is dropped, and a level with no must and no
 should clause (a pure negative) matches nothing, as a Lucene
 BooleanQuery does. A bare term of several tokens is their disjunction
-(`foo-bar` is `foo OR bar`); a fuzzy term or range endpoint keeps its
-first token; a `field:` prefix is read and dropped; boosts are dropped.
+(`foo-bar` is `foo OR bar`); a multi-term query's term (fuzzy term,
+range endpoint, wildcard, regexp) is normalized as Lucene's
+`Analyzer.normalize` does (`analysis.normalize`: lowercased unless
+case-sensitive and folded when folding, never split or stemmed); a
+`field:` prefix is read and dropped; boosts are dropped.
 
 Engine design: the annotator keeps only what is Lucene-specific, the
 query language and the boolean layer; every leaf decision the phrase
@@ -47,7 +50,7 @@ from typing import Optional
 
 import regex as re
 
-from .analysis import analyze
+from .analysis import TextBatch, analyze, analyze_batch, normalize
 from .matcher.compile import _conf_for, _entries
 from .matcher.core import CompiledQuery, build_token_index, find_matches
 from .schema import QUERY_MATCHES_TYPE, DictionaryEntry, norm_keys
@@ -136,13 +139,20 @@ def _lex(s: str):
     return out
 
 
-def _wildcard_to_regex(pattern: str) -> str:
+def _wildcard_to_regex(pattern: str, conf) -> str:
     """The regexp of a wildcard term: `*` is `.*`, `?` is `.`, and every
-    other character, escaped ones included, is literal."""
+    other character, escaped ones included, is literal. Each run of
+    unescaped literal characters is normalized (`analysis.normalize`);
+    escaped characters and the wildcards are not (Lucene's
+    `QueryParserBase.analyzeWildcard`)."""
     parts = []
+    run = ""
     i = 0
     while i < len(pattern):
         ch = pattern[i]
+        if ch == "\\" and i + 1 < len(pattern) or ch in "*?":
+            parts.append(re.escape(normalize(run, conf)))
+            run = ""
         if ch == "\\" and i + 1 < len(pattern):  # escaped char is literal
             parts.append(re.escape(pattern[i + 1]))
             i += 2
@@ -152,8 +162,9 @@ def _wildcard_to_regex(pattern: str) -> str:
         elif ch == "?":
             parts.append(".")
         else:
-            parts.append(re.escape(ch))
+            run += ch
         i += 1
+    parts.append(re.escape(normalize(run, conf)))
     return "".join(parts)
 
 
@@ -218,12 +229,6 @@ class _Parser:
             self.next()
         return node
 
-    def _first_token(self, raw):
-        """A fuzzy term's or range endpoint's first analyzed token, else
-        `raw` itself."""
-        analyzed = analyze(raw, self.conf).texts
-        return analyzed[0] if analyzed else raw
-
     def parse_atom(self):
         """One atom, or None when it analyzes to no tokens (Lucene's
         null query, which `addClause` skips)."""
@@ -239,7 +244,7 @@ class _Parser:
                 return CompiledQuery(query_id="", terms=terms, slop=int(pslop) if pslop else 0)
             return TermQ(term=terms[0]) if terms else None
         if kind == "regex":
-            return RegexpQ(pattern=text[1:-1])
+            return RegexpQ(pattern=normalize(text[1:-1], self.conf))
         if kind == "range":
             m = re.fullmatch(
                 r"([\[\{])\s*(\S+)\s+TO\s+(\S+)\s*([\]\}])", text
@@ -248,8 +253,8 @@ class _Parser:
                 raise ParseError(f"malformed range: {text!r}")
             lo_raw, hi_raw = _unescape(m.group(2)), _unescape(m.group(3))
             return RangeQ(
-                lower=None if lo_raw == "*" else self._first_token(lo_raw),
-                upper=None if hi_raw == "*" else self._first_token(hi_raw),
+                lower=None if lo_raw == "*" else normalize(lo_raw, self.conf),
+                upper=None if hi_raw == "*" else normalize(hi_raw, self.conf),
                 incl_lower=m.group(1) == "[",
                 incl_upper=m.group(4) == "]",
             )
@@ -260,9 +265,9 @@ class _Parser:
                 text, n = m.group(1), m.group(2)
                 fuzzy = int(n) if n else 2
             if re.search(r"(?<!\\)[*?]", text):
-                return RegexpQ(pattern=_wildcard_to_regex(text))
+                return RegexpQ(pattern=_wildcard_to_regex(text, self.conf))
             if fuzzy is not None:
-                term = self._first_token(_unescape(text))
+                term = normalize(_unescape(text), self.conf)
                 return CompiledQuery(query_id="", terms=(term,), fuzzy=True, fuzziness=fuzzy)
             # createFieldQuery at default OR: several tokens are a disjunction
             terms = tuple(TermQ(term=t) for t in analyze(_unescape(text), self.conf).texts)
@@ -397,13 +402,25 @@ def compile_lucene_dictionary(dictionary, opts: dict | None = None):
     return list(conf_index), queries
 
 
+def _matches(batch: TextBatch, configs, queries) -> list[list[dict]]:
+    """Per row of ``batch``, a copy of `match` for each query whose AST
+    matches; each config analyzes the batch once (`analyze_batch`), and
+    null and blank rows match nothing."""
+    live = ~batch.blank
+    docs = [analyze_batch(batch, conf, live).per_row(batch.n) for conf in configs]
+    out = []
+    for r in range(batch.n):
+        views = [(d[r], build_token_index(d[r])) for d in docs] if live[r] else None
+        out.append([dict(match) for i, ast, match in queries if eval_query(ast, *views[i])]
+                   if views is not None else [])
+    return out
+
+
 def _make_matcher(configs, queries):
     def annotate(text: str, _opts: dict | None = None) -> list[dict]:
         if text is None or not text.strip():
             return []
-        docs = [(tokens, build_token_index(tokens))
-                for tokens in (analyze(text, conf) for conf in configs)]
-        return [dict(match) for i, ast, match in queries if eval_query(ast, *docs[i])]
+        return _matches(TextBatch.from_text(text), configs, queries)[0]
 
     return annotate
 
@@ -420,14 +437,16 @@ def lucene_annotator(dictionary, opts: dict | None = None):
 def lucene_annotate_df(df, dictionary, text_col: str = "text", opts: dict | None = None,
                        output_col: str = "query_matches"):
     """DataFrame operator: array<struct> of boolean query matches per row.
-    Same broadcast + per-value `kernel.arrow_kernel` as the phrase
-    annotator."""
+    Same broadcast + `kernel.arrow_kernel` as the phrase annotator; each
+    Arrow batch is analyzed once per config."""
     from pyspark.sql import functions as F
 
-    from .kernel import arrow_kernel, per_value
+    from .kernel import arrow_kernel
 
-    # broadcast the picklable (configs, queries) pair; rebuild the
-    # evaluator per executor (closures over module functions don't pickle)
+    # broadcast the picklable (configs, queries) pair; the batch function
+    # analyzes each Arrow batch once per config
     bc = df.sparkSession.sparkContext.broadcast(compile_lucene_dictionary(dictionary, opts))
-    udf = arrow_kernel(lambda: per_value(_make_matcher(*bc.value)), QUERY_MATCHES_TYPE)
+    udf = arrow_kernel(
+        lambda: lambda texts: _matches(TextBatch.from_arrow(texts), *bc.value),
+        QUERY_MATCHES_TYPE)
     return df.withColumn(output_col, udf(F.col(text_col)))

@@ -1,6 +1,7 @@
 from .compile import (
     CompiledDictionary,
     compile_dictionary,
+    match_batch,
     match_text,
     merge_annotations,
     merge_same_type_annotations,
@@ -11,6 +12,7 @@ __all__ = [
     "CompiledDictionary",
     "CompiledQuery",
     "compile_dictionary",
+    "match_batch",
     "match_text",
     "merge_annotations",
     "merge_same_type_annotations",

@@ -21,10 +21,22 @@ from __future__ import annotations
 import logging
 import uuid
 from dataclasses import dataclass, field, replace
+from itertools import chain
 from operator import attrgetter
 
-from ..analysis import DEFAULT_CONF, AnalysisConfig, Tokens, analyze, merge_config
-from ..schema import DictionaryEntry
+import numpy as np
+import pyarrow as pa
+
+from ..analysis import (
+    DEFAULT_CONF,
+    AnalysisConfig,
+    Scan,
+    TextBatch,
+    Tokens,
+    analyze_batch,
+    merge_config,
+)
+from ..schema import ANNOTATION_ARROW_TYPE, DictionaryEntry
 from .core import CompiledQuery, build_token_index, find_matches, normalize_slop
 
 logger = logging.getLogger(__name__)
@@ -35,12 +47,19 @@ class FieldProgram:
     """All queries sharing one analysis config (== one Lucene field,
     monitor.clj:48-59), with two complementary pruning structures:
 
-    - exact_index: per phrase length, a first-term-keyed (nested for
-      n>1) table of slop-0 non-fuzzy phrase queries (the overwhelming
-      majority of real dictionaries). Matching is a direct n-gram
-      window probe over the document — O(doc_tokens x distinct phrase
-      lengths), independent of dictionary size; a position whose token
-      starts no phrase costs a single dict miss. This subsumes Lucene's
+    - a prefix trie over term ids of the slop-0 non-fuzzy phrase
+      queries (the overwhelming majority of real dictionaries).
+      ``trie_keys[0]`` maps a term id to its root node (-1 if no phrase
+      starts with it); level l > 0 is one sorted int64 key array, key =
+      parent node x (n_terms + 1) + term id, ending with a sentinel key
+      that matches nothing, and a node is its key's index in its level.
+      ``trie_emit[l]`` holds the emissions of the phrases that end at
+      level l: None if none do, else the node's one emission id (-1 for
+      none) and, when some node has several, their compressed-row
+      offsets and ids. Matching walks the trie level by level with
+      `np.searchsorted` over a whole batch's token positions (`walk`) —
+      O(tokens x trie depth x log keys); a position whose token starts
+      no phrase drops out at level 0. This subsumes Lucene's
       presearcher for exact phrases (stronger: zero false candidates).
     - postings/required counter prefilter for the general queries
       (slop/ordered), Lucene-Monitor-style; fuzzy queries bypass it
@@ -51,23 +70,31 @@ class FieldProgram:
     queries: list[CompiledQuery] = field(default_factory=list)
     # emits[i]: resolved (entry_id, type, meta) of the kept queries[i]
     emits: list = field(default_factory=list)
-    # {1: {term -> emits}}; {n>1: {first term -> {rest-terms tuple -> emits}}}
-    exact_index: dict = field(default_factory=dict)
-    ngram_lengths: tuple = ()
-    n_exact: int = 0
+    # exact_emits[e]: resolved (entry_id, type, meta) of exact phrase e
+    exact_emits: list = field(default_factory=list)
+    term_ids: dict = field(default_factory=dict)  # exact-phrase term -> id
+    trie_keys: list = field(default_factory=list)
+    trie_emit: list = field(default_factory=list)
     general: list = field(default_factory=list)  # query idxs needing verify
     postings: dict = field(default_factory=dict)
     required: list = field(default_factory=list)
     always: list = field(default_factory=list)
+    # global id of this program's first emission: exact phrases first,
+    # then the general queries (set by `compile_dictionary`)
+    eid_base: int = 0
+
+    @property
+    def n_exact(self) -> int:
+        return len(self.exact_emits)
 
     def finalize(self, type_name: str = "PHRASE"):
-        """Split queries into the lean exact-phrase table and the
-        general verification list.
+        """Split queries into the exact-phrase trie and the general
+        verification list.
 
         Exact-phrase queries (slop 0, non-fuzzy, non-ordered — the bulk
         of real dictionaries) are compiled DOWN to emission tuples
-        (resolved_entry_id, resolved_type, meta) keyed by their joined
-        terms, and their CompiledQuery objects are dropped entirely: at
+        (resolved_entry_id, resolved_type, meta) reached through the
+        trie, and their CompiledQuery objects are dropped entirely: at
         80k entries this shrinks the per-worker structure several-fold,
         which matters because many worker processes share the CPU cache
         (broadcast size and probe locality, not matching arithmetic, are
@@ -75,40 +102,17 @@ class FieldProgram:
         default-type resolution (phrases.clj:217-226,269) happen here,
         once, instead of per match: for the kept general queries too,
         in `emits`."""
-        exact: dict[int, dict] = {}
+        phrases: list[tuple] = []
         keep: list[CompiledQuery] = []
         for q in self.queries:
             if not q.fuzzy and q.slop == 0 and not q.ordered:
-                # keyed by the TERMS TUPLE, never a joined string: tokens
-                # from the whitespace/keyword tokenizers may themselves
-                # contain any byte (including NUL), so a join/re-split
-                # round-trip is ambiguous (a first term containing NUL
-                # used to be truncated at the separator -> silent probe
-                # miss)
-                exact.setdefault(len(q.terms), {}).setdefault(
-                    tuple(q.terms), []
-                ).append(_emission(q, type_name))
+                phrases.append(q.terms)
+                self.exact_emits.append(_emission(q, type_name))
                 continue
             keep.append(q)
         self.queries = keep
         self.emits = [_emission(q, type_name) for q in keep]
-        # n==1: flat term -> emits. n>1: NESTED first term -> {REST
-        # terms tuple -> emits}: a position whose token isn't the first
-        # term of ANY n-phrase costs ONE dict miss (no window-tuple
-        # allocation, no big-table probe) — on mostly-non-matching
-        # dictionaries that is the overwhelming case; a hit pays a
-        # second lookup keyed by the (n-1)-term rest tuple.
-        self.exact_index = {}
-        for n, table in exact.items():
-            if n == 1:
-                self.exact_index[1] = {k[0]: tuple(v) for k, v in table.items()}
-                continue
-            nested: dict = {}
-            for terms, emits in table.items():
-                nested.setdefault(terms[0], {})[terms[1:]] = tuple(emits)
-            self.exact_index[n] = nested
-        self.ngram_lengths = tuple(sorted(exact))
-        self.n_exact = sum(len(v) for t in exact.values() for v in t.values())
+        self._build_trie(phrases)
 
         self.required = [0] * len(keep)
         post: dict[str, list[int]] = {}
@@ -122,6 +126,101 @@ class FieldProgram:
             for t in distinct:
                 post.setdefault(t, []).append(i)
         self.postings = {t: tuple(v) for t, v in post.items()}
+
+    def _build_trie(self, phrases: list[tuple]) -> None:
+        """The level arrays of the trie over ``phrases`` (exact emission
+        e is phrases[e]); a node's emissions keep query order. Terms are
+        compared as whole strings, so a term may hold any character."""
+        ids = self.term_ids
+        seqs = [[ids.setdefault(t, len(ids)) for t in terms] for terms in phrases]
+        width = len(ids) + 1  # term ids and the no-term id len(ids)
+        lengths = np.array([len(q) for q in seqs], dtype=np.int64)
+        depth = int(lengths.max(initial=0))
+        grid = np.zeros((len(seqs), depth), dtype=np.int64)  # phrase x level -> term id
+        grid[np.arange(depth) < lengths[:, None]] = list(chain.from_iterable(seqs))
+        node = np.zeros(len(seqs), dtype=np.int64)  # each phrase's node at the level built
+        for level in range(depth):
+            live = np.flatnonzero(lengths > level)
+            uniq, node[live] = np.unique(node[live] * width + grid[live, level],
+                                         return_inverse=True)
+            ending = live[lengths[live] == level + 1]  # in query order
+            at = node[ending]
+            count = np.bincount(at, minlength=len(uniq))
+            off = np.zeros(len(uniq) + 1, dtype=np.int64)
+            np.cumsum(count, out=off[1:])
+            emit_ids = ending[np.argsort(at, kind="stable")]
+            one = np.full(len(uniq), -1, dtype=np.int64)
+            one[count == 1] = emit_ids[off[:-1][count == 1]]
+            if level == 0:  # the roots by term id
+                root = np.full(width, -1, dtype=np.int64)
+                root[uniq] = np.arange(len(uniq))
+                self.trie_keys.append(root)
+            else:
+                self.trie_keys.append(np.append(uniq, np.iinfo(np.int64).max))
+            # per level: None when no phrase ends at it, else (the one
+            # emission id per node or -1, and the offsets and ids when
+            # some node has several)
+            self.trie_emit.append(
+                None if not len(ending) else (one, None) if count.max() == 1
+                else (one, (off, emit_ids)))
+
+    def walk(self, tid: np.ndarray, row: np.ndarray) -> tuple:
+        """Exact-phrase hits over a token sequence of term ids (``tid``;
+        ``len(term_ids)`` for a token that is no phrase term) whose
+        tokens belong to rows ``row``: (start position, phrase length,
+        exact emission id) arrays, ordered by phrase length, then
+        position, then query order. A phrase never spans two rows."""
+        found = []
+        if not self.trie_keys:
+            empty = np.empty(0, dtype=np.int64)
+            return empty, empty, empty
+        width = len(self.term_ids) + 1
+        # the term id of the token after each one; a row's first token,
+        # and the end, continue no phrase
+        follow = np.append(tid, width - 1)
+        if len(row) and row[0] != row[-1]:
+            follow[(row[1:] != row[:-1]).nonzero()[0] + 1] = width - 1
+        node = self.trie_keys[0][tid]
+        pos = (node >= 0).nonzero()[0]
+        node = node[pos]
+        for level, keys in enumerate(self.trie_keys):
+            if level:
+                key = node * width + follow[pos + level]
+                node = keys.searchsorted(key)  # keys end with a sentinel
+                hit = (keys[node] == key).nonzero()[0]
+                pos, node = pos[hit], node[hit]
+            if not len(pos):
+                break
+            emit = self.trie_emit[level]
+            if emit is None:
+                continue
+            one, several = emit
+            if several is not None:
+                off, ids = several
+                first = off[node]
+                count = off[node + 1] - first
+                total = int(count.sum())
+                shift = np.repeat(first - (np.cumsum(count) - count), count)
+                found.append((np.repeat(pos, count), np.full(total, level + 1),
+                              ids[shift + np.arange(total)]))
+            else:
+                eid = one[node]
+                ends = (eid >= 0).nonzero()[0]
+                if len(ends):
+                    found.append((pos[ends], np.full(len(ends), level + 1), eid[ends]))
+        if not found:
+            empty = np.empty(0, dtype=np.int64)
+            return empty, empty, empty
+        if len(found) == 1:
+            return found[0]
+        return tuple(np.concatenate(parts) for parts in zip(*found))
+
+    def term_id_array(self, vocab: list) -> np.ndarray:
+        """The term id of each vocabulary string, ``len(term_ids)`` if
+        none."""
+        ids = self.term_ids
+        none = len(ids)
+        return np.array([ids.get(t, none) for t in vocab], dtype=np.int64)
 
     def candidates(self, token_texts) -> list[int]:
         """Counter-prefilter candidates among the general (slop/ordered)
@@ -143,31 +242,32 @@ class FieldProgram:
     # saving is worth for worker cold-start.
 
     def probe_exact(self, tokens: Tokens) -> list:
-        """Direct phrase-table probe: slide an n-gram window per distinct
-        phrase length over the token strings; emit ((entry_id, type,
-        meta), begin_pos, end_pos)."""
-        out = []
-        texts = tokens.texts
-        n_tok = len(texts)
-        tables = self.exact_index
-        for n in self.ngram_lengths:
-            table = tables[n]
-            if n == 1:
-                for pos, txt in enumerate(texts):
-                    emits = table.get(txt)
-                    if emits:
-                        for e in emits:
-                            out.append((e, pos, pos))
-            elif n <= n_tok:
-                get_first = table.get
-                for pos in range(n_tok - n + 1):
-                    sub = get_first(texts[pos])
-                    if sub is None:
-                        continue
-                    emits = sub.get(tuple(texts[pos + 1 : pos + n]))
-                    if emits:
-                        for e in emits:
-                            out.append((e, pos, pos + n - 1))
+        """The trie walk over one document's tokens: ((entry_id, type,
+        meta), begin_pos, end_pos) per exact-phrase hit, in `walk`
+        order."""
+        tid = self.term_id_array(tokens.texts)
+        pos, length, eid = self.walk(tid, np.zeros(len(tid), dtype=np.int64))
+        emits = self.exact_emits
+        return [(emits[e], p, p + n - 1)
+                for p, n, e in zip(pos.tolist(), length.tolist(), eid.tolist())]
+
+    def verify(self, toks: Scan, n_rows: int) -> tuple:
+        """General-query hits of a batch, row by row: the counter
+        prefilter, then `find_matches` for each candidate on the row's
+        `Tokens`. (row, emission id, begin, end) lists, per row in
+        candidate order."""
+        out: tuple = ([], [], [], [])
+        base = self.eid_base + self.n_exact
+        for r, tokens in enumerate(toks.per_row(n_rows)):
+            if not tokens:
+                continue
+            index = build_token_index(tokens)
+            for qi in self.candidates(index.keys()):
+                for b, e in find_matches(tokens, self.queries[qi], index):
+                    out[0].append(r)
+                    out[1].append(base + qi)
+                    out[2].append(b)
+                    out[3].append(e)
         return out
 
 
@@ -184,15 +284,63 @@ def _emission(q: CompiledQuery, type_name: str) -> tuple:
 @dataclass
 class CompiledDictionary:
     """Broadcastable compiled dictionary: one FieldProgram per distinct
-    analysis config + the default annotation type."""
+    analysis config + the default annotation type. ``emissions`` holds
+    every program's emissions by global id (exact phrases, then general
+    queries, per program from its `eid_base`), and ``columns`` the same
+    as the Arrow `type`, `dict_entry_id` and `meta` columns that the
+    batch emit takes rows from."""
 
     fields: list[FieldProgram]
     type_name: str = "PHRASE"
     merge_annotations: bool = False
+    emissions: list = field(default_factory=list)
+    columns: tuple = ()
+
+    def __post_init__(self):
+        if not self.emissions:
+            for prog in self.fields:
+                prog.eid_base = len(self.emissions)
+                self.emissions += prog.exact_emits + prog.emits
+        if not self.columns:
+            self.columns = _emission_columns(self.emissions)
 
     @property
     def n_queries(self) -> int:
         return sum(len(f.queries) + f.n_exact for f in self.fields)
+
+
+def _int_array(values: np.ndarray) -> pa.Array:
+    """An Arrow int32 array over a NumPy buffer (`pa.array` would import
+    pandas on its first call)."""
+    values = np.ascontiguousarray(values, dtype=np.int32)
+    return pa.Array.from_buffers(pa.int32(), len(values), [None, pa.py_buffer(values)])
+
+
+def _string_array(values: list) -> pa.Array:
+    """An Arrow string array of ``values`` (str or None) built from
+    buffers."""
+    enc = [b"" if v is None else str(v).encode() for v in values]
+    offsets = np.zeros(len(enc) + 1, dtype=np.int32)
+    np.cumsum([len(b) for b in enc], out=offsets[1:])
+    nulls = np.array([v is None for v in values], dtype=bool)
+    validity = pa.py_buffer(np.packbits(~nulls, bitorder="little")) if nulls.any() else None
+    return pa.StringArray.from_buffers(len(enc), pa.py_buffer(offsets), pa.py_buffer(b"".join(enc)),
+                                       validity, int(nulls.sum()))
+
+
+def _emission_columns(emissions: list) -> tuple:
+    """(type, dict_entry_id, meta) Arrow columns of ``emissions``."""
+    metas = [e[2] for e in emissions]
+    offsets = np.zeros(len(metas) + 1, dtype=np.int32)
+    np.cumsum([len(m) for m in metas], out=offsets[1:])
+    meta = pa.MapArray.from_arrays(
+        _int_array(offsets),
+        _string_array([k for m in metas for k in m]),
+        _string_array([v for m in metas for v in m.values()]),
+        type=ANNOTATION_ARROW_TYPE.value_type.field("meta").type,
+    )
+    return (_string_array([e[1] for e in emissions]),
+            _string_array([e[0] for e in emissions]), meta)
 
 
 def _entries(dictionary):
@@ -243,10 +391,8 @@ def _compile_entry(
     entry: DictionaryEntry,
     query_id: str,
     defaults: DictionaryEntry,
-    conf_cache: dict,
-) -> tuple[AnalysisConfig, CompiledQuery] | None:
-    conf = _conf_for(entry, defaults, conf_cache)
-    terms = tuple(analyze(entry.text or "", conf).texts)
+    terms: tuple,
+) -> CompiledQuery | None:
     if not terms:
         # 0-token entries, and entries without text, are discarded
         # with a warning (phrases.clj:204)
@@ -274,7 +420,7 @@ def _compile_entry(
         # "_in-order" flag kept in metadata (phrases.clj:192)
         meta["_in-order"] = "true"
 
-    q = CompiledQuery(
+    return CompiledQuery(
         query_id=query_id,
         terms=terms,
         slop=slop,
@@ -284,7 +430,34 @@ def _compile_entry(
         type=entry.type,
         meta=meta,
     )
-    return conf, q
+
+
+def _entry_terms(pending: list) -> list:
+    """The analyzed terms of each pending ``(entry, query id, conf)``,
+    None for an entry whose analysis fails: the entry texts of one
+    config are analyzed as one batch, and one by one if the batch
+    fails, so that only the failing entry is skipped."""
+    by_conf: dict[AnalysisConfig, list[int]] = {}
+    for i, (_, _, conf) in enumerate(pending):
+        by_conf.setdefault(conf, []).append(i)
+    terms: list = [None] * len(pending)
+    for conf, idxs in by_conf.items():
+        texts = [pending[i][0].text or "" for i in idxs]
+        try:
+            toks = analyze_batch(TextBatch.from_strings(texts), conf)
+            words = [toks.vocab[c] for c in toks.code.tolist()]
+            cuts = np.searchsorted(toks.row, np.arange(len(idxs) + 1)).tolist()
+            rows = [words[a:b] for a, b in zip(cuts, cuts[1:])]
+        except Exception:
+            rows = [None] * len(idxs)
+            for j, text in enumerate(texts):
+                try:
+                    rows[j] = analyze_batch(TextBatch.from_text(text), conf).tokens().texts
+                except Exception:
+                    logger.exception("Failed to compile dictionary entry %r", pending[idxs[j]][0])
+        for i, words in zip(idxs, rows):
+            terms[i] = tuple(words) if words is not None else None
+    return terms
 
 
 def compile_dictionary(
@@ -300,8 +473,8 @@ def compile_dictionary(
     after their parent; per-entry compile errors logged and skipped
     (monitor.clj:34-46)."""
     defaults = DictionaryEntry.from_dict(default_conf or {})
-    by_conf: dict[AnalysisConfig, FieldProgram] = {}
     conf_cache: dict = {}
+    pending = []  # (entry, query id, conf)
     for query_id, entry in _entries(dictionary):
         todo = [(entry, query_id)]
         try:
@@ -309,18 +482,28 @@ def compile_dictionary(
         except Exception:
             logger.exception("Failed to expand the synonyms of %r", entry)
         for ent, qid in todo:
-            try:
-                compiled = _compile_entry(ent, qid, defaults, conf_cache)
-            except Exception:  # per-query failure isolation (monitor.clj:41-46)
+            try:  # per-query failure isolation (monitor.clj:41-46)
+                if not isinstance(ent.text or "", str):
+                    raise TypeError(f"entry text is not a string: {ent.text!r}")
+                pending.append((ent, qid, _conf_for(ent, defaults, conf_cache)))
+            except Exception:
                 logger.exception("Failed to compile dictionary entry %r", ent)
-                compiled = None
-            if compiled is None:
-                continue
-            conf, q = compiled
-            prog = by_conf.get(conf)
-            if prog is None:
-                prog = by_conf[conf] = FieldProgram(conf=conf)
-            prog.queries.append(q)
+
+    by_conf: dict[AnalysisConfig, FieldProgram] = {}
+    for (ent, qid, conf), terms in zip(pending, _entry_terms(pending)):
+        if terms is None:
+            continue
+        try:
+            q = _compile_entry(ent, qid, defaults, terms)
+        except Exception:
+            logger.exception("Failed to compile dictionary entry %r", ent)
+            q = None
+        if q is None:
+            continue
+        prog = by_conf.get(conf)
+        if prog is None:
+            prog = by_conf[conf] = FieldProgram(conf=conf)
+        prog.queries.append(q)
 
     programs = list(by_conf.values())
     for p in programs:
@@ -330,74 +513,145 @@ def compile_dictionary(
     )
 
 
+def _hits(batch: TextBatch, cd: CompiledDictionary, merge: bool | None) -> tuple:
+    """Every annotation of ``batch`` as (row, emission id, begin, end)
+    arrays, char offsets into the row's text, in the reference's
+    per-document order: per row, per program, the exact-phrase hits (by
+    phrase length, then position) before the general-query hits. Null
+    and blank rows get none. `merge` overrides the compile-time
+    merge_annotations flag."""
+    live = ~batch.blank
+    scans: dict = {}
+    parts = []
+    for prog in cd.fields:
+        toks = analyze_batch(batch, prog.conf, live, scans)
+        if not len(toks.row):
+            continue
+        tid = prog.term_id_array(toks.vocab)[toks.code]
+        pos, length, eid = prog.walk(tid, toks.row)
+        parts.append((toks.row[pos], eid + prog.eid_base if prog.eid_base else eid,
+                      toks.begin[pos], toks.end[pos + length - 1]))
+        if prog.general or prog.always:
+            parts.append(tuple(np.array(c, dtype=np.int64) for c in prog.verify(toks, batch.n)))
+    if not parts:
+        empty = np.empty(0, dtype=np.int64)
+        return empty, empty, empty, empty
+    row, eid, begin, end = parts[0] if len(parts) == 1 else (
+        np.concatenate(c) for c in zip(*parts))
+    merging = cd.merge_annotations if merge is None else merge
+    if batch.n == 1 and not merging:
+        return row, eid, begin, end
+    order = np.argsort(row, kind="stable")
+    if merging:
+        order = _merged(order, row, eid, begin, end, cd.emissions)
+    return row[order], eid[order], begin[order], end[order]
+
+
+def _merged(order, row, eid, begin, end, emissions) -> np.ndarray:
+    """``order`` with each row's hits merged as
+    `merge_same_type_annotations` merges a document's annotations."""
+    row, eid, begin, end = (a[order].tolist() for a in (row, eid, begin, end))
+    order = order.tolist()
+    out = []
+    lo = 0
+    while lo < len(row):
+        hi = lo
+        while hi < len(row) and row[hi] == row[lo]:
+            hi += 1
+        kept = _merge_order([emissions[e][1] for e in eid[lo:hi]], begin[lo:hi], end[lo:hi])
+        out += [order[lo + i] for i in kept]
+        lo = hi
+    return np.array(out, dtype=np.int64)
+
+
+def match_batch(texts, cd: CompiledDictionary, merge: bool | None = None) -> pa.Array:
+    """Annotate a whole Arrow batch of texts: the `array<struct>`
+    annotations column, one row per text (null and blank text give
+    `[]`), of exactly ``ANNOTATION_ARROW_TYPE``. Each analysis config
+    scans and encodes the batch once (`analyze_batch`), the exact
+    phrases are one trie walk over the batch (`FieldProgram.walk`), and
+    the column is built from buffers (`_column`)."""
+    batch = TextBatch.from_arrow(texts)
+    return _column(batch, cd, *_hits(batch, cd, merge))
+
+
+def _column(batch: TextBatch, cd: CompiledDictionary, row, eid, begin, end) -> pa.Array:
+    """The annotations column of ``batch``'s hits: the `text` bytes are
+    gathered from the input's data, and `type`, `dict_entry_id` and
+    `meta` are taken by emission id from ``cd.columns``."""
+    # byte offsets of each hit: char offsets in ASCII rows, mapped
+    # through the row's cumulative UTF-8 lengths in the others
+    byte_begin, byte_end = begin.copy(), end.copy()
+    other = np.flatnonzero(~batch.ascii[row])
+    if len(other):
+        strings = batch.strings()
+        for r in np.unique(row[other]).tolist():
+            code = np.frombuffer(strings[r].encode("utf-32-le"), dtype=np.uint32)
+            at = np.zeros(len(code) + 1, dtype=np.int64)
+            np.cumsum(1 + (code >= 0x80) + (code >= 0x800) + (code >= 0x10000), out=at[1:])
+            hits = other[row[other] == r]
+            byte_begin[hits], byte_end[hits] = at[begin[hits]], at[end[hits]]
+    lengths = byte_end - byte_begin
+    text_off = np.zeros(len(row) + 1, dtype=np.int32)
+    np.cumsum(lengths, out=text_off[1:])
+    src = np.repeat(batch.offsets[row] + byte_begin - text_off[:-1], lengths)
+    src += np.arange(len(src))
+    text = pa.StringArray.from_buffers(len(row), pa.py_buffer(text_off),
+                                       pa.py_buffer(batch.data[src]))
+    take = _int_array(eid)
+    types, ids, metas = (col.take(take) for col in cd.columns)
+    element = ANNOTATION_ARROW_TYPE.value_type
+    values = pa.StructArray.from_arrays(
+        [text, types, ids, metas, _int_array(begin), _int_array(end)],
+        fields=[element.field(i) for i in range(element.num_fields)],
+    )
+    offsets = np.zeros(batch.n + 1, dtype=np.int32)
+    np.cumsum(np.bincount(row, minlength=batch.n), out=offsets[1:])
+    return pa.ListArray.from_arrays(_int_array(offsets), values, type=ANNOTATION_ARROW_TYPE)
+
+
 def match_text(text: str, cd: CompiledDictionary, merge: bool | None = None) -> list[dict]:
     """Match one document against the compiled dictionary; returns
     annotation dicts (the reference's per-document `match`,
-    phrases.clj:228-234, incl. blank guard and post-processing).
-    `merge` overrides the compile-time merge_annotations flag (the
+    phrases.clj:228-234, incl. blank guard and post-processing): the
+    one-row case of `match_batch`, with the dicts built from the same
+    hits. `merge` overrides the compile-time merge_annotations flag (the
     reference accepts it per call, phrases.clj:271-273)."""
     if text is None or not text.strip():
         return []
-    out: list[dict] = []
-    for prog in cd.fields:
-        tokens = analyze(text, prog.conf)
-        if not tokens:
-            continue
-        # (emission, begin, end): exact-phrase window probe first, then
-        # counter prefilter + positional verification; offsets are read
-        # only for the hits
-        begins, ends = tokens.begins, tokens.ends
-        hits = [(e, begins[p0], ends[p1]) for e, p0, p1 in prog.probe_exact(tokens)]
-        if prog.general or prog.always:
-            index = build_token_index(tokens)
-            for qi in prog.candidates(index.keys()):
-                e = prog.emits[qi]
-                hits.extend(
-                    (e, b, end) for b, end in find_matches(tokens, prog.queries[qi], index)
-                )
-        for (entry_id, qtype, meta), begin, end in hits:
-            out.append(
-                {
-                    "text": text[begin:end],
-                    "type": qtype,
-                    "dict_entry_id": entry_id,
-                    "meta": meta,
-                    "begin_offset": begin,
-                    "end_offset": end,
-                }
-            )
-    if cd.merge_annotations if merge is None else merge:
-        out = merge_same_type_annotations(out)
+    _, eid, begin, end = _hits(TextBatch.from_text(text), cd, merge)
+    out = []
+    for e, b, end_ in zip(eid.tolist(), begin.tolist(), end.tolist()):
+        entry_id, qtype, meta = cd.emissions[e]
+        out.append({
+            "text": text[b:end_],
+            "type": qtype,
+            "dict_entry_id": entry_id,
+            "meta": meta,
+            "begin_offset": b,
+            "end_offset": end_,
+        })
     return out
 
 
 # ---------------------------------------------------------------------------
 # Annotation merger (reference: src/beagle/annotation_merger.clj).
 # ---------------------------------------------------------------------------
-def _related(a: dict, b: dict) -> bool:
-    return a["begin_offset"] <= b["begin_offset"] <= a["end_offset"]
-
-
-def _nested(parent: dict, child: dict) -> bool:
-    return (
-        child["begin_offset"] >= parent["begin_offset"]
-        and child["end_offset"] <= parent["end_offset"]
-    )
-
-
-def merge_annotations(annotations: list[dict]) -> list[dict]:
-    """Linear sweep over begin-sorted annotations; overlapping/nested
-    runs collapse: strictly-nested child is absorbed by the parent,
-    otherwise the later-starting annotation wins
+def _sweep(idx: list, begins: list, ends: list) -> list:
+    """Linear sweep over begin-sorted annotations ``idx``;
+    overlapping/nested runs collapse: strictly-nested child is absorbed
+    by the parent, otherwise the later-starting annotation wins
     (annotation_merger.clj:10-24)."""
-    if not annotations:
+    if not idx:
         return []
-    anns = sorted(annotations, key=lambda a: a["begin_offset"])
-    parent = anns[0]
+    parent = idx[0]
     result = []
-    for child in anns[1:]:
-        if _related(parent, child):
-            if not (_nested(parent, child) and not _nested(child, parent)):
+    for child in idx[1:]:
+        pb, pe, cb, ce = begins[parent], ends[parent], begins[child], ends[child]
+        if pb <= cb <= pe:  # related
+            child_in_parent = cb >= pb and ce <= pe
+            parent_in_child = pb >= cb and pe <= ce
+            if not (child_in_parent and not parent_in_child):
                 parent = child
         else:
             result.append(parent)
@@ -406,11 +660,33 @@ def merge_annotations(annotations: list[dict]) -> list[dict]:
     return result
 
 
-def merge_same_type_annotations(annotations: list[dict]) -> list[dict]:
+def _merge_order(types: list, begins: list, ends: list) -> list[int]:
+    """Indices of the annotations that survive merging, in output order:
+    per type (first-seen order), the `_sweep` of its begin-sorted
+    annotations."""
     by_type: dict = {}
-    for a in annotations:
-        by_type.setdefault(a["type"], []).append(a)
-    out: list[dict] = []
-    for anns in by_type.values():
-        out.extend(merge_annotations(anns))
+    for i, t in enumerate(types):
+        by_type.setdefault(t, []).append(i)
+    out: list[int] = []
+    for idx in by_type.values():
+        out += _sweep(sorted(idx, key=begins.__getitem__), begins, ends)
     return out
+
+
+def _offsets(annotations: list[dict]) -> tuple[list, list]:
+    return ([a["begin_offset"] for a in annotations], [a["end_offset"] for a in annotations])
+
+
+def merge_annotations(annotations: list[dict]) -> list[dict]:
+    """Collapse overlapping and nested annotations (`_sweep` over them
+    in begin order)."""
+    begins, ends = _offsets(annotations)
+    order = sorted(range(len(annotations)), key=begins.__getitem__)
+    return [annotations[i] for i in _sweep(order, begins, ends)]
+
+
+def merge_same_type_annotations(annotations: list[dict]) -> list[dict]:
+    """`merge_annotations` within each type, types in first-seen order."""
+    begins, ends = _offsets(annotations)
+    kept = _merge_order([a["type"] for a in annotations], begins, ends)
+    return [annotations[i] for i in kept]

@@ -31,6 +31,7 @@ from __future__ import annotations
 from dataclasses import dataclass, fields
 from typing import Optional, get_type_hints
 
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -56,6 +57,8 @@ ANNOTATION_STRUCT = StructType(
     ]
 )
 ANNOTATIONS_TYPE = ArrayType(ANNOTATION_STRUCT, containsNull=False)
+# its Arrow type, exactly as the Python worker expects the kernel's output
+ANNOTATION_ARROW_TYPE = to_arrow_type(ANNOTATIONS_TYPE)
 # A query-string match is the same record without offsets
 # (lucene_alpha.clj:18-28).
 QUERY_MATCHES_TYPE = ArrayType(StructType(ANNOTATION_STRUCT.fields[:4]), containsNull=False)

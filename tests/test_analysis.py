@@ -1,6 +1,7 @@
 """Ported from reference test/beagle/text_analysis_test.clj plus
 tokenizer offset invariants."""
 
+import numpy as np
 import pytest
 
 from beagle_spark import analysis
@@ -264,20 +265,22 @@ def test_classic_tokenizer_host_email_company_types():
 
 
 def test_ascii_fastpath_equivalence():
-    """Every tokenizer's flat `Tokens` (one capturing split plus
-    a running sum of piece lengths) must equal `finditer`'s (group,
-    start, end) on its full pattern, and on pure-ASCII input on the
-    stdlib-re ASCII twin too (non-ASCII input takes the full pattern by
-    construction). Deterministic fuzz over the joiner-heavy alphabet
-    plus the documented edge strings and non-ASCII samples (CJK,
+    """Every tokenizer's flat `Tokens` must equal `finditer`'s (group,
+    start, end) on its full pattern: ASCII rows of the five byte-scanned
+    tokenizers take the byte-class scan, every other row the regex
+    split. The same holds row by row when all the cases are scanned as
+    one batch, where a token or joiner must never reach across two rows.
+    Deterministic fuzz over the joiner-heavy alphabet plus the
+    documented edge strings and non-ASCII samples (CJK,
     emoji/ZWJ/keycap, 'İ', '’', no-break and exotic whitespace)."""
     import random
 
     from beagle_spark.analysis.tokenizers import (
-        _ASCII_TWINS,
         _CLASSIC_TYPED,
         _PATTERNS,
+        TextBatch,
         get_tokenizer,
+        scan,
     )
 
     def spans(pattern, s):
@@ -307,14 +310,17 @@ def test_ascii_fastpath_equivalence():
         "two\nlines\r\n and İ\n",
         "Ⓜ x", "\u212aelvin", "İSTANBUL ΣΟΣ",
     ]
+    batch = TextBatch.from_strings(cases + non_ascii)
     for name, full in _PATTERNS.items():
-        twin = _ASCII_TWINS.get(name)
         tok = get_tokenizer(name)
-        for s in cases + non_ascii:
-            want = spans(_CLASSIC_TYPED if name == "classic" else full, s)
-            assert flat(tok(s)) == want, (name, s)
-            if twin is not None and s.isascii():
-                assert spans(twin, s) == want, (name, s)
+        want = [spans(_CLASSIC_TYPED if name == "classic" else full, s)
+                for s in cases + non_ascii]
+        for s, w in zip(cases + non_ascii, want):
+            assert flat(tok(s)) == w, (name, s)
+        got = scan(batch, name)
+        per_row = np.searchsorted(got.row, np.arange(batch.n + 1))
+        for r, w in enumerate(want):
+            assert flat(got.tokens(per_row[r], per_row[r + 1])) == w, (name, r)
 
     # fused lower: analyze(case_sensitive=False) == the tokenizer's
     # tokens lowered per code point (Lucene's LowerCaseFilter), offsets
@@ -326,6 +332,51 @@ def test_ascii_fastpath_equivalence():
             assert flat(analyze(s, ci)) == want, (name, s)
     toks = analyze("İstanbul Straße", merge_config({"case_sensitive": False}))
     assert flat(toks) == [("istanbul", 0, 8), ("straße", 9, 15)]
+
+
+def test_byte_scan_tables_exhaustive():
+    """The byte-class tables of the five byte-scanned tokenizers, on
+    every string of length <= 4 over a joiner-heavy alphabet, equal the
+    full pattern's `finditer`, alone and as rows of one batch (row ends
+    are where joiners and token runs must stop); lowering keeps each
+    byte's class."""
+    from itertools import product
+
+    from beagle_spark.analysis.tokenizers import (
+        _BYTE_SCANNED,
+        _PATTERNS,
+        TextBatch,
+        _byte_classes,
+        scan,
+    )
+
+    lowered = np.frombuffer(bytes(range(256)).lower(), dtype=np.uint8)
+
+    alphabet = ["a", "Z", "0", "'", ".", ",", " ", "\x0b", "\x1c", "#", "@", "-"]
+    strings = ["".join(p) for k in range(5) for p in product(alphabet, repeat=k)]
+    # empty and null rows between strings repeat a row offset
+    spaced = [x for s in strings[:3000] for x in (s, "", None)]
+    for name in _BYTE_SCANNED:
+        got = scan(TextBatch.from_strings(spaced), name)
+        per_row = np.searchsorted(got.row, np.arange(len(spaced) + 1))
+        for r, s in enumerate(spaced):
+            toks = got.tokens(per_row[r], per_row[r + 1])
+            want = [(m.group(), m.start(), m.end()) for m in _PATTERNS[name].finditer(s or "")]
+            assert list(zip(toks.texts, toks.begins, toks.ends)) == want, (name, r, s)
+    batch = TextBatch.from_strings(strings)
+    for name in _BYTE_SCANNED:
+        token, _, joins = _byte_classes(name)
+        token = np.frombuffer(token, dtype=bool)
+        assert (token[lowered] == token).all(), name
+        for side, _ in joins:
+            assert (side[lowered] == side).all(), name
+        got = scan(batch, name)
+        assert batch.ascii.all()
+        per_row = np.searchsorted(got.row, np.arange(batch.n + 1))
+        for r, s in enumerate(strings):
+            want = [(m.group(), m.start(), m.end()) for m in _PATTERNS[name].finditer(s)]
+            toks = got.tokens(per_row[r], per_row[r + 1])
+            assert list(zip(toks.texts, toks.begins, toks.ends)) == want, (name, s)
 
 
 def test_lowercase_per_code_point_like_lucene():

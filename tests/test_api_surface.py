@@ -121,3 +121,40 @@ def test_import_loads_no_pandas():
         cwd=pathlib.Path(__file__).resolve().parents[1],
     )
     assert out.stdout.strip() == "False"
+
+
+def test_annotate_worker_loads_no_pandas():
+    """The annotate kernel's batch function builds its output column from
+    buffers, so a worker that compiles a dictionary and annotates a
+    batch (built here with `pa.StringArray.from_buffers`, as Spark hands
+    the worker an Arrow array) never loads pandas; `pa.array` would."""
+    import pathlib
+    import subprocess
+    import sys
+
+    script = """
+import sys
+import numpy as np
+import pyarrow as pa
+from beagle_spark.annotator import Annotator, _batch_matcher
+from beagle_spark.kernel import _apply
+from beagle_spark.schema import ANNOTATION_ARROW_TYPE
+ann = Annotator([{"text": "table scan", "id": "p", "case-sensitive?": False},
+                 {"text": "hash join", "slop": 1, "id": "s"}])
+data = "a Table scan, then a hash  join; straße".encode()
+offsets = np.array([0, 14, len(data), len(data)], dtype=np.int32)
+texts = pa.StringArray.from_buffers(3, pa.py_buffer(offsets), pa.py_buffer(data))
+empty = pa.StringArray.from_buffers(0, pa.py_buffer(np.zeros(1, dtype=np.int32)), pa.py_buffer(b""))
+out = list(_apply([texts, empty], _batch_matcher(ann.compiled), ANNOTATION_ARROW_TYPE))
+assert [len(a) for a in out] == [3, 0] and out[0].type == ANNOTATION_ARROW_TYPE
+assert [len(r) for r in out[0].to_pylist()] == [1, 1, 0]
+print('pandas' in sys.modules)
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True,
+        text=True,
+        check=True,
+        cwd=pathlib.Path(__file__).resolve().parents[1],
+    )
+    assert out.stdout.strip() == "False"

@@ -290,3 +290,22 @@ def test_lucene_annotate_df_matches_local(spark, sf_dir):
     assert by_id[-1] == [] and by_id[-2] == [] and by_id[-3] == []
     assert len(by_id[-4]) == 3
     assert n_with > 1
+
+
+def test_multiterm_terms_normalized_like_lucene():
+    """Wildcard, regexp, fuzzy and range terms are normalized as Lucene's
+    `Analyzer.normalize` does: lowercased under `case-sensitive?: false`
+    and never split, so a fuzzy term or range endpoint keeps its whole
+    text; escaped wildcard characters stay as written."""
+    ci = {"case-sensitive?": False}
+    assert lucene_annotator([{"text": "Foo*", **ci}])("Foobar here")
+    assert lucene_annotator([{"text": "/Fo+/", **ci}])("Foo here")
+    assert not lucene_annotator([{"text": "Foo*"}])("foobar here")
+    ann = lucene_annotator([{"text": "foo-bar~1"}])
+    assert not ann("foo only") and not ann("bar only")
+    node = parse_query("[foo-bar TO foo-bas]", merge_config({}))
+    assert (node.lower, node.upper) == ("foo-bar", "foo-bas")
+    node = parse_query("[Bat TO Dog]", merge_config({"case_sensitive": False}))
+    assert (node.lower, node.upper) == ("bat", "dog")
+    node = parse_query("Caf\\É*", merge_config({"case_sensitive": False, "ascii_fold": True}))
+    assert node.pattern == "cafÉ.*"

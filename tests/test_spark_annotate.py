@@ -59,14 +59,15 @@ def test_blank_and_null_text(spark):
 
 def test_arrow_batches_have_exact_output_type():
     """In process, no Spark: the batch function behind `Annotator.udf`
-    builds arrays of exactly the Spark-expected Arrow type (so the
-    serializer never casts) whose rows equal `match_text`, meta maps as
-    item lists; null and blank rows give `[]`, never null."""
+    (`match_batch`, through the kernel's `_apply`) builds arrays of
+    exactly the Spark-expected Arrow type (so the serializer never
+    casts) whose rows equal `match_text`, meta maps as item lists; null
+    and blank rows give `[]`, never null."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
-    from beagle_spark.annotator import _text_matcher
-    from beagle_spark.kernel import _apply, per_value
+    from beagle_spark.annotator import _batch_matcher
+    from beagle_spark.kernel import _apply
     from beagle_spark.matcher import match_text
     from beagle_spark.schema import ANNOTATIONS_TYPE
 
@@ -76,7 +77,7 @@ def test_arrow_batches_have_exact_output_type():
         pa.array(["spark on pyspark: hash the join", "in İstanbul straße ok", ""]),
     ]
     texts = [t for b in batches for t in b.to_pylist()]
-    fn = per_value(_text_matcher(ann.compiled))
+    fn = _batch_matcher(ann.compiled)
     out = list(_apply(batches, fn, to_arrow_type(ANNOTATIONS_TYPE)))
     assert [len(a) for a in out] == [3, 3]
     got = [row for a in out for row in a.to_pylist()]
