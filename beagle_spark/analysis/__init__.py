@@ -165,7 +165,7 @@ def analyze_batch(batch: TextBatch, conf: AnalysisConfig, rows=None, scans=None)
 
 def analyze(text: str, conf: AnalysisConfig) -> Tokens:
     """Tokenize + filter one text: the one-row case of `analyze_batch`."""
-    return analyze_batch(TextBatch.from_text(text), conf).tokens()
+    return analyze_batch(TextBatch.from_strings([text]), conf).tokens()
 
 
 def normalize(term: str, conf: AnalysisConfig) -> str:

@@ -209,8 +209,9 @@ _LOWER_FIXUPS = {0x130: "i", 0x3A3: "σ"}
 def lower(s: str) -> str:
     """Lucene's LowerCaseFilter: each code point lowered on its own
     (`Character.toLowerCase(int)`), so 'İSTANBUL ΣΟΣ' gives
-    'istanbul σοσ'. Never changes a string's length."""
-    return s.translate(_LOWER_FIXUPS).lower()
+    'istanbul σοσ'. Never changes a string's length. (An ASCII string
+    takes `str.lower` alone, ten times cheaper than the fixup table.)"""
+    return s.lower() if s.isascii() else s.translate(_LOWER_FIXUPS).lower()
 
 
 @lru_cache(maxsize=None)
@@ -251,19 +252,15 @@ def _byte_classes(name: str) -> tuple:
     return token.tobytes(), np.logical_or.reduce([j for _, j in joins]).tobytes(), tuple(joins)
 
 
-# read-only one-row flags, shared by every one-row batch
-_ONE = {b: np.full(1, b) for b in (False, True)}
-for _flag in _ONE.values():
-    _flag.flags.writeable = False
-
-
 class TextBatch:
     """A column of texts read once: the UTF-8 data as one `bytes` (and
     a ``uint8`` view of it), the row byte offsets into it, which rows
     are valid (not null), pure ASCII or blank; a row's `str` is decoded
     only when asked for. Built from an Arrow string array (`from_arrow`,
-    one copy of the data buffer), from Python strings (`from_strings`)
-    or from one text (`from_text`)."""
+    one copy of the data buffer; the ASCII and blank flags are derived
+    from the bytes when first asked for) or from Python strings
+    (`from_strings`, which sets both flags from the strings; a one-row
+    batch is ``from_strings([text])``)."""
 
     __slots__ = ("n", "raw", "data", "offsets", "valid", "_ascii", "_blank", "_strings")
 
@@ -298,21 +295,16 @@ class TextBatch:
 
     @classmethod
     def from_strings(cls, texts) -> "TextBatch":
+        """A batch of Python strings (None for null). A lone surrogate,
+        which no Arrow string holds but a Python `str` may, is kept
+        (such a row is not ASCII, so it takes the per-row scan)."""
         texts = list(texts)
         enc = [b"" if t is None else t.encode("utf-8", "surrogatepass") for t in texts]
-        offs = np.zeros(len(enc) + 1, dtype=np.int64)
-        np.cumsum(list(map(len, enc)), out=offs[1:])
-        valid = np.array([t is not None for t in texts], dtype=bool)
-        return cls(b"".join(enc), offs, valid, texts)
-
-    @classmethod
-    def from_text(cls, text: str) -> "TextBatch":
-        """A one-row batch. A lone surrogate, which no Arrow string holds
-        but a Python `str` may, is kept (such a row is not ASCII, so it
-        takes the per-row scan)."""
-        data = text.encode("utf-8", "surrogatepass")
-        return cls(data, np.array([0, len(data)]), _ONE[True], [text], _ONE[text.isascii()],
-                   _ONE[not text.strip()])
+        offs = np.fromiter(accumulate(map(len, enc), initial=0), np.int64, len(enc) + 1)
+        valid, ascii, blank = np.array(
+            [(t is not None, t is None or t.isascii(), t is None or not t.strip()) for t in texts],
+            dtype=bool).reshape(-1, 3).T
+        return cls(b"".join(enc), offs, valid, texts, ascii, blank)
 
     @property
     def ascii(self) -> np.ndarray:
@@ -426,8 +418,10 @@ def _byte_scan(batch: TextBatch, name: str, lowercase: bool, rows):
 
 
 def _ascii_strings(arr) -> list[str]:
-    """The values of an Arrow large-string array of ASCII text, read
-    from its buffers (cheaper than `to_pylist` for short strings)."""
+    """The values of an Arrow large-string array of ASCII text, sliced
+    from its one decoded data buffer: 4x cheaper than `to_pylist` (a
+    35,646-entry batch vocabulary in 3.8 instead of 16.6 ms, a 40-entry
+    one-row vocabulary in 6.6 instead of 28 us)."""
     _, offs_buf, data_buf = arr.buffers()
     offs = np.frombuffer(offs_buf, np.int64, len(arr) + 1, arr.offset * 8).tolist()
     text = data_buf.to_pybytes().decode("ascii") if data_buf is not None else ""
@@ -435,27 +429,12 @@ def _ascii_strings(arr) -> list[str]:
 
 
 @lru_cache(maxsize=64)
-def _row_scanner(name: str, lowercase: bool):
+def _row_scanner(name: str):
     """fn(text) -> Tokens by one regex split of the full pattern: the
     per-row scan of non-ASCII rows and of the `keyword` and `classic`
-    tokenizers. ``lowercase`` fuses the LowerCaseFilter: ASCII text is
-    lowered whole before the split (ASCII lowering keeps every
-    character class); other text is split as is and each token lowered,
-    because lowering before the split is not case-invariant there ('Ⓜ'
-    is a pictograph the standard split keeps, 'ⓜ' is not; the strict
-    split drops the Kelvin sign and 'İ' but keeps their lowercase
-    forms)."""
+    tokenizers."""
     split = _splitter(_PATTERNS[name])
-
-    def scan(text: str) -> Tokens:
-        if text.isascii():
-            return _flat(split(text.lower() if lowercase else text))
-        toks = _flat(split(text))
-        if lowercase:
-            toks.texts = [lower(t) for t in toks.texts]
-        return toks
-
-    return scan
+    return lambda text: _flat(split(text))
 
 
 @lru_cache(maxsize=64)
@@ -488,24 +467,31 @@ def scan(batch: TextBatch, name: str, lowercase: bool = False, rows=None, row_fn
         vocab = []
     if not np.count_nonzero(rest):
         return Scan(row, begin, end, code, vocab)
-    row_fn = row_fn or _row_scanner(name, lowercase)
-    ids = {s: i for i, s in enumerate(vocab)}
+    row_fn = row_fn or _row_scanner(name)
     strings = batch.strings()
-    r_row, r_begin, r_end, r_code = [], [], [], []
-    for r in rest.nonzero()[0].tolist():
+    r_rows = rest.nonzero()[0]
+    counts, r_begin, r_end, texts = [], [], [], []
+    for r in r_rows.tolist():
         toks = row_fn(strings[r])
-        r_row += [r] * len(toks)
+        counts.append(len(toks))
         r_begin += toks.begins
         r_end += toks.ends
-        r_code += [ids.setdefault(s, len(ids)) for s in toks.texts]
-    order = np.argsort(np.concatenate([row, r_row]), kind="stable")
-    return Scan(
-        np.concatenate([row, r_row]).astype(np.int64)[order],
-        np.concatenate([begin, r_begin]).astype(np.int64)[order],
-        np.concatenate([end, r_end]).astype(np.int64)[order],
-        np.concatenate([code, r_code]).astype(np.int64)[order],
-        list(ids),
-    )
+        texts += toks.texts
+    # Codes by distinct token string, as split; the LowerCaseFilter then
+    # runs once per distinct token. Lowering before the split is not
+    # case-invariant outside ASCII ('Ⓜ' is a pictograph the standard
+    # split keeps, 'ⓜ' is not; the strict split drops the Kelvin sign
+    # and 'İ' but keeps their lowercase forms).
+    seen = {s: i for i, s in enumerate(dict.fromkeys(texts))}
+    ids = {s: i for i, s in enumerate(vocab)}
+    remap = np.array([ids.setdefault(lower(s) if lowercase else s, len(ids)) for s in seen],
+                     dtype=np.int64)
+    extra = (np.repeat(r_rows, counts), r_begin, r_end,
+             remap[np.fromiter(map(seen.__getitem__, texts), np.int64, len(texts))])
+    cols = [np.concatenate([a, np.asarray(b, dtype=np.int64)]).astype(np.int64, copy=False)
+            for a, b in zip((row, begin, end, code), extra)]
+    order = np.argsort(cols[0], kind="stable")
+    return Scan(*(c[order] for c in cols), list(ids))
 
 
 @lru_cache(maxsize=64)
@@ -516,4 +502,4 @@ def get_tokenizer(name: str, lower: bool = False):
     ``lower=True`` fuses the LowerCaseFilter into the scan (identical
     output to lowering each token afterwards — per-char lowercase never
     empties a token, and offsets are taken from the original text)."""
-    return lambda text: scan(TextBatch.from_text(text), name, lower).tokens()
+    return lambda text: scan(TextBatch.from_strings([text]), name, lower).tokens()

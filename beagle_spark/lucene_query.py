@@ -420,7 +420,7 @@ def _make_matcher(configs, queries):
     def annotate(text: str, _opts: dict | None = None) -> list[dict]:
         if text is None or not text.strip():
             return []
-        return _matches(TextBatch.from_text(text), configs, queries)[0]
+        return _matches(TextBatch.from_strings([text]), configs, queries)[0]
 
     return annotate
 

@@ -21,7 +21,7 @@ from __future__ import annotations
 import logging
 import uuid
 from dataclasses import dataclass, field, replace
-from itertools import chain
+from itertools import chain, repeat
 from operator import attrgetter
 
 import numpy as np
@@ -80,8 +80,8 @@ class FieldProgram:
     required: list = field(default_factory=list)
     always: list = field(default_factory=list)
     # global id of this program's first emission: exact phrases first,
-    # then the general queries (set by `compile_dictionary`)
-    eid_base: int = 0
+    # then the general queries (set by `CompiledDictionary`)
+    eid_base: int = field(default=0, init=False)
 
     @property
     def n_exact(self) -> int:
@@ -219,8 +219,7 @@ class FieldProgram:
         """The term id of each vocabulary string, ``len(term_ids)`` if
         none."""
         ids = self.term_ids
-        none = len(ids)
-        return np.array([ids.get(t, none) for t in vocab], dtype=np.int64)
+        return np.fromiter(map(ids.get, vocab, repeat(len(ids))), np.int64, len(vocab))
 
     def candidates(self, token_texts) -> list[int]:
         """Counter-prefilter candidates among the general (slop/ordered)
@@ -284,25 +283,35 @@ def _emission(q: CompiledQuery, type_name: str) -> tuple:
 @dataclass
 class CompiledDictionary:
     """Broadcastable compiled dictionary: one FieldProgram per distinct
-    analysis config + the default annotation type. ``emissions`` holds
-    every program's emissions by global id (exact phrases, then general
-    queries, per program from its `eid_base`), and ``columns`` the same
-    as the Arrow `type`, `dict_entry_id` and `meta` columns that the
-    batch emit takes rows from."""
+    analysis config + the default annotation type.
+
+    Derived from the programs, never passed in, and not pickled (they
+    are rebuilt on load, so the broadcast carries one copy of the
+    emission data): ``emissions`` holds every program's emissions by
+    global id (exact phrases, then general queries, per program from
+    its `eid_base`), and ``columns`` the same as the Arrow `type`,
+    `dict_entry_id` and `meta` columns that the batch emit takes rows
+    from."""
 
     fields: list[FieldProgram]
     type_name: str = "PHRASE"
     merge_annotations: bool = False
-    emissions: list = field(default_factory=list)
-    columns: tuple = ()
+    emissions: list = field(init=False, repr=False, compare=False)
+    columns: tuple = field(init=False, repr=False, compare=False)
 
     def __post_init__(self):
-        if not self.emissions:
-            for prog in self.fields:
-                prog.eid_base = len(self.emissions)
-                self.emissions += prog.exact_emits + prog.emits
-        if not self.columns:
-            self.columns = _emission_columns(self.emissions)
+        self.emissions = []
+        for prog in self.fields:
+            prog.eid_base = len(self.emissions)
+            self.emissions += prog.exact_emits + prog.emits
+        self.columns = _emission_columns(self.emissions)
+
+    def __getstate__(self):
+        return {k: v for k, v in vars(self).items() if k not in ("emissions", "columns")}
+
+    def __setstate__(self, state):
+        vars(self).update(state)
+        self.__post_init__()
 
     @property
     def n_queries(self) -> int:
@@ -445,14 +454,12 @@ def _entry_terms(pending: list) -> list:
         texts = [pending[i][0].text or "" for i in idxs]
         try:
             toks = analyze_batch(TextBatch.from_strings(texts), conf)
-            words = [toks.vocab[c] for c in toks.code.tolist()]
-            cuts = np.searchsorted(toks.row, np.arange(len(idxs) + 1)).tolist()
-            rows = [words[a:b] for a, b in zip(cuts, cuts[1:])]
+            rows = [t.texts for t in toks.per_row(len(idxs))]
         except Exception:
             rows = [None] * len(idxs)
             for j, text in enumerate(texts):
                 try:
-                    rows[j] = analyze_batch(TextBatch.from_text(text), conf).tokens().texts
+                    rows[j] = analyze_batch(TextBatch.from_strings([text]), conf).tokens().texts
                 except Exception:
                     logger.exception("Failed to compile dictionary entry %r", pending[idxs[j]][0])
         for i, words in zip(idxs, rows):
@@ -564,7 +571,7 @@ def _merged(order, row, eid, begin, end, emissions) -> np.ndarray:
     return np.array(out, dtype=np.int64)
 
 
-def match_batch(texts, cd: CompiledDictionary, merge: bool | None = None) -> pa.Array:
+def match_batch(texts, cd: CompiledDictionary) -> pa.Array:
     """Annotate a whole Arrow batch of texts: the `array<struct>`
     annotations column, one row per text (null and blank text give
     `[]`), of exactly ``ANNOTATION_ARROW_TYPE``. Each analysis config
@@ -572,29 +579,27 @@ def match_batch(texts, cd: CompiledDictionary, merge: bool | None = None) -> pa.
     phrases are one trie walk over the batch (`FieldProgram.walk`), and
     the column is built from buffers (`_column`)."""
     batch = TextBatch.from_arrow(texts)
-    return _column(batch, cd, *_hits(batch, cd, merge))
+    return _column(batch, cd, *_hits(batch, cd, None))
 
 
 def _column(batch: TextBatch, cd: CompiledDictionary, row, eid, begin, end) -> pa.Array:
     """The annotations column of ``batch``'s hits: the `text` bytes are
     gathered from the input's data, and `type`, `dict_entry_id` and
     `meta` are taken by emission id from ``cd.columns``."""
-    # byte offsets of each hit: char offsets in ASCII rows, mapped
-    # through the row's cumulative UTF-8 lengths in the others
-    byte_begin, byte_end = begin.copy(), end.copy()
+    # the first byte of each hit, and its length: char offsets are byte
+    # offsets in ASCII rows; elsewhere char i of a row is the row's i-th
+    # byte that is no UTF-8 continuation byte
+    start, stop = batch.offsets[row] + begin, batch.offsets[row] + end
     other = np.flatnonzero(~batch.ascii[row])
     if len(other):
-        strings = batch.strings()
-        for r in np.unique(row[other]).tolist():
-            code = np.frombuffer(strings[r].encode("utf-32-le"), dtype=np.uint32)
-            at = np.zeros(len(code) + 1, dtype=np.int64)
-            np.cumsum(1 + (code >= 0x80) + (code >= 0x800) + (code >= 0x10000), out=at[1:])
-            hits = other[row[other] == r]
-            byte_begin[hits], byte_end[hits] = at[begin[hits]], at[end[hits]]
-    lengths = byte_end - byte_begin
+        data = batch.data
+        chars = np.append(np.flatnonzero((data & 0xC0) != 0x80), len(data))
+        first = np.searchsorted(chars, batch.offsets[row[other]])
+        start[other], stop[other] = chars[first + begin[other]], chars[first + end[other]]
+    lengths = stop - start
     text_off = np.zeros(len(row) + 1, dtype=np.int32)
     np.cumsum(lengths, out=text_off[1:])
-    src = np.repeat(batch.offsets[row] + byte_begin - text_off[:-1], lengths)
+    src = np.repeat(start - text_off[:-1], lengths)
     src += np.arange(len(src))
     text = pa.StringArray.from_buffers(len(row), pa.py_buffer(text_off),
                                        pa.py_buffer(batch.data[src]))
@@ -619,7 +624,7 @@ def match_text(text: str, cd: CompiledDictionary, merge: bool | None = None) -> 
     reference accepts it per call, phrases.clj:271-273)."""
     if text is None or not text.strip():
         return []
-    _, eid, begin, end = _hits(TextBatch.from_text(text), cd, merge)
+    _, eid, begin, end = _hits(TextBatch.from_strings([text]), cd, merge)
     out = []
     for e, b, end_ in zip(eid.tolist(), begin.tolist(), end.tolist()):
         entry_id, qtype, meta = cd.emissions[e]

@@ -232,9 +232,10 @@ def test_match_batch_equals_per_row_oracle(seed):
             sliced = pa.array(texts, type=pa.string())[lo:]
             assert sliced.offset == lo
             assert match_batch(sliced, cd).equals(arrow_rows(want[lo:]))
-            # the per-call merge flag overrides the compiled one
+            # match_text's per-call merge flag overrides the compiled one
             flipped = oracle_rows(texts, dictionary, cd, not merge)
-            assert match_batch(pa.array(texts), cd, merge=not merge).equals(arrow_rows(flipped))
+            for text, rows in zip(texts, flipped):
+                assert match_text(text, cd, merge=not merge) == rows, text
 
 
 def test_joiners_and_runs_stop_at_row_ends():
@@ -264,8 +265,8 @@ def test_large_string_input_and_chunked():
 
 
 def test_long_non_ascii_rows_and_lone_surrogates():
-    """Hits in non-ASCII rows take their text bytes through the row's
-    UTF-8 offsets (one pass per row, however many hits); a Python
+    """Hits in non-ASCII rows take their text bytes through the UTF-8
+    char starts of the batch (one pass, however many hits); a Python
     string with a lone surrogate still matches one row at a time."""
     cd = compile_dictionary([{"text": "table scan", "id": "t", "case-sensitive?": False}])
     row = "naïve Straße 日本 \U0001F469 Table scan, " * 400
