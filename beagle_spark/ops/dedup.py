@@ -17,8 +17,9 @@ driver-side step is connected_components' finish for small graphs.
 - bucket_pairs:             the one "rows keyed by bucket -> member
                             pairs" primitive behind MinHash, SimHash and
                             hyperplane LSH (equi-self-join, or with a
-                            cap the join-free grouped all-pairs plus a
-                            star guard for oversized buckets)
+                            cap one join-free Window + groupBy branch:
+                            all pairs of a bucket under the cap, star
+                            pairs of an oversized one)
 - ngram_jaccard_pairs:      exact Jaccard: shingles exploded to
                             (id, shingle) rows and paired through
                             bucket_pairs on the shingle; quadratic in the
@@ -151,27 +152,40 @@ def minhash_signature_stage(df: DataFrame, text_col: str, id_col: str,
     of hashing a ~30-char string 64 times, with the same independence
     properties. Seeds are fixed literals — deterministic everywhere.
 
-    Shape: explode shingles -> num_perm flat min-aggregates
+    Shape: explode shingles -> one aggregate of num_perm min-hashes
     (whole-stage-codegen'd; partial aggregation collapses to one row
     per doc map-side, then one Exchange on id). A map-only Arrow kernel
     without that Exchange was measured and lost ~2x at 200k docs:
     shipping every shingle hash across the Arrow boundary costs more
-    than shuffling the aggregated 512 B/doc signature.
+    than shuffling the aggregated 512 B/doc signature. The aggregate is
+    one SQL expression, ``array(min(xxhash64(_h, 0)), ...)``: building
+    it costs one JVM call where per-column ``F`` calls cost hundreds per
+    plan. The seed literals are INT, as ``F.lit(i)`` is, so the hash
+    family is unchanged.
 
     Pass ``shingled`` (from :func:`shingle_docs`, ideally persisted) to
     reuse an existing shingle relation instead of re-shingling."""
     if shingled is None:
         shingled = shingle_docs(df, text_col, id_col, shingle_k)
-    exploded = shingled.select(
-        "id", F.explode("shingles").alias("_sh")
-    ).withColumn("_h", F.xxhash64("_sh"))
-    mins = [
-        F.min(F.xxhash64("_h", F.lit(i))).alias(f"_m{i}") for i in range(num_perm)
-    ]
-    agged = exploded.groupBy("id").agg(*mins)
-    return agged.select(
-        "id", F.array(*[F.col(f"_m{i}") for i in range(num_perm)]).alias("sig")
+    mins = ", ".join(f"min(xxhash64(_h, {i}))" for i in range(num_perm))
+    return (
+        shingled.select("id", F.explode("shingles").alias("_sh"))
+        .select("id", F.xxhash64("_sh").alias("_h"))
+        .groupBy("id")
+        .agg(F.expr(f"array({mins})").alias("sig"))
     )
+
+
+def _minhash_bands(sig: DataFrame, num_perm: int, bands: int) -> DataFrame:
+    """(id, band, bucket) rows: band b's bucket is the xxhash64 of its
+    ``num_perm // bands`` signature values, all bands in one
+    ``posexplode`` expression."""
+    rows = num_perm // bands
+    buckets = ", ".join(
+        "xxhash64(" + ", ".join(f"sig[{i}]" for i in range(b * rows, (b + 1) * rows)) + ")"
+        for b in range(bands)
+    )
+    return sig.selectExpr("id", f"posexplode(array({buckets})) AS (band, bucket)")
 
 
 def minhash_lsh_candidates(
@@ -206,15 +220,11 @@ def minhash_lsh_candidates(
     the boilerplate/identical-doc case that creates oversized buckets
     in the first place."""
     assert num_perm % bands == 0
-    rows = num_perm // bands
     sig = minhash_signature_stage(
         df, text_col, id_col, num_perm, shingle_k, shingled=shingled
     )
-    values = [F.col("sig")[i] for i in range(num_perm)]
-    buckets = [F.xxhash64(*values[b * rows:(b + 1) * rows]) for b in range(bands)]
-    banded = sig.select("id", F.posexplode(F.array(*buckets)).alias("band", "bucket"))
     return (
-        bucket_pairs(banded, ("band", "bucket"), bucket_cap)
+        bucket_pairs(_minhash_bands(sig, num_perm, bands), ("band", "bucket"), bucket_cap)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_bands"))
     )
@@ -230,11 +240,11 @@ def bucket_pairs(rel: DataFrame, keys: tuple, cap: int | None, carry: tuple = ()
     value; a pair sharing several key values (e.g. several bands) comes
     out once per shared value, so callers aggregate per pair.
 
-    ``rel`` MUST BE DETERMINISTIC: both branches read it more than once
-    (two join sides, or the small and star branches of the union), and
-    only a deterministic subtree gives every read the same members.
-    Materialize a nondeterministic input (e.g. a Python kernel marked
-    ``asNondeterministic``) with ``localCheckpoint(eager=True)`` first.
+    ``rel`` MUST BE DETERMINISTIC when ``cap`` is None: the two join
+    sides read it twice, and only a deterministic subtree gives both
+    reads the same members. Materialize a nondeterministic input (e.g.
+    a Python kernel marked ``asNondeterministic``) with
+    ``localCheckpoint(eager=True)`` first.
 
     ``cap`` picks the output, not a plan strategy:
 
@@ -242,22 +252,28 @@ def bucket_pairs(rel: DataFrame, keys: tuple, cap: int | None, carry: tuple = ()
       on ``keys`` with ``a.id < b.id``. No join hint: over a
       materialized or deterministic input AQE picks broadcast when a
       side fits and sort-merge at corpus scale.
-    - ``cap=n``: NO JOIN, and per-operator memory bounded by ``n``
-      whatever the bucket size.
+    - ``cap=n``: NO JOIN, ONE BRANCH, and per-operator memory bounded
+      by ``n`` whatever the bucket size.
 
       1. A Window over ``keys`` attaches each bucket's member count and
          min member (the star anchor) to every row. The window operator
          is sort-based and spillable, so a degenerate bucket with 10^8
          members costs disk, not an aggregation-buffer OOM.
-      2. Rows in buckets AT OR UNDER the cap are grouped into one
-         sorted member array per bucket — the collect buffer holds at
-         most ``n`` members by construction, since oversized buckets
-         were filtered out before the aggregate — and an array
-         expression emits all (ids[i], ids[j]) i < j. The groupBy reuses
-         the window's partitioning, so no extra exchange.
-      3. Rows in oversized buckets emit star pairs (anchor, member)
-         MAP-SIDE from the windowed columns — never collected, linear
-         in bucket size.
+      2. One groupBy on ``(*keys, _own)``: ``_own`` is NULL in a bucket
+         at or under the cap, so that bucket is one group, and is the
+         member itself in an oversized bucket, so each of its members
+         is a group of its own. The collect buffer therefore holds at
+         most ``n`` members. The groupBy reuses the window's
+         partitioning, so no extra exchange.
+      3. One ``inline`` emits the pairs of each group's sorted member
+         array: all (ms[i], ms[j]) i < j under the cap, and for an
+         oversized member the star pair (anchor, member) — the array
+         is ``array_distinct(anchor, member)``, empty of pairs for the
+         anchor itself.
+
+      The input is read once: over a persisted input AQE reuses no
+      exchange across branches, so a second branch would run the whole
+      input stage (for MinHash, the signatures) again.
 
     In the capped branch, carry columns ride in a ``struct(id, *carry)``
     member; sorting and min compare ``id`` first, and ids are unique
@@ -268,31 +284,26 @@ def bucket_pairs(rel: DataFrame, keys: tuple, cap: int | None, carry: tuple = ()
             on = on & (F.col(f"a.{k}") == F.col(f"b.{k}"))
         pairs = rel.alias("a").join(rel.alias("b"), on)
     else:
-        members = rel.select(*keys, F.struct("id", *carry).alias("_m"))
         w = Window.partitionBy(*keys)
-        sized = members.withColumn("_cnt", F.count(F.lit(1)).over(w)).withColumn(
-            "_anchor", F.min("_m").over(w)
+        # a bucket at or under the cap is one group (_own NULL); each
+        # member of an oversized bucket is a group of its own
+        sized = rel.select(*keys, F.struct("id", *carry).alias("_m")).select(
+            *keys,
+            "_m",
+            F.min("_m").over(w).alias("_anchor"),
+            F.when(F.count(F.lit(1)).over(w) <= cap, None).otherwise(F.col("_m")).alias("_own"),
         )
-        grouped = (
-            sized.where(F.col("_cnt") <= cap)
-            .groupBy(*keys)
-            .agg(F.array_sort(F.collect_list("_m")).alias("_ms"))
-        )
-        n = F.size("_ms")
-        all_pairs = F.flatten(
-            F.transform(
-                "_ms",
-                lambda x, i: F.transform(
-                    F.slice("_ms", i + 2, n - i - 1),
-                    lambda y: F.struct(x.alias("a"), y.alias("b")),
-                ),
+        pairs = (
+            sized.groupBy(*keys, "_own")
+            .agg(F.expr(
+                "IF(_own IS NULL, array_sort(collect_list(_m)),"
+                " array_distinct(array(min(_anchor), _own)))"
+            ).alias("_ms"))
+            .selectExpr(
+                "inline(flatten(transform(_ms, (x, i) -> transform("
+                "slice(_ms, i + 2, size(_ms) - i - 1), y -> named_struct('a', x, 'b', y)))))"
             )
         )
-        small = grouped.select(F.explode(all_pairs).alias("_p")).select("_p.a", "_p.b")
-        star = sized.where(
-            (F.col("_cnt") > cap) & (F.col("_m.id") != F.col("_anchor.id"))
-        ).select(F.col("_anchor").alias("a"), F.col("_m").alias("b"))
-        pairs = small.unionByName(star)
     # a.<c> / b.<c>: a column of a join side, or a field of a pair member
     return pairs.select(
         *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in ("id", *carry) for s in "ab"]
@@ -540,7 +551,8 @@ def connected_components(
       labels come back as a local relation built from an Arrow table.
       On the ``dedup_pairs`` benchmark corpus (371 verified pairs) this
       replaces 3 rounds and cuts the ``dd_clusters`` query from 58-59
-      Spark jobs to 20; the sizing of the bound is at its definition.
+      Spark jobs to 20 (17 since the capped :func:`bucket_pairs` reads
+      its input once); the sizing of the bound is at its definition.
     - **Rounds**, over the bound: the 100 TB path. Iterative min-label
       propagation, label(v) <- min(label(v), min over neighbors of
       label(u)), until fixpoint. Plain propagation needs O(component

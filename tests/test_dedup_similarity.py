@@ -347,20 +347,43 @@ def test_pair_ops_run_nondeterministic_kernel_once(spark, docs, emb):
     assert "ExistingRDD" in lsh
 
 
+EDGE_DOCS = [
+    (0, ""), (1, "one"), (2, "   "), (3, "\t\n"),
+    (4, "café naïve 中文 tokens here"),
+    (5, "x " * 500), (6, "a b c"), (7, "a b c d e f g"),
+]
+
+
 def test_minhash_signature_edge_docs(spark):
     """Edge inputs through the signature stage: empty text, single
     token, whitespace-only, unicode, giant repeated token — every doc
     gets a full num_perm-long signature."""
-    rows = [
-        (0, ""), (1, "one"), (2, "   "), (3, "\t\n"),
-        (4, "café naïve 中文 tokens here"),
-        (5, "x " * 500), (6, "a b c"), (7, "a b c d e f g"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
     sig = dedup.minhash_signature_stage(docs, "text", "doc_id", 64, 3)
     got = {r["id"]: list(r["sig"]) for r in sig.collect()}
     assert set(got) == {0, 1, 2, 3, 4, 5, 6, 7}
     assert all(len(v) == 64 and None not in v for v in got.values())
+
+
+def test_minhash_hash_family_pinned(spark):
+    """The signatures and (id, band, bucket) rows of a fixed fixture
+    hash to digests recorded from the per-column ``F.min(F.xxhash64(_h,
+    F.lit(i)))`` / ``F.xxhash64(*sig[b*4:(b+1)*4])`` construction. A
+    changed seed type or band layout changes every bucket, and the
+    cluster ids of dd_clusters would not show it."""
+    import hashlib
+
+    docs = spark.createDataFrame(EDGE_DOCS, "doc_id long, text string")
+    sig = dedup.minhash_signature_stage(docs, "text", "doc_id", 64, 3)
+    banded = dedup._minhash_bands(sig, 64, 16)
+    assert sig.schema.simpleString() == "struct<id:bigint,sig:array<bigint>>"
+    assert banded.schema.simpleString() == "struct<id:bigint,band:int,bucket:bigint>"
+    sigs = sorted((r.id, list(r.sig)) for r in sig.collect())
+    bands = sorted(tuple(r) for r in banded.collect())
+    assert len(sigs) == 8 and len(bands) == 8 * 16
+    digest = lambda rows: hashlib.sha256(repr(rows).encode()).hexdigest()
+    assert digest(sigs) == "b0bb484643886871e7c96811ec9b8ef0d8644a90d9bec04a402058436aff3646"
+    assert digest(bands) == "96ef6c528c90846fc33de66964de4b282822bb3f985d50ec377ae6ccab474002"
 
 
 def test_bucket_pairs_randomized_equivalence(spark):
@@ -397,6 +420,48 @@ def test_bucket_pairs_randomized_equivalence(spark):
             for r in dedup.bucket_pairs(rel, ("band", "bucket"), cap, carry=("w",)).collect()
         )
         assert got == expect, f"cap={cap}"
+
+
+@pytest.mark.parametrize("materialize", ["persist", "localCheckpoint"])
+def test_bucket_pairs_capped_over_materialized_input(spark, materialize):
+    """Capped bucket_pairs over a persisted or checkpointed input with
+    two carry columns, where every band holds buckets at, under and
+    over the cap: all pairs under the cap, the min-id star above it,
+    each carry beside its own id."""
+    import itertools
+    import random
+
+    rng = random.Random(23)
+    cap = 5
+    rows = []
+    for band in range(3):
+        sizes = [0, 1, 2, cap, cap + 1, 9, 14]
+        rng.shuffle(sizes)
+        for bucket, size in enumerate(sizes):
+            rows.extend(
+                (i, band, bucket * 7919 - 3, i * 31 % 17, f"t{i % 5}")
+                for i in rng.sample(range(60), size)
+            )
+    rel = spark.createDataFrame(rows, "id long, band int, bucket long, w long, t string")
+    rel = rel.persist() if materialize == "persist" else rel.localCheckpoint(eager=True)
+    carry = {i: (w, t) for i, _, _, w, t in rows}
+    by_bucket: dict = {}
+    for i, band, bucket, _, _ in rows:
+        by_bucket.setdefault((band, bucket), []).append(i)
+    expect = []
+    for ids in by_bucket.values():
+        ids = sorted(ids)
+        if len(ids) <= cap:
+            expect += itertools.combinations(ids, 2)
+        else:
+            expect += [(ids[0], m) for m in ids[1:]]
+    expect = sorted((a, b, *carry[a], *carry[b]) for a, b in expect)
+    got = sorted(
+        (r.id_a, r.id_b, r.w_a, r.t_a, r.w_b, r.t_b)
+        for r in dedup.bucket_pairs(rel, ("band", "bucket"), cap, carry=("w", "t")).collect()
+    )
+    assert got == expect
+    rel.unpersist()
 
 
 def test_bucket_pairs_degenerate_bucket_bounded(spark):

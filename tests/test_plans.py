@@ -1,6 +1,8 @@
 """Plan-quality assertions: the optimizations we rely on at 100 TB must
 actually appear in the physical plan (SURVEY.md section 4)."""
 
+import re
+
 import pytest
 
 from beagle_spark import relational as R
@@ -14,6 +16,11 @@ def plan_of(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def final_plan_of(df) -> str:
+    """The executed (AQE final) physical plan of a DataFrame that ran."""
+    return df._jdf.queryExecution().executedPlan().executedPlan().toString()
 
 
 def test_q1_filter_pushdown_and_pruning(spark):
@@ -109,3 +116,40 @@ def test_partition_pruning(spark, tmp_path):
     # the partition filter must reach the scan: only one partition read
     assert "PartitionFilters" in plan and "event_type" in plan.split("PartitionFilters")[1][:200]
     assert q.count() == ev.where(F.col("event_type") == "click").count()
+
+
+def test_capped_bucket_pairs_one_branch_over_cached_input(spark):
+    """AQE reuses no exchange across two branches that read a persisted
+    relation, so each branch would run the input stage again. The
+    capped bucket_pairs reads its input once: one Window and no Union
+    in the executed plan over a persisted aggregated input, and the
+    MinHash candidate path over a persisted shingle relation computes
+    its signatures behind one Exchange on id."""
+    from pyspark.sql import functions as F
+
+    from beagle_spark.ops import dedup
+
+    rel = (
+        spark.range(3000)
+        .groupBy((F.col("id") % 600).alias("id"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select("id", (F.col("id") % 4).alias("band"), (F.col("id") % 90).alias("bucket"))
+        .persist()
+    )
+    pairs = dedup.bucket_pairs(rel, ("band", "bucket"), cap=3)
+    assert pairs.collect()
+    plan = final_plan_of(pairs)
+    assert len(re.findall(r"\bWindow \[", plan)) == 1
+    assert "Union" not in plan
+    rel.unpersist()
+
+    docs = spark.createDataFrame(
+        [(i, f"w{i % 7} shared words of every doc and some more {i % 3}") for i in range(40)],
+        "doc_id long, text string",
+    )
+    shingled = dedup.shingle_docs(docs).persist()
+    cands = dedup.minhash_lsh_candidates(docs, shingled=shingled, bucket_cap=5)
+    assert cands.collect()
+    plan = final_plan_of(cands)
+    assert len(re.findall(r"Exchange hashpartitioning\(id#", plan)) == 1
+    shingled.unpersist()

@@ -50,9 +50,10 @@ def build(name: str, spark):
 
     if name == "_lsh_verify_pipeline":
         # minhash_lsh_verified minus the eager checkpoint: candidates +
-        # exact-verify joins (the part whose plan matters)
+        # exact-verify joins (the part whose plan matters) over the
+        # persisted shingle relation, as the operator runs them
         docs = _docs_tasks(spark, SF_DIR, _JVM_GRAIN)
-        shingled = dedup.shingle_docs(docs)
+        shingled = dedup.shingle_docs(docs).persist()
         cands = dedup.minhash_lsh_candidates(
             docs, shingled=shingled, bucket_cap=1000
         ).select("id_a", "id_b")
