@@ -23,10 +23,13 @@ Scale notes (100 TB design):
 - dictionary compile is driver-only; executors receive the compiled,
   prefilter-indexed program via SparkContext.broadcast (one copy per
   executor, not per task).
-- per-doc cost is bounded by the presearcher-style candidate pruning
-  (FieldProgram.candidates) — O(distinct doc tokens x postings hit),
-  matching only candidate queries, mirroring Lucene Monitor's scaling
-  trick (README.md:183-184 floor behavior).
+- per-doc cost does not grow with the number of exact phrases: they
+  are one trie walk over the batch's tokens (`FieldProgram.walk`,
+  O(tokens x trie depth x log keys)); sloppy and ordered phrases go
+  through the presearcher-style counter prefilter
+  (`FieldProgram.candidates`, O(distinct doc tokens x postings hit)),
+  which verifies only candidate queries, mirroring Lucene Monitor's
+  scaling trick (README.md:183-184 floor behavior).
 - the UDF is stateless => Catalyst can pipeline it after pushed-down
   filters; no shuffle is introduced by annotation itself.
 - partition sizing: keep >= ~500 docs per task (the Python-UDF analog

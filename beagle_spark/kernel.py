@@ -1,8 +1,14 @@
 """The one Python-kernel boundary: every column kernel of the package
 (the phrase and Lucene annotators, the cosine, hyperplane-bucket and
-IVF kernels, SimHash) is an iterator `arrow_udf` built by
-:func:`arrow_kernel`. Workers see `pyarrow` arrays in and out; no
-pandas layer sits between Spark's Arrow batches and the kernel.
+IVF kernels, SimHash, media features) is an iterator `arrow_udf`
+built by :func:`arrow_kernel`. Workers see `pyarrow` arrays in and out;
+no pandas layer sits between Spark's Arrow batches and the kernel.
+
+The phrase and Lucene annotators return ready arrays built from
+buffers, so their workers never load pandas. The cosine,
+hyperplane-bucket, IVF-cell, SimHash and media-feature kernels return
+lists or NumPy arrays that `_apply` converts with `pa.array`, which
+loads pandas on a worker's first call.
 """
 
 from __future__ import annotations

@@ -22,38 +22,45 @@ case-sensitive and folded when folding, never split or stemmed); a
 `field:` prefix is read and dropped; boosts are dropped.
 
 Engine design: the annotator keeps only what is Lucene-specific, the
-query language and the boolean layer; every leaf decision the phrase
-matcher already makes is the phrase matcher's. A query string parses
-to a small AST whose leaves are
-  - `TermQ`, a key test on the document's token index;
-  - `RegexpQ`, a full match over the distinct tokens (a wildcard is
-    translated to its regexp once, at parse time);
-  - `RangeQ`, a lexicographic test over the distinct tokens;
+query language and the boolean layer; every leaf is matched by the
+phrase annotator's own program. A query string parses to a small AST
+whose leaves are
+  - `TermQ`, one analyzed term;
+  - `RegexpQ`, a full match of a token (a wildcard is translated to
+    its regexp once, at parse time);
+  - `RangeQ`, a lexicographic bound test of a token;
   - `matcher.core.CompiledQuery` for a phrase of two or more terms and
-    for a fuzzy term, matched by `find_matches`, the phrase
-    annotator's own rule (a one-term phrase is a `TermQ`).
-`compile_lucene_dictionary` gives the distinct analysis configs and,
-per stored query in dictionary order, `(config index, AST, match)`
-with the match record resolved once. The matcher analyzes a document
-once per config and returns a copy of `match` for each query whose AST
-matches. The same AST compiles to a Spark SQL boolean Column over a
-token-array column (`to_spark_predicate`) for queries without phrase
-or fuzzy leaves: pure JVM, whole-stage-codegen'able, the Spark-first
-fast path.
+    for a fuzzy term (a one-term phrase is a `TermQ`).
+`compile_lucene_dictionary` compiles a dictionary to `CompiledQueries`:
+a phrase-compiler `CompiledDictionary` of leaves, with each distinct
+leaf stored once per analysis config (a `TermQ` is a one-term exact
+phrase, a phrase or fuzzy term goes in as parsed, and a regexp or range
+is a token test, `FieldProgram.tests`), and per stored query its tree,
+the AST with each leaf replaced by the leaf's emission id, and its
+match record. A batch of documents costs one `matcher.compile._hits`
+call (each config analyzes the batch once and each leaf is matched
+once, however many queries hold it), then a few int operations per
+tree node: each leaf's rows are the bits of one int. The same AST
+compiles to a Spark SQL boolean Column over a token-array column
+(`to_spark_predicate`) for queries without phrase or fuzzy leaves:
+pure JVM, whole-stage-codegen'able, the Spark-first fast path.
 """
 
 from __future__ import annotations
 
 import logging
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Optional
 
+import numpy as np
+import pyarrow as pa
 import regex as re
 
-from .analysis import TextBatch, analyze, analyze_batch, normalize
-from .matcher.compile import _conf_for, _entries
-from .matcher.core import CompiledQuery, build_token_index, find_matches
-from .schema import QUERY_MATCHES_TYPE, DictionaryEntry, norm_keys
+from .analysis import TextBatch, analyze, normalize
+from .matcher.compile import (CompiledDictionary, FieldProgram, _conf_for, _emission_columns,
+                              _entries, _hits, _int_array, _list_column, _string_array)
+from .matcher.core import CompiledQuery
+from .schema import QUERY_MATCHES_ARROW_TYPE, QUERY_MATCHES_TYPE, DictionaryEntry, norm_keys
 
 logger = logging.getLogger(__name__)
 
@@ -76,6 +83,9 @@ class RegexpQ:
     def __post_init__(self):
         object.__setattr__(self, "rx", re.compile(self.pattern))
 
+    def __call__(self, token: str) -> bool:
+        return self.rx.fullmatch(token) is not None
+
 
 @dataclass(frozen=True)
 class RangeQ:
@@ -86,6 +96,11 @@ class RangeQ:
     upper: Optional[str]
     incl_lower: bool = True
     incl_upper: bool = True
+
+    def __call__(self, token: str) -> bool:
+        lo, hi = self.lower, self.upper
+        return ((lo is None or token > lo or self.incl_lower and token == lo)
+                and (hi is None or token < hi or self.incl_upper and token == hi))
 
 
 @dataclass(frozen=True)
@@ -283,46 +298,6 @@ def parse_query(query_string: str, conf) -> BoolQ | TermQ | RegexpQ | RangeQ | C
 
 
 # ---------------------------------------------------------------------------
-# Local evaluation over an analyzed token list
-# ---------------------------------------------------------------------------
-def _in_range(t: str, node: "RangeQ") -> bool:
-    if node.lower is not None:
-        if t < node.lower or (not node.incl_lower and t == node.lower):
-            return False
-    if node.upper is not None:
-        if t > node.upper or (not node.incl_upper and t == node.upper):
-            return False
-    return True
-
-
-def eval_query(node, tokens, index: dict) -> bool:
-    """Boolean match of `node` against one document's analyzed `tokens`
-    and their index (`matcher.core.build_token_index`: token -> sorted
-    positions, the same per-document index the phrase matcher probes).
-    Term-level nodes read its keys; a phrase or fuzzy leaf is the phrase
-    matcher's own query and is matched by `find_matches`."""
-    if isinstance(node, TermQ):
-        return node.term in index
-    if isinstance(node, CompiledQuery):
-        return bool(find_matches(tokens, node, index))
-    if isinstance(node, RegexpQ):
-        return any(node.rx.fullmatch(t) for t in index)
-    if isinstance(node, RangeQ):
-        return any(_in_range(t, node) for t in index)
-    if isinstance(node, BoolQ):
-        for m in node.must_not:
-            if eval_query(m, tokens, index):
-                return False
-        for m in node.must:
-            if not eval_query(m, tokens, index):
-                return False
-        if node.should and not node.must:
-            return any(eval_query(s, tokens, index) for s in node.should)
-        return bool(node.must)
-    raise TypeError(f"unknown node {node!r}")
-
-
-# ---------------------------------------------------------------------------
 # Spark Column compilation (no phrase or fuzzy leaf): pure JVM predicate
 # ---------------------------------------------------------------------------
 def to_spark_predicate(node, tokens_col):
@@ -367,24 +342,115 @@ def to_spark_predicate(node, tokens_col):
 
 
 # ---------------------------------------------------------------------------
+# The stored-query back end: trees over the leaves of a phrase program
+# ---------------------------------------------------------------------------
+def _map_leaves(node, fn):
+    """``node`` with each leaf replaced by ``fn(leaf)``."""
+    if isinstance(node, BoolQ):
+        return BoolQ(*(tuple(_map_leaves(c, fn) for c in clauses)
+                       for clauses in (node.must, node.should, node.must_not)))
+    return fn(node)
+
+
+def _eval(tree, bits: list) -> int:
+    """The rows that ``tree`` matches, as the bits of an int, where
+    ``bits[leaf]`` holds the rows of each leaf: a level's must_not
+    clauses exclude, its must clauses are all required, its should
+    clauses count only when it has no must clause, and a level with
+    neither (a pure negative) matches nothing."""
+    if not isinstance(tree, BoolQ):
+        return bits[tree]
+    out = -1 if tree.must else 0  # -1 has every bit set
+    for m in tree.must:
+        out &= _eval(m, bits)
+    for m in () if tree.must else tree.should:
+        out |= _eval(m, bits)
+    for m in tree.must_not if out else ():
+        out &= ~_eval(m, bits)
+    return out
+
+
+@dataclass
+class CompiledQueries:
+    """A compiled query-string dictionary (see the module docstring):
+    ``leaves``, per stored query in dictionary order its tree in
+    ``trees`` and its ``{text, type, dict_entry_id, meta}`` record in
+    ``matches``, and the records as the Arrow `text`, `type`,
+    `dict_entry_id` and `meta` columns that the batch function takes
+    rows from."""
+
+    leaves: CompiledDictionary
+    trees: list
+    matches: list
+    columns: tuple = field(init=False, repr=False, compare=False)
+
+    def __post_init__(self):
+        self.columns = (_string_array([m["text"] for m in self.matches]), *_emission_columns(
+            [(m["dict_entry_id"], m["type"], m["meta"]) for m in self.matches]))
+
+
+def _query_hits(batch: TextBatch, cq: CompiledQueries) -> tuple:
+    """(row, query index) arrays of every stored query that matches a
+    row of ``batch``, by row, then in dictionary order: one `_hits` call
+    gives every leaf's hits, the rows x leaves hit mask packs each
+    leaf's rows into the bits of an int, and each tree is evaluated
+    once over those ints."""
+    row, eid, _, _ = _hits(batch, cq.leaves, False)
+    mask = np.zeros((len(cq.leaves.emissions), batch.n), dtype=bool)
+    mask[eid, row] = True
+    bits = [int.from_bytes(b, "little") for b in np.packbits(mask, axis=1, bitorder="little")]
+    size = (batch.n + 7) // 8
+    found = b"".join(_eval(t, bits).to_bytes(size, "little") for t in cq.trees)
+    matched = np.unpackbits(np.frombuffer(found, np.uint8).reshape(len(cq.trees), size),
+                            axis=1, count=batch.n, bitorder="little")
+    return np.nonzero(matched.T)
+
+
+def match_queries(texts, cq: CompiledQueries) -> pa.Array:
+    """The query-string annotator's batch function: the `array<struct>`
+    query-match column of an Arrow batch of texts, one row per text
+    (null and blank text give `[]`), of exactly
+    ``QUERY_MATCHES_ARROW_TYPE``, taken by query index from
+    ``cq.columns``."""
+    batch = TextBatch.from_arrow(texts)
+    row, query = _query_hits(batch, cq)
+    take = _int_array(query)
+    return _list_column([c.take(take) for c in cq.columns], row, batch.n,
+                        QUERY_MATCHES_ARROW_TYPE)
+
+
+# ---------------------------------------------------------------------------
 # Public API (parity with lucene_alpha/annotator)
 # ---------------------------------------------------------------------------
-def compile_lucene_dictionary(dictionary, opts: dict | None = None):
-    """`(configs, queries)`: the distinct analysis configs in first-seen
-    order, and per stored query in dictionary order `(config index,
-    AST, match)`, where `match` is the `{text, type, dict_entry_id,
-    meta}` record it emits, its type already resolved (the entry's,
-    else the dictionary default). Entries are read by the phrase
-    compiler's front end (`matcher.compile._entries`: ids, failure
-    isolation) and analyzed under the same per-entry config; an entry
-    whose query does not parse is logged and dropped
+def compile_lucene_dictionary(dictionary, opts: dict | None = None) -> CompiledQueries:
+    """The `CompiledQueries` of ``dictionary``: its leaves per config,
+    and per stored query in dictionary order its tree and its `{text,
+    type, dict_entry_id, meta}` match record, the type already resolved
+    (the entry's, else the dictionary default). Entries are read by the
+    phrase compiler's front end (`matcher.compile._entries`: ids,
+    failure isolation) and analyzed under the same per-entry config; an
+    entry whose query does not parse is logged and dropped
     (lucene_alpha.clj:41-43)."""
     opts = norm_keys(opts)
     type_name = opts.pop("type_name", None) or "QUERY"
     defaults = DictionaryEntry.from_dict(opts)
     conf_cache: dict = {}
-    conf_index: dict = {}  # config -> its position in `configs`
-    queries = []
+    programs: dict = {}  # config -> its FieldProgram of leaves
+    leaf_ids: dict = {}  # (config, leaf) -> leaf number
+
+    def leaf_id(conf, leaf) -> int:
+        if isinstance(leaf, TermQ):
+            leaf = CompiledQuery(query_id="", terms=(leaf.term,))
+        if (conf, leaf) not in leaf_ids:
+            n = leaf_ids[conf, leaf] = len(leaf_ids)
+            prog = programs.get(conf) or programs.setdefault(conf, FieldProgram(conf=conf))
+            if isinstance(leaf, CompiledQuery):
+                prog.queries.append(replace(leaf, query_id=str(n)))
+            else:
+                prog.tests.append((leaf, (str(n), None, {})))
+        return leaf_ids[conf, leaf]
+
+    trees, matches = [], []
     for query_id, entry in _entries(dictionary):
         try:
             conf = _conf_for(entry, defaults, conf_cache)
@@ -392,61 +458,42 @@ def compile_lucene_dictionary(dictionary, opts: dict | None = None):
         except Exception as e:
             logger.error("Failed to parse query %r: %s", entry.text, e)
             continue
-        match = {
-            "text": entry.text,
-            "type": entry.type if entry.type is not None else type_name,
-            "dict_entry_id": query_id,
-            "meta": entry.meta or {},
-        }
-        queries.append((conf_index.setdefault(conf, len(conf_index)), ast, match))
-    return list(conf_index), queries
-
-
-def _matches(batch: TextBatch, configs, queries) -> list[list[dict]]:
-    """Per row of ``batch``, a copy of `match` for each query whose AST
-    matches; each config analyzes the batch once (`analyze_batch`), and
-    null and blank rows match nothing."""
-    live = ~batch.blank
-    docs = [analyze_batch(batch, conf, live).per_row(batch.n) for conf in configs]
-    out = []
-    for r in range(batch.n):
-        views = [(d[r], build_token_index(d[r])) for d in docs] if live[r] else None
-        out.append([dict(match) for i, ast, match in queries if eval_query(ast, *views[i])]
-                   if views is not None else [])
-    return out
-
-
-def _make_matcher(configs, queries):
-    def annotate(text: str, _opts: dict | None = None) -> list[dict]:
-        if text is None or not text.strip():
-            return []
-        return _matches(TextBatch.from_strings([text]), configs, queries)[0]
-
-    return annotate
+        trees.append(_map_leaves(ast, lambda leaf: leaf_id(conf, leaf)))
+        matches.append({"text": entry.text, "type": type_name if entry.type is None else entry.type,
+                        "dict_entry_id": query_id, "meta": entry.meta or {}})
+    for prog in programs.values():
+        prog.finalize()
+    leaves = CompiledDictionary(list(programs.values()))
+    # a leaf's emission carries its leaf number as its entry id
+    eids = {int(e[0]): i for i, e in enumerate(leaves.emissions)}
+    return CompiledQueries(leaves, [_map_leaves(t, eids.__getitem__) for t in trees], matches)
 
 
 def lucene_annotator(dictionary, opts: dict | None = None):
     """Local API parity (lucene_alpha.clj:57-66): fn(text) -> matches
-    with {text: query-string, type, dict_entry_id, meta} — no offsets."""
-    compiled = compile_lucene_dictionary(dictionary, opts)
-    annotate = _make_matcher(*compiled)
-    annotate.compiled = compiled  # type: ignore[attr-defined]
+    with {text: query-string, type, dict_entry_id, meta} — no offsets;
+    the one-row case of `match_queries`."""
+    cq = compile_lucene_dictionary(dictionary, opts)
+
+    def annotate(text: str, _opts: dict | None = None) -> list[dict]:
+        if text is None or not text.strip():
+            return []
+        _, query = _query_hits(TextBatch.from_strings([text]), cq)
+        return [dict(cq.matches[q]) for q in query.tolist()]
+
+    annotate.compiled = cq  # type: ignore[attr-defined]
     return annotate
 
 
 def lucene_annotate_df(df, dictionary, text_col: str = "text", opts: dict | None = None,
                        output_col: str = "query_matches"):
     """DataFrame operator: array<struct> of boolean query matches per row.
-    Same broadcast + `kernel.arrow_kernel` as the phrase annotator; each
-    Arrow batch is analyzed once per config."""
+    Same broadcast + `kernel.arrow_kernel` as the phrase annotator; the
+    batch function is `match_queries`."""
     from pyspark.sql import functions as F
 
     from .kernel import arrow_kernel
 
-    # broadcast the picklable (configs, queries) pair; the batch function
-    # analyzes each Arrow batch once per config
     bc = df.sparkSession.sparkContext.broadcast(compile_lucene_dictionary(dictionary, opts))
-    udf = arrow_kernel(
-        lambda: lambda texts: _matches(TextBatch.from_arrow(texts), *bc.value),
-        QUERY_MATCHES_TYPE)
+    udf = arrow_kernel(lambda: lambda texts: match_queries(texts, bc.value), QUERY_MATCHES_TYPE)
     return df.withColumn(output_col, udf(F.col(text_col)))

@@ -12,14 +12,18 @@ is a plain picklable object, broadcast once to executors.
 
 Matching a document then costs:
   tokenize once per distinct config (O2)
+  + one trie walk for the exact phrases
   + posting-list counter sweep over distinct tokens (candidate pruning)
   + full positional verification only for candidate queries.
+The query-string annotator (`lucene_query`) compiles its leaves to the
+same programs, with its regexps and ranges as token tests.
 """
 
 from __future__ import annotations
 
 import logging
 import uuid
+from collections import Counter
 from dataclasses import dataclass, field, replace
 from itertools import chain, repeat
 from operator import attrgetter
@@ -27,15 +31,8 @@ from operator import attrgetter
 import numpy as np
 import pyarrow as pa
 
-from ..analysis import (
-    DEFAULT_CONF,
-    AnalysisConfig,
-    Scan,
-    TextBatch,
-    Tokens,
-    analyze_batch,
-    merge_config,
-)
+from ..analysis import (DEFAULT_CONF, AnalysisConfig, Scan, TextBatch, Tokens, analyze_batch,
+                        merge_config)
 from ..schema import ANNOTATION_ARROW_TYPE, DictionaryEntry
 from .core import CompiledQuery, build_token_index, find_matches, normalize_slop
 
@@ -45,7 +42,8 @@ logger = logging.getLogger(__name__)
 @dataclass
 class FieldProgram:
     """All queries sharing one analysis config (== one Lucene field,
-    monitor.clj:48-59), with two complementary pruning structures:
+    monitor.clj:48-59), with two complementary pruning structures and
+    a list of token tests:
 
     - a prefix trie over term ids of the slop-0 non-fuzzy phrase
       queries (the overwhelming majority of real dictionaries).
@@ -64,6 +62,10 @@ class FieldProgram:
     - postings/required counter prefilter for the general queries
       (slop/ordered), Lucene-Monitor-style; fuzzy queries bypass it
       (`always`) since exact term presence can't prune them.
+    - ``tests``: (token predicate, emission) pairs, the query-string
+      annotator's regexp and range leaves (phrase dictionaries have
+      none). A test is checked once per distinct token of a batch
+      (`token_hits`).
     """
 
     conf: AnalysisConfig
@@ -79,8 +81,9 @@ class FieldProgram:
     postings: dict = field(default_factory=dict)
     required: list = field(default_factory=list)
     always: list = field(default_factory=list)
+    tests: list = field(default_factory=list)
     # global id of this program's first emission: exact phrases first,
-    # then the general queries (set by `CompiledDictionary`)
+    # then the general queries, then the tests (set by `CompiledDictionary`)
     eid_base: int = field(default=0, init=False)
 
     @property
@@ -197,12 +200,9 @@ class FieldProgram:
             one, several = emit
             if several is not None:
                 off, ids = several
-                first = off[node]
-                count = off[node + 1] - first
-                total = int(count.sum())
-                shift = np.repeat(first - (np.cumsum(count) - count), count)
-                found.append((np.repeat(pos, count), np.full(total, level + 1),
-                              ids[shift + np.arange(total)]))
+                count = off[node + 1] - off[node]
+                found.append((np.repeat(pos, count), np.full(int(count.sum()), level + 1),
+                              ids[_slices(off[node], count)]))
             else:
                 eid = one[node]
                 ends = (eid >= 0).nonzero()[0]
@@ -224,16 +224,9 @@ class FieldProgram:
     def candidates(self, token_texts) -> list[int]:
         """Counter-prefilter candidates among the general (slop/ordered)
         queries; fuzzy `always` entries appended."""
-        counts: dict[int, int] = {}
-        postings = self.postings
-        for tok in token_texts:
-            for qi in postings.get(tok, ()):
-                counts[qi] = counts.get(qi, 0) + 1
-        req = self.required
-        out = [qi for qi, c in counts.items() if c == req[qi]]
-        if self.always:
-            out.extend(self.always)
-        return out
+        postings, req = self.postings, self.required
+        counts = Counter(qi for tok in token_texts for qi in postings.get(tok, ()))
+        return [qi for qi, c in counts.items() if c == req[qi]] + self.always
 
     # NOTE: we deliberately ship the derived pruning structures in the
     # broadcast rather than rebuilding them per worker — measured: the
@@ -253,21 +246,39 @@ class FieldProgram:
     def verify(self, toks: Scan, n_rows: int) -> tuple:
         """General-query hits of a batch, row by row: the counter
         prefilter, then `find_matches` for each candidate on the row's
-        `Tokens`. (row, emission id, begin, end) lists, per row in
+        `Tokens`. (row, emission id, begin, end) arrays, per row in
         candidate order."""
-        out: tuple = ([], [], [], [])
+        out = []
         base = self.eid_base + self.n_exact
         for r, tokens in enumerate(toks.per_row(n_rows)):
-            if not tokens:
-                continue
-            index = build_token_index(tokens)
-            for qi in self.candidates(index.keys()):
-                for b, e in find_matches(tokens, self.queries[qi], index):
-                    out[0].append(r)
-                    out[1].append(base + qi)
-                    out[2].append(b)
-                    out[3].append(e)
-        return out
+            if tokens:
+                index = build_token_index(tokens)
+                out += [(r, base + qi, b, e) for qi in self.candidates(index.keys())
+                        for b, e in find_matches(tokens, self.queries[qi], index)]
+        return tuple(np.array(out, dtype=np.int64).reshape(-1, 4).T)
+
+    def token_hits(self, toks: Scan) -> tuple:
+        """Token-test hits of a batch: each test is checked once per
+        entry of the batch vocabulary, and each token whose entry passes
+        is a hit with its span. Entries are read through ``toks.code``:
+        the vocabulary may hold filter-emptied strings that no token
+        has. (row, emission id, begin, end) arrays, by test."""
+        vocab = toks.vocab
+        passes = np.fromiter((test(v) for test, _ in self.tests for v in vocab), bool,
+                             len(self.tests) * len(vocab))
+        test, code = np.nonzero(passes.reshape(len(self.tests), len(vocab)))
+        # the tokens of each passing entry: a slice of the tokens by code
+        count = np.bincount(toks.code, minlength=len(vocab))
+        at = np.argsort(toks.code, kind="stable")[_slices((np.cumsum(count) - count)[code],
+                                                          count[code])]
+        eid = np.repeat(test + self.eid_base + self.n_exact + len(self.queries), count[code])
+        return toks.row[at], eid, toks.begin[at], toks.end[at]
+
+
+def _slices(first: np.ndarray, count: np.ndarray) -> np.ndarray:
+    """The indices ``first[i]``, ..., ``first[i] + count[i] - 1`` of
+    every i, concatenated."""
+    return np.repeat(first - (np.cumsum(count) - count), count) + np.arange(count.sum())
 
 
 def _emission(q: CompiledQuery, type_name: str) -> tuple:
@@ -303,7 +314,7 @@ class CompiledDictionary:
         self.emissions = []
         for prog in self.fields:
             prog.eid_base = len(self.emissions)
-            self.emissions += prog.exact_emits + prog.emits
+            self.emissions += prog.exact_emits + prog.emits + [e for _, e in prog.tests]
         self.columns = _emission_columns(self.emissions)
 
     def __getstate__(self):
@@ -315,7 +326,7 @@ class CompiledDictionary:
 
     @property
     def n_queries(self) -> int:
-        return sum(len(f.queries) + f.n_exact for f in self.fields)
+        return sum(len(f.queries) + f.n_exact + len(f.tests) for f in self.fields)
 
 
 def _int_array(values: np.ndarray) -> pa.Array:
@@ -396,12 +407,8 @@ def _conf_for(entry: DictionaryEntry, defaults: DictionaryEntry, cache: dict) ->
     return conf
 
 
-def _compile_entry(
-    entry: DictionaryEntry,
-    query_id: str,
-    defaults: DictionaryEntry,
-    terms: tuple,
-) -> CompiledQuery | None:
+def _compile_entry(entry: DictionaryEntry, query_id: str, defaults: DictionaryEntry,
+                   terms: tuple) -> CompiledQuery | None:
     if not terms:
         # 0-token entries, and entries without text, are discarded
         # with a warning (phrases.clj:204)
@@ -429,16 +436,9 @@ def _compile_entry(
         # "_in-order" flag kept in metadata (phrases.clj:192)
         meta["_in-order"] = "true"
 
-    return CompiledQuery(
-        query_id=query_id,
-        terms=terms,
-        slop=slop,
-        ordered=bool(ordered),
-        fuzzy=fuzzy,
-        fuzziness=entry.fuzziness if entry.fuzziness is not None else 1,
-        type=entry.type,
-        meta=meta,
-    )
+    return CompiledQuery(query_id=query_id, terms=terms, slop=slop, ordered=bool(ordered),
+                         fuzzy=fuzzy, type=entry.type, meta=meta,
+                         fuzziness=entry.fuzziness if entry.fuzziness is not None else 1)
 
 
 def _entry_terms(pending: list) -> list:
@@ -467,12 +467,8 @@ def _entry_terms(pending: list) -> list:
     return terms
 
 
-def compile_dictionary(
-    dictionary,
-    default_conf: dict | None = None,
-    type_name: str = "PHRASE",
-    merge_annotations: bool = False,
-) -> CompiledDictionary:
+def compile_dictionary(dictionary, default_conf: dict | None = None, type_name: str = "PHRASE",
+                       merge_annotations: bool = False) -> CompiledDictionary:
     """dictionary: iterable of dicts or DictionaryEntry; `default_conf`
     holds the highlighter options, defaults for the entry fields they
     name. Mirrors dict-entries->monitor-queries (phrases.clj:206-215):
@@ -515,18 +511,17 @@ def compile_dictionary(
     programs = list(by_conf.values())
     for p in programs:
         p.finalize(type_name)
-    return CompiledDictionary(
-        fields=programs, type_name=type_name, merge_annotations=merge_annotations
-    )
+    return CompiledDictionary(fields=programs, type_name=type_name,
+                              merge_annotations=merge_annotations)
 
 
 def _hits(batch: TextBatch, cd: CompiledDictionary, merge: bool | None) -> tuple:
     """Every annotation of ``batch`` as (row, emission id, begin, end)
     arrays, char offsets into the row's text, in the reference's
     per-document order: per row, per program, the exact-phrase hits (by
-    phrase length, then position) before the general-query hits. Null
-    and blank rows get none. `merge` overrides the compile-time
-    merge_annotations flag."""
+    phrase length, then position) before the general-query hits and the
+    token-test hits. Null and blank rows get none. `merge` overrides the
+    compile-time merge_annotations flag."""
     live = ~batch.blank
     scans: dict = {}
     parts = []
@@ -539,7 +534,9 @@ def _hits(batch: TextBatch, cd: CompiledDictionary, merge: bool | None) -> tuple
         parts.append((toks.row[pos], eid + prog.eid_base if prog.eid_base else eid,
                       toks.begin[pos], toks.end[pos + length - 1]))
         if prog.general or prog.always:
-            parts.append(tuple(np.array(c, dtype=np.int64) for c in prog.verify(toks, batch.n)))
+            parts.append(prog.verify(toks, batch.n))
+        if prog.tests:
+            parts.append(prog.token_hits(toks))
     if not parts:
         empty = np.empty(0, dtype=np.int64)
         return empty, empty, empty, empty
@@ -605,14 +602,20 @@ def _column(batch: TextBatch, cd: CompiledDictionary, row, eid, begin, end) -> p
                                        pa.py_buffer(batch.data[src]))
     take = _int_array(eid)
     types, ids, metas = (col.take(take) for col in cd.columns)
-    element = ANNOTATION_ARROW_TYPE.value_type
+    return _list_column([text, types, ids, metas, _int_array(begin), _int_array(end)],
+                        row, batch.n, ANNOTATION_ARROW_TYPE)
+
+
+def _list_column(columns: list, row: np.ndarray, n_rows: int, list_type: pa.DataType) -> pa.Array:
+    """The ``list_type`` column of ``n_rows`` rows over struct values
+    ``columns``, which are ordered by ``row``: row r lists the values
+    whose ``row`` is r."""
+    element = list_type.value_type
     values = pa.StructArray.from_arrays(
-        [text, types, ids, metas, _int_array(begin), _int_array(end)],
-        fields=[element.field(i) for i in range(element.num_fields)],
-    )
-    offsets = np.zeros(batch.n + 1, dtype=np.int32)
-    np.cumsum(np.bincount(row, minlength=batch.n), out=offsets[1:])
-    return pa.ListArray.from_arrays(_int_array(offsets), values, type=ANNOTATION_ARROW_TYPE)
+        columns, fields=[element.field(i) for i in range(element.num_fields)])
+    offsets = np.zeros(n_rows + 1, dtype=np.int32)
+    np.cumsum(np.bincount(row, minlength=n_rows), out=offsets[1:])
+    return pa.ListArray.from_arrays(_int_array(offsets), values, type=list_type)
 
 
 def match_text(text: str, cd: CompiledDictionary, merge: bool | None = None) -> list[dict]:
@@ -625,18 +628,9 @@ def match_text(text: str, cd: CompiledDictionary, merge: bool | None = None) -> 
     if text is None or not text.strip():
         return []
     _, eid, begin, end = _hits(TextBatch.from_strings([text]), cd, merge)
-    out = []
-    for e, b, end_ in zip(eid.tolist(), begin.tolist(), end.tolist()):
-        entry_id, qtype, meta = cd.emissions[e]
-        out.append({
-            "text": text[b:end_],
-            "type": qtype,
-            "dict_entry_id": entry_id,
-            "meta": meta,
-            "begin_offset": b,
-            "end_offset": end_,
-        })
-    return out
+    return [{"text": text[b:e], "type": cd.emissions[i][1], "dict_entry_id": cd.emissions[i][0],
+             "meta": cd.emissions[i][2], "begin_offset": b, "end_offset": e}
+            for i, b, e in zip(eid.tolist(), begin.tolist(), end.tolist())]
 
 
 # ---------------------------------------------------------------------------

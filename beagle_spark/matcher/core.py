@@ -47,7 +47,7 @@ class CompiledQuery:
     fuzzy: bool = False
     fuzziness: int = 1
     type: Optional[str] = None
-    meta: dict = field(default_factory=dict)
+    meta: dict = field(default_factory=dict, hash=False)
 
 
 def normalize_slop(slop) -> int:

@@ -62,6 +62,7 @@ ANNOTATION_ARROW_TYPE = to_arrow_type(ANNOTATIONS_TYPE)
 # A query-string match is the same record without offsets
 # (lucene_alpha.clj:18-28).
 QUERY_MATCHES_TYPE = ArrayType(StructType(ANNOTATION_STRUCT.fields[:4]), containsNull=False)
+QUERY_MATCHES_ARROW_TYPE = to_arrow_type(QUERY_MATCHES_TYPE)
 
 def norm_key(k) -> str:
     """The one spelling rule for option and entry keys: the reference's

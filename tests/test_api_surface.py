@@ -158,3 +158,41 @@ print('pandas' in sys.modules)
         cwd=pathlib.Path(__file__).resolve().parents[1],
     )
     assert out.stdout.strip() == "False"
+
+
+def test_lucene_worker_loads_no_pandas():
+    """The query-string annotator's batch function builds its
+    query-match column from buffers too, so a worker that compiles a
+    query-string dictionary and annotates a batch never loads pandas."""
+    import pathlib
+    import subprocess
+    import sys
+
+    script = """
+import sys
+import numpy as np
+import pyarrow as pa
+from beagle_spark.kernel import _apply
+from beagle_spark.lucene_query import compile_lucene_dictionary, match_queries
+from beagle_spark.schema import QUERY_MATCHES_ARROW_TYPE
+cq = compile_lucene_dictionary([
+    {"text": "table AND scan", "id": "q", "meta": {"k": "v"}},
+    {"text": '"hash join"~1 OR stra*', "id": "r", "case-sensitive?": False},
+    {"text": "[a TO c] -vector", "id": "s"}])
+data = "a Table scan, then a hash  join; straße".encode()
+offsets = np.array([0, 14, len(data), len(data)], dtype=np.int32)
+texts = pa.StringArray.from_buffers(3, pa.py_buffer(offsets), pa.py_buffer(data))
+empty = pa.StringArray.from_buffers(0, pa.py_buffer(np.zeros(1, dtype=np.int32)), pa.py_buffer(b""))
+out = list(_apply([texts, empty], lambda t: match_queries(t, cq), QUERY_MATCHES_ARROW_TYPE))
+assert [len(a) for a in out] == [3, 0] and out[0].type == QUERY_MATCHES_ARROW_TYPE
+assert [[m["dict_entry_id"] for m in r] for r in out[0].to_pylist()] == [["s"], ["r", "s"], []]
+print('pandas' in sys.modules)
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True,
+        text=True,
+        check=True,
+        cwd=pathlib.Path(__file__).resolve().parents[1],
+    )
+    assert out.stdout.strip() == "False"

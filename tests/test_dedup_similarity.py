@@ -273,10 +273,12 @@ def test_lsh_bucket_cap_bounds_identical_doc_blowup(spark):
     assert {(r["id_a"], r["id_b"]) for r in rows} == {(0, i) for i in range(1, 1000)}
 
     # structural guard (bucket_pairs' capped branch): the candidate
-    # path has NO join at all — pairs are generated per (band, bucket)
-    # group from a collect_list'd member array, and oversized buckets
-    # are filtered out before it (they emit star pairs). An oversized
-    # bucket therefore CANNOT reach any quadratic join side.
+    # path has NO join at all — pairs come from the collect_list'd
+    # member array of each group of the one `(*keys, _own)` groupBy;
+    # `_own` is NULL at or under the cap and the member itself over it,
+    # so an oversized bucket's members are groups of one that emit star
+    # pairs. An oversized bucket therefore CANNOT reach any quadratic
+    # join side or a collect buffer larger than the cap.
     plan = cands._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" not in plan
     assert "collect_list" in plan and "array_sort" in plan
@@ -467,11 +469,13 @@ def test_bucket_pairs_capped_over_materialized_input(spark, materialize):
 def test_bucket_pairs_degenerate_bucket_bounded(spark):
     """VERDICT r21 'What's wrong #2': a degenerate bucket (here 10^5
     members in ONE (band,bucket) group, 1000x the cap) must never be
-    collect_list'ed whole. The capped shape filters rows by the windowed
-    per-bucket count BEFORE the aggregate, so the collect buffer is
-    bounded by the cap regardless of bucket size; the oversized
-    bucket's members stream map-side into star pairs. Asserts the pair
-    set, the join-free plan, and the structural guard (the count filter
+    collect_list'ed whole. The capped shape is one groupBy on
+    `(*keys, _own)`, where `_own` is NULL in a bucket whose windowed
+    member count is at or under the cap and the member itself in an
+    oversized one, so the collect buffer is bounded by the cap
+    regardless of bucket size and each oversized member is a group of
+    one that emits its star pair. Asserts the pair set, the join-free
+    plan, and the structural guard (the count test that sets `_own`
     sits below the aggregate)."""
     import time
 
@@ -491,8 +495,8 @@ def test_bucket_pairs_degenerate_bucket_bounded(spark):
     assert got == expect
     plan = pairs._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" not in plan
-    # the collect_list aggregate's input is pre-filtered by the windowed
-    # count (cnt <= cap): the filter must appear BELOW the aggregate
+    # the windowed count test (cnt <= cap) that sets `_own` feeds the
+    # groupBy: it must appear BELOW the collect_list aggregate
     agg_pos = plan.find("collect_list")
     filt_pos = plan.find("<= 100")
     assert agg_pos != -1 and filt_pos != -1 and filt_pos > agg_pos
