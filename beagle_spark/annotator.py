@@ -90,11 +90,6 @@ def highlighter(dictionary, opts: dict | None = None):
 annotator = highlighter
 
 
-def _batch_matcher(cd: CompiledDictionary):
-    """The annotate kernel's batch function: texts -> annotations column."""
-    return lambda texts: match_batch(texts, cd)
-
-
 class Annotator:
     """Spark-facing annotator: compile on the driver, broadcast, annotate
     whole DataFrames (batch or streaming)."""
@@ -120,7 +115,7 @@ class Annotator:
         per partition, not once per batch. Null and blank text give
         `[]`, never null."""
         bc = self._broadcast(spark)
-        return arrow_kernel(lambda: _batch_matcher(bc.value), ANNOTATIONS_TYPE)
+        return arrow_kernel(lambda: lambda texts: match_batch(texts, bc.value), ANNOTATIONS_TYPE)
 
     def annotate_df(
         self,

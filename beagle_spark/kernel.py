@@ -4,55 +4,99 @@ IVF kernels, SimHash, media features) is an iterator `arrow_udf`
 built by :func:`arrow_kernel`. Workers see `pyarrow` arrays in and out;
 no pandas layer sits between Spark's Arrow batches and the kernel.
 
-The phrase and Lucene annotators return ready arrays built from
-buffers, so their workers never load pandas. The cosine,
-hyperplane-bucket, IVF-cell, SimHash and media-feature kernels return
-lists or NumPy arrays that `_apply` converts with `pa.array`, which
-loads pandas on a worker's first call.
+This is also the one module that converts between Arrow and NumPy:
+kernels read primitive inputs with :func:`view` and build their output
+arrays from buffers with :func:`column`, :func:`string_array` and
+:func:`list_column`. In pyarrow 16, `pa.array`, `Array.to_numpy`,
+`np.asarray(array)` and `DataType.to_pandas_dtype` import pandas on a
+process's first call; `Array.from_buffers`, `pa.from_numpy_dtype` and
+`ListArray.from_arrays` do not, so no kernel's worker loads pandas.
 """
 
 from __future__ import annotations
 
 from typing import Callable, Iterator
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import DataType
 
+# the primitive Arrow types a kernel reads, and their NumPy dtypes
+_DTYPES = {pa.from_numpy_dtype(d): d
+           for d in map(np.dtype, "i1 i2 i4 i8 u1 u2 u4 u8 f4 f8".split())}
+
+
+def view(arr: pa.Array) -> np.ndarray:
+    """The values of the primitive array ``arr`` as a read-only NumPy
+    view of its data buffer, from ``arr.offset`` on (a null slot reads
+    whatever its buffer holds)."""
+    dtype = _DTYPES[arr.type]
+    return np.frombuffer(arr.buffers()[1], dtype, len(arr), arr.offset * dtype.itemsize)
+
+
+def _validity(nulls) -> tuple:
+    """(validity buffer, null count) of a boolean NULL mask; no buffer
+    when no row is NULL."""
+    if nulls is None or not nulls.any():
+        return None, 0
+    return pa.py_buffer(np.packbits(~nulls, bitorder="little")), int(nulls.sum())
+
+
+def column(values: np.ndarray, nulls: np.ndarray | None = None) -> pa.Array:
+    """The primitive Arrow array of the NumPy buffer ``values``, of the
+    matching Arrow type. A row is NULL where ``nulls`` is True and, for
+    floating-point values, where the value is NaN: a zero-norm cosine
+    (0/0) is NULL, as Spark's pandas-to-Arrow conversion makes it, so it
+    passes no `>=` threshold and sorts last under `desc`."""
+    values = np.ascontiguousarray(values)
+    if values.dtype.kind == "f":
+        nulls = np.isnan(values) if nulls is None else nulls | np.isnan(values)
+    validity, null_count = _validity(nulls)
+    return pa.Array.from_buffers(pa.from_numpy_dtype(values.dtype), len(values),
+                                 [validity, pa.py_buffer(values)], null_count)
+
+
+def string_array(values: list) -> pa.Array:
+    """An Arrow string array of ``values`` (str or None) built from
+    buffers."""
+    enc = [b"" if v is None else str(v).encode() for v in values]
+    offsets = np.zeros(len(enc) + 1, dtype=np.int32)
+    np.cumsum([len(b) for b in enc], out=offsets[1:])
+    validity, null_count = _validity(np.array([v is None for v in values], dtype=bool))
+    return pa.StringArray.from_buffers(len(enc), pa.py_buffer(offsets), pa.py_buffer(b"".join(enc)),
+                                       validity, null_count)
+
+
+def list_column(columns: list, row: np.ndarray, n_rows: int, list_type: pa.DataType) -> pa.Array:
+    """The ``list_type`` column of ``n_rows`` rows over struct values
+    ``columns``, which are ordered by ``row``: row r lists the values
+    whose ``row`` is r."""
+    values = pa.StructArray.from_arrays(columns, fields=list(list_type.value_type))
+    offsets = np.zeros(n_rows + 1, dtype=np.int32)
+    np.cumsum(np.bincount(row, minlength=n_rows), out=offsets[1:])
+    return pa.ListArray.from_arrays(column(offsets), values, type=list_type)
+
 
 def _apply(batches: Iterator, fn: Callable, arrow_type: pa.DataType) -> Iterator[pa.Array]:
     """Run `fn(*columns)` on every non-empty batch (one `pa.Array`, or a
-    tuple of them for a multi-column kernel). A result that is already a
-    `pa.Array` of exactly `arrow_type` passes through; any other result
-    is built with one `pa.array` of `arrow_type`. An empty batch gives an
-    empty array without calling `fn`. A NaN result is NULL, as Spark's
-    pandas-to-Arrow conversion makes it: a zero-norm cosine (0/0) is
-    NULL, so it passes no `>=` threshold and sorts last under `desc`.
-
-    pyarrow 16 imports pandas on the first `pa.array` call of a process
-    (even an empty one); a kernel whose `fn` returns ready arrays, and
-    its empty batches (`pa.nulls`), never do."""
+    tuple of them for a multi-column kernel) and yield its array of
+    ``arrow_type``. An empty batch gives `pa.nulls(0)` without calling
+    `fn`."""
     for batch in batches:
         cols = batch if isinstance(batch, tuple) else (batch,)
-        if not len(cols[0]):
-            yield pa.nulls(0, type=arrow_type)
-            continue
-        out = fn(*cols)
-        if isinstance(out, pa.Array) and out.type == arrow_type:
-            yield out
-        else:
-            yield pa.array(out, type=arrow_type, from_pandas=True)
+        yield fn(*cols) if len(cols[0]) else pa.nulls(0, type=arrow_type)
 
 
 def arrow_kernel(factory: Callable[[], Callable], return_type: DataType):
     """Column kernel: an iterator `arrow_udf` of `return_type`, applied
     to one or more columns. `factory()` runs once per partition and
-    returns the batch function `fn(*arrays) -> values`: a list or a
-    NumPy array, one value per row, or a ready `pa.Array` of exactly the
-    kernel's Arrow type, which `_apply` passes through; per-partition
-    state such as a broadcast read or a token cache lives in its
-    closure, and a kernel with none passes ``lambda: fn``.
+    returns the batch function `fn(*arrays) -> pa.Array`, one row per
+    input row, of exactly the kernel's Arrow type (built with this
+    module's constructors); per-partition state such as a broadcast
+    read or a token cache lives in its closure, and a kernel with none
+    passes ``lambda: fn``.
 
     Marked NON-DETERMINISTIC. Every kernel is pure, but the mark stops
     the optimizer pushing a filter on the kernel's output below the

@@ -37,7 +37,7 @@ leaf stored once per analysis config (a `TermQ` is a one-term exact
 phrase, a phrase or fuzzy term goes in as parsed, and a regexp or range
 is a token test, `FieldProgram.tests`), and per stored query its tree,
 the AST with each leaf replaced by the leaf's emission id, and its
-match record. A batch of documents costs one `matcher.compile._hits`
+match record. A batch of documents costs one `matcher.compile.hits`
 call (each config analyzes the batch once and each leaf is matched
 once, however many queries hold it), then a few int operations per
 tree node: each leaf's rows are the bits of one int. The same AST
@@ -48,6 +48,7 @@ pure JVM, whole-stage-codegen'able, the Spark-first fast path.
 
 from __future__ import annotations
 
+import functools
 import logging
 from dataclasses import dataclass, field, replace
 from typing import Optional
@@ -55,10 +56,12 @@ from typing import Optional
 import numpy as np
 import pyarrow as pa
 import regex as re
+from pyspark.sql import functions as F
 
 from .analysis import TextBatch, analyze, normalize
-from .matcher.compile import (CompiledDictionary, FieldProgram, _conf_for, _emission_columns,
-                              _entries, _hits, _int_array, _list_column, _string_array)
+from .kernel import arrow_kernel, column, list_column, string_array
+from .matcher.compile import (CompiledDictionary, FieldProgram, conf_for, emission_columns, entries,
+                              hits)
 from .matcher.core import CompiledQuery
 from .schema import QUERY_MATCHES_ARROW_TYPE, QUERY_MATCHES_TYPE, DictionaryEntry, norm_keys
 
@@ -305,8 +308,6 @@ def to_spark_predicate(node, tokens_col):
     terms) to a Column over an array<string> token column:
     array_contains / exists(rlike) / AND/OR/NOT. Stays inside
     whole-stage codegen — no Python in the hot path."""
-    from pyspark.sql import functions as F
-
     if isinstance(node, TermQ):
         return F.array_contains(tokens_col, node.term)
     if isinstance(node, RegexpQ):
@@ -324,8 +325,6 @@ def to_spark_predicate(node, tokens_col):
 
         return F.exists(tokens_col, in_range)
     if isinstance(node, BoolQ):
-        import functools
-
         cond = F.lit(False)
         if node.must:
             cond = functools.reduce(
@@ -385,17 +384,17 @@ class CompiledQueries:
     columns: tuple = field(init=False, repr=False, compare=False)
 
     def __post_init__(self):
-        self.columns = (_string_array([m["text"] for m in self.matches]), *_emission_columns(
+        self.columns = (string_array([m["text"] for m in self.matches]), *emission_columns(
             [(m["dict_entry_id"], m["type"], m["meta"]) for m in self.matches]))
 
 
 def _query_hits(batch: TextBatch, cq: CompiledQueries) -> tuple:
     """(row, query index) arrays of every stored query that matches a
-    row of ``batch``, by row, then in dictionary order: one `_hits` call
+    row of ``batch``, by row, then in dictionary order: one `hits` call
     gives every leaf's hits, the rows x leaves hit mask packs each
     leaf's rows into the bits of an int, and each tree is evaluated
     once over those ints."""
-    row, eid, _, _ = _hits(batch, cq.leaves, False)
+    row, eid, _, _ = hits(batch, cq.leaves, False)
     mask = np.zeros((len(cq.leaves.emissions), batch.n), dtype=bool)
     mask[eid, row] = True
     bits = [int.from_bytes(b, "little") for b in np.packbits(mask, axis=1, bitorder="little")]
@@ -414,9 +413,8 @@ def match_queries(texts, cq: CompiledQueries) -> pa.Array:
     ``cq.columns``."""
     batch = TextBatch.from_arrow(texts)
     row, query = _query_hits(batch, cq)
-    take = _int_array(query)
-    return _list_column([c.take(take) for c in cq.columns], row, batch.n,
-                        QUERY_MATCHES_ARROW_TYPE)
+    take = column(query)
+    return list_column([c.take(take) for c in cq.columns], row, batch.n, QUERY_MATCHES_ARROW_TYPE)
 
 
 # ---------------------------------------------------------------------------
@@ -427,7 +425,7 @@ def compile_lucene_dictionary(dictionary, opts: dict | None = None) -> CompiledQ
     and per stored query in dictionary order its tree and its `{text,
     type, dict_entry_id, meta}` match record, the type already resolved
     (the entry's, else the dictionary default). Entries are read by the
-    phrase compiler's front end (`matcher.compile._entries`: ids,
+    phrase compiler's front end (`matcher.compile.entries`: ids,
     failure isolation) and analyzed under the same per-entry config; an
     entry whose query does not parse is logged and dropped
     (lucene_alpha.clj:41-43)."""
@@ -451,9 +449,9 @@ def compile_lucene_dictionary(dictionary, opts: dict | None = None) -> CompiledQ
         return leaf_ids[conf, leaf]
 
     trees, matches = [], []
-    for query_id, entry in _entries(dictionary):
+    for query_id, entry in entries(dictionary):
         try:
-            conf = _conf_for(entry, defaults, conf_cache)
+            conf = conf_for(entry, defaults, conf_cache)
             ast = parse_query(entry.text or "", conf)
         except Exception as e:
             logger.error("Failed to parse query %r: %s", entry.text, e)
@@ -490,10 +488,6 @@ def lucene_annotate_df(df, dictionary, text_col: str = "text", opts: dict | None
     """DataFrame operator: array<struct> of boolean query matches per row.
     Same broadcast + `kernel.arrow_kernel` as the phrase annotator; the
     batch function is `match_queries`."""
-    from pyspark.sql import functions as F
-
-    from .kernel import arrow_kernel
-
     bc = df.sparkSession.sparkContext.broadcast(compile_lucene_dictionary(dictionary, opts))
     udf = arrow_kernel(lambda: lambda texts: match_queries(texts, bc.value), QUERY_MATCHES_TYPE)
     return df.withColumn(output_col, udf(F.col(text_col)))

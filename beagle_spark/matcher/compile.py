@@ -33,6 +33,7 @@ import pyarrow as pa
 
 from ..analysis import (DEFAULT_CONF, AnalysisConfig, Scan, TextBatch, Tokens, analyze_batch,
                         merge_config)
+from ..kernel import column, list_column, string_array
 from ..schema import ANNOTATION_ARROW_TYPE, DictionaryEntry
 from .core import CompiledQuery, build_token_index, find_matches, normalize_slop
 
@@ -315,7 +316,7 @@ class CompiledDictionary:
         for prog in self.fields:
             prog.eid_base = len(self.emissions)
             self.emissions += prog.exact_emits + prog.emits + [e for _, e in prog.tests]
-        self.columns = _emission_columns(self.emissions)
+        self.columns = emission_columns(self.emissions)
 
     def __getstate__(self):
         return {k: v for k, v in vars(self).items() if k not in ("emissions", "columns")}
@@ -329,41 +330,22 @@ class CompiledDictionary:
         return sum(len(f.queries) + f.n_exact + len(f.tests) for f in self.fields)
 
 
-def _int_array(values: np.ndarray) -> pa.Array:
-    """An Arrow int32 array over a NumPy buffer (`pa.array` would import
-    pandas on its first call)."""
-    values = np.ascontiguousarray(values, dtype=np.int32)
-    return pa.Array.from_buffers(pa.int32(), len(values), [None, pa.py_buffer(values)])
-
-
-def _string_array(values: list) -> pa.Array:
-    """An Arrow string array of ``values`` (str or None) built from
-    buffers."""
-    enc = [b"" if v is None else str(v).encode() for v in values]
-    offsets = np.zeros(len(enc) + 1, dtype=np.int32)
-    np.cumsum([len(b) for b in enc], out=offsets[1:])
-    nulls = np.array([v is None for v in values], dtype=bool)
-    validity = pa.py_buffer(np.packbits(~nulls, bitorder="little")) if nulls.any() else None
-    return pa.StringArray.from_buffers(len(enc), pa.py_buffer(offsets), pa.py_buffer(b"".join(enc)),
-                                       validity, int(nulls.sum()))
-
-
-def _emission_columns(emissions: list) -> tuple:
+def emission_columns(emissions: list) -> tuple:
     """(type, dict_entry_id, meta) Arrow columns of ``emissions``."""
     metas = [e[2] for e in emissions]
     offsets = np.zeros(len(metas) + 1, dtype=np.int32)
     np.cumsum([len(m) for m in metas], out=offsets[1:])
     meta = pa.MapArray.from_arrays(
-        _int_array(offsets),
-        _string_array([k for m in metas for k in m]),
-        _string_array([v for m in metas for v in m.values()]),
+        column(offsets),
+        string_array([k for m in metas for k in m]),
+        string_array([v for m in metas for v in m.values()]),
         type=ANNOTATION_ARROW_TYPE.value_type.field("meta").type,
     )
-    return (_string_array([e[1] for e in emissions]),
-            _string_array([e[0] for e in emissions]), meta)
+    return (string_array([e[1] for e in emissions]),
+            string_array([e[0] for e in emissions]), meta)
 
 
-def _entries(dictionary):
+def entries(dictionary):
     """The front end of both compilers: `(query id, DictionaryEntry)`
     for every entry that converts (`DictionaryEntry.from_dict`); one
     that does not is logged and skipped (per-query failure isolation,
@@ -395,7 +377,7 @@ def _prepare_synonyms(query_id: str, entry: DictionaryEntry) -> list[DictionaryE
 _conf_key = attrgetter(*DEFAULT_CONF)
 
 
-def _conf_for(entry: DictionaryEntry, defaults: DictionaryEntry, cache: dict) -> AnalysisConfig:
+def conf_for(entry: DictionaryEntry, defaults: DictionaryEntry, cache: dict) -> AnalysisConfig:
     """Per-entry analysis config, the entry's fields over the defaults'
     (the highlighter options), memoized: dictionaries have few
     distinct configs (the reference memoizes analyzers the same way,
@@ -478,7 +460,7 @@ def compile_dictionary(dictionary, default_conf: dict | None = None, type_name: 
     defaults = DictionaryEntry.from_dict(default_conf or {})
     conf_cache: dict = {}
     pending = []  # (entry, query id, conf)
-    for query_id, entry in _entries(dictionary):
+    for query_id, entry in entries(dictionary):
         todo = [(entry, query_id)]
         try:
             todo += [(syn, syn.id) for syn in _prepare_synonyms(query_id, entry)]
@@ -488,7 +470,7 @@ def compile_dictionary(dictionary, default_conf: dict | None = None, type_name: 
             try:  # per-query failure isolation (monitor.clj:41-46)
                 if not isinstance(ent.text or "", str):
                     raise TypeError(f"entry text is not a string: {ent.text!r}")
-                pending.append((ent, qid, _conf_for(ent, defaults, conf_cache)))
+                pending.append((ent, qid, conf_for(ent, defaults, conf_cache)))
             except Exception:
                 logger.exception("Failed to compile dictionary entry %r", ent)
 
@@ -515,7 +497,7 @@ def compile_dictionary(dictionary, default_conf: dict | None = None, type_name: 
                               merge_annotations=merge_annotations)
 
 
-def _hits(batch: TextBatch, cd: CompiledDictionary, merge: bool | None) -> tuple:
+def hits(batch: TextBatch, cd: CompiledDictionary, merge: bool | None) -> tuple:
     """Every annotation of ``batch`` as (row, emission id, begin, end)
     arrays, char offsets into the row's text, in the reference's
     per-document order: per row, per program, the exact-phrase hits (by
@@ -576,7 +558,7 @@ def match_batch(texts, cd: CompiledDictionary) -> pa.Array:
     phrases are one trie walk over the batch (`FieldProgram.walk`), and
     the column is built from buffers (`_column`)."""
     batch = TextBatch.from_arrow(texts)
-    return _column(batch, cd, *_hits(batch, cd, None))
+    return _column(batch, cd, *hits(batch, cd, None))
 
 
 def _column(batch: TextBatch, cd: CompiledDictionary, row, eid, begin, end) -> pa.Array:
@@ -600,22 +582,10 @@ def _column(batch: TextBatch, cd: CompiledDictionary, row, eid, begin, end) -> p
     src += np.arange(len(src))
     text = pa.StringArray.from_buffers(len(row), pa.py_buffer(text_off),
                                        pa.py_buffer(batch.data[src]))
-    take = _int_array(eid)
+    take = column(eid)
     types, ids, metas = (col.take(take) for col in cd.columns)
-    return _list_column([text, types, ids, metas, _int_array(begin), _int_array(end)],
-                        row, batch.n, ANNOTATION_ARROW_TYPE)
-
-
-def _list_column(columns: list, row: np.ndarray, n_rows: int, list_type: pa.DataType) -> pa.Array:
-    """The ``list_type`` column of ``n_rows`` rows over struct values
-    ``columns``, which are ordered by ``row``: row r lists the values
-    whose ``row`` is r."""
-    element = list_type.value_type
-    values = pa.StructArray.from_arrays(
-        columns, fields=[element.field(i) for i in range(element.num_fields)])
-    offsets = np.zeros(n_rows + 1, dtype=np.int32)
-    np.cumsum(np.bincount(row, minlength=n_rows), out=offsets[1:])
-    return pa.ListArray.from_arrays(_int_array(offsets), values, type=list_type)
+    return list_column([text, types, ids, metas, column(begin.astype(np.int32)),
+                        column(end.astype(np.int32))], row, batch.n, ANNOTATION_ARROW_TYPE)
 
 
 def match_text(text: str, cd: CompiledDictionary, merge: bool | None = None) -> list[dict]:
@@ -627,7 +597,7 @@ def match_text(text: str, cd: CompiledDictionary, merge: bool | None = None) -> 
     reference accepts it per call, phrases.clj:271-273)."""
     if text is None or not text.strip():
         return []
-    _, eid, begin, end = _hits(TextBatch.from_strings([text]), cd, merge)
+    _, eid, begin, end = hits(TextBatch.from_strings([text]), cd, merge)
     return [{"text": text[b:e], "type": cd.emissions[i][1], "dict_entry_id": cd.emissions[i][0],
              "meta": cd.emissions[i][2], "begin_offset": b, "end_offset": e}
             for i, b, e in zip(eid.tolist(), begin.tolist(), end.tolist())]

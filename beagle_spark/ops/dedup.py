@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from ..kernel import arrow_kernel
+from ..kernel import arrow_kernel, column, view
 from .textstats import fingerprint, tokens_ws, word_grams
 
 # Default oversized-bucket guard of the MinHash-LSH path: buckets above
@@ -711,18 +711,18 @@ def simhash_fingerprints_md5(
 _SIMHASH_SHIFTS = np.array([60 - 4 * (i // 4) + i % 4 for i in range(64)], dtype=np.uint64)
 
 
-def _simhash(toks: pa.ListArray) -> np.ndarray:
+def _simhash(toks: pa.ListArray) -> pa.Array:
     """SimHash of each row's token list: each distinct token of the
     batch is hashed once, and every row has at least one token."""
-    offsets = toks.offsets.to_numpy()
+    offsets = view(toks.offsets)
     words = pc.dictionary_encode(toks.flatten())
     digests = (hashlib.md5(w.encode("utf-8")).digest()[:8] for w in words.dictionary.to_pylist())
     h = np.frombuffer(b"".join(digests), dtype=">u8")
     signs = ((h[:, None] >> _SIMHASH_SHIFTS) & 1).astype(np.int8) * 2 - 1
     sums = np.add.reduceat(
-        signs[words.indices.to_numpy()], offsets[:-1] - offsets[0], axis=0, dtype=np.int32
+        signs[view(words.indices)], offsets[:-1] - offsets[0], axis=0, dtype=np.int32
     )
-    return np.packbits(sums > 0, axis=1, bitorder="little").view("<i8").ravel()
+    return column(np.packbits(sums > 0, axis=1, bitorder="little").view("<i8").ravel())
 
 
 def simhash_pairs(

@@ -21,8 +21,10 @@ metadata column.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -34,7 +36,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..kernel import arrow_kernel
+from ..kernel import arrow_kernel, column
+
+_FEATURE_TYPE = ArrayType(FloatType())
+_FEATURE_ARROW_TYPE = to_arrow_type(_FEATURE_TYPE)
 
 MEDIA_SCHEMA = StructType(
     [
@@ -153,15 +158,17 @@ def extract_features(
     payloads decode for real (BMP natively; other formats raise until an
     imaging library is present)."""
 
-    def feature(p, fmt):
-        if p is None:
-            return None
-        return _fake_feature(p, dim).tolist() if fake else _image_feature(p, fmt, dim)
-
     def features(payloads, fmts):
-        return [feature(p, f) for p, f in zip(payloads.to_pylist(), fmts.to_pylist())]
+        # every non-null row holds exactly `dim` values; a null row holds
+        # none and is NULL through its offset's validity
+        rows = [p if p is None else _fake_feature(p, dim) if fake else _image_feature(p, f, dim)
+                for p, f in zip(payloads.to_pylist(), fmts.to_pylist())]
+        nulls = np.array([r is None for r in rows] + [False])
+        offsets = dim * np.cumsum(np.append(0, ~nulls[:-1]), dtype=np.int32)
+        values = column(np.array([r for r in rows if r is not None], dtype=np.float32).reshape(-1))
+        return pa.ListArray.from_arrays(column(offsets, nulls), values, type=_FEATURE_ARROW_TYPE)
 
-    kernel = arrow_kernel(lambda: features, ArrayType(FloatType()))
+    kernel = arrow_kernel(lambda: features, _FEATURE_TYPE)
     fmt = F.col("format") if "format" in df.columns else F.lit(None).cast("string")
     return df.select(
         "media_id",

@@ -32,21 +32,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType
 
-from ..kernel import arrow_kernel
+from ..kernel import arrow_kernel, column, view
 from .dedup import bucket_pairs
 
 
 def _matrix(arr: pa.ListArray) -> np.ndarray:
     """A batch of array<float> rows -> (n, dim) float64 matrix (exact
-    widen). A null row, or rows of different lengths, raise ValueError:
-    a bare reshape would silently regroup the values."""
-    if arr.null_count:
-        raise ValueError(f"{arr.null_count} null vector row(s) in a batch")
-    lengths = np.diff(arr.offsets.to_numpy())
+    widen). A null row or element, or rows of different lengths, raise
+    ValueError: a bare reshape would silently regroup the values."""
+    values = arr.flatten()
+    if arr.null_count or values.null_count:
+        raise ValueError(f"{arr.null_count + values.null_count} nulls in a batch of vectors")
+    lengths = np.diff(view(arr.offsets))
     if (lengths != lengths[0]).any():
         raise ValueError(f"vector rows of lengths {lengths.min()}..{lengths.max()} in one batch")
-    values = arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-    return values.reshape(len(arr), int(lengths[0]))
+    return view(values).astype(np.float64).reshape(len(arr), int(lengths[0]))
 
 
 def _seq_sum(M: np.ndarray) -> np.ndarray:
@@ -73,7 +73,7 @@ def cosine_col(vec_col, query: list[float]):
 
     def cos(v):
         V = _matrix(v)
-        return _seq_sum(V * q) / (np.sqrt(_seq_sum(V * V)) * qn)
+        return column(_seq_sum(V * q) / (np.sqrt(_seq_sum(V * V)) * qn))
 
     return arrow_kernel(lambda: cos, DoubleType())(vec_col)
 
@@ -83,7 +83,7 @@ def cosine_pair_col(a_col, b_col):
 
     def cos(a, b):
         A, B = _matrix(a), _matrix(b)
-        return _seq_sum(A * B) / (np.sqrt(_seq_sum(A * A)) * np.sqrt(_seq_sum(B * B)))
+        return column(_seq_sum(A * B) / (np.sqrt(_seq_sum(A * A)) * np.sqrt(_seq_sum(B * B))))
 
     return arrow_kernel(lambda: cos, DoubleType())(a_col, b_col)
 
@@ -126,7 +126,7 @@ def hyperplane_bucket(vec_col, planes: list[list[float]]):
         bucket = np.zeros(V.shape[0], dtype=np.int64)
         for h, plane in enumerate(P):
             bucket |= (_seq_sum(V * plane) > 0).astype(np.int64) << h
-        return bucket.astype(np.int32)
+        return column(bucket.astype(np.int32))
 
     return arrow_kernel(lambda: bucket_of, IntegerType())(vec_col)
 
@@ -255,7 +255,7 @@ def ivf_assign(vec_col, centroids: list[list[float]]):
         for i, c in enumerate(C):
             D = V - c
             dists[:, i] = _seq_sum(D * D)
-        return np.argmin(dists, axis=1).astype(np.int32)
+        return column(np.argmin(dists, axis=1).astype(np.int32))
 
     return arrow_kernel(lambda: cell_of, IntegerType())(vec_col)
 

@@ -22,7 +22,7 @@ from beagle_spark.lucene_query import (
     parse_query,
 )
 from beagle_spark.matcher import compile as compile_mod
-from beagle_spark.matcher.compile import _conf_for, _entries
+from beagle_spark.matcher.compile import conf_for, entries
 from beagle_spark.matcher.core import CompiledQuery, build_token_index, find_matches
 from beagle_spark.schema import QUERY_MATCHES_ARROW_TYPE, DictionaryEntry, norm_keys
 
@@ -77,9 +77,9 @@ def _oracle_compile(dictionary, opts: dict | None = None):
     conf_cache: dict = {}
     conf_index: dict = {}  # config -> its position in `configs`
     queries = []
-    for query_id, entry in _entries(dictionary):
+    for query_id, entry in entries(dictionary):
         try:
-            conf = _conf_for(entry, defaults, conf_cache)
+            conf = conf_for(entry, defaults, conf_cache)
             ast = parse_query(entry.text or "", conf)
         except Exception as e:
             logger.error("Failed to parse query %r: %s", entry.text, e)

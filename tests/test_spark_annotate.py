@@ -66,9 +66,8 @@ def test_arrow_batches_have_exact_output_type():
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
-    from beagle_spark.annotator import _batch_matcher
     from beagle_spark.kernel import _apply
-    from beagle_spark.matcher import match_text
+    from beagle_spark.matcher import match_batch, match_text
     from beagle_spark.schema import ANNOTATIONS_TYPE
 
     ann = Annotator(DICT + [{"text": "İstanbul straße", "id": "p4", "meta": {"k": "v"}}])
@@ -77,8 +76,8 @@ def test_arrow_batches_have_exact_output_type():
         pa.array(["spark on pyspark: hash the join", "in İstanbul straße ok", ""]),
     ]
     texts = [t for b in batches for t in b.to_pylist()]
-    fn = _batch_matcher(ann.compiled)
-    out = list(_apply(batches, fn, to_arrow_type(ANNOTATIONS_TYPE)))
+    out = list(_apply(batches, lambda t: match_batch(t, ann.compiled),
+                      to_arrow_type(ANNOTATIONS_TYPE)))
     assert [len(a) for a in out] == [3, 3]
     got = [row for a in out for row in a.to_pylist()]
     for a in out:
