@@ -11,10 +11,16 @@ arrays from buffers with :func:`column`, :func:`string_array` and
 `np.asarray(array)` and `DataType.to_pandas_dtype` import pandas on a
 process's first call; `Array.from_buffers`, `pa.from_numpy_dtype` and
 `ListArray.from_arrays` do not, so no kernel's worker loads pandas.
+
+The boundary also drops the worker's cached zip finders on every call
+(:func:`drop_zip_finders`): Spark's worker set-up re-reads the central
+directory of every archive that has one, 120-250 ms of every task.
 """
 
 from __future__ import annotations
 
+import sys
+import zipimport
 from typing import Callable, Iterator
 
 import numpy as np
@@ -79,6 +85,30 @@ def list_column(columns: list, row: np.ndarray, n_rows: int, list_type: pa.DataT
     return pa.ListArray.from_arrays(column(offsets), values, type=list_type)
 
 
+def drop_zip_finders() -> None:
+    """Delete every `zipimport.zipimporter` from `sys.path_importer_cache`.
+
+    A reused Python worker starts each task with
+    `importlib.invalidate_caches()` (`pyspark.worker_util.setup_spark_files`),
+    and in CPython 3.10+ that makes every cached zip finder re-read the
+    whole central directory of its archive: 16 finders over
+    `pyspark.zip`, the spark-core jar and py4j, 26,672 entries, some
+    120 ms per task. With no zip finder cached, the next invalidate has
+    nothing to re-read, and an import from an archive still resolves:
+    the path hook rebuilds the finder from zipimport's directory cache
+    without reading the archive. The `FileFinder`s stay, since they are
+    cheap to invalidate and are how new `.py` files in the SparkFiles
+    directory are found.
+
+    An archive replaced in place under the same path is therefore not
+    re-read, as in CPython before 3.10, whose zipimporter had no
+    `invalidate_caches`."""
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            cache.pop(path, None)
+
+
 def _apply(batches: Iterator, fn: Callable, arrow_type: pa.DataType) -> Iterator[pa.Array]:
     """Run `fn(*columns)` on every non-empty batch (one `pa.Array`, or a
     tuple of them for a multi-column kernel) and yield its array of
@@ -96,7 +126,10 @@ def arrow_kernel(factory: Callable[[], Callable], return_type: DataType):
     input row, of exactly the kernel's Arrow type (built with this
     module's constructors); per-partition state such as a broadcast
     read or a token cache lives in its closure, and a kernel with none
-    passes ``lambda: fn``.
+    passes ``lambda: fn``. After `factory()`, every call drops the
+    worker's cached zip finders (:func:`drop_zip_finders`), so that the
+    next task's set-up re-reads no archive; finders that `factory()`
+    created by importing are dropped too.
 
     Marked NON-DETERMINISTIC. Every kernel is pure, but the mark stops
     the optimizer pushing a filter on the kernel's output below the
@@ -113,6 +146,8 @@ def arrow_kernel(factory: Callable[[], Callable], return_type: DataType):
 
     @arrow_udf(return_type)
     def kernel(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
-        return _apply(batches, factory(), arrow_type)
+        fn = factory()
+        drop_zip_finders()
+        return _apply(batches, fn, arrow_type)
 
     return kernel.asNondeterministic()

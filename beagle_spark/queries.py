@@ -47,6 +47,8 @@ _DOC_COUNTS: dict = {}
 # Documents per task for _docs_tasks. The Python-UDF annotate path
 # pays Arrow per-batch overhead, so it keeps ~500 docs/task; JVM-side
 # shingle/signature dedup has none and runs finer, ~100 docs/task.
+# A round of Python tasks still has a fixed cost of some 20-28 ms on
+# local[4] (annotator.py "partition sizing").
 _UDF_GRAIN = 500
 _JVM_GRAIN = 100
 
