@@ -15,11 +15,13 @@ Mirrors the reference's analyzer construction and config cascade
   point as Lucene's LowerCaseFilter.
 
 `analyze_batch` analyzes a whole `TextBatch` under one config: one
-`tokenizers.scan` of the batch, then each filter runs once per distinct
-token of the batch (a token the filters empty is dropped), and no cache
-outlives the batch. It returns a `Scan`: per token its row, ORIGINAL
-char offsets and code into the filtered batch vocabulary. `analyze` is
-its one-row case and returns one flat `Tokens(texts, begins, ends)`.
+`tokenizers.scan` of the batch per tokenizer, shared by every config of
+that tokenizer, then each filter maps the batch vocabulary
+(`Scan.map`): it runs once per distinct token, and a token it empties
+is dropped. No cache outlives the batch. It returns a `Scan`: per token
+its row, ORIGINAL char offsets and code into the filtered batch
+vocabulary. `analyze` is its one-row case and returns one flat
+`Tokens(texts, begins, ends)`.
 """
 
 from __future__ import annotations
@@ -27,10 +29,8 @@ from __future__ import annotations
 import unicodedata
 from dataclasses import asdict, dataclass
 
-import numpy as np
-
 from .stem import get_stemmer
-from .tokenizers import Scan, TextBatch, Token, Tokens, lower, scan, tokenize_classic_typed
+from .tokenizers import _CLASSIC_TYPED, Scan, TextBatch, Token, Tokens, _resolve, lower, scan
 
 __all__ = [
     "AnalysisConfig",
@@ -105,62 +105,63 @@ def ascii_fold(s: str) -> str:
     return "".join(out)
 
 
-def _classic_filtered_tokenize(text: str) -> Tokens:
-    """ClassicFilter over classic-typed tokens (Lucene ClassicFilter):
-    APOSTROPHE tokens lose a trailing 's / 'S; ACRONYM tokens lose all
-    dots. Offsets keep the ORIGINAL token span (the filter shrinks the
-    term text only), so highlights cover e.g. the whole "John's"."""
-    out = Tokens([], [], [])
-    for t, typ in tokenize_classic_typed(text):
-        s = t.text
-        if typ == "APOSTROPHE" and len(s) >= 2 and s[-2] == "'" and s[-1] in "sS":
-            s = s[:-2]
-        elif typ == "ACRONYM":
-            s = s.replace(".", "")
-        out.texts.append(s)
-        out.begins.append(t.begin)
-        out.ends.append(t.end)
-    return out
+def _classic_filter(token: str) -> str:
+    """Lucene's ClassicFilter on one classic token: an APOSTROPHE token
+    loses a trailing 's / 'S, an ACRONYM token all its dots (the span
+    stays the whole token, e.g. "John's"). The token's type is the
+    alternative of the typed grammar that matches its whole text: the
+    alternation is leftmost-first, so an earlier alternative that could
+    match the whole text would have cut the token; the one lookahead,
+    ACRONYM's, is moot, since only an ACRONYM ends in '.'."""
+    typ = _CLASSIC_TYPED.fullmatch(token).lastgroup
+    if typ == "APOSTROPHE" and token[-2:] in ("'s", "'S"):
+        return token[:-2]
+    return token.replace(".", "") if typ == "ACRONYM" else token
 
 
 def analyze_batch(batch: TextBatch, conf: AnalysisConfig, rows=None, scans=None) -> Scan:
     """Tokenize + filter the ``rows`` of ``batch`` (a row mask; None:
     every valid row), preserving original char offsets. ``scans``, a
-    dict the caller keeps for one batch, shares one scan among the
-    configs that differ only in their fold and stem filters.
+    dict the caller keeps for one batch and one row mask, holds one scan
+    per tokenizer and each filter chain's prefixes over it, so configs
+    share their tokenizer's scan and the filters they start with (every
+    case-insensitive config of a tokenizer lowers once).
 
-    ClassicFilter parity (text_analysis.clj:77-81): the reference wraps
-    the chain in ClassicFilter only when stem? is false AND the chain is
-    still the bare tokenizer (no LowerCaseFilter, no ASCIIFoldingFilter —
-    i.e. case-sensitive and no fold). Lucene's ClassicFilter acts only on
-    ACRONYM/APOSTROPHE token types, which only ClassicTokenizer emits —
-    for the standard tokenizer it is a no-op (StandardTokenizer emits
-    <ALPHANUM>/<NUM>), so "John's" stays one unstripped token under the
-    DEFAULT config, and strips to "John" under tokenizer=classic. The
-    LowerCaseFilter is fused into the scan."""
-    if (
-        conf.tokenizer == "classic"
-        and not conf.stem
-        and conf.case_sensitive
-        and not conf.ascii_fold
-    ):
-        return scan(batch, "classic", rows=rows, row_fn=_classic_filtered_tokenize)
-    key = (conf.tokenizer, conf.case_sensitive)
-    out = scans.get(key) if scans is not None else None
-    if out is None:
-        out = scan(batch, conf.tokenizer, not conf.case_sensitive, rows)
-        if scans is not None:
-            scans[key] = out
-    if not conf.ascii_fold and not conf.stem:
-        return out
-    vocab = out.vocab
+    The filters map the scan's vocabulary in the reference's order
+    (text_analysis.clj:73-81): lowercase, then ClassicFilter, ascii-fold
+    and stem. Lowercasing follows the scan, as in Lucene: lowering the
+    text first would split it differently outside ASCII ('Ⓜ' is a
+    pictograph the standard split keeps, 'ⓜ' is not; the strict split
+    drops the Kelvin sign and 'İ' but keeps their lowercase forms).
+
+    ClassicFilter parity: the reference wraps the chain in ClassicFilter
+    only when stem? is false AND the chain is still the bare tokenizer
+    (no LowerCaseFilter, no ASCIIFoldingFilter — i.e. case-sensitive and
+    no fold). Lucene's ClassicFilter acts only on ACRONYM/APOSTROPHE
+    token types, which only ClassicTokenizer emits — for the standard
+    tokenizer it is a no-op (StandardTokenizer emits <ALPHANUM>/<NUM>),
+    so "John's" stays one unstripped token under the DEFAULT config, and
+    strips to "John" under tokenizer=classic."""
+    chain = []
+    if not conf.case_sensitive:
+        chain.append(lower)
+    elif conf.tokenizer == "classic" and not conf.ascii_fold and not conf.stem:
+        chain.append(_classic_filter)
     if conf.ascii_fold:
-        vocab = [ascii_fold(t) for t in vocab]
+        chain.append(ascii_fold)
     if conf.stem:
-        vocab = list(map(get_stemmer(conf.stemmer), vocab))
-    out = Scan(out.row, out.begin, out.end, out.code, vocab)
-    emptied = [i for i, t in enumerate(vocab) if not t]
-    return out.take(~np.isin(out.code, emptied)) if emptied else out
+        chain.append(get_stemmer(conf.stemmer))
+    scans = {} if scans is None else scans
+    key = (_resolve(conf.tokenizer),)
+    if key not in scans:
+        scans[key] = scan(batch, key[0], rows)
+    out = scans[key]
+    for f in chain:
+        key += (f,)
+        if key not in scans:
+            scans[key] = out.map(f)
+        out = scans[key]
+    return out
 
 
 def analyze(text: str, conf: AnalysisConfig) -> Tokens:

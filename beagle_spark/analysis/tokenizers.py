@@ -16,14 +16,13 @@ A whole column is tokenized at once (`scan` over a `TextBatch`):
   the tokenizer's full pattern on every ASCII character
   (`_byte_classes`), marks the token bytes (`bytes.translate`);
   `standard`'s `'`/`.`/`,` joiners become token bytes by their
-  neighbours' classes; token runs and joiners stop at row ends; the
-  LowerCaseFilter is `bytes.lower`;
+  neighbours' classes; token runs and joiners stop at row ends;
 - every other row (non-ASCII text, and the `keyword` and `classic`
   tokenizers) takes one regex `split` of the full pattern with a
   capturing group (gaps and tokens alternate) plus a running sum of the
   piece lengths, and its tokens join the batch's in row order;
-- the batch's token strings are dictionary-encoded once, so later
-  filters run once per distinct token.
+- the batch's token strings are dictionary-encoded once, so the
+  filters (`Scan.map`) run once per distinct token.
 
 The result is a `Scan`: per token its row, its char offsets in that row
 (annotations carry char spans, schema.clj:36-37) and its code into the
@@ -35,7 +34,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from functools import lru_cache
-from itertools import accumulate
+from itertools import accumulate, repeat
 from typing import NamedTuple
 
 import numpy as np
@@ -226,10 +225,7 @@ def _byte_classes(name: str) -> tuple:
       joiner byte between two ``side`` bytes of the same row is a token
       byte: character x belongs to the side of the joiners j for which
       ``x j x`` is one token (standard's `'`/`.` between letters and
-      `.`/`,` between digits; the other four have none).
-
-    Lowercasing an ASCII character keeps its class, so the scan runs on
-    the original bytes and lowers only the token bytes."""
+      `.`/`,` between digits; the other four have none)."""
     pattern = _PATTERNS[name]
     chars = [chr(c) for c in range(128)]
     token = np.zeros(256, dtype=bool)
@@ -267,7 +263,7 @@ class TextBatch:
     def __init__(self, raw: bytes, offsets: np.ndarray, valid: np.ndarray, strings,
                  ascii=None, blank=None):
         self.n = len(offsets) - 1
-        self.raw = raw  # the data as `bytes`, for `bytes.translate` / `lower`
+        self.raw = raw  # the data as `bytes`, for `bytes.translate`
         self.data = np.frombuffer(raw, dtype=np.uint8)
         self.offsets = offsets
         self.valid = valid
@@ -355,6 +351,20 @@ class Scan:
     def take(self, keep: np.ndarray) -> "Scan":
         return Scan(self.row[keep], self.begin[keep], self.end[keep], self.code[keep], self.vocab)
 
+    def map(self, f) -> "Scan":
+        """The scan with ``f`` applied once per vocabulary entry: entries
+        that map alike merge, and the tokens mapped to "" are dropped,
+        so the vocabulary stays distinct."""
+        mapped = list(map(f, self.vocab))
+        ids = dict.fromkeys(mapped)
+        emptied = ids.pop("", False) is None
+        if len(ids) == len(mapped):  # nothing merged or dropped
+            return Scan(self.row, self.begin, self.end, self.code, mapped)
+        index = dict(zip(ids, range(len(ids))))
+        remap = np.fromiter(map(index.get, mapped, repeat(-1)), np.int64, len(mapped))
+        out = Scan(self.row, self.begin, self.end, remap[self.code], list(ids))
+        return out.take(out.code >= 0) if emptied else out
+
     def tokens(self, lo: int = 0, hi: int | None = None) -> Tokens:
         """Tokens ``lo:hi`` as one flat `Tokens`."""
         vocab = self.vocab
@@ -369,7 +379,7 @@ class Scan:
         return [Tokens(texts[a:b], begins[a:b], ends[a:b]) for a, b in zip(cuts, cuts[1:])]
 
 
-def _byte_scan(batch: TextBatch, name: str, lowercase: bool, rows):
+def _byte_scan(batch: TextBatch, name: str, rows):
     """Token (row, begin, end) arrays and token strings (an Arrow
     large-string array) of the ``rows`` (None: all) of ``batch``, all ASCII, under
     ``name``'s byte classes. A token or joiner never reaches across two
@@ -410,7 +420,7 @@ def _byte_scan(batch: TextBatch, name: str, lowercase: bool, rows):
     else:
         row = np.zeros(len(begins), dtype=np.int64)
         begins_in_row, ends_in_row = begins, ends
-    body = (np.frombuffer(raw.lower(), dtype=np.uint8) if lowercase else data)[t]
+    body = data[t]
     toffs = np.zeros(len(begins) + 1, dtype=np.int64)
     np.cumsum(ends - begins, out=toffs[1:])
     strs = pa.LargeStringArray.from_buffers(len(begins), pa.py_buffer(toffs), pa.py_buffer(body))
@@ -445,20 +455,20 @@ def _resolve(name: str) -> str:
     return name if name in _PATTERNS else "standard"
 
 
-def scan(batch: TextBatch, name: str, lowercase: bool = False, rows=None, row_fn=None) -> Scan:
+def scan(batch: TextBatch, name: str, rows=None) -> Scan:
     """Tokenize the ``rows`` of ``batch`` (a row mask; None: every valid
     row) under tokenizer ``name``. ASCII rows of the byte-scanned
     tokenizers are scanned as bytes in one pass; every other row takes
-    ``row_fn`` (by default the regex split, `_row_scanner`) and its
-    tokens are merged in row order. The token strings are
-    dictionary-encoded once per batch."""
+    the regex split (`_row_scanner`) and its tokens are merged in row
+    order. The token strings are dictionary-encoded once per batch and
+    keep their case: the filters are `Scan.map`s of the vocabulary."""
     name = _resolve(name)
     rest = batch.valid if rows is None else rows
-    if row_fn is None and name in _BYTE_SCANNED:
+    if name in _BYTE_SCANNED:
         by_bytes = rest & batch.ascii
         rest = rest ^ by_bytes
         every = np.count_nonzero(by_bytes) == batch.n
-        row, begin, end, strs = _byte_scan(batch, name, lowercase, None if every else by_bytes)
+        row, begin, end, strs = _byte_scan(batch, name, None if every else by_bytes)
         enc = pc.dictionary_encode(strs)
         code = np.frombuffer(enc.indices.buffers()[1], np.int32, len(strs))
         vocab = _ascii_strings(enc.dictionary)
@@ -467,7 +477,7 @@ def scan(batch: TextBatch, name: str, lowercase: bool = False, rows=None, row_fn
         vocab = []
     if not np.count_nonzero(rest):
         return Scan(row, begin, end, code, vocab)
-    row_fn = row_fn or _row_scanner(name)
+    row_fn = _row_scanner(name)
     strings = batch.strings()
     r_rows = rest.nonzero()[0]
     counts, r_begin, r_end, texts = [], [], [], []
@@ -477,15 +487,11 @@ def scan(batch: TextBatch, name: str, lowercase: bool = False, rows=None, row_fn
         r_begin += toks.begins
         r_end += toks.ends
         texts += toks.texts
-    # Codes by distinct token string, as split; the LowerCaseFilter then
-    # runs once per distinct token. Lowering before the split is not
-    # case-invariant outside ASCII ('Ⓜ' is a pictograph the standard
-    # split keeps, 'ⓜ' is not; the strict split drops the Kelvin sign
-    # and 'İ' but keeps their lowercase forms).
+    # codes per distinct token string: a dict lookup per distinct token,
+    # then one NumPy gather per token
     seen = {s: i for i, s in enumerate(dict.fromkeys(texts))}
     ids = {s: i for i, s in enumerate(vocab)}
-    remap = np.array([ids.setdefault(lower(s) if lowercase else s, len(ids)) for s in seen],
-                     dtype=np.int64)
+    remap = np.array([ids.setdefault(s, len(ids)) for s in seen], dtype=np.int64)
     extra = (np.repeat(r_rows, counts), r_begin, r_end,
              remap[np.fromiter(map(seen.__getitem__, texts), np.int64, len(texts))])
     cols = [np.concatenate([a, np.asarray(b, dtype=np.int64)]).astype(np.int64, copy=False)
@@ -495,11 +501,7 @@ def scan(batch: TextBatch, name: str, lowercase: bool = False, rows=None, row_fn
 
 
 @lru_cache(maxsize=64)
-def get_tokenizer(name: str, lower: bool = False):
-    """Return fn(text) -> Tokens, the one-row case of `scan`. Unknown
-    name -> standard.
-
-    ``lower=True`` fuses the LowerCaseFilter into the scan (identical
-    output to lowering each token afterwards — per-char lowercase never
-    empties a token, and offsets are taken from the original text)."""
-    return lambda text: scan(TextBatch.from_strings([text]), name, lower).tokens()
+def get_tokenizer(name: str):
+    """Return fn(text) -> Tokens, the one-row case of `scan` (no
+    filter). Unknown name -> standard."""
+    return lambda text: scan(TextBatch.from_strings([text]), name).tokens()

@@ -261,9 +261,8 @@ class FieldProgram:
     def token_hits(self, toks: Scan) -> tuple:
         """Token-test hits of a batch: each test is checked once per
         entry of the batch vocabulary, and each token whose entry passes
-        is a hit with its span. Entries are read through ``toks.code``:
-        the vocabulary may hold filter-emptied strings that no token
-        has. (row, emission id, begin, end) arrays, by test."""
+        is a hit with its span. (row, emission id, begin, end) arrays,
+        by test."""
         vocab = toks.vocab
         passes = np.fromiter((test(v) for test, _ in self.tests for v in vocab), bool,
                              len(self.tests) * len(vocab))

@@ -42,6 +42,15 @@ def _docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
+def _sorted(df: DataFrame, *cols) -> DataFrame:
+    """``df`` sorted by ``cols`` in one partition behind a shuffle, for a
+    small result whose stage runs a Python kernel. An ``orderBy`` right
+    above the kernel's stage has no exchange between them, so its
+    range-bounds sampling job would run the kernel a second time;
+    ``coalesce(1)`` would pull the kernel's stage into one task."""
+    return df.repartition(1).sortWithinPartitions(*cols)
+
+
 _DOC_COUNTS: dict = {}
 
 # Documents per task for _docs_tasks. The Python-UDF annotate path
@@ -328,12 +337,12 @@ def dd_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the four 16-bit band values (b0..b3 = bits [0,16)..[48,64)) — every
     arithmetic step is replicated in DuckDB, so the fingerprints are
     value-exact oracle-checked. The Arrow kernel is map-only: no
-    token explode, no shuffle."""
+    token explode; the one shuffle feeds the final sort (`_sorted`)."""
     out = dedup.simhash_fingerprints_md5(_docs_tasks(spark, sf_dir, _JVM_GRAIN))
-    return out.select(
+    return _sorted(out.select(
         F.col("id").alias("doc_id"),
         *[F.col("bands")[b].alias(f"b{b}") for b in range(4)],
-    ).orderBy("doc_id")
+    ), "doc_id")
 
 
 def _simhash_fp_cte() -> str:
@@ -456,13 +465,10 @@ LIMIT 10
 
 
 def sim_cos_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        similarity.cosine_pairs(
-            spark.read.parquet(f"{sf_dir}/embeddings.parquet"), threshold=0.4
-        )
-        .select("id_a", "id_b")
-        .orderBy("id_a", "id_b")
-    )
+    pairs = similarity.cosine_pairs(
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), threshold=0.4
+    ).select("id_a", "id_b")
+    return _sorted(pairs, "id_a", "id_b")
 
 
 SIM_PAIRS_SQL = """
@@ -493,15 +499,12 @@ def sim_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed near-dup pairs (scale path; recall<1 vs sim_cos_pairs
     by design — the oracle replicates the deterministic bucketing, so
     the hash check covers exactly the bucket-restricted semantics)."""
-    return (
-        similarity.lsh_cosine_pairs(
-            spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-            threshold=0.4,
-            dim=64,
-        )
-        .select("id_a", "id_b")
-        .orderBy("id_a", "id_b")
-    )
+    pairs = similarity.lsh_cosine_pairs(
+        spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
+        threshold=0.4,
+        dim=64,
+    ).select("id_a", "id_b")
+    return _sorted(pairs, "id_a", "id_b")
 
 
 SIM_LSH_PAIRS_SQL = f"""

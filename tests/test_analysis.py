@@ -322,7 +322,7 @@ def test_ascii_fastpath_equivalence():
         for r, w in enumerate(want):
             assert flat(got.tokens(per_row[r], per_row[r + 1])) == w, (name, r)
 
-    # fused lower: analyze(case_sensitive=False) == the tokenizer's
+    # lowercase: analyze(case_sensitive=False) == the tokenizer's
     # tokens lowered per code point (Lucene's LowerCaseFilter), offsets
     # from the original text
     for name in _PATTERNS:
@@ -394,3 +394,119 @@ def test_lowercase_per_code_point_like_lucene():
     assert [(a["text"], a["begin_offset"], a["end_offset"]) for a in got] == [
         ("İSTANBUL", 0, 8), ("ΣΟΣ", 9, 12)
     ]
+
+
+def _oracle_analyze(text, conf):
+    """One row analyzed token by token: the tokenizer's full pattern
+    (classic: the typed grammar) via `finditer`, then lowercase, or the
+    ClassicFilter by the token's type in its text on a bare classic
+    chain, then ascii-fold and stem; emptied tokens dropped."""
+    from beagle_spark.analysis.stem import get_stemmer
+    from beagle_spark.analysis.tokenizers import _CLASSIC_TYPED, _PATTERNS, _resolve
+
+    name = _resolve(conf.tokenizer)
+    bare_classic = (conf.tokenizer == "classic" and conf.case_sensitive
+                    and not conf.ascii_fold and not conf.stem)
+    out = []
+    for m in (_CLASSIC_TYPED if name == "classic" else _PATTERNS[name]).finditer(text or ""):
+        s = m.group()
+        if not conf.case_sensitive:
+            s = analysis.lower(s)
+        elif bare_classic and m.lastgroup == "APOSTROPHE" and s[-2:] in ("'s", "'S"):
+            s = s[:-2]
+        elif bare_classic and m.lastgroup == "ACRONYM":
+            s = s.replace(".", "")
+        if conf.ascii_fold:
+            s = ascii_fold(s)
+        if conf.stem:
+            s = get_stemmer(conf.stemmer)(s)
+        if s:
+            out.append((s, m.start(), m.end()))
+    return out
+
+
+def test_analyze_batch_matches_per_row_oracle():
+    """`analyze_batch` equals the per-row oracle on every tokenizer (and
+    an unknown and an upper-case name) x case x fold x stem, analyzed
+    alone and with one `scans` dict shared by all configs; rows mix a
+    joiner-heavy ASCII alphabet, the ClassicFilter's edge tokens and
+    non-ASCII text. Each `Scan.vocab` is distinct and holds no empty
+    token."""
+    import random
+
+    from beagle_spark.analysis import TextBatch, analyze_batch
+    from beagle_spark.analysis.tokenizers import _PATTERNS
+
+    rng = random.Random(21)
+    alphabet = "abcXYZ019'., #\t\n-_*@&"
+    words = ["John's", "O'Neil's", "JOHN'S", "a'S", "U.S.A.", "U.S.A", "A.B.C.d", "e.g.", "AT&T",
+             "foo@bar.com", "example.com", "3.14", "İSTANBUL", "ΣΟΣ", "Straße", "café", "naïve",
+             "Ⓜ", "Kelvin", "日本語", "running", "Runs", "CONNECTIONS", "the", "The", "THE"]
+    texts = []
+    for _ in range(600):
+        k = rng.random()
+        if k < 0.45:
+            texts.append("".join(rng.choice(alphabet) for _ in range(rng.randint(0, 50))))
+        elif k < 0.9:
+            texts.append(" ".join(rng.choice(words) for _ in range(rng.randint(0, 10))))
+        else:
+            texts.append(rng.choice([None, "", "  ", "\t"]))
+    batch = TextBatch.from_strings(texts)
+    live = ~batch.blank
+    confs = [merge_config({"tokenizer": n, "case_sensitive": cs, "ascii_fold": f, "stem": st})
+             for n in [*_PATTERNS, "nonesuch", "CLASSIC"]
+             for cs in (True, False) for f in (False, True) for st in (False, True)]
+    want = {c: [_oracle_analyze(t, c) if live[r] else [] for r, t in enumerate(texts)]
+            for c in confs}
+    for scans in (None, {}):
+        for conf in confs:
+            got = analyze_batch(batch, conf, live, scans)
+            assert len(set(got.vocab)) == len(got.vocab) and "" not in got.vocab, conf
+            rows = [list(zip(t.texts, t.begins, t.ends)) for t in got.per_row(batch.n)]
+            for r, w in enumerate(want[conf]):
+                assert rows[r] == w, (conf, texts[r])
+
+
+def test_match_batch_scans_once_per_tokenizer(monkeypatch):
+    """Entries that differ only in case and in the ClassicFilter share
+    one scan of the batch per tokenizer, and the case-insensitive
+    entries of a tokenizer lower each distinct token once. The
+    ClassicFilter applies to a bare chain of the tokenizer spelled
+    `classic` only: "USA" matches "U.S.A." there, and not under
+    `CLASSIC`."""
+    import pyarrow as pa
+
+    from beagle_spark.matcher import compile_dictionary, match_batch
+
+    calls, scans, lowered = [], [], []
+    scan, lower = analysis.scan, analysis.lower
+
+    def counted_scan(batch, name, *args):
+        calls.append(name)
+        scans.append(scan(batch, name, *args))
+        return scans[-1]
+
+    def counted_lower(s):
+        lowered.append(s)
+        return lower(s)
+
+    monkeypatch.setattr(analysis, "scan", counted_scan)
+    monkeypatch.setattr(analysis, "lower", counted_lower)
+    cd = compile_dictionary([
+        {"text": "John", "tokenizer": "classic"},
+        {"text": "john's", "tokenizer": "classic", "case-sensitive?": False},
+        {"text": "John's", "tokenizer": "classic", "ascii-fold?": True},
+        {"text": "USA", "tokenizer": "CLASSIC"},
+        {"text": "John's"},
+        {"text": "john's", "case-sensitive?": False},
+        {"text": "USA", "tokenizer": "classic"},
+        {"text": "johns", "case-sensitive?": False, "stem?": True},
+    ])
+    calls.clear()
+    scans.clear()
+    lowered.clear()
+    got = match_batch(pa.array(["John's U.S.A. café", None, "JOHN'S usa"]), cd).to_pylist()
+    assert sorted(calls) == ["classic", "standard"]
+    assert len(lowered) == sum(len(s.vocab) for s in scans)
+    assert [sorted(a["dict_entry_id"] for a in row) for row in got] == [
+        ["0", "1", "2", "4", "5", "6", "7"], [], ["1", "5", "7"]]

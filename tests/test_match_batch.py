@@ -16,9 +16,9 @@ import pyarrow as pa
 import pytest
 
 from beagle_spark.analysis import AnalysisConfig, Tokens, ascii_fold, lower, merge_config
-from beagle_spark.analysis import _classic_filtered_tokenize
 from beagle_spark.analysis.stem import get_stemmer
-from beagle_spark.analysis.tokenizers import _CLASSIC_TYPED, _PATTERNS, _resolve
+from beagle_spark.analysis.tokenizers import (_CLASSIC_TYPED, _PATTERNS, _resolve,
+                                              tokenize_classic_typed)
 from beagle_spark.matcher import compile_dictionary, match_batch, match_text
 from beagle_spark.matcher.core import build_token_index, find_matches
 from beagle_spark.schema import ANNOTATION_ARROW_TYPE, DictionaryEntry
@@ -27,6 +27,24 @@ from beagle_spark.schema import ANNOTATION_ARROW_TYPE, DictionaryEntry
 # ---------------------------------------------------------------------------
 # The oracle
 # ---------------------------------------------------------------------------
+def _classic_filtered_tokenize(text: str) -> Tokens:
+    """ClassicFilter over classic-typed tokens (Lucene ClassicFilter):
+    APOSTROPHE tokens lose a trailing 's / 'S; ACRONYM tokens lose all
+    dots. Offsets keep the ORIGINAL token span (the filter shrinks the
+    term text only), so highlights cover e.g. the whole "John's"."""
+    out = Tokens([], [], [])
+    for t, typ in tokenize_classic_typed(text):
+        s = t.text
+        if typ == "APOSTROPHE" and len(s) >= 2 and s[-2] == "'" and s[-1] in "sS":
+            s = s[:-2]
+        elif typ == "ACRONYM":
+            s = s.replace(".", "")
+        out.texts.append(s)
+        out.begins.append(t.begin)
+        out.ends.append(t.end)
+    return out
+
+
 def oracle_analyze(text: str, conf: AnalysisConfig) -> list[tuple[str, int, int]]:
     if (conf.tokenizer == "classic" and not conf.stem and conf.case_sensitive
             and not conf.ascii_fold):

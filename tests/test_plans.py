@@ -153,3 +153,74 @@ def test_capped_bucket_pairs_one_branch_over_cached_input(spark):
     plan = final_plan_of(cands)
     assert len(re.findall(r"Exchange hashpartitioning\(id#", plan)) == 1
     shingled.unpersist()
+
+
+def _kernel_rows(df) -> list[int]:
+    """``pythonNumRowsReceived`` of each ArrowEvalPython node in the
+    executed (AQE final) plan of a DataFrame that ran. A query stage
+    has no children; its plan is read through ``plan()``."""
+    out, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        elif node.getClass().getSimpleName().endswith("QueryStageExec"):
+            todo.append(node.plan())
+        else:
+            if node.nodeName() == "ArrowEvalPython":
+                out.append(node.metrics().get("pythonNumRowsReceived").get().value())
+            children = node.children()
+            todo += [children.apply(i) for i in range(children.size())]
+    return out
+
+
+def _kernel_inputs() -> dict:
+    """Per registry query that runs a Python kernel in its final plan,
+    the rows each kernel node must receive, as DuckDB counts: the table
+    for a per-row kernel, the pairs for a pair kernel and the bucket or
+    probed cells for an ANN re-rank."""
+    from beagle_spark.queries import SIM_IVF_SQL, _duckdb_bucket_expr
+
+    docs = "SELECT count(*) FROM documents"
+    embs = "SELECT count(*) FROM embeddings"
+    ivf_cells = SIM_IVF_SQL[:SIM_IVF_SQL.index("ORDER BY")].replace(
+        "SELECT vec_id, label FROM a, q", "SELECT count(*) FROM a, q")
+    return {
+        **{name: [docs] for name in ("t1_term_match", "t2_term_ci", "t3_phrase_ci",
+                                     "t4_phrase_offsets", "t5_dict_match_counts",
+                                     "t6_lucene_bool", "t8_matches_by_source", "dd_simhash")},
+        "sim_topk": [f"{embs} WHERE vec_id != 0"],
+        "sim_cos_pairs": ["SELECT count(*) * (count(*) - 1) // 2 FROM embeddings"],
+        "sim_lsh_pairs": [f"""
+            WITH b AS (SELECT vec_id, {_duckdb_bucket_expr(4)} AS bucket FROM embeddings)
+            SELECT count(*) FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id < y.vec_id"""],
+        "sim_lsh_ann": [embs, f"""
+            WITH b AS (SELECT vec_id, {_duckdb_bucket_expr(6)} AS bucket FROM embeddings)
+            SELECT count(*) FROM b WHERE bucket = (SELECT bucket FROM b WHERE vec_id = 0)"""],
+        "sim_ivf_ann": [embs, ivf_cells],
+    }
+
+
+def test_registry_kernels_run_once_per_action(spark, sf_dir):
+    """Every registry query whose final plan holds a Python kernel runs
+    it once per input row in one action: each ArrowEvalPython node's
+    ``pythonNumRowsReceived`` equals its input's row count, counted by
+    DuckDB. A final sort right above a kernel's stage with no exchange
+    between them would run the kernel again for its range bounds."""
+    import duckdb
+
+    from beagle_spark.queries import REGISTRY
+
+    con = duckdb.connect()
+    for t in ("documents", "embeddings"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    want = {name: sorted(con.execute(sql).fetchone()[0] for sql in sqls)
+            for name, sqls in _kernel_inputs().items()}
+    con.close()
+    got = {}
+    for name, (fn, _) in REGISTRY.items():
+        df = fn(spark, sf_dir)
+        if "ArrowEvalPython" in df._jdf.queryExecution().executedPlan().toString():
+            df.collect()
+            got[name] = sorted(_kernel_rows(df))
+    assert got == want
